@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .schemas import TRANSCRIPT_SCHEMA
+from .session import local_table
 
 BLOCK = 12  # turns per complete match block
 
@@ -57,15 +58,15 @@ N_PLAYERS = 5  # ids 2..6, names Player2..Player6 (id 1022 = <world>)
 
 
 def dim_means_of_death(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(MEANS_OF_DEATH, "reason_id long, reason_name string")
+    return local_table(spark, MEANS_OF_DEATH, "reason_id long, reason_name string")
 
 
 def dim_tool(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(TOOLS, "tool string, tool_family string")
+    return local_table(spark, TOOLS, "tool string, tool_family string")
 
 
 def dim_role(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(ROLES, "role string, role_kind string")
+    return local_table(spark, ROLES, "role string, role_kind string")
 
 
 def generate_transcripts(

@@ -365,6 +365,29 @@ def parse_text_batch(
     return out
 
 
+def pedantic_fields(fields: list[str] | None) -> list[str] | None:
+    """``fields`` plus the error columns the pedantic check reads."""
+    if fields is None:
+        return None
+    return list(dict.fromkeys([*fields, "parse_error_kind", "parse_error"]))
+
+
+def raise_on_parse_error(batch: pa.RecordBatch, cols: dict[str, pa.Array]) -> None:
+    """The pedantic gate: raise on the batch's first malformed line."""
+    bad = pc.is_valid(cols["parse_error_kind"])
+    if pc.any(bad).as_py():
+        idx = pc.index(bad, pa.scalar(True)).as_py()
+        turn = (
+            batch.column("turn_idx")[idx].as_py()
+            if "turn_idx" in batch.schema.names
+            else -1
+        )
+        raise ValueError(
+            f"Failed to process event #{turn}: "
+            f"`LogParsingError`: {cols['parse_error'][idx].as_py()}"
+        )
+
+
 def make_map_in_arrow_fn(
     passthrough: list[str],
     fields: list[str] | None = None,
@@ -379,37 +402,14 @@ def make_map_in_arrow_fn(
     pruning eliding the gate (the round-2 ADVICE bypass): the error fires
     before any output column exists for the optimizer to drop.
     """
-    parse_fields = fields
-    if pedantic and fields is not None:
-        parse_fields = list(
-            dict.fromkeys([*fields, "parse_error_kind", "parse_error"])
-        )
+    parse_fields = pedantic_fields(fields) if pedantic else fields
     emit = None if fields is None else {*fields, "event_type"}
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        # optional knob: cap pyarrow's per-worker thread pool.  Measured on
-        # this box: the DEFAULT pool wins inside Spark (kernel threads
-        # overlap with IPC deserialization); a 1-thread cap was ~1.5x
-        # slower at 32 workers despite the apparent oversubscription.
-        import os
-
-        if "SPARK_GRAFT_ARROW_THREADS" in os.environ:
-            pa.set_cpu_count(int(os.environ["SPARK_GRAFT_ARROW_THREADS"]))
         for batch in batches:
             cols = parse_text_batch(batch.column("text"), parse_fields)
             if pedantic:
-                bad = pc.is_valid(cols["parse_error_kind"])
-                if pc.any(bad).as_py():
-                    idx = pc.index(bad, pa.scalar(True)).as_py()
-                    turn = (
-                        batch.column("turn_idx")[idx].as_py()
-                        if "turn_idx" in batch.schema.names
-                        else -1
-                    )
-                    raise ValueError(
-                        f"Failed to process event #{turn}: "
-                        f"`LogParsingError`: {cols['parse_error'][idx].as_py()}"
-                    )
+                raise_on_parse_error(batch, cols)
             arrays = [batch.column(c) for c in passthrough]
             names = list(passthrough)
             for k, v in cols.items():

@@ -1,6 +1,6 @@
 """Incremental per-conversation replay core — the exact event-model fold.
 
-Shared by the batch grouped-map fold (operators/summarize.py) and the
+Shared by the batch Arrow fold stage (operators/summarize.py) and the
 Structured Streaming stateful variant (streaming/session_stream.py): one
 ``feed`` of ordered events mutates a small serializable state and yields
 summary/error rows.

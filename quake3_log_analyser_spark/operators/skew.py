@@ -29,8 +29,11 @@ Where skew bites in this pipeline, and the chosen remedy for each:
   thousand rows is far below the straggler threshold at any realistic
   turns-per-conversation.
 
-* **The order-dependent replay fold** (one ``applyInPandas`` group per
-  conv): same constraint and same posture as the window.
+* **The order-dependent replay fold** (one ``mapInArrow`` stage over rows
+  hash-partitioned by conv and sorted by turn, operators/summarize.py):
+  same constraint and same posture as the window.  A hot conversation
+  streams through its task in Arrow batches with only its O(players) fold
+  state held between them, so its size costs time, not memory.
 """
 
 from __future__ import annotations

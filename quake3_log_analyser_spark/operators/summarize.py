@@ -15,10 +15,13 @@ reference's config-driven pipeline menu, summary_logic.rs:44-60):
 
 * ``summarize_extended`` — the ``--extended`` 4-op pipeline.  The id->nick
   registry with rename/disconnect/reconnect replay (:210-287) is genuinely
-  order-dependent, so it runs as ONE grouped-map ``applyInPandas`` fold per
-  ``conv_id`` (the shuffle key sessionize already used).  Per-conv state is
-  O(players); conversations are independent, so this parallelizes
-  perfectly across executors.
+  order-dependent, so it runs as ONE ``mapInArrow`` stage over rows
+  hash-partitioned by ``conv_id`` and sorted by ``(conv_id, turn_idx)``
+  within each partition; the same stage parses raw text with the Arrow
+  kernels.  Per-conv state is O(players); conversations are independent,
+  so this parallelizes perfectly across executors.  One stage rather than
+  a parse stage plus a grouped-map fold, because each Python worker task
+  has a fixed cost of 0.1-0.2 CPU-s (session.py).
 
 Output ordering parity: the reference renders BTreeMap/BTreeSet, i.e.
 lexicographic key order — reproduced with ``array_sort`` over
@@ -27,7 +30,6 @@ lexicographic key order — reproduced with ``array_sort`` over
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -451,12 +453,10 @@ def reported_scores(sessionized: DataFrame) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# exact extended fold (applyInPandas per conv)
+# exact extended fold: one Arrow stage over (conv_id, turn_idx)-sorted rows
 # ---------------------------------------------------------------------------
 
-FOLD_COLUMNS = [
-    "conv_id",
-    "turn_idx",
+FOLD_FIELDS = [
     "event_type",
     "client_id",
     "name",
@@ -467,62 +467,111 @@ FOLD_COLUMNS = [
     "reason_name",
     "frags",
 ]
+FOLD_COLUMNS = ["conv_id", "turn_idx", *FOLD_FIELDS]
 
-
-def _replay_conv(
-    pdf: pd.DataFrame,
-    ops: frozenset[str],
-    stop_on_violations: bool,
-) -> pd.DataFrame:
-    """Exact replay of compose+ops+summarize for ONE conversation.
-
-    Delegates to the shared incremental core (functions/replay.py) that the
-    streaming variant also uses.  Unterminated trailing matches emit
-    nothing (the dangling accumulator is dropped, summary_logic.rs:397-403).
-    """
-    from ..functions.replay import new_state, replay_events
-
-    conv_id = pdf["conv_id"].iloc[0]
-    pdf = pdf.sort_values("turn_idx")
-    events = zip(
-        pdf["turn_idx"].tolist(),
-        [None if (isinstance(v, float) and pd.isna(v)) or v is None else v
-         for v in pdf["event_type"].tolist()],
-        pdf["client_id"].tolist(),
-        pdf["name"].tolist(),
-        pdf["killer_id"].tolist(),
-        pdf["victim_id"].tolist(),
-        pdf["killer_name"].tolist(),
-        pdf["victim_name"].tolist(),
-        pdf["reason_name"].tolist(),
-        pdf["frags"].tolist(),
-    )
-    out_rows = replay_events(new_state(), conv_id, events, ops, stop_on_violations)
-    return pd.DataFrame(out_rows, columns=[f.name for f in MATCH_SUMMARY_SCHEMA])
-
+# the event types the fold acts on (functions/replay.py); every other row
+# falls through its dispatch, so it is dropped before leaving Arrow
+FOLD_EVENT_TYPES = [
+    "InitGame", "Exit", "ShutdownGame", "Kill", "ClientConnect",
+    "ClientUserinfoChanged", "ClientDisconnect", "Score",
+]
 
 DEFAULT_EXTENDED_OPS = frozenset(
     {"kills", "means_of_death", "player_resolutions", "reported_scores"}
 )
 
 
+def _fold_batches(batches, ops, stop_on_violations, pedantic):
+    """``mapInArrow`` body: parse (raw input) and replay sorted batches.
+
+    Rows arrive sorted by ``(conv_id, turn_idx)``; a conversation may span
+    several batches, so the fold state of the current conversation carries
+    across batch boundaries and is reset when ``conv_id`` changes.  A
+    batch with a ``text`` column is parsed here (``pedantic`` raises on
+    its first malformed line); otherwise it already carries the parsed
+    fold columns.  Unterminated trailing matches emit nothing (the
+    dangling accumulator is dropped, summary_logic.rs:397-403)."""
+    from itertools import groupby
+
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    from ..functions.parse_arrow import (
+        parse_text_batch,
+        pedantic_fields,
+        raise_on_parse_error,
+    )
+    from ..functions.replay import new_state, replay_events
+
+    out_schema = to_arrow_schema(MATCH_SUMMARY_SCHEMA)
+    parse_fields = pedantic_fields(FOLD_FIELDS) if pedantic else FOLD_FIELDS
+    consumed = pa.array(FOLD_EVENT_TYPES)
+    conv, state = None, None
+    for batch in batches:
+        if "text" in batch.schema.names:
+            cols = parse_text_batch(batch.column("text"), parse_fields)
+            if pedantic:
+                raise_on_parse_error(batch, cols)
+        else:
+            cols = {f: batch.column(f) for f in FOLD_FIELDS}
+        keep = pc.fill_null(pc.is_in(cols["event_type"], value_set=consumed), False)
+        convs = pc.filter(batch.column("conv_id"), keep).to_pylist()
+        events = list(
+            zip(
+                pc.filter(batch.column("turn_idx"), keep).to_pylist(),
+                *(pc.filter(cols[f], keep).to_pylist() for f in FOLD_FIELDS),
+            )
+        )
+        rows, pos = [], 0
+        for c, run in groupby(convs):
+            n = sum(1 for _ in run)
+            if c != conv:
+                conv, state = c, new_state()
+            rows += replay_events(
+                state, c, events[pos : pos + n], ops, stop_on_violations
+            )
+            pos += n
+        if rows:
+            yield pa.RecordBatch.from_pylist(rows, schema=out_schema)
+
+
 def summarize_extended(
-    translated: DataFrame,
+    events: DataFrame,
     ops: frozenset[str] = DEFAULT_EXTENDED_OPS,
     stop_on_violations: bool = False,
+    pedantic: bool = False,
 ) -> DataFrame:
-    """Exact extended summaries via a grouped-map fold keyed by conv_id.
+    """Exact extended summaries: ONE ``mapInArrow`` stage per conv_id shard.
 
-    The fold only ever holds one conversation's registry + one match
-    accumulator in memory — the distributed analogue of the reference's
-    constant-memory streaming claim (README.md:56).
+    ``events`` carries ``conv_id`` and ``turn_idx`` plus either the raw
+    ``text`` (parsed inside the fold stage by the Arrow kernels) or every
+    parsed ``FOLD_FIELDS`` column (from a parser run before the
+    shuffle, e.g. the JVM expression parser).  The rows are hash-partitioned by conv_id and
+    sorted by ``(conv_id, turn_idx)`` within each partition, so each task
+    folds whole conversations in stream order.  The fold only ever holds
+    one conversation's registry + one match accumulator in memory — the
+    distributed analogue of the reference's constant-memory streaming
+    claim (README.md:56).
+
+    ``pedantic=True`` raises inside the task on the first malformed line;
+    it needs raw ``text`` input (parsed input is gated upstream by
+    ``operators.parse.fail_on_feed_errors``).
     """
-    cols = [c for c in FOLD_COLUMNS if c in translated.columns]
-    narrowed = translated.select(*cols)
+    parsed = all(c in events.columns for c in FOLD_FIELDS)
+    if pedantic and parsed:
+        raise ValueError(
+            "pedantic=True is enforced only where the fold parses raw text; "
+            "gate parsed input with fail_on_feed_errors instead"
+        )
+    ops = frozenset(ops)
 
-    def apply_fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        return _replay_conv(pdf, ops, stop_on_violations)
+    def fold(batches):
+        return _fold_batches(batches, ops, stop_on_violations, pedantic)
 
-    return narrowed.groupBy("conv_id").applyInPandas(
-        apply_fn, schema=MATCH_SUMMARY_SCHEMA
+    return (
+        events.select(*(FOLD_COLUMNS if parsed else ["conv_id", "turn_idx", "text"]))
+        .repartition("conv_id")
+        .sortWithinPartitions("conv_id", "turn_idx")
+        .mapInArrow(fold, MATCH_SUMMARY_SCHEMA)
     )

@@ -57,15 +57,7 @@ def domain_filter() -> "F.Column":
 def translate(
     parsed: DataFrame,
     keep_columns: list[str] | None = None,
-    with_filter: bool = True,
 ) -> DataFrame:
-    """Narrow to the domain column set; optionally drop irrelevant events.
-
-    ``with_filter=False`` skips the event-type filter — used by the exact
-    replay fold, whose per-conv loop ignores dropped types anyway (they
-    fall through its dispatch), avoiding the pushdown hazard above at the
-    cost of shuffling the dropped rows.
-    """
+    """Narrow to the domain column set and drop irrelevant events."""
     keep = keep_columns or [c for c in DOMAIN_COLUMNS if c in parsed.columns]
-    kept = parsed.filter(domain_filter()) if with_filter else parsed
-    return kept.select(*keep)
+    return parsed.filter(domain_filter()).select(*keep)

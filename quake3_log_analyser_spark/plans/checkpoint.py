@@ -35,6 +35,8 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..session import local_table
+
 CHECKPOINT_SCHEMA = T.StructType(
     [
         T.StructField("run_id", T.StringType(), False),
@@ -143,7 +145,8 @@ def _metrics_df(
         )
         for unit, m in metrics_by_unit.items()
     ]
-    return spark.createDataFrame(
+    return local_table(
+        spark,
         rows,
         "run_id string, unit string, n_input_rows long, n_parse_errors long, "
         "n_matches long, wall_sec double",
@@ -186,12 +189,12 @@ def _build_unit_run(
     partition write then fails before committing anything.  ``ops``
     selects the summary menu: order-insensitive menus take the one-pass
     vectorized aggregation (``summarize_multi``); a menu with
-    ``player_resolutions`` takes the exact replay fold, whose grouped-map
-    shuffle key (conv_id) co-partitions with the unit hash."""
+    ``player_resolutions`` takes the exact replay fold stage
+    (``summarize_extended``) over the parsed rows, whose conv_id shuffle
+    co-partitions with the unit hash."""
     from ..operators.parse import parse_transcripts
     from ..operators.sessionize import sessionize
     from ..operators.summarize import summarize_extended, summarize_multi
-    from ..operators.translate import translate
 
     ops = frozenset(ops)
     unit_col = F.pmod(F.xxhash64("conv_id"), F.lit(n_units)).cast("int")
@@ -214,7 +217,7 @@ def _build_unit_run(
     sess = sess.observe(obs, *exprs)
 
     if "player_resolutions" in ops:
-        summaries = summarize_extended(translate(sess), ops)
+        summaries = summarize_extended(sess, ops)
     else:
         summaries = summarize_multi(sess, ops)
     # summarize drops the passthrough columns via aggregation; the unit is

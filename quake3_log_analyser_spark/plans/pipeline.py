@@ -10,8 +10,20 @@ is column pruning for us).
 Path selection:
 * ops without ``player_resolutions``  -> fully vectorized DataFrame path
   (kills / means / scores are order-insensitive aggregates)
-* ops with ``player_resolutions``     -> exact grouped-map replay fold
+* ops with ``player_resolutions``     -> exact replay fold
   (rename/disconnect/reconnect are order-dependent, summary_logic.rs:210-287)
+  as ONE Python stage: raw-text early discard, a conv_id shuffle, a
+  ``(conv_id, turn_idx)`` sort within partitions, then one ``mapInArrow``
+  that parses each batch and folds it (operators.summarize).
+
+Each Python worker task costs a fixed 0.1-0.2 CPU-s whatever its rows
+(session.py), so the fold path has one Python stage rather than a parse
+stage plus a grouped-map stage.  Measured on a 4-core host with the
+benchmark's nightly job (42.8k turns, ``local[4]``), this plan plus the
+Arrow-built dictionaries (session.local_table) against the two-stage
+plan: Python tasks per warm run 17 -> 5, warm-run CPU 9.8 -> 6.3 s
+(median of 9 seeds), Python worker time 4.2-5.1 -> 2.2-2.3 s and Arrow
+bytes sent to Python 21.9 -> 12.9 MB.
 """
 
 from __future__ import annotations
@@ -23,10 +35,10 @@ from ..operators.parse import choose_parser, fail_on_feed_errors, parse_transcri
 from ..operators.sessionize import sessionize, sessionize_raw
 from ..operators.summarize import (
     DEFAULT_EXTENDED_OPS,
+    FOLD_FIELDS,
     summarize_extended,
     summarize_multi,
 )
-from ..operators.translate import translate
 
 VALID_OPS = {"kills", "means_of_death", "player_resolutions", "reported_scores"}
 
@@ -62,10 +74,6 @@ def summarize_matches(
     if "kills" not in ops:
         raise ValueError("the 'kills' op is mandatory (as in the reference menu)")
 
-    FOLD_FIELDS = [
-        "event_type", "client_id", "name", "killer_id", "victim_id",
-        "killer_name", "victim_name", "reason_name", "frags",
-    ]
     # vectorized-path field set (narrow: 2-5 event columns)
     agg_base = ["killer_name", "victim_name"]
     if "means_of_death" in ops:
@@ -75,11 +83,12 @@ def summarize_matches(
 
     if parser == "auto":
         # per-query-shape selection (operators.parse.choose_parser): the
-        # fold path keeps 9 event fields -> arrow barrier; the vectorized
-        # kills-family paths keep 2-5 -> the faster, better-scaling expr
-        # parser (janino-safe at that width).  session_first also takes
-        # expr now: the parse sits ABOVE the window there, so summarize's
-        # filters have no shuffle fence below them and Catalyst would
+        # fold path keeps 9 event fields -> arrow, parsed inside the fold
+        # stage itself; the vectorized kills-family paths keep 2-5 -> the
+        # faster, better-scaling expr parser (janino-safe at that width).
+        # session_first also takes expr now: the parse sits ABOVE the
+        # window there, so summarize's filters have no shuffle fence below
+        # them and Catalyst would
         # re-inline the full dispatch tree into the aggregation stage
         # (janino >64KB, measured 19.6 s interpreted-fallback) — the
         # round-3 fix was forcing the arrow barrier, whose parse scales at
@@ -94,8 +103,9 @@ def summarize_matches(
 
     # pedantic enforcement is parser-dependent (both are pushdown-proof,
     # see operators.parse.fail_on_feed_errors for why turn_idx alone isn't):
-    #  * arrow  — raise INSIDE the parse task (pedantic=True below); no
-    #    error columns ever reach the plan
+    #  * arrow  — raise INSIDE the parse task (pedantic=True below; on the
+    #    fold path that task is the fold stage); no error columns ever
+    #    reach the plan
     #  * expr/pandas — raise_error gated into event_type + turn_idx, which
     #    every downstream filter/groupBy consumes
     pedantic_in_udf = stop_on_feed_errors and parser == "arrow"
@@ -112,42 +122,42 @@ def summarize_matches(
     # Measured at 16M turns x 32 cores: 15.1s -> 8.2s for the parse stage.
     narrowed_in = transcripts.select("conv_id", "turn_idx", "text")
 
-    if "player_resolutions" in ops:
-        parsed = _gate(
-            parse_transcripts(
-                narrowed_in,
-                parser=parser,
-                fields=FOLD_FIELDS + error_fields,
-                pedantic=pedantic_in_udf,
-            )
-        )
-        # the Python parsers (arrow/pandas) are pushdown barriers, so the
-        # domain filter is safe above them and trims ~40% of the rows the
-        # fold would otherwise shuffle; the expr parser is NOT a barrier
-        # (see operators.translate.domain_filter) — skip the filter there
-        domain = translate(parsed, with_filter=(parser != "expr"))
-        return summarize_extended(domain, ops, stop_on_violations)
-
     # EARLY DISCARD on RAW text (the reference's events_translation.rs
-    # "only pay for what you use", moved BELOW the parse): the vectorized
-    # kills-family summaries consume only marker + Kill (+ score) events,
-    # so a cheap JVM substring filter drops every other line BEFORE the
-    # parse tree runs.  Safe because it is an OVER-approximation (a say
-    # line containing " Kill:" passes and the parse still classifies it)
-    # that never drops a consumed row: match_id/in_game derive from the
-    # retained markers and turn_idx values are preserved.  Referencing only
-    # `text`, the predicate pushes to the scan with no re-inlining hazard.
-    # Skipped when pedantic: the feed gate must see ALL lines.  Measured
-    # at 16M turns x 32 cores: 16.7 s -> 14.2 s e2e on the kill-heavy
-    # synthetic mix (larger on chat-heavy real logs).
+    # "only pay for what you use", moved BELOW the parse): each summary
+    # path consumes only a few event names, so a cheap JVM substring
+    # filter drops every other line BEFORE the parse tree runs.  Safe
+    # because it is an OVER-approximation (a say line containing " Kill:"
+    # passes and the parse still classifies it) that never drops a
+    # consumed row: match_id/in_game derive from the retained markers and
+    # turn_idx values are preserved.  Referencing only `text`, the
+    # predicate pushes to the scan with no re-inlining hazard.  Skipped
+    # when pedantic: the feed gate must see ALL lines.  Measured at 16M
+    # turns x 32 cores: 16.7 s -> 14.2 s e2e on the kill-heavy synthetic
+    # mix (larger on chat-heavy real logs).
     if early_discard and not stop_on_feed_errors:
         tokens = ["Kill", "InitGame", "Exit", "ShutdownGame"]
+        if "player_resolutions" in ops:
+            tokens += ["ClientConnect", "ClientUserinfoChanged", "ClientDisconnect"]
         if "reported_scores" in ops:
             tokens.append("score")
         keep = F.col("text").like(f"% {tokens[0]}:%")
         for tok in tokens[1:]:
             keep = keep | F.col("text").like(f"% {tok}:%")
         narrowed_in = narrowed_in.filter(keep)
+
+    if "player_resolutions" in ops:
+        # the arrow parser runs inside the fold stage (after the shuffle,
+        # on raw text); any other parser runs before it, and the fold
+        # stage then skips its own parse
+        if parser != "arrow":
+            narrowed_in = _gate(
+                parse_transcripts(
+                    narrowed_in, parser=parser, fields=FOLD_FIELDS + error_fields
+                )
+            )
+        return summarize_extended(
+            narrowed_in, ops, stop_on_violations, pedantic=pedantic_in_udf
+        )
 
     # dropped event types don't affect match state, and summarize filters
     # to Kill/Score rows above the window — no separate translate filter

@@ -5,18 +5,82 @@ Local testing runs on ``local[N]`` but every knob here is chosen for the
 splitting + partition coalescing), shuffle partitions sized to the
 parallelism at hand, Arrow enabled for every pandas-UDF boundary, and UTC
 pinned so results compare bit-stably against external oracles.
+
+Every Python worker task costs a fixed 0.1-0.2 CPU-s whatever its row
+count: on Python 3.11, ``importlib.invalidate_caches()`` in the worker's
+``setup_spark_files`` re-reads the directory of ``pyspark.zip`` once per
+zip importer (about 16) on every task.  On small and medium inputs that
+fixed cost outweighs the Arrow parse kernels, so plans keep Python stages
+few (one fused fold stage, not a parse stage plus a grouped-map stage),
+and driver-side tables are built by ``local_table`` as Arrow local
+relations, which start no Python worker at all.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 # One shuffle partition per core locally; on a real cluster this should be
 # ~2-3x total executor cores (or left to AQE's coalescing with a high
 # initial value).
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
+
+
+def driver_memory() -> str:
+    """``SPARK_GRAFT_DRIVER_MEM``, else half the memory this process may
+    use, capped at 24g.
+
+    The limit is the cgroup's (v2 ``memory.max`` or v1
+    ``memory.limit_in_bytes``) when one is set below physical RAM, else
+    physical RAM.  The heap is only part of the JVM's resident set (the
+    Python workers, Arrow buffers and off-heap shuffle come on top), so a
+    heap as large as the host gets the JVM killed by the kernel instead
+    of collecting its garbage."""
+    if os.environ.get("SPARK_GRAFT_DRIVER_MEM"):
+        return os.environ["SPARK_GRAFT_DRIVER_MEM"]
+    avail = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    for path in (
+        "/sys/fs/cgroup/memory.max",
+        "/sys/fs/cgroup/memory/memory.limit_in_bytes",
+    ):
+        try:
+            with open(path) as fh:
+                raw = fh.read().strip()
+        except OSError:
+            continue
+        if raw.isdigit():  # v2 writes "max" when there is no limit
+            avail = min(avail, int(raw))
+        break
+    return f"{min(24 * 1024, avail // 2 // 2**20)}m"
+
+
+def local_table(
+    spark: SparkSession, rows: list[tuple], schema: T.StructType | str
+) -> DataFrame:
+    """A small driver-side table as an Arrow local relation.
+
+    ``spark.createDataFrame(list_of_tuples, ...)`` builds a PythonRDD, so
+    every action over it runs a Python task per partition (4 on
+    ``local[4]``), each paying the fixed worker-task cost in the module
+    docstring.  Handing Spark a ``pyarrow.Table`` instead plans as
+    ``LocalTableScan`` and starts no Python worker."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    table = pa.Table.from_arrays(
+        [
+            pa.array([r[i] for r in rows], type=f.type)
+            for i, f in enumerate(arrow_schema)
+        ],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema=schema)
 
 
 def _submitted_master() -> str | None:
@@ -131,7 +195,7 @@ def get_spark(
             os.environ.get("SPARK_GRAFT_PARQUET_CODEC", "zstd"),
         )
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory", driver_memory())
         # single-node shuffle through the (slow, ~200 MB/s) VM disk is the
         # one serial resource that breaks core-count scaling — put shuffle
         # and spill files on tmpfs.  On a real cluster each node's local

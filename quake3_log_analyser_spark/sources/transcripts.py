@@ -24,6 +24,7 @@ import datetime as _dt
 from pyspark.sql import DataFrame, SparkSession
 
 from ..schemas import TRANSCRIPT_SCHEMA
+from ..session import local_table
 
 _EPOCH = _dt.datetime(2024, 1, 1, tzinfo=_dt.timezone.utc)
 
@@ -58,7 +59,7 @@ def transcripts_from_lines(
         )
         for i, line in enumerate(lines)
     ]
-    return spark.createDataFrame(rows, schema=TRANSCRIPT_SCHEMA)
+    return local_table(spark, rows, TRANSCRIPT_SCHEMA)
 
 
 def transcripts_from_file(

@@ -41,6 +41,10 @@ from pathlib import Path
 from statistics import median
 
 REPO = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(REPO))
+
+from quake3_log_analyser_spark.session import driver_memory  # noqa: E402
+
 SPARK_SUBMIT = shutil.which("spark-submit") or "/opt/spark/bin/spark-submit"
 
 
@@ -75,10 +79,10 @@ def one_run(cpus: int, zip_path: Path, input_path: Path, tmp: Path,
         # JVM-launch-time settings CANNOT come from the in-app session
         # builder under spark-submit (the JVM is already up when Python
         # runs): driver memory and GC flags must ride the command line.
-        # These mirror session.py's defaults — without them the job runs
-        # on a 1 GB heap with default G1 sizing, which live-locks at 32
+        # These mirror session.py's defaults (a heap sized to the host)
+        # — without them the job runs on a 1 GB heap with default G1 sizing, which live-locks at 32
         # executor threads (measured: local[32] SLOWER than local[8]).
-        "--driver-memory", "24g",
+        "--driver-memory", driver_memory(),
         "--conf",
         "spark.driver.extraJavaOptions="
         "-XX:+UseParallelGC -XX:ParallelGCThreads=16",
