@@ -2014,24 +2014,6 @@ FROM sp GROUP BY doc_id, span_id
 
 
 
-def _q_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BM25 top-10 for query terms (hash, join, stream) over documents
-    (operators.retrieval.bm25_topk): Lucene-variant idf, contributions
-    rounded to integer micro-units pre-sum so the score is exact and
-    engine-independent; ties broken by doc_id."""
-    from quake3_log_analyser_spark.operators.retrieval import bm25_topk
-
-    docs = _table(spark, sf_dir, "documents")
-    return bm25_topk(docs, ["hash", "join", "stream"], k=10)
-
-
-def _bm25_oracle() -> str:
-    from quake3_log_analyser_spark.operators.retrieval import bm25_oracle_sql
-
-    return bm25_oracle_sql(["hash", "join", "stream"], k=10)
-
-
-
 def _q_hash_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic leakage-safe train/val/test split
     (operators.corpus.hash_split): assignment is a pure function of
@@ -2394,7 +2376,6 @@ _EXTRA_QUERIES = {
     "duplicated_spans": _q_duplicated_spans,
     "build_vocab": _q_build_vocab,
     "hash_split": _q_hash_split,
-    "bm25_topk": _q_bm25_topk,
     "classifier_score": _q_classifier_score,
     "lm_scores": _q_lm_scores,
     "quantized_topk": _q_quantized_topk,
@@ -2433,7 +2414,6 @@ _EXTRA_ORACLES = {
     "duplicated_spans": _ORACLE_DUP_SPANS,
     "build_vocab": _ORACLE_BUILD_VOCAB,
     "hash_split": _hash_split_oracle(),
-    "bm25_topk": _bm25_oracle(),
     "classifier_score": _ORACLE_CLASSIFIER,
     "lm_scores": _ORACLE_LM_SCORES,
     "quantized_topk": _ORACLE_QUANTIZED_TOPK,

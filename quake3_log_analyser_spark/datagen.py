@@ -174,25 +174,3 @@ def generate_transcripts(
         ts.alias("ts"),
     )
     return out
-
-
-def write_transcripts(
-    df: DataFrame, path: str, bucket_by_conv: bool = False, n_buckets: int = 32
-) -> None:
-    """Write the transcripts table.
-
-    ``bucket_by_conv=True`` writes a bucketed table (saveAsTable) so the
-    sessionize window and the per-conv fold read pre-clustered data with NO
-    shuffle — the single biggest lever at 10^12-turn scale (SURVEY.md §4).
-    Plain parquet otherwise.
-    """
-    if bucket_by_conv:
-        (
-            df.write.mode("overwrite")
-            .bucketBy(n_buckets, "conv_id")
-            .sortBy("conv_id", "turn_idx")
-            .option("path", path)
-            .saveAsTable(f"transcripts_bucketed_{n_buckets}")
-        )
-    else:
-        df.write.mode("overwrite").parquet(path)

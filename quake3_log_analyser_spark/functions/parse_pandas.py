@@ -9,8 +9,9 @@ like the reference's pure ``deserialize_log_line`` entry point
 ``pd.Series.str`` operation over the whole Arrow batch.
 
 Tests cross-check this parser against ``parse_expr`` on every fixture line;
-``bench.py`` measures both (the Spark analogue of the reference's
-split-vs-regex study, benches/parsing_strategies.rs:9-12).
+the earlier rounds' 32-core timings of both, ``parse_pandas`` and
+``parse_expr`` in ``BENCH_r0*.json``, are the Spark analogue of the
+reference's split-vs-regex study (benches/parsing_strategies.rs:9-12).
 """
 
 from __future__ import annotations

@@ -662,7 +662,7 @@ def quantized_cosine_topk(
     ``pre_quantized=True`` is the production shape: both frames already
     carry ``q_embedding`` from a one-time ``quantize_int8`` at ingest
     (materialized int8 parquet is 3.5× smaller — fewer bytes stored,
-    scanned and shuffled; local warm-cache compute ties, per bench.py); False quantizes on the fly for ad-hoc use.
+    scanned and shuffled; local warm-cache compute ties, per the round harness); False quantizes on the fly for ad-hoc use.
     """
     qz_q = queries if pre_quantized else quantize_int8(queries, vec_col=vec_col)
     qz_c = corpus if pre_quantized else quantize_int8(corpus, vec_col=vec_col)

@@ -317,7 +317,8 @@ def clean_corpus(
     ``salts > 1`` routes the exact-dedup survivor join-back through the
     explicit salted join (operators.skew) — the crawl-corpus reality of a
     viral boilerplate document whose fingerprint holds a large share of
-    all rows; measured default-vs-salted in bench.py (``dedup_hot``).
+    all rows; measured default-vs-salted in the retired round harness
+    (``dedup_hot``).
     """
     from ..functions.text import lang_guess, quality_score
     from .dedup import dedup_survivors, minhash_lsh_pairs, neardup_survivors_cc

@@ -61,7 +61,8 @@ def dedup_survivors(
     a hot fingerprint — a doc duplicated millions of times in a crawl —
     into one task.  The PRODUCTION remedy is AQE's skew-join split, on by
     default in session.py and measured effective (16M rows, one fp holding
-    25%: 9.2 s vs 11.2 s with the split disabled — bench.py `dedup_hot`).
+    25%: 9.2 s vs 11.2 s with the split disabled — the retired round
+    harness's `dedup_hot` group).
     ``salts > 1`` routes the join through ``operators.skew.salted_join``
     instead — but note the keepers side is one row per DISTINCT
     fingerprint, i.e. corpus-sized at low dup rates, and salts x
@@ -305,7 +306,7 @@ def minhash_lsh_pairs(
     only the verify step needs.  The verify re-shingles ONLY the docs
     that appear in a candidate pair (semi-join on the raw table first),
     so the recompute is O(docs-in-pairs), not a second full-corpus
-    tokenize.  Measured (bench.py ``lsh_pairs_slim`` vs
+    tokenize.  Measured (round harness ``lsh_pairs_slim`` vs
     ``lsh_pairs_carry``, round-7 in-session medians on the 200k-doc
     corpus): slim 5.2 s vs carry 4.6 s — carry is ~12% faster on this
     single box, where shuffle is DRAM-speed and the slim form pays one

@@ -49,9 +49,10 @@ EXPR_SAFE_FIELD_BUDGET = 7
 def choose_parser(fields: list[str] | None) -> str:
     """Per-query-shape parser selection (the ``parser="auto"`` policy).
 
-    The expr parser is both the fastest absolute (2.4 s vs 5.2 s at sf0.1)
-    and the best-scaling (0.59 vs 0.27-0.37 per-stage efficiency,
-    BENCH/stage_scaling.txt) because it never pays the Arrow IPC boundary —
+    The expr parser is both the fastest absolute (2.4 s vs 5.2 s at sf0.1
+    on 32 cores, ``BENCH_r02.json``) and the best-scaling (0.59 vs
+    0.27-0.37 per-stage efficiency, BENCH/stage_scaling.txt) because it
+    never pays the Arrow IPC boundary —
     but it is only safe when the downstream keeps a NARROW field set (see
     EXPR_SAFE_FIELD_BUDGET).  Wide or unknown field sets go to the arrow
     parser, whose mapInArrow node is a deliberate pushdown barrier.

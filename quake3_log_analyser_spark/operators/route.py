@@ -123,9 +123,9 @@ def write_sinks(
     table partitioned by ``(sink, bucket(conv_id), day(ts))``.
 
     ``files_per_sink`` clusters rows by ``(sink, hash(conv_id) %
-    files_per_sink)`` before the write (the ``bm25_write_index`` bucket
-    pattern): without it every upstream task scatters a file into every
-    sink directory — ``tasks x sinks`` files and task-commit round-trips,
+    files_per_sink)`` before the write: without it every upstream task
+    scatters a file into every sink directory — ``tasks x sinks`` files
+    and task-commit round-trips,
     which at cluster scale (thousands of tasks) floods the object-store
     with tiny files and serializes the commit protocol.  With it the
     file count is exactly ``sinks x files_per_sink`` and each task's

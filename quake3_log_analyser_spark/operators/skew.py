@@ -68,8 +68,8 @@ def salted_join(
     keepers side is one row per distinct fingerprint, i.e. corpus-sized,
     and salting it 8x turned a 9 s join into a timeout at 16M rows, while
     AQE's skew-join split handled the same hot key at runtime (9.2 s vs
-    11.2 s with the split disabled; `dedup_hot` in bench.py re-measures
-    this every round).  Reach for salting only after checking the small
+    11.2 s with the split disabled; the retired round harness's
+    `dedup_hot` group measured it each round).  Reach for salting only after checking the small
     side's TOTAL size, or broadcast the hot keys' rows instead.
 
     ``how`` is restricted to joins whose output multiplicity the salting

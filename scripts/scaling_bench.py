@@ -113,10 +113,10 @@ Reference single-thread baseline: ~3,000,000 log lines/sec
 (/root/reference/README.md:62, hardware unspecified).
 
 Notes:
-- the per-round BENCH_r{{N}}.json comes from bench.py at sf0.1 (~1.5M
-  turns), where fixed startup dominates — scaling numbers are only
-  meaningful on this harness's larger table;
-- the bucketed + session-first plan (bench `pipeline_kills_bucketed`)
+- the per-round BENCH_r{{N}}.json came from the retired round harness at
+  sf0.1 (~1.5M turns), where fixed startup dominates — scaling numbers
+  are only meaningful on this harness's larger table;
+- the bucketed + session-first plan (`scaling_worker.py` bucketed mode)
   removes the one remaining shuffle+sort before the window; at cluster
   scale that plan's scaling is limited only by the post-parse grouped
   aggregations.

@@ -25,6 +25,41 @@ REPO = Path(__file__).resolve().parents[1]
 sys.path.insert(0, str(REPO))
 
 
+def ensure_bucketed(spark, tpath: str, n_buckets: int = 32) -> str:
+    """Bucketed + sorted twin of the transcripts table: the sessionize
+    window reads it with NO shuffle and NO sort (SURVEY.md §4 scale lever).
+
+    ``repartition(n_buckets, "conv_id")`` before the write gives one file
+    per bucket, which ``spark.sql.legacy.bucketedTableScan.outputOrdering``
+    needs to skip the window sort.  Location and table name carry
+    ``n_buckets`` so differently-bucketed twins of the same table never
+    register a DDL whose bucket count contradicts the files."""
+    from quake3_log_analyser_spark.schemas import TRANSCRIPT_SCHEMA
+
+    suffix = f"_bucketed{n_buckets}"
+    loc = tpath + suffix
+    tbl = f"bench_transcripts{suffix}"
+    ddl_cols = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in TRANSCRIPT_SCHEMA)
+    spark.sql(f"DROP TABLE IF EXISTS {tbl}")
+    if not (Path(loc) / "_SUCCESS").exists():
+        df = spark.read.schema(TRANSCRIPT_SCHEMA).parquet(tpath)
+        (
+            df.repartition(n_buckets, "conv_id")
+            .write.mode("overwrite")
+            .bucketBy(n_buckets, "conv_id")
+            .sortBy("conv_id", "turn_idx")
+            .option("path", loc)
+            .saveAsTable(tbl)
+        )
+    else:
+        spark.sql(
+            f"CREATE TABLE {tbl} ({ddl_cols}) USING parquet "
+            f"CLUSTERED BY (conv_id) SORTED BY (conv_id, turn_idx) "
+            f"INTO {n_buckets} BUCKETS LOCATION '{loc}'"
+        )
+    return tbl
+
+
 def main():
     cpus = int(sys.argv[1])
     tpath = sys.argv[2]
@@ -52,9 +87,7 @@ def main():
         },
     )
     if mode == "bucketed":
-        import bench
-
-        tbl = bench.ensure_bucketed(spark, tpath, n_buckets=n_buckets)
+        tbl = ensure_bucketed(spark, tpath, n_buckets=n_buckets)
         t = spark.table(tbl)
     else:
         t = spark.read.schema(TRANSCRIPT_SCHEMA).parquet(tpath)

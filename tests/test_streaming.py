@@ -313,57 +313,3 @@ def test_window_metrics_watermark_late_data(spark, tmp_path):
     w12 = T0 + dt.timedelta(seconds=120)
     assert by_start[w12] == (1, 0, 1)
     assert set(by_start) == {T0, T0 + dt.timedelta(seconds=10), w12}
-
-
-def test_dedup_stream_drops_redeliveries_within_watermark(spark, tmp_path):
-    """Streaming exact dedup: a re-delivered document (same normalized-
-    content fingerprint) arriving in a LATER micro-batch within the
-    watermark horizon is dropped; fresh content passes; the survivor is
-    the first arrival.  State is keyed on the same fingerprint the batch
-    dedup uses, so both paths agree on document identity."""
-    import datetime as dt
-
-    from quake3_log_analyser_spark.streaming.dedup_stream import dedup_stream
-
-    T0 = dt.datetime(2024, 1, 1, 0, 0, 0)
-    schema = "doc_id long, text string, ts timestamp"
-
-    def row(i, text, sec):
-        return (i, text, T0 + dt.timedelta(seconds=sec))
-
-    chunk1 = [row(1, "Hello World", 1), row(2, "other text entirely", 2)]
-    # doc 3 is doc 1 re-delivered with case/whitespace damage (same
-    # fingerprint after normalization); doc 4 is genuinely new
-    chunk2 = [row(3, "  HELLO   world ", 5), row(4, "fresh content here", 6)]
-
-    src = tmp_path / "dedup_src"
-    spark.createDataFrame(chunk1, schema).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(str(src))
-    time.sleep(1.1)
-    spark.createDataFrame(chunk2, schema).coalesce(1).write.mode(
-        "append"
-    ).parquet(str(src))
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src))
-    )
-    q = (
-        dedup_stream(stream, watermark="10 minutes")
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName("dedup_stream_out")
-        .option("checkpointLocation", str(tmp_path / "dedup_ckpt"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-    got = spark.sql("SELECT * FROM dedup_stream_out").collect()
-    assert sorted(r["doc_id"] for r in got) == [1, 2, 4]
-    # fingerprints unique, and doc 1 (first arrival) is the survivor
-    assert len({r["fp"] for r in got}) == 3

@@ -1,6 +1,6 @@
 """Training-data operator tests: dedup (exact / jaccard / minhash-LSH /
-simhash), ANN (brute force + LSH recall), text analysis, multimodal
-plumbing."""
+simhash), ANN (brute force + LSH recall), text analysis, corpus
+composition."""
 
 from __future__ import annotations
 
@@ -377,71 +377,6 @@ def test_lang_guess_on_documents_table(spark):
     assert counts.get("en", 0) > counts.get("und", 0)
 
 
-def test_multimodal_plumbing(spark):
-    from quake3_log_analyser_spark.operators.multimodal import (
-        extract_features,
-        frame_sample_plan,
-        synthetic_media,
-    )
-
-    media = synthetic_media(spark, 30)
-    feats = extract_features(media, dim=8).collect()
-    assert len(feats) == 30
-    by_id = {r["media_id"]: r for r in feats}
-    assert all(len(r["feature"]) == 8 for r in feats)
-    assert all(r["n_bytes"] > 0 for r in feats)
-    # determinism: same payload -> same feature
-    feats2 = {r["media_id"]: r["feature"] for r in extract_features(media, dim=8).collect()}
-    assert feats2[0] == by_id[0]["feature"]
-
-    frames = frame_sample_plan(media, every_n=10)
-    rows = frames.groupBy("media_id").count().collect()
-    assert rows and all(r["count"] >= 3 for r in rows)
-
-
-def test_multimodal_real_decode_roundtrip():
-    """decode_image is REAL for PPM/BMP (pure numpy, no codec libs): both
-    encodings of the same gradient decode back to identical pixel arrays,
-    including BMP 4-byte row padding at odd widths."""
-    import numpy as np
-
-    from quake3_log_analyser_spark.operators.multimodal import (
-        _gradient_image,
-        decode_image,
-        encode_bmp,
-        encode_ppm,
-    )
-
-    for w, h in [(12, 9), (7, 5)]:
-        img = _gradient_image(3, w, h)
-        assert np.array_equal(decode_image(encode_ppm(img)), img)
-        assert np.array_equal(decode_image(encode_bmp(img)), img)
-    with pytest.raises(ValueError, match="magic|Pillow"):
-        decode_image(b"\x89PNG\r\nnot-actually-decodable-without-pillow")
-
-
-@pytest.mark.parametrize("fmt", ["ppm", "bmp"])
-def test_multimodal_real_feature_pipeline(spark, fmt):
-    """The SAME extract_features pipeline runs with the real decoder
-    (fake_decoder=False) on real encoded payloads — and with the fake
-    decoder — satisfying the both-modes contract (VERDICT r2 item 8)."""
-    from quake3_log_analyser_spark.operators.multimodal import (
-        extract_features,
-        synthetic_image_media,
-    )
-
-    media = synthetic_image_media(spark, n=12, fmt=fmt)
-    real = {r["media_id"]: r for r in extract_features(media, dim=8, fake_decoder=False).collect()}
-    fake = {r["media_id"]: r for r in extract_features(media, dim=8, fake_decoder=True).collect()}
-    assert len(real) == 12 and len(fake) == 12
-    assert all(len(r["feature"]) == 8 for r in real.values())
-    # real features are image-content-derived, not payload-hash-derived
-    assert real[0]["feature"] != fake[0]["feature"]
-    # determinism of the real path
-    again = {r["media_id"]: r["feature"] for r in extract_features(media, dim=8, fake_decoder=False).collect()}
-    assert again[5] == real[5]["feature"]
-
-
 def test_lsh_signature_null_vectors(spark):
     """NULL / empty vectors must yield NULL signatures, not crash the batch
     (round-2 ADVICE: np.stack raised on a None in the batch)."""
@@ -579,27 +514,6 @@ def test_salted_join_rejects_multiplicity_breaking_how(spark):
         salted_join(df, df, "k", salts=4, how="right")
     with pytest.raises(ValueError, match="multiplicity"):
         salted_join(df, df, "k", salts=4, how="full_outer")
-
-
-def test_extract_features_real_decoder_mixed_kinds(spark):
-    """A mixed media table (image + audio + video) must not crash the real
-    decoder path: only image rows hit decode_image, the rest take the
-    deterministic fake path."""
-    from quake3_log_analyser_spark.operators.multimodal import (
-        extract_features,
-        synthetic_image_media,
-        synthetic_media,
-    )
-
-    av_only = synthetic_media(spark, 9).filter(F.col("kind") != "image")
-    mixed = av_only.unionByName(
-        synthetic_image_media(spark, n=3).select(
-            (F.col("media_id") + 1000).alias("media_id"), "kind", "payload", "meta"
-        )
-    )
-    n_av = av_only.count()
-    rows = extract_features(mixed, dim=8, fake_decoder=False).collect()
-    assert len(rows) == n_av + 3 and all(len(r["feature"]) == 8 for r in rows)
 
 
 def test_parse_pedantic_rejects_non_arrow_parsers(spark):
@@ -808,64 +722,6 @@ def test_corpus_job_full_menu(spark, tmp_path):
     ) == []
 
 
-def test_audio_real_decode_roundtrip_and_features():
-    """decode_audio is REAL for PCM WAV (stdlib wave, no codec libs): an
-    encoded tone decodes back sample-exact; features are deterministic;
-    non-WAV magic raises like decode_image's unrecognized tier."""
-    import numpy as np
-
-    from quake3_log_analyser_spark.operators.multimodal import (
-        audio_features,
-        decode_audio,
-        encode_wav,
-    )
-
-    rate = 16000
-    t = np.arange(4000) / rate
-    sig = (0.5 * np.sin(2 * np.pi * 440.0 * t) * 32767).astype(np.int16)
-    samples, r = decode_audio(encode_wav(sig, rate))
-    assert r == rate and len(samples) == len(sig)
-    assert np.allclose(samples, sig / 32768.0, atol=1e-12)
-    f1 = audio_features(samples, r, 8)
-    f2 = audio_features(samples, r, 8)
-    assert np.array_equal(f1, f2) and len(f1) == 8
-    # a louder signal must move the features (they respond to content)
-    f3 = audio_features(samples * 0.1, r, 8)
-    assert not np.array_equal(f1, f3)
-    with pytest.raises(ValueError):
-        decode_audio(b"ID3\x04not-a-wav")
-    with pytest.raises(ValueError):
-        decode_audio(b"")
-
-
-def test_extract_features_real_audio_pipeline(spark):
-    """The SAME extract_features pipeline runs the real stdlib WAV decode
-    (fake_decoder=False) over real PCM payloads — deterministic, 8-wide,
-    and distinguishable from the fake-hash path (proving the real branch
-    engaged)."""
-    from quake3_log_analyser_spark.operators.multimodal import (
-        extract_features,
-        synthetic_audio_media,
-    )
-
-    media = synthetic_audio_media(spark, n=8)
-    real = {
-        r["media_id"]: r["feature"]
-        for r in extract_features(media, dim=8, fake_decoder=False).collect()
-    }
-    fake = {
-        r["media_id"]: r["feature"]
-        for r in extract_features(media, dim=8, fake_decoder=True).collect()
-    }
-    assert len(real) == 8 and all(len(v) == 8 for v in real.values())
-    assert real != fake
-    again = {
-        r["media_id"]: r["feature"]
-        for r in extract_features(media, dim=8, fake_decoder=False).collect()
-    }
-    assert real == again
-
-
 def test_ann_job_cli_index_then_query(spark, emb, tmp_path):
     """jobs/run_ann.py: the index/query CLI round-trips through the
     persisted centroid matrix and the cell-partitioned layout, matching
@@ -902,29 +758,6 @@ def test_ann_job_cli_index_then_query(spark, emb, tmp_path):
         for r in rows
     )
     assert norm(got) == norm(want)
-
-
-def test_extract_features_riff_but_not_wav_takes_fake_path(spark):
-    """A RIFF payload that is not decodable PCM WAV (an AVI container, a
-    truncated header) must NOT crash the real-decoder pipeline — the
-    never-crash dispatch contract routes it down the fake path."""
-    from quake3_log_analyser_spark.operators.multimodal import (
-        MEDIA_SCHEMA,
-        decode_audio,
-        extract_features,
-    )
-
-    bad_riff = b"RIFF\x24\x00\x00\x00AVI LIST"
-    with pytest.raises(ValueError):
-        decode_audio(bad_riff)
-    with pytest.raises(ValueError):
-        decode_audio(b"RIFF\x04\x00")  # truncated
-    media = spark.createDataFrame(
-        [(1, "audio", bytearray(bad_riff), (None, None, 16000, None, "audio/x"))],
-        MEDIA_SCHEMA,
-    )
-    rows = extract_features(media, dim=8, fake_decoder=False).collect()
-    assert len(rows) == 1 and len(rows[0]["feature"]) == 8
 
 
 def test_hash_sample_deterministic_and_calibrated(spark, docs):
