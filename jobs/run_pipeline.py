@@ -13,9 +13,9 @@ per-partition lineage/metrics committed to the checkpoint table; with
 ``--resume`` only uncommitted units are processed (idempotent restart).
 Under spark-submit the session factory detects the submitted
 ``spark.master`` and builds on it (session.py::_submitted_master), so the
-SAME entrypoint runs local[N] smoke tests and N/4N-executor clusters —
-``scripts/submit_scaling.py`` drives exactly this path at two cluster
-sizes for the scaling-efficiency evidence.
+SAME entrypoint runs local[N] smoke tests and N-executor clusters.  Every
+run ends with one ``elapsed_s=... master=... parallelism=...`` line: the
+work time (JVM/session startup excluded) and the cluster it ran on.
 """
 
 from __future__ import annotations
@@ -45,25 +45,6 @@ def main() -> None:
         "violations (the reference's --pedantic, app/src/main.rs:84-85)",
     )
     ap.add_argument(
-        "--files-per-sink", type=int, default=None,
-        help="cluster the routed rows by (sink, hash(conv_id) %% N) before "
-        "the partitioned write: bounds output files at sinks x N and cuts "
-        "task-commit overhead (one extra shuffle); default: direct write",
-    )
-    ap.add_argument(
-        "--skip-sinks", action="store_true",
-        help="skip the five-sink write (aggregate-only run): used by the "
-        "scaling harness to decompose compute-vs-write shares",
-    )
-    ap.add_argument(
-        "--reps", type=int, default=1,
-        help="run the (non-resume) pipeline this many times, printing "
-        "one elapsed_s line per rep; rep 1 pays one-time JVM codegen + "
-        "python-worker spawn, later reps are the steady state a "
-        "long-running cluster job amortizes to (writes are "
-        "mode=overwrite, so re-runs are idempotent)",
-    )
-    ap.add_argument(
         "--verbose", action="store_true",
         help="log-and-continue tier: print per-kind parse-error and "
         "violation counts (df.observe — zero extra scans)",
@@ -83,8 +64,8 @@ def main() -> None:
     spark = SparkSession.getActiveSession() or get_spark("transcript-pipeline")
     transcripts = load_transcripts(spark, args.input)
     ops = frozenset(args.ops.split(","))
-    # work time, JVM/session startup excluded — submit_scaling.py parses
-    # the elapsed_s line to compute cross-cluster-size throughput
+    # --pedantic is the feed gate AND the violations gate, on both paths
+    stop_on_violations = args.stop_on_violations or args.pedantic
     t_work0 = time.perf_counter()
 
     if args.resume:
@@ -92,6 +73,7 @@ def main() -> None:
             spark, transcripts, args.output, args.checkpoint,
             run_id=args.run_id, n_units=args.n_units,
             pedantic=args.pedantic, ops=ops,
+            stop_on_violations=stop_on_violations,
         )
         print(f"resumable run {args.run_id}: processed units {units}")
         if args.verbose and units:
@@ -105,55 +87,41 @@ def main() -> None:
                     f"matches={r['n_matches']}"
                 )
     else:
-        for rep in range(args.reps):
-            t_rep0 = time.perf_counter()
-            # pedantic gates the SINKS parse too: the in-task raise fires
-            # during the first write job, so no sink output ever commits
-            # from a run that must fail on the first malformed line (the
-            # reference --pedantic aborts before emitting anything)
-            sessionized = sessionize(
-                parse_transcripts(transcripts, pedantic=args.pedantic)
-            )
-            obs = None
-            # the issue observation rides the sink-write job; with the
-            # write skipped there is no action on this frame to fire it
-            if args.verbose and not args.skip_sinks:
-                from quake3_log_analyser_spark.plans.checkpoint import (
-                    issue_counts,
-                    observe_issues,
-                )
-
-                sessionized, obs = observe_issues(sessionized)
-            paths = {}
-            if not args.skip_sinks:
-                paths = write_sinks(
-                    sessionized, f"{args.output}/sinks",
-                    files_per_sink=args.files_per_sink,
-                )
-            summaries = summarize_matches(
-                transcripts, ops=ops,
-                stop_on_violations=args.stop_on_violations or args.pedantic,
-                stop_on_feed_errors=args.pedantic,
-                session_first=args.session_first,
-            )
-            summaries.write.mode("overwrite").parquet(
-                f"{args.output}/match_summaries"
-            )
-            print(f"run {args.run_id}: sinks={list(paths)} + match_summaries")
-            if obs is not None:
-                for kind, n in sorted(issue_counts(obs).items()):
-                    print(f"log_issues {kind}: {n}")
-            print(
-                f"rep={rep} elapsed_s={time.perf_counter() - t_rep0:.3f} "
-                f"master={spark.sparkContext.master} "
-                f"parallelism={spark.sparkContext.defaultParallelism}"
-            )
-    if args.resume:
-        print(
-            f"elapsed_s={time.perf_counter() - t_work0:.3f} "
-            f"master={spark.sparkContext.master} "
-            f"parallelism={spark.sparkContext.defaultParallelism}"
+        # pedantic gates the SINKS parse too: the in-task raise fires
+        # during the first write job, so no sink output ever commits
+        # from a run that must fail on the first malformed line (the
+        # reference --pedantic aborts before emitting anything)
+        sessionized = sessionize(
+            parse_transcripts(transcripts, pedantic=args.pedantic)
         )
+        obs = None
+        if args.verbose:
+            from quake3_log_analyser_spark.plans.checkpoint import (
+                issue_counts,
+                observe_issues,
+            )
+
+            # the issue observation rides the sink-write job
+            sessionized, obs = observe_issues(sessionized)
+        paths = write_sinks(sessionized, f"{args.output}/sinks")
+        summaries = summarize_matches(
+            transcripts, ops=ops,
+            stop_on_violations=stop_on_violations,
+            stop_on_feed_errors=args.pedantic,
+            session_first=args.session_first,
+        )
+        summaries.write.mode("overwrite").parquet(
+            f"{args.output}/match_summaries"
+        )
+        print(f"run {args.run_id}: sinks={list(paths)} + match_summaries")
+        if obs is not None:
+            for kind, n in sorted(issue_counts(obs).items()):
+                print(f"log_issues {kind}: {n}")
+    print(
+        f"elapsed_s={time.perf_counter() - t_work0:.3f} "
+        f"master={spark.sparkContext.master} "
+        f"parallelism={spark.sparkContext.defaultParallelism}"
+    )
 
 
 if __name__ == "__main__":

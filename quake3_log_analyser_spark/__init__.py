@@ -6,9 +6,10 @@ to multi-turn conversation/agent transcript tables of shape
 ``(conv_id string, turn_idx int, role string, text string, tool string,
 ts timestamp)`` and re-expressed Spark-first:
 
-- parse stage: ``functions.parse_expr`` (pure JVM column expressions,
-  whole-stage codegen) and ``functions.parse_pandas`` (Arrow-vectorized
-  pandas UDF) — semantics of
+- parse stage: ``functions.parse_arrow`` (pyarrow compute kernels in a
+  ``mapInArrow`` stage, the default parser), ``functions.parse_expr``
+  (pure JVM column expressions, whole-stage codegen) and
+  ``functions.parse_pandas`` (Arrow-vectorized pandas UDF) — semantics of
   ``quake3-server-events/src/deserializer_logs.rs:15-169``
 - translation/projection: ``operators.translate`` —
   ``dal/src/events_translation.rs:13-39``

@@ -51,9 +51,9 @@ def choose_parser(fields: list[str] | None) -> str:
 
     The expr parser is both the fastest absolute (2.4 s vs 5.2 s at sf0.1
     on 32 cores, ``BENCH_r02.json``) and the best-scaling (0.59 vs
-    0.27-0.37 per-stage efficiency, BENCH/stage_scaling.txt) because it
-    never pays the Arrow IPC boundary —
-    but it is only safe when the downstream keeps a NARROW field set (see
+    0.27-0.37 per-stage efficiency, stage table in BENCH/BASELINE.md)
+    because it never pays the Arrow IPC boundary — but it is only safe
+    when the downstream keeps a NARROW field set (see
     EXPR_SAFE_FIELD_BUDGET).  Wide or unknown field sets go to the arrow
     parser, whose mapInArrow node is a deliberate pushdown barrier.
     """

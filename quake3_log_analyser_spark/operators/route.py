@@ -112,7 +112,6 @@ def write_sinks(
     sessionized: DataFrame,
     base_path: str,
     mode: str = "overwrite",
-    files_per_sink: int | None = None,
 ) -> dict[str, str]:
     """Materialize every sink in ONE ``partitionBy(sink)`` pass; returns
     per-sink paths (``base_path/sink=<name>``).
@@ -121,30 +120,11 @@ def write_sinks(
     a persist of the sessionized stream is a memory/disk cliff) and no
     re-computation per sink.  On Iceberg deployments the same shape is one
     table partitioned by ``(sink, bucket(conv_id), day(ts))``.
-
-    ``files_per_sink`` clusters rows by ``(sink, hash(conv_id) %
-    files_per_sink)`` before the write: without it every upstream task
-    scatters a file into every sink directory — ``tasks x sinks`` files
-    and task-commit round-trips,
-    which at cluster scale (thousands of tasks) floods the object-store
-    with tiny files and serializes the commit protocol.  With it the
-    file count is exactly ``sinks x files_per_sink`` and each task's
-    output is one contiguous file in one directory, at the price of one
-    extra shuffle of the routed rows.  Size it to O(cluster cores).
-    ``None`` keeps the shuffle-free direct write (right when the upstream
-    task count is already small).
     """
     labeled = sessionized.withColumn("sink", sink_label()).filter(
         F.col("sink").isNotNull()
     )
     out = labeled.select(*ROUTED_COLUMNS, "sink")
-    if files_per_sink is not None:
-        if files_per_sink < 1:
-            raise ValueError(f"files_per_sink must be >= 1, got {files_per_sink}")
-        out = out.repartition(
-            F.col("sink"),
-            F.pmod(F.xxhash64("conv_id"), F.lit(files_per_sink)),
-        )
     out.write.mode(mode).partitionBy("sink").parquet(base_path)
     # a sink with zero rows gets no partition directory — return only the
     # sinks that materialized (readers of an absent path would throw).

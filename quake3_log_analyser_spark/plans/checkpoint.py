@@ -16,10 +16,6 @@ a run must be resumable and auditable.  Design:
   the partitioned write commits (write-ahead ordering: sinks first, then
   the checkpoint rows; a crash between the two re-processes those units
   into overwritten partitions, which is idempotent).
-* On Iceberg the same logic rides snapshot commits
-  (``run_resumable_iceberg``): the summaries write is one atomic
-  ``overwritePartitions`` snapshot, the checkpoint append a second, and
-  restart reads the last committed checkpoint snapshot.
 
 Scale note: n_units bounds the observe expression count (3 per unit) and
 the partition count of the output — hundreds are fine, and each pending
@@ -181,6 +177,7 @@ def _build_unit_run(
     n_units: int,
     pedantic: bool = False,
     ops: frozenset[str] | set[str] = frozenset({"kills"}),
+    stop_on_violations: bool = False,
 ):
     """Shared single-pass core: pending-unit filter -> parse -> sessionize
     (with per-unit observe metrics) -> summaries re-keyed by convhash.
@@ -191,7 +188,8 @@ def _build_unit_run(
     vectorized aggregation (``summarize_multi``); a menu with
     ``player_resolutions`` takes the exact replay fold stage
     (``summarize_extended``) over the parsed rows, whose conv_id shuffle
-    co-partitions with the unit hash."""
+    co-partitions with the unit hash; ``stop_on_violations`` reaches that
+    fold exactly as it does from ``summarize_matches``."""
     from ..operators.parse import parse_transcripts
     from ..operators.sessionize import sessionize
     from ..operators.summarize import summarize_extended, summarize_multi
@@ -217,7 +215,7 @@ def _build_unit_run(
     sess = sess.observe(obs, *exprs)
 
     if "player_resolutions" in ops:
-        summaries = summarize_extended(sess, ops)
+        summaries = summarize_extended(sess, ops, stop_on_violations)
     else:
         summaries = summarize_multi(sess, ops)
     # summarize drops the passthrough columns via aggregation; the unit is
@@ -253,6 +251,7 @@ def run_resumable(
     n_units: int = 16,
     pedantic: bool = False,
     ops: frozenset[str] | set[str] = frozenset({"kills"}),
+    stop_on_violations: bool = False,
 ) -> list[str]:
     """Process the table's uncommitted conv_id-hash units in ONE pass.
 
@@ -262,7 +261,7 @@ def run_resumable(
     un-committed units, whose partitions are dynamically overwritten.
     ``ops`` selects the summary menu (previously the resumable path always
     computed kills-only, silently ignoring the CLI's --ops under
-    --resume).
+    --resume).  ``stop_on_violations`` has ``summarize_matches``'s meaning.
     """
     done = committed_units(spark, checkpoint_path)
     _check_ops_marker(done, ops, checkpoint_path)
@@ -271,7 +270,9 @@ def run_resumable(
         return []
 
     t0 = time.perf_counter()
-    summaries, obs = _build_unit_run(transcripts, pending, n_units, pedantic, ops)
+    summaries, obs = _build_unit_run(
+        transcripts, pending, n_units, pedantic, ops, stop_on_violations
+    )
     (
         summaries.write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
@@ -282,71 +283,4 @@ def run_resumable(
     if _ops_marker(ops) not in done:
         metrics[_ops_marker(ops)] = {}
     commit_units(spark, checkpoint_path, run_id, metrics)
-    return [f"convhash={u}" for u in pending]
-
-
-def committed_units_table(spark: SparkSession, checkpoint_table: str) -> set[str]:
-    """Committed units from a catalog (e.g. Iceberg) checkpoint table —
-    reads the table's LAST COMMITTED SNAPSHOT (Iceberg read isolation), so
-    a writer that died mid-append is invisible here."""
-    try:
-        rows = (
-            spark.read.table(checkpoint_table).select("unit").distinct().collect()
-        )
-        return {r["unit"] for r in rows}
-    except Exception:
-        return set()
-
-
-def run_resumable_iceberg(
-    spark: SparkSession,
-    transcripts: DataFrame,
-    summaries_table: str,
-    checkpoint_table: str,
-    run_id: str,
-    n_units: int = 16,
-    pedantic: bool = False,
-    ops: frozenset[str] | set[str] = frozenset({"kills"}),
-) -> list[str]:
-    """Snapshot-based idempotent resume on Iceberg tables (the 100 TB
-    deployment posture; requires the Iceberg Spark runtime jars).
-
-    Same unit logic as ``run_resumable`` but each write is ONE atomic
-    Iceberg snapshot:
-
-    * summaries land via ``writeTo(...).overwritePartitions()`` — dynamic
-      partition overwrite under snapshot isolation, so re-running a unit
-      replaces exactly its ``convhash`` partition and readers never see a
-      half-written state;
-    * the checkpoint append is a second snapshot; restart reads the last
-      committed checkpoint snapshot (``committed_units_table``).  A crash
-      between the two snapshots re-processes only the unclaimed units into
-      overwritten partitions — idempotent, same write-ahead ordering as
-      the parquet path.
-    """
-    done = committed_units_table(spark, checkpoint_table)
-    _check_ops_marker(done, ops, checkpoint_table)
-    pending = [u for u in range(n_units) if f"convhash={u}" not in done]
-    if not pending:
-        return []
-
-    t0 = time.perf_counter()
-    summaries, obs = _build_unit_run(transcripts, pending, n_units, pedantic, ops)
-    if spark.catalog.tableExists(summaries_table):
-        summaries.writeTo(summaries_table).overwritePartitions()
-    else:
-        (
-            summaries.writeTo(summaries_table)
-            .partitionedBy(F.col("convhash"))
-            .using("iceberg")
-            .create()
-        )
-    metrics = _unit_metrics(obs, pending, time.perf_counter() - t0)
-    if _ops_marker(ops) not in done:
-        metrics[_ops_marker(ops)] = {}
-    mdf = _metrics_df(spark, run_id, metrics)
-    if spark.catalog.tableExists(checkpoint_table):
-        mdf.writeTo(checkpoint_table).append()
-    else:
-        mdf.writeTo(checkpoint_table).using("iceberg").create()
     return [f"convhash={u}" for u in pending]

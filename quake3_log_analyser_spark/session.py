@@ -115,8 +115,8 @@ def get_spark(
     # run at the cluster size the operator chose, not a hard-coded
     # local[N].  Only when no master was submitted (library / pytest /
     # bench use) does the local[cpus] default apply.  An explicit
-    # ``cpus=`` argument still wins — callers like perfbench and the
-    # scaling workers pin their parallelism deliberately.
+    # ``cpus=`` argument still wins — callers like perfbench pin their
+    # parallelism deliberately.
     submitted = _submitted_master() if cpus is None else None
     cpus = cpus or DEFAULT_CPUS
     if shuffle_partitions is None:

@@ -46,7 +46,7 @@ def main():
     import __spark_entry__ as entrymod
     from quake3_log_analyser_spark.session import get_spark
 
-    spark = get_spark("oracle-check", cpus=8, shuffle_partitions=8)
+    spark = get_spark("oracle-check")
     con = duckdb.connect()
     for t in TABLES:
         p = f"{sf_dir}/{t}.parquet"

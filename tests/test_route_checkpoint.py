@@ -180,51 +180,6 @@ def test_observe_issues_on_malformed_fixture(spark):
     assert n_err_rows > 0
 
 
-def test_iceberg_snapshot_resume(spark, tmp_path):
-    """Snapshot-based idempotent resume (VERDICT r2 item 3): summaries via
-    one atomic overwritePartitions snapshot, checkpoint append as a second,
-    restart from the last committed snapshot.  Runs only with the Iceberg
-    Spark runtime jars on the classpath (the 100 TB posture)."""
-    from tests.test_sources import _has_iceberg
-
-    if not _has_iceberg(spark):
-        pytest.skip("Iceberg Spark runtime jars not on the classpath")
-    from quake3_log_analyser_spark.plans.checkpoint import run_resumable_iceberg
-    from tests.conftest import FIXTURES_BLL
-
-    path = FIXTURES_BLL / "discrepant.log"
-    if not path.exists():
-        pytest.skip("reference fixture unavailable")
-    spark.conf.set("spark.sql.catalog.it", "org.apache.iceberg.spark.SparkCatalog")
-    spark.conf.set("spark.sql.catalog.it.type", "hadoop")
-    spark.conf.set("spark.sql.catalog.it.warehouse", str(tmp_path / "wh"))
-    t = transcripts_from_file(spark, str(path), "discrepant")
-
-    done1 = run_resumable_iceberg(
-        spark, t, "it.db.summaries", "it.db.ckpt", run_id="r1", n_units=4
-    )
-    assert len(done1) == 4
-    assert spark.read.table("it.db.ckpt").count() == 5
-    n_sum = spark.read.table("it.db.summaries").count()
-
-    # idempotent: second run is a no-op, snapshot count unchanged for data
-    done2 = run_resumable_iceberg(
-        spark, t, "it.db.summaries", "it.db.ckpt", run_id="r2", n_units=4
-    )
-    assert done2 == []
-    assert spark.read.table("it.db.summaries").count() == n_sum
-
-    # crash-between-snapshots: remove one unit's checkpoint rows -> only it
-    # re-runs, and its partition is REPLACED (not duplicated) by the
-    # overwritePartitions snapshot
-    spark.sql("DELETE FROM it.db.ckpt WHERE unit = 'convhash=1'")
-    done3 = run_resumable_iceberg(
-        spark, t, "it.db.summaries", "it.db.ckpt", run_id="r3", n_units=4
-    )
-    assert done3 == ["convhash=1"]
-    assert spark.read.table("it.db.summaries").count() == n_sum
-
-
 def test_checkpoint_resume_honors_ops(spark, tmp_path):
     """The resumable path previously computed kills-only regardless of the
     CLI's --ops; it must now honor the menu — the one-pass vectorized
@@ -290,3 +245,52 @@ def test_checkpoint_resume_rejects_changed_ops_menu(spark, tmp_path):
     assert run_resumable(
         spark, t, out, ckpt, run_id="r3", n_units=2, ops={"kills"}
     ) == []
+
+
+def test_checkpoint_resume_honors_stop_on_violations(spark, tmp_path):
+    """run_resumable's fold must see stop_on_violations like
+    summarize_matches does: the job's --resume path otherwise dropped
+    --stop-on-violations (and the violations half of --pedantic)."""
+    from quake3_log_analyser_spark.plans.checkpoint import run_resumable
+    from quake3_log_analyser_spark.plans.pipeline import (
+        full_pipeline_ops,
+        summarize_matches,
+    )
+    from quake3_log_analyser_spark.sources.transcripts import transcripts_from_lines
+
+    lines = [
+        r" 0:00 InitGame: \fraglimit\20\timelimit\15",
+        " 0:01 ClientConnect: 2",
+        r" 0:01 ClientUserinfoChanged: 2 n\A\t\0\model\sarge",
+        " 0:02 Kill: 2 3 7: B killed C by MOD_ROCKET",
+        " 0:03 ShutdownGame:",
+    ]
+    t = transcripts_from_lines(spark, lines, "c0")
+    ops = full_pipeline_ops()
+
+    def norm(rows):
+        keyed = [
+            (
+                r["conv_id"], r["match_id"], r["total_kills"],
+                tuple(r["players"] or []),
+                tuple((k["player"], k["frags"]) for k in (r["kills"] or [])),
+                r["graceful"], r["error"],
+            )
+            for r in rows
+        ]
+        return sorted(keyed, key=repr)  # violation rows carry NULL counts
+
+    want = norm(summarize_matches(t, ops=ops, stop_on_violations=True).collect())
+    lenient = norm(summarize_matches(t, ops=ops).collect())
+    # non-vacuous: the gate changes the output on this input
+    assert want != lenient
+    assert any("DiscrepantPlayerName" in (r[-1] or "") for r in want)
+
+    out = str(tmp_path / "out")
+    done = run_resumable(
+        spark, t, out, str(tmp_path / "ckpt"), run_id="r1", n_units=2,
+        ops=ops, stop_on_violations=True,
+    )
+    assert done == ["convhash=0", "convhash=1"]
+    got = spark.read.parquet(f"{out}/summaries").drop("convhash").collect()
+    assert norm(got) == want

@@ -127,83 +127,6 @@ def test_rate_source_stdin_analogue(spark, tmp_path):
         assert [k["player"] for k in r["kills"]] == ["PlayerA"]
 
 
-def test_transform_with_state_matches_batch(spark, tmp_path):
-    """The Spark 4 StatefulProcessor variant (transformWithStateInPandas +
-    RocksDB state store) must reproduce the batch summaries exactly, with
-    state carried across micro-batches like the legacy variant."""
-    from quake3_log_analyser_spark.streaming.session_stream import (
-        summarize_matches_stream_tws,
-    )
-
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError:
-        pytest.skip(
-            "transformWithStateInPandas needs google.protobuf (its state "
-            "server protocol) — not usable in this container"
-        )
-    path = FIXTURES_BLL / "discrepant.log"
-    if not path.exists():
-        pytest.skip("reference fixture unavailable")
-    t = transcripts_from_file(spark, str(path), "discrepant")
-
-    half = 300
-    src = tmp_path / "tws_src"
-    t.filter(f"turn_idx <= {half}").coalesce(1).write.mode("overwrite").parquet(
-        str(src / "p1")
-    )
-    time.sleep(1.1)
-    t.filter(f"turn_idx > {half}").coalesce(1).write.mode("append").parquet(
-        str(src / "p1")
-    )
-
-    old = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        stream = (
-            spark.readStream.schema(TRANSCRIPT_SCHEMA)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(str(src / "p1"))
-        )
-        out = summarize_matches_stream_tws(stream, ops=FULL)
-        q = (
-            out.writeStream.outputMode("append")
-            .format("memory")
-            .queryName("tws_summaries")
-            .option("checkpointLocation", str(tmp_path / "tws_ckpt"))
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    finally:
-        if old is not None:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", old)
-        else:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-
-    got = spark.sql("SELECT * FROM tws_summaries").collect()
-    want = summarize_matches(t, ops=FULL).collect()
-
-    def norm(rows):
-        return sorted(
-            (
-                r["conv_id"], r["match_id"], r["total_kills"],
-                tuple(r["players"] or []),
-                tuple((k["player"], k["frags"]) for k in (r["kills"] or [])),
-                r["graceful"], r["error"],
-            )
-            for r in rows
-        )
-
-    assert norm(got) == norm(want)
-    assert len(got) == 1 and got[0]["total_kills"] == 105
-
-
 def test_window_metrics_watermark_late_data(spark, tmp_path):
     """Watermarked event-time windows: a LATE row arriving in a later
     micro-batch but within the watermark folds into its own (earlier)
