@@ -78,11 +78,19 @@ def main() -> None:
         print(f"resumable run {args.run_id}: processed units {units}")
         if args.verbose and units:
             # the resumable pass already commits per-unit issue metrics —
-            # surface the rows this run produced
+            # surface the rows of the units this invocation processed, not
+            # the ops marker or units an earlier invocation committed
             ck = spark.read.parquet(args.checkpoint)
-            for r in ck.filter(ck.run_id == args.run_id).collect():
+            rows = {
+                r["unit"]: r
+                for r in ck.filter(
+                    (ck.run_id == args.run_id) & ck.unit.isin(units)
+                ).collect()
+            }
+            for unit in units:
+                r = rows[unit]
                 print(
-                    f"log_issues {r['unit']}: rows={r['n_input_rows']} "
+                    f"log_issues {unit}: rows={r['n_input_rows']} "
                     f"parse_errors={r['n_parse_errors']} "
                     f"matches={r['n_matches']}"
                 )

@@ -120,11 +120,21 @@ def _check_ops_marker(done: set[str], ops, where: str) -> None:
 
 
 def committed_units(spark: SparkSession, checkpoint_path: str) -> set[str]:
-    try:
-        rows = spark.read.parquet(checkpoint_path).select("unit").distinct().collect()
-        return {r["unit"] for r in rows}
-    except Exception:
+    """Units (and markers) in the checkpoint table.  Nothing is committed
+    while the table has no data files: the path does not exist yet, or a
+    crash during the first append left only ``_temporary/``.  Any other
+    read failure raises — a corrupt checkpoint read as empty would
+    reprocess every unit and skip the ops-marker check."""
+    jvm = spark._jvm
+    path = jvm.org.apache.hadoop.fs.Path(checkpoint_path)
+    fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
+    # Spark's file index skips names starting with "_" or "."
+    if not fs.exists(path) or all(
+        s.getPath().getName().startswith(("_", ".")) for s in fs.listStatus(path)
+    ):
         return set()
+    rows = spark.read.parquet(checkpoint_path).select("unit").distinct().collect()
+    return {r["unit"] for r in rows}
 
 
 def _metrics_df(

@@ -93,3 +93,49 @@ def test_run_pipeline_main_plain_and_resume(spark, tmp_path, monkeypatch, capsys
     printed = run(*resume, "--stop-on-violations", "--run-id", "r2")
     assert "processed units []" in printed
     assert _norm(spark.read.parquet(summaries).drop("convhash").collect()) == want
+
+
+def test_resume_verbose_prints_only_this_invocations_units(
+    spark, tmp_path, monkeypatch, capsys
+):
+    """``--resume --verbose`` prints one ``log_issues`` line per unit this
+    invocation processed, in unit order: not the ops marker row, and not
+    the units an earlier invocation under the same run id committed."""
+    spec = importlib.util.spec_from_file_location("run_pipeline_job", JOB)
+    job = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(job)
+
+    t = None
+    for conv, lines in LINES.items():
+        part = transcripts_from_lines(spark, lines, conv)
+        t = part if t is None else t.unionByName(part)
+    inp = str(tmp_path / "transcripts")
+    t.write.parquet(inp)
+
+    def run(ck):
+        monkeypatch.setattr(sys, "argv", [
+            "run_pipeline.py", "--input", inp, "--output", str(tmp_path / "out"),
+            "--checkpoint", ck, "--resume", "--verbose", "--n-units", "4",
+            "--run-id", "r1",
+        ])
+        job.main()
+        issues = [
+            ln for ln in capsys.readouterr().out.splitlines()
+            if ln.startswith("log_issues ")
+        ]
+        return [ln.split()[1].rstrip(":") for ln in issues], issues
+
+    ck1 = str(tmp_path / "ck1")
+    units, issues = run(ck1)
+    assert units == [f"convhash={u}" for u in range(4)]
+    assert sum(int(ln.split("rows=")[1].split()[0]) for ln in issues) == t.count()
+
+    # drop one unit's row: a second invocation under the same run id
+    # re-runs only that unit, and prints only it
+    ck = spark.read.parquet(ck1)
+    redo = ck.orderBy(ck.n_input_rows.desc()).first()["unit"]
+    ck2 = str(tmp_path / "ck2")
+    ck.filter(ck.unit != redo).write.parquet(ck2)
+    units, issues = run(ck2)
+    assert units == [redo]
+    assert "rows=0 " not in issues[0]

@@ -8,11 +8,6 @@ byte-identical; these tests pin the equivalences the rewrites rely on:
   numeric min for fixed-length lowercase hex).
 * Span windows: ``xxhash64(t1..tn)`` / ``concat_ws(" ", t1..tn)`` over
   ``element_at`` reads equal the array-slice forms.
-* Unrolled dot/norm: the ``_UNROLL_DIM``-wide expanded chains are
-  bit-equal to the generic ``aggregate(zip_with(...))`` folds, and
-  non-matching widths fall back to the generic fold.
-* semdedup derives ``n_centroids`` from the corpus size when neither
-  ``n_centroids`` nor ``centroids`` is given (r6 verdict Next #5).
 """
 
 from __future__ import annotations
@@ -91,99 +86,3 @@ def test_span_window_key_matches_slice_forms(spark, docs):
         (fast_slice == fast_elem).alias("h_eq"), (md5_slice == md5_elem).alias("s_eq")
     ).collect()
     assert out and all(r["h_eq"] and r["s_eq"] for r in out)
-
-
-def test_unrolled_dot_norm_bit_equal(spark):
-    from quake3_log_analyser_spark.operators.ann import (
-        _UNROLL_DIM,
-        _dot,
-        _dot_fast,
-        _idot,
-        _idot_fast,
-        _norm,
-        _norm_fast,
-    )
-
-    full = spark.range(5).select(
-        F.transform(
-            F.sequence(F.lit(1), F.lit(_UNROLL_DIM)),
-            lambda i: F.sin(F.col("id") * i.cast("double")),
-        ).alias("a"),
-        F.transform(
-            F.sequence(F.lit(1), F.lit(_UNROLL_DIM)),
-            lambda i: F.cos(F.col("id") * i.cast("double")),
-        ).alias("b"),
-    )
-    short = spark.range(5).select(
-        F.transform(
-            F.sequence(F.lit(1), F.lit(7)),
-            lambda i: F.sin(F.col("id") * i.cast("double")),
-        ).alias("a"),
-        F.transform(
-            F.sequence(F.lit(1), F.lit(7)),
-            lambda i: F.cos(F.col("id") * i.cast("double")),
-        ).alias("b"),
-    )
-    for frame in (full, short):
-        rows = frame.select(
-            (_dot_fast(F.col("a"), F.col("b")) == _dot(F.col("a"), F.col("b"))).alias(
-                "d_eq"
-            ),
-            (_norm_fast(F.col("a")) == _norm(F.col("a"))).alias("n_eq"),
-        ).collect()
-        assert rows and all(r["d_eq"] and r["n_eq"] for r in rows)
-    qfull = spark.range(5).select(
-        F.transform(
-            F.sequence(F.lit(1), F.lit(_UNROLL_DIM)),
-            lambda i: (F.pmod(F.col("id") * i, F.lit(255)) - 127).cast("tinyint"),
-        ).alias("a")
-    )
-    rows = qfull.select(
-        (_idot_fast(F.col("a"), F.col("a")) == _idot(F.col("a"), F.col("a"))).alias(
-            "eq"
-        )
-    ).collect()
-    assert rows and all(r["eq"] for r in rows)
-
-
-def test_semdedup_auto_n_centroids_scales():
-    from quake3_log_analyser_spark.operators.ann import (
-        SEMDEDUP_TARGET_CELL,
-        semdedup_auto_n_centroids,
-    )
-
-    assert semdedup_auto_n_centroids(0) == 16
-    assert semdedup_auto_n_centroids(10_000) == 16
-    assert semdedup_auto_n_centroids(10_000_000) == -(
-        -10_000_000 // SEMDEDUP_TARGET_CELL
-    )
-    # E[cell size] stays pinned at the target as the corpus grows
-    for n in (10_000_000, 40_000_000):
-        cells = semdedup_auto_n_centroids(n)
-        assert abs(n / cells - SEMDEDUP_TARGET_CELL) < 1
-
-
-def test_semdedup_default_derives_from_corpus(spark):
-    from quake3_log_analyser_spark.operators.ann import semdedup
-
-    emb = spark.range(64).select(
-        F.col("id").alias("vec_id"),
-        F.transform(
-            F.sequence(F.lit(1), F.lit(8)),
-            lambda i: F.sin(F.col("id") * i.cast("double")),
-        ).alias("embedding"),
-    )
-    auto = semdedup(emb, threshold=0.9)
-    explicit = semdedup(emb, n_centroids=16, threshold=0.9)
-    assert sorted(map(tuple, auto.collect())) == sorted(
-        map(tuple, explicit.collect())
-    )
-
-
-def test_ivf_cells_rejects_zero_norm_centroid():
-    import numpy as np
-
-    from quake3_log_analyser_spark.operators.ann import ivf_cells
-
-    with pytest.raises(ValueError, match="zero-norm"):
-        ivf_cells(F.col("v"), np.array([[1.0, 0.0], [0.0, 0.0]]), 1)

@@ -294,3 +294,24 @@ def test_checkpoint_resume_honors_stop_on_violations(spark, tmp_path):
     assert done == ["convhash=0", "convhash=1"]
     got = spark.read.parquet(f"{out}/summaries").drop("convhash").collect()
     assert norm(got) == want
+
+
+def test_committed_units_empty_only_without_data_files(spark, tmp_path):
+    """A missing checkpoint, or one whose first append crashed and left
+    only ``_temporary/``, has nothing committed.  An unreadable one raises
+    instead of reading as empty, which would reprocess every unit and
+    skip the ops-marker check."""
+    from quake3_log_analyser_spark.plans.checkpoint import committed_units
+
+    assert committed_units(spark, str(tmp_path / "absent")) == set()
+
+    crashed = tmp_path / "crashed"
+    (crashed / "_temporary" / "0").mkdir(parents=True)
+    (crashed / "_temporary" / "0" / "part-0.parquet").write_bytes(b"partial")
+    assert committed_units(spark, str(crashed)) == set()
+
+    corrupt = tmp_path / "corrupt"
+    corrupt.mkdir()
+    (corrupt / "part-0.parquet").write_bytes(b"not a parquet file")
+    with pytest.raises(Exception, match="CANNOT_READ_FILE_FOOTER"):
+        committed_units(spark, str(corrupt))

@@ -1,6 +1,5 @@
 """Training-data operator tests: dedup (exact / jaccard / minhash-LSH /
-simhash), ANN (brute force + LSH recall), text analysis, corpus
-composition."""
+simhash), text analysis, corpus composition."""
 
 from __future__ import annotations
 
@@ -23,11 +22,6 @@ def docs(spark):
         "lang", "source", "n_chars",
     )
     return base.unionByName(exact).unionByName(fuzzy).cache()
-
-
-@pytest.fixture(scope="module")
-def emb(spark):
-    return spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet").cache()
 
 
 def test_exact_dedup_finds_injected_dups(spark, docs):
@@ -133,58 +127,6 @@ def test_jaccard_threshold_guard(spark, docs):
         jaccard_pairs(docs, threshold=0.4)
 
 
-def test_ann_bruteforce_topk(spark, emb):
-    from quake3_log_analyser_spark.operators.ann import cosine_topk
-
-    out = cosine_topk(emb, emb.filter(F.col("vec_id") < 5), k=7).collect()
-    by_q = {}
-    for r in out:
-        by_q.setdefault(r["query_id"], []).append(r)
-    assert set(by_q) == {0, 1, 2, 3, 4}
-    for q, rows in by_q.items():
-        assert len(rows) == 7
-        cos = [r["cosine"] for r in sorted(rows, key=lambda r: r["rnk"])]
-        assert cos == sorted(cos, reverse=True)
-        assert all(r["neighbor_id"] != q for r in rows)
-
-
-def test_ann_lsh_recall(spark, emb):
-    """LSH top-k must overlap heavily with brute force at small scale."""
-    from quake3_log_analyser_spark.operators.ann import cosine_topk, lsh_cosine_topk
-
-    exact = cosine_topk(emb, emb.filter(F.col("vec_id") < 5), k=5).collect()
-    approx = lsh_cosine_topk(
-        emb, emb.filter(F.col("vec_id") < 5), k=5, n_planes=12, bands=6
-    ).collect()
-    exact_top1 = {r["query_id"]: r["neighbor_id"] for r in exact if r["rnk"] == 1}
-    approx_sets = {}
-    for r in approx:
-        approx_sets.setdefault(r["query_id"], set()).add(r["neighbor_id"])
-    hits = sum(
-        1 for q, n1 in exact_top1.items() if n1 in approx_sets.get(q, set())
-    )
-    assert hits >= 3, f"LSH found top-1 for only {hits}/5 queries"
-
-
-def test_lsh_signature_scales_to_real_embedding_dims(spark):
-    """dim=768 hyperplane signatures must not inline the matrix as plan
-    literals (the pre-fix plan carried n_planes*dim ~ 12k literals): the
-    analyzed plan stays small and the query actually executes."""
-    import numpy as np
-
-    from quake3_log_analyser_spark.operators.ann import lsh_cosine_topk
-
-    rng = np.random.RandomState(7)
-    rows = [(i, rng.normal(size=768).astype(float).tolist()) for i in range(64)]
-    df = spark.createDataFrame(rows, "vec_id int, embedding array<double>")
-    out = lsh_cosine_topk(df, df.filter(F.col("vec_id") < 3), k=5,
-                          dim=768, n_planes=16, bands=4)
-    plan = out._jdf.queryExecution().analyzed().toString()
-    assert len(plan) < 50_000, f"plan blew up to {len(plan)} chars"
-    res = out.collect()
-    assert {r["query_id"] for r in res} <= {0, 1, 2} and len(res) > 0
-
-
 def test_connected_components_shapes_and_log_convergence(spark):
     """Min-label propagation + pointer jumping: chain, star and isolated
     pair resolve to cluster-min labels, and a 200-node path converges
@@ -258,73 +200,6 @@ def test_clean_corpus_cc_survivorship(spark, docs):
         clean_corpus(docs, survivorship="transitive", **kw)
 
 
-def test_lsh_signature_partition_segregated_widths(spark):
-    """Mixed embedding widths segregated by PARTITION (two embedding
-    models in different files — the case a worker-local first-width lock
-    silently mishandles): per-width planes are derived deterministically
-    on every worker, same-width duplicate vectors still collide, and the
-    width-scoped join key means no near-dup pair ever crosses widths.  An
-    explicit dim still raises on a width it doesn't match."""
-    import numpy as np
-
-    from quake3_log_analyser_spark.operators.ann import (
-        embedding_near_dups,
-        lsh_signature,
-    )
-
-    rng = np.random.RandomState(11)
-    w8 = [(i, rng.normal(size=8).tolist()) for i in range(40)]
-    w16 = [(100 + i, rng.normal(size=16).tolist()) for i in range(40)]
-    # exact duplicates inside each width: must be found within-width
-    w8 += [(i + 1000, v) for i, v in w8[:3]]
-    w16 += [(i + 1000, v) for i, v in w16[:3]]
-    df = spark.createDataFrame(
-        w8, "vec_id int, embedding array<double>"
-    ).repartition(2).unionByName(
-        spark.createDataFrame(
-            w16, "vec_id int, embedding array<double>"
-        ).repartition(2)
-    )
-
-    sigs = {
-        r["vec_id"]: r["sig"]
-        for r in df.select(
-            "vec_id", lsh_signature(F.col("embedding"), 12).alias("sig")
-        ).collect()
-    }
-    for i, _ in w8[:3]:
-        assert sigs[i] == sigs[i + 1000]
-    for i, _ in w16[:3]:
-        assert sigs[i] == sigs[i + 1000]
-
-    pairs = embedding_near_dups(df, threshold=0.999, n_planes=12, bands=4)
-    got = {(p["doc_a"], p["doc_b"]) for p in pairs.collect()}
-    for i, _ in w8[:3]:
-        assert (i, i + 1000) in got
-    for i, _ in w16[:3]:
-        assert (i, i + 1000) in got
-    ids8 = {i for i, _ in w8}
-    assert all(
-        (a in ids8) == (b in ids8) for a, b in got
-    ), "near-dup pair crossed embedding widths"
-
-    with pytest.raises(Exception, match="do not match the declared dim"):
-        df.select(lsh_signature(F.col("embedding"), 12, dim=8)).collect()
-
-
-def test_embedding_near_dups_on_injected(spark, emb):
-    from quake3_log_analyser_spark.operators.ann import embedding_near_dups
-
-    dup = emb.filter(F.col("vec_id") < 5).select(
-        (F.col("vec_id") + 5000).alias("vec_id"), "embedding", "label"
-    )
-    both = emb.unionByName(dup)
-    pairs = embedding_near_dups(both, threshold=0.999).collect()
-    got = {(p["doc_a"], p["doc_b"]) for p in pairs}
-    for i in range(5):
-        assert (i, i + 5000) in got
-
-
 def test_text_functions(spark):
     from quake3_log_analyser_spark.functions.text import (
         lang_guess,
@@ -375,91 +250,6 @@ def test_lang_guess_on_documents_table(spark):
     }
     assert set(counts) <= {"en", "und"}
     assert counts.get("en", 0) > counts.get("und", 0)
-
-
-def test_lsh_signature_null_vectors(spark):
-    """NULL / empty vectors must yield NULL signatures, not crash the batch
-    (round-2 ADVICE: np.stack raised on a None in the batch)."""
-    from quake3_log_analyser_spark.operators.ann import lsh_signature
-
-    df = spark.createDataFrame(
-        [(1, [0.1] * 8), (2, None), (3, [0.2] * 8), (4, [])],
-        "vec_id int, embedding array<double>",
-    )
-    out = df.select(
-        "vec_id", lsh_signature(F.col("embedding"), 12).alias("sig")
-    ).collect()
-    sigs = {r["vec_id"]: r["sig"] for r in out}
-    assert sigs[2] is None and sigs[4] is None
-    assert sigs[1] is not None and sigs[3] is not None
-
-
-def test_ivf_topk_recall(spark, emb):
-    """IVF coarse quantization + in-cell rerank must find most exact top-1
-    neighbors at small scale (nprobe=2 of 16 cells)."""
-    from quake3_log_analyser_spark.operators.ann import cosine_topk, ivf_topk
-
-    qs = emb.filter(F.col("vec_id") < 5)
-    exact = cosine_topk(emb, qs, k=5).collect()
-    approx = ivf_topk(emb, qs, k=5, n_centroids=16, nprobe=2).collect()
-    exact_top1 = {r["query_id"]: r["neighbor_id"] for r in exact if r["rnk"] == 1}
-    approx_sets = {}
-    for r in approx:
-        approx_sets.setdefault(r["query_id"], set()).add(r["neighbor_id"])
-    hits = sum(1 for q, n1 in exact_top1.items() if n1 in approx_sets.get(q, set()))
-    assert hits >= 3, f"IVF found top-1 for only {hits}/5 queries"
-
-
-def test_ivf_cells_null_vectors_and_determinism(spark):
-    import numpy as np
-
-    from quake3_log_analyser_spark.operators.ann import ivf_cells
-
-    cent = np.eye(4)
-    df = spark.createDataFrame(
-        [(1, [1.0, 0.1, 0.0, 0.0]), (2, None), (3, [0.0, 0.0, 0.9, 0.4])],
-        "vec_id int, embedding array<double>",
-    )
-    out = {
-        r["vec_id"]: r["cells"]
-        for r in df.select(
-            "vec_id", ivf_cells(F.col("embedding"), cent, 2).alias("cells")
-        ).collect()
-    }
-    assert out[2] is None
-    assert out[1][0] == 0 and out[3][0] == 2  # nearest axis centroid
-    assert len(out[1]) == 2
-
-
-def test_ivf_indexed_matches_inline_and_prunes_partitions(spark, emb, tmp_path):
-    """The materialized inverted file (corpus written partitionBy cell)
-    must return exactly what the inline ivf_topk computes with the same
-    centroids — and its corpus scan must carry a DYNAMIC partition-pruning
-    filter on the probe join, the physical 'probe touches nprobe
-    partitions' property the IVF layout exists for."""
-    from quake3_log_analyser_spark.operators.ann import (
-        ivf_seed_centroids,
-        ivf_topk,
-        ivf_topk_indexed,
-        ivf_write_index,
-    )
-
-    cent = ivf_seed_centroids(emb, 16)
-    idx = str(tmp_path / "ivf_index")
-    ivf_write_index(emb, idx, centroids=cent)
-    qs = emb.filter(F.col("vec_id") < 5)
-
-    indexed = ivf_topk_indexed(spark, idx, qs, cent, k=5, nprobe=2)
-    plan = indexed._jdf.queryExecution().executedPlan().toString()
-    assert "dynamicpruning" in plan, f"no DPP on the corpus scan:\n{plan}"
-
-    inline = ivf_topk(emb, qs, k=5, nprobe=2, centroids=cent).collect()
-    got = indexed.collect()
-    norm = lambda rows: sorted(
-        (r["query_id"], r["neighbor_id"], round(r["cosine"], 9), r["rnk"])
-        for r in rows
-    )
-    assert norm(got) == norm(inline)
 
 
 def test_salted_join_equals_plain_join(spark):
@@ -722,44 +512,6 @@ def test_corpus_job_full_menu(spark, tmp_path):
     ) == []
 
 
-def test_ann_job_cli_index_then_query(spark, emb, tmp_path):
-    """jobs/run_ann.py: the index/query CLI round-trips through the
-    persisted centroid matrix and the cell-partitioned layout, matching
-    the inline ivf_topk with the same centroids."""
-    import sys
-    from pathlib import Path
-
-    sys.path.insert(0, str(Path(__file__).resolve().parents[1] / "jobs"))
-    import run_ann
-
-    from quake3_log_analyser_spark.operators.ann import (
-        ivf_seed_centroids,
-        ivf_topk,
-    )
-
-    corpus_path = str(tmp_path / "corpus")
-    emb.write.mode("overwrite").parquet(corpus_path)
-    queries_path = str(tmp_path / "queries")
-    emb.filter(F.col("vec_id") < 5).write.parquet(queries_path)
-    idx = str(tmp_path / "idx")
-    out = str(tmp_path / "results")
-
-    run_ann.main(["index", "--corpus", corpus_path, "--index", idx,
-                  "--n-centroids", "16"])
-    run_ann.main(["query", "--index", idx, "--queries", queries_path,
-                  "--output", out, "--k", "5", "--nprobe", "2"])
-
-    cent = ivf_seed_centroids(emb, 16)  # same deterministic seed rule
-    want = ivf_topk(emb, emb.filter(F.col("vec_id") < 5), k=5, nprobe=2,
-                    centroids=cent).collect()
-    got = spark.read.parquet(out).collect()
-    norm = lambda rows: sorted(
-        (r["query_id"], r["neighbor_id"], round(r["cosine"], 9), r["rnk"])
-        for r in rows
-    )
-    assert norm(got) == norm(want)
-
-
 def test_hash_sample_deterministic_and_calibrated(spark, docs):
     """hash_sample: same seed -> identical membership across calls and
     repartitionings; different seeds -> different draws; realized rate
@@ -954,94 +706,6 @@ def test_pii_redaction_patterns(spark):
     assert rows[1]["red"] == "mail [EMAIL] and see [URL] from [IP]"
     assert (rows[2]["e"], rows[2]["u"], rows[2]["i"]) == (0, 0, 0)
     assert rows[2]["red"] == rows[2]["text"], "pii-free text must be unchanged"
-
-
-def test_quantize_int8_values_and_edge_cases(spark):
-    from quake3_log_analyser_spark.operators.ann import quantize_int8
-
-    df = spark.createDataFrame(
-        [
-            (1, [1.0, -0.5, 0.25, 0.0]),
-            (2, [0.0, 0.0]),        # all-zero: scale 0, q all zeros (no NaN)
-            (3, None),              # NULL vector stays NULL
-        ],
-        "vec_id long, embedding array<float>",
-    )
-    out = {r["vec_id"]: r for r in quantize_int8(df).collect()}
-    # amax=1 -> scale=1/127; round half AWAY from zero: -63.5 -> -64
-    assert out[1]["q_embedding"] == [127, -64, 32, 0]
-    assert abs(out[1]["q_scale"] - 1.0 / 127.0) < 1e-12
-    assert out[2]["q_embedding"] == [0, 0] and out[2]["q_scale"] == 0.0
-    assert out[3]["q_embedding"] is None and out[3]["q_scale"] is None
-    # stored as real int8 (tinyint), not int - the 4x compression claim
-    assert dict(out[1].asDict())  # materialized fine
-    qfield = [f for f in quantize_int8(df).schema if f.name == "q_embedding"][0]
-    assert qfield.dataType.simpleString() == "array<tinyint>"
-
-
-def test_quantized_cosine_error_and_recall(spark, emb):
-    """Quantized cosine tracks exact cosine within the int8 rounding grain
-    and preserves top-k neighbor sets almost perfectly on real vectors."""
-    from quake3_log_analyser_spark.operators.ann import (
-        cosine_topk,
-        quantized_cosine_topk,
-    )
-
-    queries = emb.filter(F.col("vec_id") < 5)
-    exact = cosine_topk(emb, queries, k=10).collect()
-    quant = quantized_cosine_topk(emb, queries, k=10).collect()
-
-    escore = {(r["query_id"], r["neighbor_id"]): r["cosine"] for r in exact}
-    qscore = {(r["query_id"], r["neighbor_id"]): r["qcosine"] for r in quant}
-    common = set(escore) & set(qscore)
-    assert common, "no overlapping pairs to compare"
-    worst = max(abs(escore[p] - qscore[p]) for p in common)
-    assert worst < 0.02, f"quantization error {worst} above int8 grain bound"
-
-    # recall@10 vs the exact baseline
-    from collections import defaultdict
-
-    eset, qset = defaultdict(set), defaultdict(set)
-    for r in exact:
-        eset[r["query_id"]].add(r["neighbor_id"])
-    for r in quant:
-        qset[r["query_id"]].add(r["neighbor_id"])
-    recall = sum(len(eset[q] & qset[q]) for q in eset) / sum(
-        len(eset[q]) for q in eset
-    )
-    assert recall >= 0.9, f"recall@10 {recall} too low"
-
-
-def test_quantized_scores_exact_under_repartition(spark, emb):
-    """The bit-reproducibility claim: integer dots + IEEE sqrt/div give the
-    SAME doubles no matter the partitioning (no float-sum order drift)."""
-    from quake3_log_analyser_spark.operators.ann import quantized_cosine_topk
-
-    queries = emb.filter(F.col("vec_id") < 3)
-    a = quantized_cosine_topk(emb, queries, k=5).collect()
-    b = quantized_cosine_topk(emb.repartition(7), queries, k=5).collect()
-    ka = {(r["query_id"], r["neighbor_id"]): r["qcosine"] for r in a}
-    kb = {(r["query_id"], r["neighbor_id"]): r["qcosine"] for r in b}
-    assert ka == kb  # exact ==, not approx
-
-
-def test_quantized_prequantized_parity(spark, emb):
-    """quantize-once-at-ingest (pre_quantized=True over materialized int8
-    columns) returns exactly the on-the-fly result — same quantization,
-    same exact integer dots."""
-    from quake3_log_analyser_spark.operators.ann import (
-        quantize_int8,
-        quantized_cosine_topk,
-    )
-
-    queries = emb.filter(F.col("vec_id") < 3)
-    inline = quantized_cosine_topk(emb, queries, k=5).collect()
-    pq_corpus = quantize_int8(emb)
-    pq_queries = quantize_int8(queries)
-    pre = quantized_cosine_topk(
-        pq_corpus, pq_queries, k=5, pre_quantized=True
-    ).collect()
-    assert sorted(map(tuple, inline)) == sorted(map(tuple, pre))
 
 
 def test_dedup_against_drops_already_seen_content(spark):
@@ -1669,47 +1333,6 @@ def test_build_vocab_plan_is_take_ordered(spark, docs):
     assert [r["rank"] for r in rows[:3]] == [1, 2, 3]
     # ranks are the (count desc, token) order, densely 1..size
     assert sorted(r["rank"] for r in rows) == list(range(1, 21))
-
-
-def test_semdedup_drops_injected_neardups(spark, emb):
-    """SemDeDup keep-min survivorship: a perturbed copy (first component
-    +0.2) of every vec_id % 25 == 0 vector must be dropped in favor of
-    its lower-id original when it lands in the same cell above 0.9."""
-    from quake3_log_analyser_spark.operators.ann import semdedup
-
-    inj = emb.filter(F.col("vec_id") % 10 == 0).select(
-        (F.col("vec_id") + 5000).alias("vec_id"),
-        F.concat(
-            F.array(F.col("embedding")[0].cast("double") + F.lit(0.1)),
-            F.transform(
-                F.slice("embedding", 2, F.size("embedding") - 1),
-                lambda x: x.cast("double"),
-            ),
-        ).alias("embedding"),
-    )
-    aug = emb.select(
-        "vec_id",
-        F.transform("embedding", lambda x: x.cast("double")).alias("embedding"),
-    ).unionByName(inj)
-    dropped = semdedup(aug, n_centroids=8, threshold=0.9).collect()
-    assert len(dropped) > 0, "gate must not be vacuous"
-    by_id = {r["dropped_id"]: r for r in dropped}
-    for r in dropped:
-        # injected copies (id >= 5000) must map back to a lower id, and
-        # when the survivor is the original, cosine is near-1
-        assert r["kept_id"] < r["dropped_id"]
-        assert r["cosine"] >= 0.9
-    # at least one injected copy collapses onto its exact original
-    exact = [r for r in dropped
-             if r["dropped_id"] >= 5000 and r["kept_id"] == r["dropped_id"] - 5000]
-    assert exact, "no injected copy mapped to its original"
-    # survivors are never themselves dropped: kept_id of any row must not
-    # appear as a dropped_id with a cosine tie chain violating keep-min
-    originals = {r["kept_id"] for r in dropped}
-    # keep-min rule: an id can be both kept (for a higher id) and dropped
-    # (for a lower id) only if ids strictly decrease along the chain
-    for kept in originals & set(by_id):
-        assert by_id[kept]["kept_id"] < kept
 
 
 def test_epoch_mixture_replicates_and_gates(spark, docs):
