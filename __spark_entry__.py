@@ -1452,57 +1452,6 @@ FROM aug
 """
 
 
-def _q_lm_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Char-trigram LM perplexity scoring (CCNet-style quality filter):
-    train the smoothed trigram model ON the documents table, then score
-    every document's average per-trigram log-probability against it.
-    Integer micro-unit log-probs make the per-doc sums exact (no
-    float-sum ordering drift vs the oracle)."""
-    from quake3_log_analyser_spark.operators.lm import lm_doc_scores, train_char_lm
-
-    docs = _table(spark, sf_dir, "documents")
-    model = train_char_lm(docs)
-    return lm_doc_scores(docs, model)
-
-
-# DuckDB twin of train_char_lm + lm_doc_scores: same normalization, same
-# add-one smoothing over VOCAB_SIZE=16384 continuations, same micro-unit
-# rounding, exact integer sums.  ln() agrees with Java's Math.log to well
-# below the 1e-6 rounding grain.
-_ORACLE_LM_SCORES = r"""
-WITH norm AS (
-  SELECT doc_id, trim(regexp_replace(lower(text), '\s+', ' ', 'g')) AS t
-  FROM documents
-),
-tris AS (
-  SELECT doc_id, substr(t, CAST(i AS INT), 3) AS tri
-  FROM (SELECT doc_id, t, unnest(range(1, length(t) - 1)) AS i
-        FROM norm WHERE length(t) >= 3)
-),
-tric AS (SELECT tri, COUNT(*) AS tri_cnt FROM tris GROUP BY tri),
-ctxc AS (SELECT substr(tri, 1, 2) AS ctx, SUM(tri_cnt) AS ctx_cnt
-         FROM tric GROUP BY 1),
-model AS (
-  SELECT tri, CAST(round(ln((tri_cnt + 1.0) / (ctx_cnt + 16384.0)) * 1e6)
-              AS BIGINT) AS logp_micro
-  FROM tric JOIN ctxc ON substr(tri, 1, 2) = ctxc.ctx
-),
-agg AS (
-  SELECT s.doc_id,
-         SUM(COALESCE(m.logp_micro,
-             CAST(round(ln(1.0 / 16384.0) * 1e6) AS BIGINT))) AS sum_logp_micro,
-         COUNT(*) AS n_tri
-  FROM tris s LEFT JOIN model m USING (tri) GROUP BY s.doc_id
-)
-SELECT n.doc_id,
-       CAST(COALESCE(a.n_tri, 0) AS BIGINT) AS n_tri,
-       CAST(a.sum_logp_micro AS BIGINT) AS sum_logp_micro,
-       CASE WHEN a.n_tri > 0
-            THEN round(a.sum_logp_micro / a.n_tri / 1e6, 4) END AS avg_logp
-FROM norm n LEFT JOIN agg a USING (doc_id)
-"""
-
-
 def _q_dedup_cross(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross-corpus exact dedup (operators.dedup.dedup_against): odd-id
     docs are the "new batch", even-id docs the accumulated training set;
@@ -1982,7 +1931,6 @@ _EXTRA_QUERIES = {
     "build_vocab": _q_build_vocab,
     "hash_split": _q_hash_split,
     "classifier_score": _q_classifier_score,
-    "lm_scores": _q_lm_scores,
     "dedup_cross": _q_dedup_cross,
     "neardup_cross": _q_neardup_cross,
     "mixture_sample": _q_mixture_sample,
@@ -2014,7 +1962,6 @@ _EXTRA_ORACLES = {
     "build_vocab": _ORACLE_BUILD_VOCAB,
     "hash_split": _hash_split_oracle(),
     "classifier_score": _ORACLE_CLASSIFIER,
-    "lm_scores": _ORACLE_LM_SCORES,
     "dedup_cross": _ORACLE_DEDUP_CROSS,
     "neardup_cross": _neardup_cross_oracle_sql(),
     "mixture_sample": _mixture_oracle_sql(),

@@ -3,14 +3,22 @@
     zip -r pipeline.zip quake3_log_analyser_spark/
     spark-submit --py-files pipeline.zip jobs/run_pipeline.py \
         --input  <transcripts parquet path or Iceberg table> \
-        --output <sink base path> \
-        --checkpoint <checkpoint table path> \
+        --output <output base path> \
         --ops kills,means_of_death,player_resolutions,reported_scores \
-        --run-id nightly-2024-06-01 [--resume] [--session-first]
+        --run-id nightly-2024-06-01 \
+        [--resume --checkpoint <checkpoint table path> --n-units 64] \
+        [--session-first]
 
-Runs parse -> sessionize -> route (five sinks) -> summaries with
-per-partition lineage/metrics committed to the checkpoint table; with
-``--resume`` only uncommitted units are processed (idempotent restart).
+The two paths write different outputs:
+
+* plain: parse -> sessionize -> route, writing the five sinks to
+  ``{output}/sinks/sink=*``, then the match summaries to
+  ``{output}/match_summaries``.  It writes no checkpoint.
+* ``--resume`` (needs ``--checkpoint``): summarizes only the conv_id-hash
+  units the checkpoint table has not committed, into
+  ``{output}/summaries/convhash=*``, and appends one lineage/metrics row
+  per unit to the checkpoint (idempotent restart).  It writes no sinks.
+
 Under spark-submit the session factory detects the submitted
 ``spark.master`` and builds on it (session.py::_submitted_master), so the
 SAME entrypoint runs local[N] smoke tests and N-executor clusters.  Every
@@ -32,7 +40,7 @@ def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--input", required=True)
     ap.add_argument("--output", required=True)
-    ap.add_argument("--checkpoint", required=True)
+    ap.add_argument("--checkpoint", help="checkpoint table; --resume only")
     ap.add_argument("--ops", default="kills")
     ap.add_argument("--run-id", default=f"run-{int(time.time())}")
     ap.add_argument("--resume", action="store_true")
@@ -50,6 +58,8 @@ def main() -> None:
         "violation counts (df.observe — zero extra scans)",
     )
     args = ap.parse_args()
+    if args.resume and not args.checkpoint:
+        ap.error("--resume needs --checkpoint")
 
     from pyspark.sql import SparkSession
 

@@ -531,8 +531,8 @@ def train_classifier(
     n_grams``), so the returned ``(bucket, weight)`` table plugs straight
     into ``classifier_score`` with the same ``n_buckets``/``n``.
 
-    Determinism discipline (the ``operators.lm`` / BM25 micro-unit rule):
-    weights live in integer MICRO-units; every per-doc margin, per-doc
+    Determinism discipline (the micro-unit rule): weights live in
+    integer MICRO-units; every per-doc margin, per-doc
     error, per-(doc,bucket) gradient contribution and per-epoch update is
     rounded to an integer BEFORE summation, so epoch state is exact under
     any partitioning/add order and a SQL twin replays the identical
@@ -547,8 +547,8 @@ def train_classifier(
     Scale shape per epoch: ONE broadcast join of the (bounded, <=
     ``n_buckets``-row) weight table against the cached feature frame, one
     per-doc hash-agg, one per-bucket hash-agg — the same cost class as
-    ``lm.train_char_lm`` per epoch, ``epochs`` is a small constant.  The
-    feature frame is persisted once (it is read ``epochs`` times); each
+    one ``classifier_score`` pass, and ``epochs`` is a small constant.
+    The feature frame is persisted once (it is read ``epochs`` times); each
     epoch's weight table is localCheckpoint'ed so the plan does not grow
     exponentially with epochs.  Docs with zero grams carry no features
     and are excluded from training (they cannot move any weight).

@@ -16,6 +16,11 @@ a run must be resumable and auditable.  Design:
   the partitioned write commits (write-ahead ordering: sinks first, then
   the checkpoint rows; a crash between the two re-processes those units
   into overwritten partitions, which is idempotent).
+* **Pins**: a checkpoint resumes only under the op menu and the unit
+  count it was committed with.  The menu rides as an ``ops=...`` marker
+  row, the unit count as the nullable ``n_units`` column of every row a
+  run writes; rows without it (written before the column existed) pin
+  nothing.
 
 Scale note: n_units bounds the observe expression count (3 per unit) and
 the partition count of the output — hundreds are fine, and each pending
@@ -29,22 +34,8 @@ import time
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from ..session import local_table
-
-CHECKPOINT_SCHEMA = T.StructType(
-    [
-        T.StructField("run_id", T.StringType(), False),
-        T.StructField("unit", T.StringType(), False),
-        T.StructField("n_input_rows", T.LongType(), True),
-        T.StructField("n_parse_errors", T.LongType(), True),
-        T.StructField("n_matches", T.LongType(), True),
-        T.StructField("wall_sec", T.DoubleType(), True),
-        T.StructField("committed_at", T.TimestampType(), True),
-    ]
-)
-
 
 # ---------------------------------------------------------------------------
 # --verbose log-and-continue issue tier
@@ -103,28 +94,31 @@ def _ops_marker(ops) -> str:
     return "ops=" + ",".join(sorted(ops))
 
 
-def _check_ops_marker(done: set[str], ops, where: str) -> None:
-    """A checkpoint written under one op menu must not be resumed under
-    another: committed_units keys only on the unit hash, so a changed menu
-    would silently mix kills-only and multi-op rows partition-by-partition
-    in the same summaries table.  The menu rides the checkpoint as an
-    ``ops=...`` marker row; a mismatch is an error, not a merge."""
-    marker = _ops_marker(ops)
-    prior = {u for u in done if u.startswith("ops=")}
-    if prior and prior != {marker}:
+def _check_pin(what: str, prior: set, wanted, where: str) -> None:
+    """A checkpoint written under one op menu or unit count must not be
+    resumed under another: a unit is ``pmod(xxhash64(conv_id), n_units)``
+    and is skipped by name, so a changed menu would silently mix kills-only
+    and multi-op rows partition-by-partition in the same summaries table,
+    and a changed unit count would summarize conversations a second time
+    under new ``convhash`` partitions.  A mismatch is an error, not a
+    merge; a checkpoint that recorded no value pins nothing."""
+    if prior and prior != {wanted}:
         raise ValueError(
-            f"checkpoint {where} was committed with {sorted(prior)} but this "
-            f"run requests {marker!r}; resuming would mix op menus across "
-            "units — use a fresh checkpoint/output or the original menu"
+            f"checkpoint {where} was committed with {what} {sorted(prior)} "
+            f"but this run requests {wanted!r}; resuming would mix {what}s "
+            f"in one summaries table — use a fresh checkpoint/output or the "
+            f"original {what}"
         )
 
 
-def committed_units(spark: SparkSession, checkpoint_path: str) -> set[str]:
-    """Units (and markers) in the checkpoint table.  Nothing is committed
-    while the table has no data files: the path does not exist yet, or a
-    crash during the first append left only ``_temporary/``.  Any other
-    read failure raises — a corrupt checkpoint read as empty would
-    reprocess every unit and skip the ops-marker check."""
+def _committed_rows(spark: SparkSession, checkpoint_path: str) -> list:
+    """Distinct ``(unit, n_units)`` rows of the checkpoint table.  The
+    footers of all its files are merged, so rows of files written before
+    ``n_units`` existed read it as null.  Nothing is committed while the
+    table has no data files: the path does not exist yet, or a crash
+    during the first append left only ``_temporary/``.  Any other read
+    failure raises — a corrupt checkpoint read as empty would reprocess
+    every unit and skip the pin checks."""
     jvm = spark._jvm
     path = jvm.org.apache.hadoop.fs.Path(checkpoint_path)
     fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
@@ -132,13 +126,22 @@ def committed_units(spark: SparkSession, checkpoint_path: str) -> set[str]:
     if not fs.exists(path) or all(
         s.getPath().getName().startswith(("_", ".")) for s in fs.listStatus(path)
     ):
-        return set()
-    rows = spark.read.parquet(checkpoint_path).select("unit").distinct().collect()
-    return {r["unit"] for r in rows}
+        return []
+    ck = spark.read.option("mergeSchema", True).parquet(checkpoint_path)
+    n_units = ck["n_units"] if "n_units" in ck.columns else F.lit(None)
+    return ck.select("unit", n_units.alias("n_units")).distinct().collect()
+
+
+def committed_units(spark: SparkSession, checkpoint_path: str) -> set[str]:
+    """Units (and markers) in the checkpoint table."""
+    return {r["unit"] for r in _committed_rows(spark, checkpoint_path)}
 
 
 def _metrics_df(
-    spark: SparkSession, run_id: str, metrics_by_unit: dict[str, dict]
+    spark: SparkSession,
+    run_id: str,
+    metrics_by_unit: dict[str, dict],
+    n_units: int,
 ) -> DataFrame:
     rows = [
         (
@@ -148,6 +151,7 @@ def _metrics_df(
             int(m.get("n_parse_errors", 0)),
             int(m.get("n_matches", 0)),
             float(m.get("wall_sec", 0.0)),
+            n_units,
         )
         for unit, m in metrics_by_unit.items()
     ]
@@ -155,7 +159,7 @@ def _metrics_df(
         spark,
         rows,
         "run_id string, unit string, n_input_rows long, n_parse_errors long, "
-        "n_matches long, wall_sec double",
+        "n_matches long, wall_sec double, n_units int",
     ).withColumn("committed_at", F.current_timestamp())
 
 
@@ -164,21 +168,13 @@ def commit_units(
     checkpoint_path: str,
     run_id: str,
     metrics_by_unit: dict[str, dict],
+    n_units: int,
 ) -> None:
-    """Append one lineage/metrics row per unit (one atomic-ish write)."""
-    _metrics_df(spark, run_id, metrics_by_unit).write.mode("append").parquet(
-        checkpoint_path
-    )
-
-
-def commit_unit(
-    spark: SparkSession,
-    checkpoint_path: str,
-    run_id: str,
-    unit: str,
-    metrics: dict,
-) -> None:
-    commit_units(spark, checkpoint_path, run_id, {unit: metrics})
+    """Append one lineage/metrics row per unit (one atomic-ish write),
+    each recording the run's unit count."""
+    _metrics_df(spark, run_id, metrics_by_unit, n_units).write.mode(
+        "append"
+    ).parquet(checkpoint_path)
 
 
 def _build_unit_run(
@@ -273,8 +269,16 @@ def run_resumable(
     computed kills-only, silently ignoring the CLI's --ops under
     --resume).  ``stop_on_violations`` has ``summarize_matches``'s meaning.
     """
-    done = committed_units(spark, checkpoint_path)
-    _check_ops_marker(done, ops, checkpoint_path)
+    rows = _committed_rows(spark, checkpoint_path)
+    done = {r["unit"] for r in rows}
+    _check_pin(
+        "op menu", {u for u in done if u.startswith("ops=")},
+        _ops_marker(ops), checkpoint_path,
+    )
+    _check_pin(
+        "unit count", {r["n_units"] for r in rows if r["n_units"] is not None},
+        n_units, checkpoint_path,
+    )
     pending = [u for u in range(n_units) if f"convhash={u}" not in done]
     if not pending:
         return []
@@ -292,5 +296,5 @@ def run_resumable(
     metrics = _unit_metrics(obs, pending, time.perf_counter() - t0)
     if _ops_marker(ops) not in done:
         metrics[_ops_marker(ops)] = {}
-    commit_units(spark, checkpoint_path, run_id, metrics)
+    commit_units(spark, checkpoint_path, run_id, metrics, n_units)
     return [f"convhash={u}" for u in pending]

@@ -1,0 +1,57 @@
+"""Every backticked ``*.py`` path in README.md and COVERAGE.md names a file
+that exists, checked without a Spark session.  A carve-out that deletes a
+module but leaves its row in the docs fails here in seconds.
+
+A path resolves from the repo root, from the package root, or as a
+basename that exactly one package file has (COVERAGE writes
+``parse_expr.py``).  ``{a,b}`` brace lists expand to one path each."""
+
+from __future__ import annotations
+
+import re
+from pathlib import Path
+
+import pytest
+
+ROOT = Path(__file__).resolve().parents[1]
+PKG = ROOT / "quake3_log_analyser_spark"
+DOCS = ("README.md", "COVERAGE.md")
+
+SPAN = re.compile(r"`([^`\n]+)`")
+PY_PATH = re.compile(r"[\w./{},-]+\.py\b")
+BRACES = re.compile(r"\{([^{}]*)\}")
+
+
+def _expand(path: str) -> list[str]:
+    m = BRACES.search(path)
+    if m is None:
+        return [path]
+    return [
+        p
+        for alt in m.group(1).split(",")
+        for p in _expand(path[: m.start()] + alt + path[m.end():])
+    ]
+
+
+def _doc_paths(doc: str) -> set[str]:
+    text = (ROOT / doc).read_text()
+    return {
+        p
+        for span in SPAN.findall(text)
+        for token in PY_PATH.findall(span)
+        for p in _expand(token)
+    }
+
+
+def _resolves(path: str) -> bool:
+    if (ROOT / path).is_file() or (PKG / path).is_file():
+        return True
+    return "/" not in path and len(list(PKG.rglob(path))) == 1
+
+
+@pytest.mark.parametrize("doc", DOCS)
+def test_backticked_py_paths_exist(doc):
+    paths = _doc_paths(doc)
+    assert paths, f"{doc} names no .py path; the pattern is stale"
+    missing = sorted(p for p in paths if not _resolves(p))
+    assert not missing, f"{doc} names missing files: {missing}"

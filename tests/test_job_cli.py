@@ -9,6 +9,8 @@ import importlib.util
 import sys
 from pathlib import Path
 
+import pytest
+
 from quake3_log_analyser_spark.plans.pipeline import (
     full_pipeline_ops,
     summarize_matches,
@@ -139,3 +141,30 @@ def test_resume_verbose_prints_only_this_invocations_units(
     units, issues = run(ck2)
     assert units == [redo]
     assert "rows=0 " not in issues[0]
+
+
+def test_checkpoint_is_needed_only_with_resume(spark, tmp_path, monkeypatch, capsys):
+    """The plain path writes sinks and match summaries and no checkpoint,
+    so it runs without ``--checkpoint``; ``--resume`` without one is a
+    usage error before any work starts."""
+    spec = importlib.util.spec_from_file_location("run_pipeline_job", JOB)
+    job = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(job)
+
+    inp = str(tmp_path / "transcripts")
+    transcripts_from_lines(spark, LINES["c0"], "c0").write.parquet(inp)
+    out = tmp_path / "out"
+    base = ["run_pipeline.py", "--input", inp, "--output", str(out)]
+
+    monkeypatch.setattr(sys, "argv", base + ["--run-id", "plain"])
+    job.main()
+    assert "elapsed_s=" in capsys.readouterr().out
+    assert sorted(p.name for p in out.iterdir() if p.is_dir()) == [
+        "match_summaries", "sinks",
+    ]
+
+    monkeypatch.setattr(sys, "argv", base + ["--resume"])
+    with pytest.raises(SystemExit) as exc:
+        job.main()
+    assert exc.value.code == 2
+    assert "--resume needs --checkpoint" in capsys.readouterr().err

@@ -315,3 +315,44 @@ def test_committed_units_empty_only_without_data_files(spark, tmp_path):
     (corrupt / "part-0.parquet").write_bytes(b"not a parquet file")
     with pytest.raises(Exception, match="CANNOT_READ_FILE_FOOTER"):
         committed_units(spark, str(corrupt))
+
+
+def test_checkpoint_resume_rejects_changed_n_units(spark, tmp_path):
+    """A unit is ``pmod(xxhash64(conv_id), n_units)``, so resuming under a
+    different unit count would summarize conversations a second time
+    under new ``convhash`` partitions.  The count rides every row a run
+    writes (no extra rows) and a mismatch raises; a checkpoint written
+    without it resumes as before."""
+    from quake3_log_analyser_spark.plans.checkpoint import run_resumable
+    from quake3_log_analyser_spark.sources.transcripts import transcripts_from_lines
+
+    lines = [
+        r" 0:00 InitGame: \fraglimit\20\timelimit\15",
+        " 0:01 Kill: 1022 2 22: <world> killed D by MOD_TRIGGER_HURT",
+        " 0:02 ShutdownGame:",
+    ]
+    t = None
+    for i in range(12):
+        part = transcripts_from_lines(spark, lines, f"c{i}")
+        t = part if t is None else t.unionByName(part)
+    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
+    summaries = f"{out}/summaries"
+
+    assert len(run_resumable(spark, t, out, ckpt, run_id="r1", n_units=4)) == 4
+    assert spark.read.parquet(ckpt).count() == 5  # 4 units + ops marker
+    with pytest.raises(ValueError, match="unit count"):
+        run_resumable(spark, t, out, ckpt, run_id="r2", n_units=16)
+    assert spark.read.parquet(summaries).count() == 12
+    ck = spark.read.parquet(ckpt)
+    assert ck.count() == 5
+    assert {r["n_units"] for r in ck.collect()} == {4}
+    assert run_resumable(spark, t, out, ckpt, run_id="r3", n_units=4) == []
+
+    # rows without the column pin nothing; the resumed run's rows then do
+    legacy = str(tmp_path / "legacy")
+    ck.drop("n_units").filter(F.col("unit") != "convhash=1").write.parquet(legacy)
+    assert run_resumable(spark, t, out, legacy, "r4", n_units=4) == ["convhash=1"]
+    assert run_resumable(spark, t, out, legacy, "r5", n_units=4) == []
+    with pytest.raises(ValueError, match="unit count"):
+        run_resumable(spark, t, out, legacy, "r6", n_units=16)
+    assert spark.read.parquet(summaries).count() == 12

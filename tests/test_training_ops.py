@@ -347,171 +347,6 @@ def test_clean_corpus_gates(spark, docs):
     assert all(r["quality"] >= 0.45 and r["lang_guess"] == "en" for r in kept)
 
 
-def test_corpus_job_cli_resume_and_parity(spark, docs, tmp_path):
-    """jobs/run_corpus.py: the production CLI runs the staged
-    checkpoint/resume composition and its final output is identical to the
-    library clean_corpus call (same defaults, same keep-min rule); a
-    restart over a committed checkpoint is a no-op and a partial resume
-    re-runs exactly the missing stage."""
-    import sys
-    from pathlib import Path
-
-    sys.path.insert(0, str(Path(__file__).resolve().parents[1] / "jobs"))
-    import run_corpus
-
-    from quake3_log_analyser_spark.operators.corpus import clean_corpus
-    from quake3_log_analyser_spark.plans.corpus_run import run_corpus_resumable
-
-    docs_path = str(tmp_path / "docs")
-    docs.write.mode("overwrite").parquet(docs_path)
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-
-    run_corpus.main(
-        ["--input", docs_path, "--output", out, "--checkpoint", ckpt,
-         "--run-id", "t1", "--resume", "--verbose", "--salts", "4"]
-    )
-    lib = sorted(clean_corpus(docs, salts=4).collect(), key=str)
-    # the staged pipeline keeps ``text`` flowing through every stage (so a
-    # chunk/pack suffix or downstream tokenizer still has content); the
-    # clean_corpus projection must match the library call exactly
-    cleaned = spark.read.parquet(f"{out}/cleaned")
-    assert set(cleaned.columns) == {"doc_id", "text", "quality", "lang_guess"}
-    assert (
-        sorted(cleaned.select("doc_id", "quality", "lang_guess").collect(), key=str)
-        == lib
-    )
-
-    ck = spark.read.parquet(ckpt)
-    units = {r["unit"] for r in ck.collect()}
-    assert {u for u in units if u.startswith("stage=")} == {
-        "stage=dedup", "stage=gate", "stage=neardup"
-    }
-    # configuration markers pin the menu + tunables for resume safety
-    assert "ops=dedup,gate,neardup" in units
-    assert sum(u.startswith("params=") for u in units) == 1
-    # lineage row sanity: the dedup stage saw every input doc
-    dedup_row = ck.filter(F.col("unit") == "stage=dedup").collect()[0]
-    assert dedup_row["n_input_rows"] == docs.count()
-    assert 0 < dedup_row["n_matches"] < dedup_row["n_input_rows"]
-
-    # idempotent restart: everything committed -> no-op
-    assert run_corpus_resumable(spark, docs, out, ckpt, run_id="t2", salts=4) == []
-
-    # resuming under changed tunables must refuse, not silently mix
-    # old-parameter stage outputs into the new run
-    with pytest.raises(ValueError, match="params="):
-        run_corpus_resumable(spark, docs, out, ckpt, run_id="t2b", salts=2)
-    # ... and so must a changed stage menu
-    with pytest.raises(ValueError, match="ops="):
-        run_corpus_resumable(
-            spark, docs, out, ckpt, run_id="t2c",
-            ops=("dedup", "gate", "pii", "neardup"), salts=4,
-        )
-
-    # partial resume: drop the neardup commit -> exactly it re-runs
-    ckpt2 = str(tmp_path / "ckpt2")
-    ck.filter(F.col("unit") != "stage=neardup").write.parquet(ckpt2)
-    assert run_corpus_resumable(
-        spark, docs, out, ckpt2, run_id="t3", salts=4
-    ) == ["stage=neardup"]
-    assert (
-        sorted(
-            spark.read.parquet(f"{out}/cleaned")
-            .select("doc_id", "quality", "lang_guess")
-            .collect(),
-            key=str,
-        )
-        == lib
-    )
-
-
-def test_corpus_job_full_menu(spark, tmp_path):
-    """The extended stage menu (pii + decontaminate + repetition_gate +
-    chunk + pack) runs end-to-end through the CLI with checkpoint/resume:
-    PII is redacted in the flowing text, benchmark-overlapping docs are
-    dropped, repetitive docs are gated, chunks have ids, and packed bins
-    respect the token budget.  A restart is a no-op."""
-    import sys
-    from pathlib import Path
-
-    sys.path.insert(0, str(Path(__file__).resolve().parents[1] / "jobs"))
-    import run_corpus
-
-    from quake3_log_analyser_spark.plans.corpus_run import run_corpus_resumable
-
-    contaminated = (
-        "the quick brown fox jumps over the lazy dog near the river bank today"
-    )
-    rows = []
-    for i in range(30):
-        rows.append(
-            (
-                i,
-                f"doc {i} mail me at user{i}@example.com and read "
-                f"https://example.org/p{i} for the full body of document "
-                f"number {i} which continues with plenty of ordinary "
-                f"english filler words to stay above the quality gate",
-            )
-        )
-    rows.append((40, contaminated + " plus extra trailing context words"))
-    rows.append((41, "same line repeated\n" * 20))  # repetition_gate bait
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    docs_path = str(tmp_path / "docs")
-    docs.write.mode("overwrite").parquet(docs_path)
-    bench_path = str(tmp_path / "bench")
-    spark.createDataFrame(
-        [(0, contaminated)], "q_id long, text string"
-    ).write.parquet(bench_path)
-
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-    menu = "dedup,gate,pii,decontaminate,repetition_gate,neardup,chunk,pack"
-    cli = [
-        "--input", docs_path, "--output", out, "--checkpoint", ckpt,
-        "--run-id", "full1", "--resume", "--ops", menu,
-        "--benchmark", bench_path, "--min-quality", "0.0",
-        "--langs", "en,und", "--decontam-n", "8",
-        "--max-dup-line-ratio", "0.5", "--chunk-tokens", "16",
-        "--overlap", "4", "--bin-tokens", "64", "--n-shards", "2",
-    ]
-    run_corpus.main(cli)
-
-    redacted = spark.read.parquet(f"{out}/pii_redacted")
-    joined = " ".join(r["text"] for r in redacted.collect())
-    assert "@example.com" not in joined and "https://" not in joined
-    assert "[EMAIL]" in joined and "[URL]" in joined
-
-    kept_after_decontam = {
-        r["doc_id"] for r in spark.read.parquet(f"{out}/decontaminated").collect()
-    }
-    assert 40 not in kept_after_decontam and 0 in kept_after_decontam
-
-    kept_after_rep = {
-        r["doc_id"]
-        for r in spark.read.parquet(f"{out}/repetition_gated").collect()
-    }
-    assert 41 not in kept_after_rep
-
-    chunks = spark.read.parquet(f"{out}/chunks")
-    assert {"doc_id", "chunk_idx", "n_tokens", "chunk_text", "chunk_id"} <= set(
-        chunks.columns
-    )
-    assert chunks.filter(F.col("n_tokens") > 16).count() == 0
-
-    packed = spark.read.parquet(f"{out}/packed").collect()
-    assert packed and all("#" in r["chunk_id"] for r in packed)
-    assert {r["shard"] for r in packed} <= {0, 1}
-
-    # restart over the committed checkpoint: no-op through the CLI path too
-    assert run_corpus_resumable(
-        spark, spark.read.parquet(docs_path), out, ckpt, run_id="full2",
-        ops=tuple(menu.split(",")), min_quality=0.0, langs=("en", "und"),
-        benchmark_path=bench_path, decontam_n=8, max_dup_line_ratio=0.5,
-        chunk_tokens=16, overlap=4, bin_tokens=64, n_shards=2,
-    ) == []
-
-
 def test_hash_sample_deterministic_and_calibrated(spark, docs):
     """hash_sample: same seed -> identical membership across calls and
     repartitionings; different seeds -> different draws; realized rate
@@ -901,84 +736,6 @@ def test_classifier_score_plan_broadcasts_weights(spark):
     assert "BroadcastHashJoin" in plan
 
 
-def test_corpus_job_span_dedup_and_classifier_gate_stages(spark, tmp_path):
-    """The span_dedup and classifier_gate stages run inside the staged
-    corpus pipeline: boilerplate shared across docs is stripped from the
-    text, then the classifier keeps only docs scoring above threshold
-    against the weight table."""
-    from pyspark.sql import functions as F
-
-    from quake3_log_analyser_spark.operators.corpus import classifier_score
-    from quake3_log_analyser_spark.plans.corpus_run import run_corpus_resumable
-
-    boiler = "b1 b2 b3 b4 b5 b6 b7 b8"
-    rows = [
-        (1, f"unique one text {boiler}"),
-        (2, f"{boiler} other words two"),
-        (3, "third document with nothing shared at all in it"),
-    ]
-    d = spark.createDataFrame(rows, "doc_id int, text string")
-    weights = spark.createDataFrame(
-        [(b, (b % 7 - 3) * 0.1) for b in range(64)], "bucket int, weight double"
-    )
-    wpath = str(tmp_path / "weights")
-    weights.write.parquet(wpath)
-
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-    done = run_corpus_resumable(
-        spark, d, out, ckpt, run_id="t-span",
-        ops=("span_dedup", "classifier_gate"),
-        span_n=8, span_min_docs=2,
-        classifier_weights_path=wpath,
-        classifier_min_score=0.0,  # keep all: stage plumbing under test
-        classifier_n_buckets=64,
-    )
-    assert done == ["stage=span_dedup", "stage=classifier_gate"]
-
-    stripped = {
-        r["doc_id"]: r["text"]
-        for r in spark.read.parquet(f"{out}/span_deduped").collect()
-    }
-    assert stripped[1] == "unique one text"
-    assert stripped[2] == "other words two"
-    assert stripped[3] == "third document with nothing shared at all in it"
-
-    # classifier_gate with a real threshold drops what the library drops
-    gated = spark.read.parquet(f"{out}/classifier_gated")
-    assert gated.count() == 3  # min_score=0.0 keeps everything
-    src = spark.read.parquet(f"{out}/span_deduped")
-    lib_scores = {
-        r["doc_id"]: r["score"]
-        for r in classifier_score(src, weights, n_buckets=64).collect()
-    }
-    # threshold just above the minimum score: drops exactly the
-    # lowest-scoring doc(s), tie-robust (scores are rounded to 6 dp)
-    thr = min(lib_scores.values()) + 1e-6
-    out2 = str(tmp_path / "out2")
-    run_corpus_resumable(
-        spark, d, out2, str(tmp_path / "ckpt2"), run_id="t-span2",
-        ops=("span_dedup", "classifier_gate"),
-        span_n=8, span_min_docs=2,
-        classifier_weights_path=wpath,
-        classifier_min_score=thr,
-        classifier_n_buckets=64,
-    )
-    kept = {
-        r["doc_id"]
-        for r in spark.read.parquet(f"{out2}/classifier_gated").collect()
-    }
-    assert kept == {i for i, s in lib_scores.items() if s >= thr}
-    assert len(kept) < 3  # the minimum scorer(s) dropped
-
-    # classifier_gate without a weight table must refuse up front
-    with pytest.raises(ValueError, match="classifier_weights_path"):
-        run_corpus_resumable(
-            spark, d, str(tmp_path / "out3"), str(tmp_path / "ckpt3"),
-            run_id="t-span3", ops=("classifier_gate",),
-        )
-
-
 def test_build_vocab_counts_ranks_and_feeds_tokenizer(spark):
     from quake3_log_analyser_spark.functions.text import vocab_token_count
     from quake3_log_analyser_spark.operators.corpus import build_vocab
@@ -1091,61 +848,6 @@ def test_hash_split_validation(spark):
     assert {r["split"] for r in hash_split(d, {"all": 1.0}).collect()} == {"all"}
 
 
-def test_corpus_job_sample_stage(spark, docs, tmp_path):
-    """The sample stage: uniform hash_sample parity with the library call,
-    deterministic under resume; mixture path guards on the source column
-    and the menu validation requires exactly one sampling mode."""
-    from quake3_log_analyser_spark.operators.corpus import hash_sample
-    from quake3_log_analyser_spark.plans.corpus_run import run_corpus_resumable
-
-    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
-    run_corpus_resumable(
-        spark, docs, out, ckpt, run_id="s1",
-        ops=("dedup", "sample"), sample_rate=0.5,
-    )
-    sampled = spark.read.parquet(f"{out}/sampled")
-    deduped = spark.read.parquet(f"{out}/deduped")
-    lib = hash_sample(deduped, 0.5)
-    assert sorted(r["doc_id"] for r in sampled.collect()) == sorted(
-        r["doc_id"] for r in lib.collect()
-    )
-    assert 0 < sampled.count() < deduped.count()
-    # idempotent resume: everything committed -> no-op
-    assert run_corpus_resumable(
-        spark, docs, out, ckpt, run_id="s2",
-        ops=("dedup", "sample"), sample_rate=0.5,
-    ) == []
-
-    # mixture over the docs fixture (has a source column): per-source rates
-    out2, ckpt2 = str(tmp_path / "out2"), str(tmp_path / "ckpt2")
-    srcs = [r["source"] for r in docs.select("source").distinct().collect()]
-    run_corpus_resumable(
-        spark, docs, out2, ckpt2, run_id="s3",
-        ops=("sample",), mixture_weights={srcs[0]: 1.0},
-    )
-    mixed = spark.read.parquet(f"{out2}/sampled")
-    assert {r["source"] for r in mixed.collect()} == {srcs[0]}
-
-    # gate's projection drops source -> mixture after gate must refuse
-    with pytest.raises(ValueError, match="projection dropped"):
-        run_corpus_resumable(
-            spark, docs, str(tmp_path / "out3"), str(tmp_path / "ckpt3"),
-            run_id="s4", ops=("gate", "sample"), mixture_weights={"x": 1.0},
-        )
-    # exactly one of sample_rate / mixture_weights
-    with pytest.raises(ValueError, match="exactly one"):
-        run_corpus_resumable(
-            spark, docs, str(tmp_path / "out4"), str(tmp_path / "ckpt4"),
-            run_id="s5", ops=("sample",),
-        )
-    with pytest.raises(ValueError, match="exactly one"):
-        run_corpus_resumable(
-            spark, docs, str(tmp_path / "out5"), str(tmp_path / "ckpt5"),
-            run_id="s6", ops=("sample",), sample_rate=0.5,
-            mixture_weights={"x": 1.0},
-        )
-
-
 def test_train_classifier_separates_and_is_deterministic(spark):
     """The in-Spark trainer learns weights that make classifier_score rank
     positives above negatives on a lexically separable toy corpus, and the
@@ -1212,80 +914,6 @@ def test_minhash_lsh_slim_matches_carry_form(spark, docs):
     )
     assert slim == carry
     assert len(slim) > 0
-
-
-def test_corpus_resume_after_reconfigured_fresh_run(spark, docs, tmp_path):
-    """A resume=False run with a CHANGED config over an existing checkpoint
-    supersedes the old pin: subsequent resume=True calls with the new
-    config are a no-op, with the OLD config they raise, and an A->B->A
-    fresh-run sequence leaves A resumable (round-5 bug: the second marker
-    pair made every resume raise forever)."""
-    from quake3_log_analyser_spark.plans.corpus_run import run_corpus_resumable
-
-    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
-    cfg_a = dict(ops=("dedup", "gate"), min_quality=0.45)
-    cfg_b = dict(ops=("dedup", "gate"), min_quality=0.30)
-
-    run_corpus_resumable(spark, docs, out, ckpt, run_id="a1", **cfg_a)
-    # reconfigured FRESH run over the same checkpoint (docstring-sanctioned)
-    run_corpus_resumable(
-        spark, docs, out, ckpt, run_id="b1", resume=False, **cfg_b
-    )
-    # resume with the new (latest) config: everything committed -> no-op
-    assert run_corpus_resumable(
-        spark, docs, out, ckpt, run_id="b2", **cfg_b
-    ) == []
-    # resume with the superseded config must refuse
-    with pytest.raises(ValueError, match="params="):
-        run_corpus_resumable(spark, docs, out, ckpt, run_id="a2", **cfg_a)
-    # A -> B -> A: a fresh A run re-pins A as latest, so A resumes again
-    run_corpus_resumable(
-        spark, docs, out, ckpt, run_id="a3", resume=False, **cfg_a
-    )
-    assert run_corpus_resumable(
-        spark, docs, out, ckpt, run_id="a4", **cfg_a
-    ) == []
-    with pytest.raises(ValueError, match="params="):
-        run_corpus_resumable(spark, docs, out, ckpt, run_id="b3", **cfg_b)
-
-
-def test_corpus_job_classifier_gate_trains_in_spark(spark, docs, tmp_path):
-    """classifier_gate with classifier_train_path trains the weight table
-    in-Spark (train_classifier) and gates with it; passing both or neither
-    weight source refuses."""
-    from quake3_log_analyser_spark.plans.corpus_run import run_corpus_resumable
-
-    labeled = docs.select(
-        "doc_id", "text",
-        (F.col("doc_id") % 2 == 0).cast("int").alias("label"),
-    )
-    train_path = str(tmp_path / "train")
-    labeled.write.parquet(train_path)
-
-    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
-    done = run_corpus_resumable(
-        spark, docs, out, ckpt, run_id="cg1",
-        ops=("classifier_gate",),
-        classifier_train_path=train_path,
-        classifier_n_buckets=256, classifier_epochs=2,
-        classifier_min_score=0.0,
-    )
-    assert done == ["stage=classifier_gate"]
-    gated = spark.read.parquet(f"{out}/classifier_gated")
-    # min_score 0.0 keeps every scored doc; the stage must round-trip rows
-    assert gated.count() == docs.count()
-
-    with pytest.raises(ValueError, match="exactly one"):
-        run_corpus_resumable(
-            spark, docs, str(tmp_path / "o2"), str(tmp_path / "c2"),
-            run_id="cg2", ops=("classifier_gate",),
-        )
-    with pytest.raises(ValueError, match="exactly one"):
-        run_corpus_resumable(
-            spark, docs, str(tmp_path / "o3"), str(tmp_path / "c3"),
-            run_id="cg3", ops=("classifier_gate",),
-            classifier_weights_path="x", classifier_train_path=train_path,
-        )
 
 
 def test_vocab_token_count_broadcast_handle(spark):
@@ -1392,90 +1020,3 @@ def test_block_shuffle_is_a_permutation(spark, docs):
 
     with pytest.raises(ValueError, match="n_blocks"):
         block_shuffle(base, n_blocks=1000)
-
-
-def test_corpus_job_epoch_and_shuffle_stages(spark, tmp_path):
-    """The upsampling (epoch) and training-order (shuffle) stages run
-    end-to-end through the CLI: wiki docs at 2.0 epochs appear exactly
-    twice with '@epoch' identities, cc docs at 0.5 are hash-gated, and
-    the final shuffle emits a dense (block, pos) permutation of the
-    packed rows.  A restart is a no-op."""
-    import sys
-    from pathlib import Path
-
-    sys.path.insert(0, str(Path(__file__).resolve().parents[1] / "jobs"))
-    import run_corpus
-
-    from quake3_log_analyser_spark.plans.corpus_run import run_corpus_resumable
-
-    rows = [
-        (
-            i,
-            f"document {i} body with several plain english filler words "
-            f"to give the chunker something to cut number {i}",
-            "wiki" if i % 2 else "cc",
-        )
-        for i in range(40)
-    ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string, source string")
-    docs_path = str(tmp_path / "docs")
-    docs.write.mode("overwrite").parquet(docs_path)
-
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-    run_corpus.main([
-        "--input", docs_path, "--output", out, "--checkpoint", ckpt,
-        "--run-id", "ep1", "--resume",
-        "--ops", "epoch,chunk,pack,shuffle",
-        "--epochs", "wiki=2.0,cc=0.5",
-        "--chunk-tokens", "8", "--overlap", "2",
-        "--bin-tokens", "32", "--n-shards", "2",
-        "--shuffle-blocks", "8",
-    ])
-
-    up = spark.read.parquet(f"{out}/upsampled").collect()
-    by_orig: dict[str, list[str]] = {}
-    for r in up:
-        base, _, ep = r["doc_id"].partition("@")
-        by_orig.setdefault((r["source"], base), []).append(ep)
-    for (src, _), eps in by_orig.items():
-        if src == "wiki":
-            assert sorted(eps) == ["0", "1"]   # 2.0 epochs: exactly two copies
-        else:
-            assert eps == ["0"]                # fractional keep, single copy
-    n_cc_kept = sum(1 for (s, _) in by_orig if s == "cc")
-    assert 0 < n_cc_kept < 20                  # the 0.5 gate actually gates
-
-    shuffled = spark.read.parquet(f"{out}/shuffled")
-    packed_n = spark.read.parquet(f"{out}/packed").count()
-    srows = shuffled.collect()
-    assert len(srows) == packed_n              # shuffle is a pure reorder
-    by_block: dict[int, list[int]] = {}
-    for r in srows:
-        assert 0 <= r["block"] < 8
-        by_block.setdefault(r["block"], []).append(r["pos"])
-    assert len(by_block) > 1
-    for ps in by_block.values():
-        assert sorted(ps) == list(range(1, len(ps) + 1))
-
-    # copies of the same wiki doc get DISTINCT identities end-to-end:
-    # chunk ids carry the epoch suffix, so no chunk_id collides
-    chunk_ids = [r["chunk_id"] for r in spark.read.parquet(f"{out}/chunks").collect()]
-    assert len(chunk_ids) == len(set(chunk_ids))
-    assert any("@1#" in c for c in chunk_ids)
-
-    # idempotent restart
-    assert run_corpus_resumable(
-        spark, docs, out, ckpt, run_id="ep2",
-        ops=("epoch", "chunk", "pack", "shuffle"),
-        epoch_weights={"wiki": 2.0, "cc": 0.5},
-        chunk_tokens=8, overlap=2, bin_tokens=32, n_shards=2,
-        shuffle_blocks=8,
-    ) == []
-
-    # the epoch stage refuses to run without weights
-    with pytest.raises(ValueError, match="epoch_weights"):
-        run_corpus_resumable(
-            spark, docs, str(tmp_path / "out2"), str(tmp_path / "ckpt2"),
-            run_id="ep3", ops=("epoch",),
-        )
