@@ -1230,184 +1230,6 @@ WHERE g.doc_id NOT IN (SELECT doc_b FROM ({mh}) near)
 """
 
 
-def _q_hash_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic content-hash sampling (operators.corpus.hash_sample):
-    membership is a pure function of the doc key, so the draw is stable
-    across runs/partitionings/resumes — and exactly reproducible in SQL
-    because equal-length lowercase-hex strings compare like numbers."""
-    from quake3_log_analyser_spark.operators.corpus import hash_sample
-
-    docs = _table(spark, sf_dir, "documents")
-    return hash_sample(docs, rate=0.25, seed=7).select("doc_id")
-
-
-_ORACLE_HASH_SAMPLE = """
-SELECT doc_id FROM documents
-WHERE substr(md5('7|' || CAST(doc_id AS VARCHAR)), 1, 8) < '40000000'
-"""
-
-
-def _q_stratified_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-stratum quota by hash order (operators.corpus.stratified_cap):
-    cap each document source at 10 docs (the sf tables carry ~25 per
-    source, so the cap BINDS), chosen by a reproducible uniform draw
-    instead of head-of-file bias."""
-    from quake3_log_analyser_spark.operators.corpus import stratified_cap
-
-    docs = _table(spark, sf_dir, "documents")
-    return stratified_cap(docs, "source", 10, seed=3).select("doc_id", "source")
-
-
-_ORACLE_STRATIFIED_CAP = """
-SELECT doc_id, source FROM (
-  SELECT doc_id, source,
-    row_number() OVER (
-      PARTITION BY source
-      ORDER BY substr(md5('3|' || CAST(doc_id AS VARCHAR)), 1, 8), doc_id
-    ) AS rk
-  FROM documents
-) WHERE rk <= 10
-"""
-
-
-def _q_contaminated(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Benchmark decontamination (operators.corpus.contaminated_docs):
-    every 50th document plays the eval set; flagged docs share >= 1
-    distinct 5-gram with it (the benchmark docs flag themselves — the
-    self-leak a real sweep must also catch)."""
-    from quake3_log_analyser_spark.operators.corpus import contaminated_docs
-
-    docs = _table(spark, sf_dir, "documents")
-    bench = docs.filter(F.col("doc_id") % 50 == 0)
-    return contaminated_docs(docs, bench, n=5)
-
-
-_ORACLE_CONTAMINATED = r"""
-WITH tok AS (
-  SELECT doc_id, regexp_split_to_array(trim(lower(text)), '\s+') AS t
-  FROM documents
-),
-gr AS (
-  SELECT doc_id,
-    CASE WHEN len(t) < 5 THEN []::VARCHAR[]
-         ELSE list_distinct(list_transform(range(1, len(t) - 5 + 2),
-              i -> array_to_string(list_slice(t, i, i + 4), ' '))) END AS grams
-  FROM tok
-),
-bg AS (SELECT DISTINCT g FROM gr, UNNEST(grams) AS u(g) WHERE doc_id % 50 = 0),
-dg AS (SELECT doc_id, g FROM gr, UNNEST(grams) AS u(g))
-SELECT doc_id, COUNT(*) AS n_hits
-FROM dg JOIN bg USING (g)
-GROUP BY doc_id
-"""
-
-
-def _q_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Intra-doc repetition stats on sentence-ish units (segment regex
-    '\\. ').  The sf documents are single-line with no '. ' inside, so
-    every doc used to collapse to ONE segment — ``dup_line_ratio`` was 0
-    and ``top_line_share`` 1 for all 500 rows, never exercising the
-    duplicate-segment branch.  Every 5th doc now gets the same sentence
-    appended twice (mirrored in the oracle), so those docs read 3
-    segments with a real dup ratio while the rest keep the single-segment
-    base case (pinned in tests/test_entry_nonvacuous.py)."""
-    from quake3_log_analyser_spark.operators.corpus import repetition_stats
-
-    docs = _table(spark, sf_dir, "documents")
-    aug = docs.withColumn(
-        "text",
-        F.concat(
-            F.col("text"),
-            F.when(
-                F.col("doc_id") % 5 == 0,
-                F.lit(". repeated boilerplate line. repeated boilerplate line"),
-            ).otherwise(F.lit("")),
-        ),
-    )
-    return repetition_stats(aug, sep=r"\. ")
-
-
-_ORACLE_REPETITION = r"""
-WITH aug AS (
-  SELECT doc_id,
-    text || CASE WHEN doc_id % 5 = 0
-                 THEN '. repeated boilerplate line. repeated boilerplate line'
-                 ELSE '' END AS text
-  FROM documents
-),
-segs AS (
-  SELECT doc_id, trim(x) AS line
-  FROM aug, UNNEST(regexp_split_to_array(text, '\. ')) AS u(x)
-  WHERE trim(x) <> ''
-),
-per AS (SELECT doc_id, line, COUNT(*) AS cnt FROM segs GROUP BY 1, 2)
-SELECT doc_id, CAST(SUM(cnt) AS BIGINT) AS n_lines,
-  round((SUM(cnt) - COUNT(*)) * 1.0 / SUM(cnt), 4) AS dup_line_ratio,
-  round(MAX(cnt) * 1.0 / SUM(cnt), 4) AS top_line_share
-FROM per GROUP BY doc_id
-"""
-
-
-def _q_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fixed-token chunking with overlap (operators.pack.chunk_documents):
-    32-token windows stepping 24 over the sf documents."""
-    from quake3_log_analyser_spark.operators.pack import chunk_documents
-
-    docs = _table(spark, sf_dir, "documents")
-    return chunk_documents(docs, chunk_tokens=32, overlap=8)
-
-
-_ORACLE_CHUNKS = r"""
-WITH tok AS (
-  SELECT doc_id,
-    CASE WHEN length(trim(text)) = 0 THEN []::VARCHAR[]
-         ELSE regexp_split_to_array(trim(text), '\s+') END AS t
-  FROM documents
-),
-starts AS (
-  -- start positions capped at len - overlap: no overlap-only tail chunk
-  SELECT doc_id, t, s, CAST((s - 1) / 24 AS INT) AS chunk_idx
-  FROM tok, UNNEST(range(1, greatest(len(t) - 8, 1) + 1, 24)) AS u(s)
-),
-chunks AS (
-  SELECT doc_id, chunk_idx, list_slice(t, s, s + 31) AS ck
-  FROM starts
-)
-SELECT doc_id, chunk_idx,
-  CAST(len(ck) AS BIGINT) AS n_tokens,
-  array_to_string(ck, ' ') AS chunk_text
-FROM chunks WHERE len(ck) > 0
-"""
-
-
-def _q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Token-budget bin packing (operators.pack.pack_sequences) with ONE
-    shard so the DuckDB twin needs no xxhash: hash-order running token sum
-    -> bin id.  The multi-shard variant shares the same per-shard logic
-    (pinned by pytest determinism/budget tests)."""
-    from quake3_log_analyser_spark.operators.pack import pack_sequences
-
-    docs = _table(spark, sf_dir, "documents")
-    return pack_sequences(docs, bin_tokens=512, n_shards=1, seed=7)
-
-
-_ORACLE_PACK = r"""
-WITH base AS (
-  SELECT doc_id,
-    CASE WHEN length(trim(text)) = 0 THEN 0
-         ELSE len(regexp_split_to_array(trim(text), '\s+')) END AS n_tokens,
-    substr(md5('7|' || CAST(doc_id AS VARCHAR)), 1, 8) AS h
-  FROM documents
-)
-SELECT doc_id, CAST(n_tokens AS BIGINT) AS n_tokens, 0 AS shard,
-  CAST(floor(
-    COALESCE(SUM(n_tokens) OVER (ORDER BY h, doc_id
-             ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) / 512.0
-  ) AS BIGINT) AS bin_seq
-FROM base
-"""
-
-
 def _q_pii_redaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PII scrubbing (functions.text.redact_pii): the sf documents carry
     no PII, so both engines append the SAME synthetic email/URL/IP tail
@@ -1547,39 +1369,6 @@ FROM verified WHERE jaccard >= {threshold}
 """
 
 
-_MIXTURE_WEIGHTS = {"src0": 1.0, "src1": 0.5, "src2": 0.25, "src3": 0.0}
-_MIXTURE_DEFAULT = 0.1
-_MIXTURE_SEED = 7
-
-
-def _q_mixture_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-source training-mixture rates (operators.corpus.
-    mixture_sample): src0 kept fully, src1 at 50%, src2 at 25%, src3
-    dropped, every other source at the 10% default — membership a pure
-    function of (seed, doc_id), broadcast rate table, no window."""
-    from quake3_log_analyser_spark.operators.corpus import mixture_sample
-
-    docs = _table(spark, sf_dir, "documents")
-    return mixture_sample(
-        docs, _MIXTURE_WEIGHTS, seed=_MIXTURE_SEED, default_rate=_MIXTURE_DEFAULT
-    ).select("doc_id", "source")
-
-
-def _mixture_oracle_sql() -> str:
-    values = ", ".join(
-        f"('{src}', '{format(int(rate * 16**8), '09x')}')"
-        for src, rate in _MIXTURE_WEIGHTS.items()
-    )
-    default_hex = format(int(_MIXTURE_DEFAULT * 16**8), "09x")
-    return f"""
-SELECT d.doc_id, d.source
-FROM documents d
-LEFT JOIN (VALUES {values}) AS r(source, rate_hex) ON d.source = r.source
-WHERE '0' || substr(md5('{_MIXTURE_SEED}|' || CAST(d.doc_id AS VARCHAR)), 1, 8)
-      < COALESCE(r.rate_hex, '{default_hex}')
-"""
-
-
 def _q_duplicated_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross-document repeated-substring spans (operators.dedup.
     duplicated_spans): maximal token spans whose every 5-gram window
@@ -1631,316 +1420,14 @@ FROM sp GROUP BY doc_id, span_id
 """
 
 
-
-def _q_hash_split(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic leakage-safe train/val/test split
-    (operators.corpus.hash_split): assignment is a pure function of
-    (seed, doc_id) via md5 hash ranges — same row, same split, on every
-    run/partitioning/resume; reproduced exactly in SQL."""
-    from quake3_log_analyser_spark.operators.corpus import hash_split
-
-    docs = _table(spark, sf_dir, "documents")
-    return hash_split(
-        docs, {"train": 0.8, "val": 0.1, "test": 0.1}
-    ).select("doc_id", "split")
-
-
-def _hash_split_oracle() -> str:
-    t_train = int(round(0.8 * 16**8))
-    t_val = int(round(0.9 * 16**8))
-    return f"""
-WITH k AS (
-  SELECT doc_id,
-         ('0x' || substr(md5('0|' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT
-           AS draw
-  FROM documents
-)
-SELECT doc_id,
-       CASE WHEN draw < {t_train} THEN 'train'
-            WHEN draw < {t_val} THEN 'val'
-            ELSE 'test' END AS split
-FROM k
-"""
-
-
-def _q_build_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus-frequency vocabulary (operators.corpus.build_vocab): top-100
-    whitespace tokens by count, ties broken by token string — the
-    on-corpus tokenizer-vocab build that feeds vocab_token_count."""
-    from quake3_log_analyser_spark.operators.corpus import build_vocab
-
-    docs = _table(spark, sf_dir, "documents")
-    return build_vocab(docs, size=100, min_count=2)
-
-
-_ORACLE_BUILD_VOCAB = r"""
-WITH tok AS (
-  SELECT CASE WHEN length(trim(text)) = 0 THEN []::VARCHAR[]
-              ELSE regexp_split_to_array(trim(lower(text)), '\s+') END AS t
-  FROM documents
-),
-c AS (
-  SELECT x AS token, COUNT(*) AS count
-  FROM tok, UNNEST(t) AS u(x)
-  GROUP BY x HAVING COUNT(*) >= 2
-),
-r AS (
-  SELECT token, count,
-    ROW_NUMBER() OVER (ORDER BY count DESC, token) AS rank
-  FROM c
-)
-SELECT token, CAST(count AS BIGINT) AS count, CAST(rank AS INT) AS rank
-FROM r WHERE rank <= 100
-"""
-
-
-_CLS_BUCKETS = 64
-_CLS_BIAS = 0.5
-
-
-def _q_classifier_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hashed bag-of-words linear classifier (operators.corpus.
-    classifier_score): fastText-style quality scoring with a synthetic
-    64-bucket weight table (weight = (bucket % 7 - 3) * 0.1), bias 0.5 —
-    broadcast weight join, one hash-agg per doc."""
-    from pyspark.sql import functions as F
-
-    from quake3_log_analyser_spark.operators.corpus import classifier_score
-
-    docs = _table(spark, sf_dir, "documents")
-    weights = spark.range(_CLS_BUCKETS).select(
-        F.col("id").cast("int").alias("bucket"),
-        ((F.col("id") % 7 - 3) * 0.1).alias("weight"),
-    )
-    return classifier_score(
-        docs, weights, n_buckets=_CLS_BUCKETS, n=1, bias=_CLS_BIAS
-    )
-
-
-_ORACLE_CLASSIFIER = rf"""
-WITH tok AS (
-  SELECT doc_id,
-    CASE WHEN length(trim(text)) = 0 THEN []::VARCHAR[]
-         ELSE regexp_split_to_array(trim(lower(text)), '\s+') END AS t
-  FROM documents
-),
-g AS (
-  SELECT doc_id,
-    ('0x' || substr(md5(x), 1, 15))::BIGINT % {_CLS_BUCKETS} AS bucket
-  FROM tok, UNNEST(t) AS u(x)
-),
-s AS (
-  SELECT doc_id, COUNT(*) AS n_grams,
-    SUM((bucket % 7 - 3) * CAST(0.1 AS DOUBLE)) AS wsum
-  FROM g GROUP BY doc_id
-)
-SELECT t.doc_id,
-  CAST(COALESCE(s.n_grams, 0) AS BIGINT) AS n_grams,
-  round(1.0 / (1.0 + exp(-({_CLS_BIAS} + COALESCE(s.wsum / s.n_grams, 0)))),
-        6) AS score
-FROM tok t LEFT JOIN s USING (doc_id)
-"""
-
-
-_CLS_TRAIN_EPOCHS = 3
-_CLS_TRAIN_LR = 1.0
-
-
-def _q_classifier_train(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """In-Spark classifier training (operators.corpus.train_classifier):
-    deterministic full-batch logistic regression over hashed bag-of-words
-    mean features, integer-micro weights.  Labels are derived
-    deterministically from the corpus itself (doc contains the token
-    'the') so the trained weights carry real lexical signal; the DuckDB
-    twin replays every epoch's update as unrolled CTEs."""
-    from pyspark.sql import functions as F
-
-    from quake3_log_analyser_spark.functions.text import ws_tokens
-    from quake3_log_analyser_spark.operators.corpus import train_classifier
-
-    docs = _table(spark, sf_dir, "documents")
-    labeled = docs.select(
-        "doc_id",
-        "text",
-        F.array_contains(
-            F.transform(ws_tokens(F.col("text")), lambda w: F.lower(w)),
-            "the",
-        )
-        .cast("int")
-        .alias("label"),
-    )
-    w = train_classifier(
-        labeled,
-        n_buckets=_CLS_BUCKETS,
-        n=1,
-        epochs=_CLS_TRAIN_EPOCHS,
-        lr=_CLS_TRAIN_LR,
-    )
-    return w.select(F.col("bucket").cast("long").alias("bucket"), "w_micro")
-
-
-def _classifier_train_oracle_sql(
-    n_buckets: int = _CLS_BUCKETS,
-    epochs: int = _CLS_TRAIN_EPOCHS,
-    lr: float = _CLS_TRAIN_LR,
-) -> str:
-    """DuckDB twin of train_classifier: the fixed epoch count unrolls to
-    one (margin, error, gradient, weight) CTE quartet per epoch — every
-    intermediate rounded to integer micro-units exactly as the Spark
-    trainer rounds, so the final weight table matches bit-for-bit."""
-    parts = [
-        rf"""
-WITH tok AS (
-  SELECT doc_id, CASE WHEN length(trim(text)) = 0 THEN []::VARCHAR[]
-       ELSE regexp_split_to_array(trim(lower(text)), '\s+') END AS t
-  FROM documents
-),
-lab AS (
-  SELECT doc_id,
-    CASE WHEN list_contains(t, 'the') THEN 1.0 ELSE 0.0 END AS label
-  FROM tok
-),
-cnt AS (
-  SELECT doc_id,
-    ('0x' || substr(md5(x), 1, 15))::BIGINT % {n_buckets} AS bucket,
-    COUNT(*) AS cnt
-  FROM tok, UNNEST(t) AS u(x) GROUP BY 1, 2
-),
-ng AS (SELECT doc_id, SUM(cnt) AS n_grams FROM cnt GROUP BY 1),
-feats AS (
-  SELECT c.doc_id, c.bucket, c.cnt, n.n_grams, l.label
-  FROM cnt c JOIN ng n USING (doc_id) JOIN lab l USING (doc_id)
-),
-nd AS (SELECT COUNT(*) AS n_docs FROM ng),
-m1 AS (
-  SELECT doc_id, ANY_VALUE(label) AS label,
-         CAST(0 AS BIGINT) AS margin_micro
-  FROM feats GROUP BY doc_id
-),
-e1 AS (
-  SELECT doc_id,
-    CAST(round((label - 1.0 / (1.0 + exp(-(margin_micro / 1e6)))) * 1e6)
-         AS BIGINT) AS err_micro
-  FROM m1
-),
-g1 AS (
-  SELECT bucket,
-    SUM(CAST(round(e.err_micro * f.cnt / f.n_grams) AS BIGINT)) AS grad_micro
-  FROM feats f JOIN e1 e USING (doc_id) GROUP BY bucket
-),
-w1 AS (
-  SELECT bucket,
-    CAST(round({lr!r} * grad_micro / nd.n_docs) AS BIGINT) AS w_micro
-  FROM g1, nd
-)"""
-    ]
-    for k in range(2, epochs + 1):
-        p = k - 1
-        parts.append(
-            rf""",
-m{k} AS (
-  SELECT f.doc_id, ANY_VALUE(f.label) AS label,
-    CAST(round(SUM(COALESCE(w.w_micro, 0) * f.cnt)
-               / ANY_VALUE(f.n_grams)) AS BIGINT) AS margin_micro
-  FROM feats f LEFT JOIN w{p} w USING (bucket) GROUP BY f.doc_id
-),
-e{k} AS (
-  SELECT doc_id,
-    CAST(round((label - 1.0 / (1.0 + exp(-(margin_micro / 1e6)))) * 1e6)
-         AS BIGINT) AS err_micro
-  FROM m{k}
-),
-g{k} AS (
-  SELECT bucket,
-    SUM(CAST(round(e.err_micro * f.cnt / f.n_grams) AS BIGINT)) AS grad_micro
-  FROM feats f JOIN e{k} e USING (doc_id) GROUP BY bucket
-),
-w{k} AS (
-  SELECT g.bucket,
-    COALESCE(w.w_micro, 0)
-      + CAST(round({lr!r} * g.grad_micro / nd.n_docs) AS BIGINT) AS w_micro
-  FROM g{k} g LEFT JOIN w{p} w USING (bucket), nd
-)"""
-        )
-    parts.append(
-        f"\nSELECT CAST(bucket AS BIGINT) AS bucket, w_micro FROM w{epochs}"
-    )
-    return "".join(parts)
-
-
-def _q_epoch_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Upsampling mixture (epochs > 1.0): src0 x2.5, src1 x0.25,
-    src2 x1.0, unlisted sources dropped — floor(e) full copies plus a
-    hash-gated fractional copy, copy index exposed as ``epoch``."""
-    from quake3_log_analyser_spark.operators.corpus import epoch_mixture
-
-    docs = _table(spark, sf_dir, "documents")
-    return epoch_mixture(
-        docs, {"src0": 2.5, "src1": 0.25, "src2": 1.0}, seed=7
-    ).select("doc_id", "source", "epoch")
-
-
-_ORACLE_EPOCH_MIXTURE = """
-WITH rates(source, whole, frac_hex) AS (
-  VALUES ('src0', 2, '80000000'), ('src1', 0, '40000000'),
-         ('src2', 1, '00000000')),
-j AS (
-  SELECT d.doc_id, d.source,
-         coalesce(r.whole, 0)
-           + CASE WHEN substr(md5('7|' || d.doc_id), 1, 8)
-                       < coalesce(r.frac_hex, '00000000')
-                  THEN 1 ELSE 0 END AS n
-  FROM documents d LEFT JOIN rates r USING (source))
-SELECT CAST(doc_id AS BIGINT) AS doc_id, source,
-       CAST(unnest(generate_series(0, n - 1)) AS INT) AS epoch
-FROM j WHERE n >= 1
-"""
-
-
-def _q_block_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic training-order shuffle: (block, pos) permutation,
-    32 blocks, pure function of (seed, doc_id)."""
-    from quake3_log_analyser_spark.operators.corpus import block_shuffle
-
-    docs = _table(spark, sf_dir, "documents").select("doc_id")
-    return block_shuffle(docs, n_blocks=32, seed=3)
-
-
-_ORACLE_BLOCK_SHUFFLE = """
-WITH h AS (SELECT doc_id, substr(md5('3|' || doc_id), 1, 8) AS hh FROM documents),
-b AS (
-  SELECT doc_id, hh,
-         CAST(((instr('0123456789abcdef', substr(hh, 1, 1)) - 1) * 16
-             + (instr('0123456789abcdef', substr(hh, 2, 1)) - 1)) % 32 AS INT)
-           AS block
-  FROM h)
-SELECT CAST(doc_id AS BIGINT) AS doc_id, block,
-       row_number() OVER (PARTITION BY block ORDER BY hh, doc_id) AS pos
-FROM b
-"""
-
-
 _EXTRA_QUERIES = {
     # Ordering only: if the gate caps how many rows it runs, the cap
     # bites the rows listed last.
     "clean_corpus": _q_clean_corpus,
-    "epoch_mixture": _q_epoch_mixture,
-    "block_shuffle": _q_block_shuffle,
-    "classifier_train": _q_classifier_train,
     "duplicated_spans": _q_duplicated_spans,
-    "build_vocab": _q_build_vocab,
-    "hash_split": _q_hash_split,
-    "classifier_score": _q_classifier_score,
     "dedup_cross": _q_dedup_cross,
     "neardup_cross": _q_neardup_cross,
-    "mixture_sample": _q_mixture_sample,
     "pii_redaction": _q_pii_redaction,
-    "chunk_documents": _q_chunk_documents,
-    "pack_sequences": _q_pack_sequences,
-    "contaminated_docs": _q_contaminated,
-    "repetition_stats": _q_repetition,
-    "hash_sample": _q_hash_sample,
-    "stratified_cap": _q_stratified_cap,
     "text_stats": _q_text_stats,
     "fingerprints": _q_fingerprints,
     "dedup_exact": _q_dedup_exact,
@@ -1955,23 +1442,10 @@ _EXTRA_QUERIES = {
 }
 
 _EXTRA_ORACLES = {
-    "epoch_mixture": _ORACLE_EPOCH_MIXTURE,
-    "block_shuffle": _ORACLE_BLOCK_SHUFFLE,
-    "classifier_train": _classifier_train_oracle_sql(),
     "duplicated_spans": _ORACLE_DUP_SPANS,
-    "build_vocab": _ORACLE_BUILD_VOCAB,
-    "hash_split": _hash_split_oracle(),
-    "classifier_score": _ORACLE_CLASSIFIER,
     "dedup_cross": _ORACLE_DEDUP_CROSS,
     "neardup_cross": _neardup_cross_oracle_sql(),
-    "mixture_sample": _mixture_oracle_sql(),
     "pii_redaction": _ORACLE_PII,
-    "chunk_documents": _ORACLE_CHUNKS,
-    "pack_sequences": _ORACLE_PACK,
-    "contaminated_docs": _ORACLE_CONTAMINATED,
-    "repetition_stats": _ORACLE_REPETITION,
-    "hash_sample": _ORACLE_HASH_SAMPLE,
-    "stratified_cap": _ORACLE_STRATIFIED_CAP,
     "text_stats": _ORACLE_TEXT_STATS,
     "fingerprints": _ORACLE_FINGERPRINTS,
     "dedup_exact": _ORACLE_DEDUP_EXACT,

@@ -60,9 +60,9 @@ def vocab_token_count(text: Column, vocab, unk_is_char: bool = True) -> Column:
     per character (``unk_is_char=True``, byte-fallback-style) or one per
     residual run.
 
-    This is the pluggable hook that lets packing/chunking budgets reflect
-    an actual tokenizer instead of the ``bpe_ish_token_count`` proxy:
-    pass the model's merge/piece table as ``vocab``.  Arrow-batched
+    This is the pluggable hook that lets token budgets reflect an actual
+    tokenizer instead of the ``bpe_ish_token_count`` proxy: pass the
+    model's merge/piece table as ``vocab``.  Arrow-batched
     pandas UDF.  ``vocab`` may be a plain iterable of pieces (fine for
     toy vocabs — it rides the task closure) or a
     ``pyspark.Broadcast`` of one — the scale-safe default for a
@@ -256,46 +256,6 @@ def bind_once(col: Column, f) -> Column:
     ``transform`` over a one-element array is the expression-level `let`:
     the element IS a bound variable, so inner references are O(1)."""
     return F.element_at(F.transform(F.array(col), f), 1)
-
-
-def positional_word_ngrams(text: Column, n: int) -> Column:
-    """Position-preserving word ``n``-grams with multiplicity:
-    ``array<struct<pos:int, gram:string>>``, ``pos`` the 1-based start
-    token.  ``word_ngrams`` deduplicates (right for set-similarity);
-    substring-level dedup needs every occurrence AND where it sits."""
-
-    if n == 1:
-        # a positional 1-gram IS (index+1, token): the two-param
-        # transform lambda receives the element index directly, skipping
-        # the sequence + per-window element_at machinery (r7; identical
-        # rows — pos is 1-based, gram the lowered token)
-        return F.transform(
-            F.transform(ws_tokens(text), lambda w: F.lower(w)),
-            lambda w, i: F.struct(
-                (i + 1).cast("int").alias("pos"), w.alias("gram")
-            ),
-        )
-
-    def _grams(toks: Column) -> Column:
-        # element_at instead of slice+concat over the slice — identical
-        # gram strings, no per-window array allocation (see word_ngrams)
-        k = F.size(toks)
-        empty = F.array().cast("array<struct<pos:int,gram:string>>")
-        return F.when(k < n, empty).otherwise(
-            F.transform(
-                F.sequence(F.lit(1), k - n + 1),
-                lambda i: F.struct(
-                    i.cast("int").alias("pos"),
-                    F.concat_ws(
-                        " ", *[F.element_at(toks, i + j) for j in range(n)]
-                    ).alias("gram"),
-                ),
-            )
-        )
-
-    return bind_once(
-        F.transform(ws_tokens(text), lambda w: F.lower(w)), _grams
-    )
 
 
 def hash60(col: Column) -> Column:

@@ -35,9 +35,6 @@ from ..functions.parse_expr import parse_expr_df
 from ..functions.parse_pandas import make_parse_pandas_udf
 from ..schemas import EVENT_COLUMN_NAMES
 
-# passthrough transcript columns carried beside the parsed struct
-PASSTHROUGH = ["conv_id", "turn_idx", "role", "tool", "ts", "text"]
-
 # widest event-field set for which the expr parser is janino-safe: with a
 # narrow consumed set, predicate pushdown re-inlines only the consumed
 # expressions (event_type dispatch + <=7 field extractors) — far below the

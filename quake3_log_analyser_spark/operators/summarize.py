@@ -41,24 +41,6 @@ from .sessionize import match_control, sessionize
 # ---------------------------------------------------------------------------
 
 
-def frag_attribution(kills: DataFrame) -> DataFrame:
-    """The ``kills()`` frag rules (summary_logic.rs:190-196) as projections:
-    killer gets +1 unless the killer is ``<world>``, then the victim gets -1.
-    Self-kills (killer == victim != world) are +1 for the killer."""
-    is_world = F.col("killer_name") == WORLD
-    return kills.withColumns(
-        {
-            "frag_name": F.when(is_world, F.col("victim_name")).otherwise(
-                F.col("killer_name")
-            ),
-            "frag_client_id": F.when(is_world, F.col("victim_id")).otherwise(
-                F.col("killer_id")
-            ),
-            "frag_delta": F.when(is_world, F.lit(-1)).otherwise(F.lit(1)),
-        }
-    )
-
-
 def _summary_null(field: str):
     return F.lit(None).cast(MATCH_SUMMARY_SCHEMA[field].dataType)
 

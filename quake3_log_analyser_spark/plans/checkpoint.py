@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..session import local_table
+from .pipeline import check_ops
 
 # ---------------------------------------------------------------------------
 # --verbose log-and-continue issue tier
@@ -200,7 +201,6 @@ def _build_unit_run(
     from ..operators.sessionize import sessionize
     from ..operators.summarize import summarize_extended, summarize_multi
 
-    ops = frozenset(ops)
     unit_col = F.pmod(F.xxhash64("conv_id"), F.lit(n_units)).cast("int")
     part = transcripts.withColumn("convhash", unit_col).filter(
         F.col("convhash").isin(pending)
@@ -268,7 +268,11 @@ def run_resumable(
     ``ops`` selects the summary menu (previously the resumable path always
     computed kills-only, silently ignoring the CLI's --ops under
     --resume).  ``stop_on_violations`` has ``summarize_matches``'s meaning.
+    An invalid menu or ``n_units < 1`` raises before the checkpoint is read.
     """
+    ops = check_ops(ops)
+    if n_units < 1:
+        raise ValueError(f"n_units must be >= 1, got {n_units}")
     rows = _committed_rows(spark, checkpoint_path)
     done = {r["unit"] for r in rows}
     _check_pin(

@@ -46,6 +46,19 @@ VALID_OPS = {"kills", "means_of_death", "player_resolutions", "reported_scores"}
 KILLS_ONLY = frozenset({"kills"})
 
 
+def check_ops(ops: frozenset[str] | set[str]) -> frozenset[str]:
+    """The op menu as a frozenset, or ValueError if it names an unknown op
+    or leaves out ``kills``.  Every entry point that summarizes calls it,
+    so a menu is accepted or rejected the same way on every path."""
+    ops = frozenset(ops)
+    unknown = ops - VALID_OPS
+    if unknown:
+        raise ValueError(f"unknown logic ops: {sorted(unknown)}")
+    if "kills" not in ops:
+        raise ValueError("the 'kills' op is mandatory (as in the reference menu)")
+    return ops
+
+
 def summarize_matches(
     transcripts: DataFrame,
     ops: frozenset[str] | set[str] = KILLS_ONLY,
@@ -67,12 +80,7 @@ def summarize_matches(
     gate (app/src/main.rs:84-85): the job FAILS on the first malformed
     line instead of routing it to the dead-letter column.
     """
-    ops = frozenset(ops)
-    unknown = ops - VALID_OPS
-    if unknown:
-        raise ValueError(f"unknown logic ops: {sorted(unknown)}")
-    if "kills" not in ops:
-        raise ValueError("the 'kills' op is mandatory (as in the reference menu)")
+    ops = check_ops(ops)
 
     # vectorized-path field set (narrow: 2-5 event columns)
     agg_base = ["killer_name", "victim_name"]

@@ -29,23 +29,6 @@ TRANSCRIPT_SCHEMA = T.StructType(
 # ---------------------------------------------------------------------------
 # parsed event struct (Quake3FullEvents analogue)
 # ---------------------------------------------------------------------------
-# event_type values — the 13 variants of quake3-server-events/src/types.rs
-EVENT_TYPES = [
-    "InitGame",
-    "ClientConnect",
-    "ClientUserinfoChanged",
-    "ClientBegin",
-    "ClientDisconnect",
-    "Item",
-    "Say",
-    "Kill",
-    "Exit",
-    "CaptureTheFlagResults",
-    "Score",
-    "ShutdownGame",
-    "Comment",
-]
-
 # parse_error_kind values — LogParsingError/EventParsingError
 # (deserializer_logs.rs:34-49) flattened into one discriminator
 ERROR_KINDS = [

@@ -356,3 +356,38 @@ def test_checkpoint_resume_rejects_changed_n_units(spark, tmp_path):
     with pytest.raises(ValueError, match="unit count"):
         run_resumable(spark, t, out, legacy, "r6", n_units=16)
     assert spark.read.parquet(summaries).count() == 12
+
+
+@pytest.mark.parametrize(
+    "kwargs, match",
+    [
+        ({"ops": {"kils"}}, "unknown logic ops"),
+        ({"ops": {"means_of_death"}}, "'kills' op is mandatory"),
+        ({"n_units": 0}, "n_units must be >= 1"),
+        ({"n_units": -3}, "n_units must be >= 1"),
+    ],
+    ids=["unknown_op", "no_kills", "zero_units", "negative_units"],
+)
+def test_run_resumable_rejects_bad_menu_or_unit_count(spark, tmp_path, kwargs, match):
+    """``run_resumable`` accepts an op menu exactly when
+    ``summarize_matches`` does, and needs at least one unit; a bad
+    argument raises before the checkpoint is read or written, instead of
+    committing units under a menu the plain path rejects or processing
+    nothing and returning as if done."""
+    from quake3_log_analyser_spark.plans.checkpoint import run_resumable
+    from quake3_log_analyser_spark.sources.transcripts import transcripts_from_lines
+
+    t = transcripts_from_lines(
+        spark,
+        [
+            r" 0:00 InitGame: \fraglimit\20\timelimit\15",
+            " 0:01 Kill: 1022 2 22: <world> killed D by MOD_TRIGGER_HURT",
+            " 0:02 ShutdownGame:",
+        ],
+        "c0",
+    )
+    out, ckpt = tmp_path / "out", tmp_path / "ckpt"
+    with pytest.raises(ValueError, match=match):
+        run_resumable(spark, t, str(out), str(ckpt), run_id="r1", **kwargs)
+    assert not ckpt.exists()
+    assert not out.exists()

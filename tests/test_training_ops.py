@@ -347,115 +347,11 @@ def test_clean_corpus_gates(spark, docs):
     assert all(r["quality"] >= 0.45 and r["lang_guess"] == "en" for r in kept)
 
 
-def test_hash_sample_deterministic_and_calibrated(spark, docs):
-    """hash_sample: same seed -> identical membership across calls and
-    repartitionings; different seeds -> different draws; realized rate
-    near the target; rate edge cases exact."""
-    from quake3_log_analyser_spark.operators.corpus import hash_sample
-
-    n = docs.count()
-    a1 = {r["doc_id"] for r in hash_sample(docs, 0.3, seed=1).collect()}
-    a2 = {r["doc_id"] for r in hash_sample(docs.repartition(7), 0.3, seed=1).collect()}
-    assert a1 == a2, "membership must be partitioning-independent"
-    b = {r["doc_id"] for r in hash_sample(docs, 0.3, seed=2).collect()}
-    assert a1 != b, "different seeds must give different draws"
-    assert 0.2 < len(a1) / n < 0.4, f"realized rate {len(a1)/n} off target 0.3"
-    assert hash_sample(docs, 0.0).count() == 0
-    assert hash_sample(docs, 1.0).count() == n
-    # nested rates: a 0.1 draw is a subset of the 0.3 draw (same seed) —
-    # the property that makes monotone split growing possible
-    c = {r["doc_id"] for r in hash_sample(docs, 0.1, seed=1).collect()}
-    assert c <= a1
-
-
-def test_stratified_cap_quota_and_determinism(spark, docs):
-    from quake3_log_analyser_spark.operators.corpus import stratified_cap
-
-    capped = stratified_cap(docs, "source", 5, seed=0)
-    per = {r["source"]: r["n"] for r in
-           capped.groupBy("source").agg(F.count(F.lit(1)).alias("n")).collect()}
-    full = {r["source"]: r["n"] for r in
-            docs.groupBy("source").agg(F.count(F.lit(1)).alias("n")).collect()}
-    for src, n_full in full.items():
-        assert per.get(src, 0) == min(5, n_full), (src, per.get(src), n_full)
-    again = sorted(r["doc_id"] for r in stratified_cap(docs, "source", 5, seed=0)
-                   .collect())
-    assert again == sorted(r["doc_id"] for r in capped.collect())
-
-
-def test_contaminated_docs_flags_benchmark_overlap(spark, docs):
-    """Docs sharing an 8-gram with the eval set are flagged; clean docs are
-    not; the benchmark side is broadcast (map-side join vs a huge corpus)."""
-    from quake3_log_analyser_spark.operators.corpus import contaminated_docs
-
-    bench = spark.createDataFrame(
-        [(0, "the quick brown fox jumps over the lazy dog tonight")],
-        "bid int, text string",
-    )
-    leaked = spark.createDataFrame(
-        [
-            (1, "intro words then the quick brown fox jumps over the lazy dog and more"),
-            (2, "completely unrelated content with no overlap whatsoever in it"),
-        ],
-        "doc_id int, text string",
-    )
-    out = contaminated_docs(leaked, bench, n=8)
-    hits = {r["doc_id"]: r["n_hits"] for r in out.collect()}
-    assert 1 in hits and hits[1] >= 1
-    assert 2 not in hits
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan
-
-
-def test_repetition_stats_detects_boilerplate(spark):
-    from quake3_log_analyser_spark.operators.corpus import repetition_stats
-
-    d = spark.createDataFrame(
-        [
-            (1, "same line\nsame line\nsame line\nunique"),
-            (2, "a\nb\nc"),
-            (3, "   \n  "),  # blank-only -> no row
-        ],
-        "doc_id int, text string",
-    )
-    out = {r["doc_id"]: r for r in repetition_stats(d).collect()}
-    assert set(out) == {1, 2}
-    assert out[1]["n_lines"] == 4
-    assert out[1]["dup_line_ratio"] == 0.5      # 2 of 4 lines are repeats
-    assert out[1]["top_line_share"] == 0.75
-    assert out[2]["dup_line_ratio"] == 0.0 and out[2]["top_line_share"] == round(1/3, 4)
-
-
-def test_chunk_documents_windows_and_overlap(spark):
-    from quake3_log_analyser_spark.operators.pack import chunk_documents
-
-    d = spark.createDataFrame(
-        [(1, "w1 w2 w3 w4 w5 w6 w7 w8 w9 w10"), (2, "a b"), (3, "   ")],
-        "doc_id int, text string",
-    )
-    out = sorted(
-        ((r["doc_id"], r["chunk_idx"], r["n_tokens"], r["chunk_text"])
-         for r in chunk_documents(d, chunk_tokens=4, overlap=1).collect())
-    )
-    # no overlap-only tail: a start past k - overlap would emit a chunk
-    # wholly contained in the previous window ((1, 3, 1, 'w10') before
-    # the fix) — duplicated tokens as a standalone training sequence
-    assert out == [
-        (1, 0, 4, "w1 w2 w3 w4"),
-        (1, 1, 4, "w4 w5 w6 w7"),
-        (1, 2, 4, "w7 w8 w9 w10"),
-        (2, 0, 2, "a b"),
-    ]
-    with pytest.raises(ValueError):
-        chunk_documents(d, chunk_tokens=4, overlap=4)
-
-
-def test_vocab_token_count_and_pluggable_packing(spark):
-    """Greedy longest-prefix-match counting against a toy vocabulary, and
-    the pack_sequences token_counter hook: budgets reflect the plugged
-    tokenizer instead of the whitespace proxy."""
+def test_vocab_token_count_greedy_prefix_and_unk_runs(spark):
+    """Greedy longest-prefix-match counting against a toy vocabulary:
+    unknown text costs one token per character by default and one per
+    unmatched run with ``unk_is_char=False``."""
     from quake3_log_analyser_spark.functions.text import vocab_token_count
-    from quake3_log_analyser_spark.operators.pack import pack_sequences
 
     vocab = ["aa", "b", "bb", "hello"]
     d = spark.createDataFrame(
@@ -480,42 +376,6 @@ def test_vocab_token_count_and_pluggable_packing(spark):
 
     with pytest.raises(ValueError, match="non-empty vocab"):
         vocab_token_count(F.col("text"), [])
-
-    packed = {
-        r["doc_id"]: r["n_tokens"]
-        for r in pack_sequences(
-            d.filter(F.col("text").isNotNull()),
-            bin_tokens=4,
-            token_counter=lambda c: vocab_token_count(c, vocab),
-        ).collect()
-    }
-    assert packed == {1: 4, 2: 3, 4: 3}
-
-
-def test_pack_sequences_budget_and_determinism(spark, docs):
-    from quake3_log_analyser_spark.operators.pack import pack_sequences
-
-    packed = pack_sequences(docs, bin_tokens=300, n_shards=4, seed=1).collect()
-    assert len(packed) == docs.count(), "every doc must land in a bin"
-    assert {r["shard"] for r in packed} <= set(range(4))
-    # bin invariant per shard: a doc in bin b STARTS inside [b*300,(b+1)*300)
-    by_shard = {}
-    for r in packed:
-        by_shard.setdefault(r["shard"], []).append(r)
-    for shard, rows in by_shard.items():
-        rows = sorted(rows, key=lambda r: (r["bin_seq"], r["doc_id"]))
-        bins = {}
-        for r in rows:
-            bins.setdefault(r["bin_seq"], 0)
-        # reconstruct: cumulative sums in bin order must respect boundaries
-        seqs = sorted(bins)
-        assert seqs[0] == 0 and seqs == list(range(len(seqs))), (
-            f"shard {shard} bins not contiguous: {seqs}"
-        )
-    # determinism across repartitioning
-    again = pack_sequences(docs.repartition(13), bin_tokens=300, n_shards=4,
-                           seed=1).collect()
-    assert sorted(map(tuple, packed)) == sorted(map(tuple, again))
 
 
 def test_pii_redaction_patterns(spark):
@@ -582,40 +442,6 @@ def test_neardup_against_finds_cross_corpus_neighbors(spark):
     assert all(d != 11 for d, _ in got)
     # directionality: only (new, ref) pairs, never ref-internal ones
     assert all(d >= 10 and rd < 10 for d, rd in got)
-
-
-def test_mixture_sample_rates_and_determinism(spark):
-    from quake3_log_analyser_spark.operators.corpus import mixture_sample
-
-    import pytest
-
-    rows = [(i, f"doc {i}", ["a", "b", "c", "d"][i % 4]) for i in range(400)]
-    df = spark.createDataFrame(rows, "doc_id long, text string, source string")
-    weights = {"a": 1.0, "b": 0.5, "c": 0.0}
-    out = mixture_sample(df, weights, seed=3, default_rate=0.25)
-    got = [(r["doc_id"], r["source"]) for r in out.collect()]
-    by_src = {}
-    for _, s in got:
-        by_src[s] = by_src.get(s, 0) + 1
-    assert by_src.get("a") == 100          # rate 1.0 keeps EVERY row
-    assert by_src.get("c") is None          # rate 0.0 drops the source
-    assert 25 <= by_src.get("b", 0) <= 75   # ~50% of 100
-    assert 10 <= by_src.get("d", 0) <= 45   # default 25% of 100
-    # pure function of (seed, key): identical under rerun and repartition
-    again = [
-        (r["doc_id"], r["source"])
-        for r in mixture_sample(
-            df.repartition(11), weights, seed=3, default_rate=0.25
-        ).collect()
-    ]
-    assert sorted(got) == sorted(again)
-    # a different seed draws a different (but valid) b-subset
-    other = mixture_sample(df, weights, seed=4, default_rate=0.25).collect()
-    assert sorted(got) != sorted(
-        [(r["doc_id"], r["source"]) for r in other]
-    )
-    with pytest.raises(ValueError, match="rate"):
-        mixture_sample(df, {"a": 1.5})
 
 
 # -- cross-document repeated-substring spans ---------------------------------
@@ -688,92 +514,6 @@ def test_strip_spans_removes_exactly_the_spans(spark):
     assert out[3] == "nothing shared in this document at all zero dup"
 
 
-# -- hashed n-gram linear classifier -----------------------------------------
-
-
-def test_classifier_score_matches_hand_computation(spark):
-    import hashlib
-    import math
-
-    from quake3_log_analyser_spark.operators.corpus import classifier_score
-
-    n_buckets = 64
-    docs = spark.createDataFrame(
-        [(1, "good words here"), (2, "bad stuff"), (3, "")],
-        "doc_id int, text string",
-    )
-    weights = spark.createDataFrame(
-        [(b, (b % 7 - 3) * 0.1) for b in range(n_buckets)],
-        "bucket int, weight double",
-    )
-    out = {
-        r["doc_id"]: (r["n_grams"], r["score"])
-        for r in classifier_score(
-            docs, weights, n_buckets=n_buckets, n=1, bias=0.5
-        ).collect()
-    }
-
-    def bucket(tok):
-        return int(hashlib.md5(tok.encode()).hexdigest()[:15], 16) % n_buckets
-
-    for doc_id, text in [(1, "good words here"), (2, "bad stuff")]:
-        toks = text.split()
-        mean_w = sum((bucket(t) % 7 - 3) * 0.1 for t in toks) / len(toks)
-        want = 1.0 / (1.0 + math.exp(-(0.5 + mean_w)))
-        got_n, got_s = out[doc_id]
-        assert got_n == len(toks)
-        assert abs(got_s - round(want, 6)) < 1e-9
-    # empty doc: zero feature vector -> sigmoid(bias)
-    assert out[3] == (0, round(1.0 / (1.0 + math.exp(-0.5)), 6))
-
-
-def test_classifier_score_plan_broadcasts_weights(spark):
-    from quake3_log_analyser_spark.operators.corpus import classifier_score
-
-    docs = spark.createDataFrame([(1, "a b c")], "doc_id int, text string")
-    weights = spark.createDataFrame([(0, 0.1)], "bucket int, weight double")
-    plan = classifier_score(docs, weights)._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan
-
-
-def test_build_vocab_counts_ranks_and_feeds_tokenizer(spark):
-    from quake3_log_analyser_spark.functions.text import vocab_token_count
-    from quake3_log_analyser_spark.operators.corpus import build_vocab
-
-    d = spark.createDataFrame(
-        [
-            (1, "the cat sat on the mat"),
-            (2, "THE cat ran"),
-            (3, "a dog ran fast"),
-            (4, ""),
-        ],
-        "doc_id int, text string",
-    )
-    rows = build_vocab(d, size=3, min_count=2).collect()
-    got = [(r["token"], r["count"], r["rank"]) for r in rows]
-    # the:3, cat:2, ran:2 (tie broken by token string: cat < ran);
-    # every count-1 token pruned by min_count, size=3 caps the rest
-    assert sorted(got, key=lambda t: t[2]) == [
-        ("the", 3, 1), ("cat", 2, 2), ("ran", 2, 3)
-    ]
-
-    # determinism under repartition (the tie-break makes ranks total)
-    again = build_vocab(d.repartition(7), size=3, min_count=2).collect()
-    assert sorted((r["token"], r["count"], r["rank"]) for r in again) == sorted(got)
-
-    # the built table plugs straight into the real-tokenizer hook
-    vocab = [r["token"] for r in rows]
-    counts = {
-        r["doc_id"]: r["n"]
-        for r in d.select(
-            "doc_id", vocab_token_count(F.col("text"), vocab).alias("n")
-        ).collect()
-    }
-    # doc 1: the(1) cat(1) sat(3 chars) on(2) the(1) mat(3) = 11
-    assert counts[1] == 11
-    assert counts[4] == 0
-
-
 def test_duplicated_spans_hash_modes_agree(spark):
     from quake3_log_analyser_spark.operators.dedup import duplicated_spans
 
@@ -795,104 +535,6 @@ def test_duplicated_spans_hash_modes_agree(spark):
         for r in duplicated_spans(d, n=8, gram_hash="md5").collect()
     )
     assert fast == md5 and len(fast) == 2
-
-
-def test_hash_split_assignment_and_leakage_safety(spark):
-    from quake3_log_analyser_spark.operators.corpus import hash_split
-
-    d = spark.createDataFrame(
-        [(i, f"conv{i % 40}", f"doc {i}") for i in range(2000)],
-        "doc_id int, conv_id string, text string",
-    )
-    w = {"train": 0.8, "val": 0.1, "test": 0.1}
-    out = hash_split(d, w).collect()
-    # every row assigned exactly one split; proportions near the weights
-    counts = {}
-    for r in out:
-        counts[r["split"]] = counts.get(r["split"], 0) + 1
-    assert set(counts) <= set(w) and sum(counts.values()) == 2000
-    assert abs(counts["train"] / 2000 - 0.8) < 0.05
-
-    # determinism: identical assignment under a different partitioning
-    again = {
-        r["doc_id"]: r["split"] for r in hash_split(d.repartition(13), w).collect()
-    }
-    assert {r["doc_id"]: r["split"] for r in out} == again
-
-    # leakage safety: keying on the GROUP column puts every row of a
-    # conversation in the same split
-    by_conv = hash_split(d, w, key_col="conv_id").collect()
-    per_conv = {}
-    for r in by_conv:
-        per_conv.setdefault(r["conv_id"], set()).add(r["split"])
-    assert all(len(s) == 1 for s in per_conv.values())
-
-    # different seeds re-deal the assignment
-    reseeded = {
-        r["doc_id"]: r["split"] for r in hash_split(d, w, seed=7).collect()
-    }
-    assert reseeded != {r["doc_id"]: r["split"] for r in out}
-
-
-def test_hash_split_validation(spark):
-    from quake3_log_analyser_spark.operators.corpus import hash_split
-
-    d = spark.createDataFrame([(1, "x")], "doc_id int, text string")
-    with pytest.raises(ValueError, match="sum to 1"):
-        hash_split(d, {"train": 0.5, "test": 0.4})
-    with pytest.raises(ValueError, match="> 0"):
-        hash_split(d, {"train": 1.1, "test": -0.1})
-    with pytest.raises(ValueError, match="at least one"):
-        hash_split(d, {})
-    # single split: everything lands there (degenerate but legal)
-    assert {r["split"] for r in hash_split(d, {"all": 1.0}).collect()} == {"all"}
-
-
-def test_train_classifier_separates_and_is_deterministic(spark):
-    """The in-Spark trainer learns weights that make classifier_score rank
-    positives above negatives on a lexically separable toy corpus, and the
-    trained table is bit-identical under a different partitioning (the
-    integer-micro-unit discipline)."""
-    from quake3_log_analyser_spark.operators.corpus import (
-        classifier_score,
-        train_classifier,
-    )
-
-    rows = []
-    for i in range(40):
-        if i % 2 == 0:
-            rows.append((i, f"good clean prose sample number {i}", 1))
-        else:
-            rows.append((i, f"zzq xqv jnk garbled blob item {i}", 0))
-    labeled = spark.createDataFrame(rows, "doc_id long, text string, label int")
-
-    w = train_classifier(labeled, n_buckets=256, epochs=3, lr=1.0)
-    assert set(w.columns) == {"bucket", "w_micro", "weight"}
-    wrows = w.collect()
-    assert len(wrows) > 0
-    for r in wrows:
-        assert r["weight"] == r["w_micro"] / 1e6
-
-    scored = classifier_score(
-        labeled, w.select("bucket", "weight"), n_buckets=256, n=1
-    ).join(labeled.select("doc_id", "label"), "doc_id")
-    pos = [r["score"] for r in scored.filter("label = 1").collect()]
-    neg = [r["score"] for r in scored.filter("label = 0").collect()]
-    assert min(pos) > max(neg), (
-        f"trained gate must separate: min(pos)={min(pos)} max(neg)={max(neg)}"
-    )
-
-    # determinism across partitionings: same weights bit-for-bit
-    w2 = train_classifier(
-        labeled.repartition(7, "doc_id"), n_buckets=256, epochs=3, lr=1.0
-    )
-    assert sorted(map(tuple, w.collect())) == sorted(map(tuple, w2.collect()))
-
-    with pytest.raises(ValueError, match="epochs"):
-        train_classifier(labeled, epochs=0)
-    empty = spark.createDataFrame([], "doc_id long, text string, label int")
-    with pytest.raises(ValueError, match="at least one doc"):
-        train_classifier(empty)
 
 
 def test_minhash_lsh_slim_matches_carry_form(spark, docs):
@@ -946,77 +588,3 @@ def test_vocab_token_count_broadcast_handle(spark):
     empty = spark.sparkContext.broadcast([])
     with pytest.raises(ValueError, match="non-empty"):
         vocab_token_count(F.col("text"), empty)
-
-
-def test_build_vocab_plan_is_take_ordered(spark, docs):
-    """The vocab top-k must compile to TakeOrderedAndProject (distributed
-    per-partition top-k), not a single-partition global sort window."""
-    from quake3_log_analyser_spark.operators.corpus import build_vocab
-
-    v = build_vocab(docs, size=20, min_count=2)
-    plan = v._jdf.queryExecution().executedPlan().toString()
-    assert "TakeOrderedAndProject" in plan
-    rows = v.collect()
-    assert len(rows) == 20
-    assert [r["rank"] for r in rows[:3]] == [1, 2, 3]
-    # ranks are the (count desc, token) order, densely 1..size
-    assert sorted(r["rank"] for r in rows) == list(range(1, 21))
-
-
-def test_epoch_mixture_replicates_and_gates(spark, docs):
-    from quake3_log_analyser_spark.operators.corpus import epoch_mixture
-
-    base = docs.filter(F.col("doc_id") < 10000)  # originals only
-    out = epoch_mixture(
-        base, {"src0": 2.0, "src1": 0.5, "src3": 1.25}, seed=3
-    ).select("doc_id", "source", "epoch")
-    rows = out.collect()
-    n_by = {}
-    for r in rows:
-        n_by.setdefault((r["source"], r["doc_id"]), []).append(r["epoch"])
-    for (src, _), eps in n_by.items():
-        # copy indices are dense 0..n-1
-        assert sorted(eps) == list(range(len(eps)))
-        if src == "src0":
-            assert len(eps) == 2          # whole 2.0: exactly two copies
-        elif src == "src1":
-            assert len(eps) == 1          # fractional keep
-        elif src == "src3":
-            assert len(eps) in (1, 2)     # 1 + 25% chance of a second
-    srcs = {s for (s, _) in n_by}
-    assert "src2" not in srcs             # unlisted source dropped
-    n_src1_kept = sum(1 for (s, _) in n_by if s == "src1")
-    n_src1_all = base.filter(F.col("source") == "src1").count()
-    assert 0 < n_src1_kept < n_src1_all   # the 0.5 gate actually gates
-    # determinism: a second run yields the identical multiset
-    again = epoch_mixture(
-        base, {"src0": 2.0, "src1": 0.5, "src3": 1.25}, seed=3
-    ).select("doc_id", "source", "epoch").collect()
-    assert sorted(map(tuple, rows)) == sorted(map(tuple, again))
-
-
-def test_block_shuffle_is_a_permutation(spark, docs):
-    from quake3_log_analyser_spark.operators.corpus import block_shuffle
-
-    base = docs.select("doc_id")
-    n = base.count()
-    out = block_shuffle(base, n_blocks=16, seed=1)
-    rows = out.collect()
-    assert len(rows) == n
-    assert len({r["doc_id"] for r in rows}) == n          # nothing lost/duped
-    by_block = {}
-    for r in rows:
-        assert 0 <= r["block"] < 16
-        by_block.setdefault(r["block"], []).append(r["pos"])
-    assert len(by_block) > 1                              # actually spreads
-    for _, ps in by_block.items():
-        assert sorted(ps) == list(range(1, len(ps) + 1))  # dense in-block rank
-    # deterministic: same (seed, key) -> same permutation
-    again = block_shuffle(base, n_blocks=16, seed=1).collect()
-    assert sorted(map(tuple, rows)) == sorted(map(tuple, again))
-    # a different seed yields a different order (not a constant function)
-    other = block_shuffle(base, n_blocks=16, seed=2).collect()
-    assert sorted(map(tuple, rows)) != sorted(map(tuple, other))
-
-    with pytest.raises(ValueError, match="n_blocks"):
-        block_shuffle(base, n_blocks=1000)
