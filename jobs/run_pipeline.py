@@ -1,7 +1,10 @@
 """Production job entry — ``spark-submit --py-files`` launcher.
 
     zip -r pipeline.zip quake3_log_analyser_spark/
-    spark-submit --py-files pipeline.zip jobs/run_pipeline.py \
+    spark-submit \
+        --driver-memory "$(python3 -c 'from quake3_log_analyser_spark.session import driver_memory; print(driver_memory())')" \
+        --driver-java-options "-XX:+UseParallelGC -XX:MetaspaceSize=256m -XX:Tier4InvocationThreshold=50000 -XX:Tier4MinInvocationThreshold=6000 -XX:Tier4CompileThreshold=60000 -XX:Tier4BackEdgeThreshold=400000" \
+        --py-files pipeline.zip jobs/run_pipeline.py \
         --input  <transcripts parquet path or Iceberg table> \
         --output <output base path> \
         --ops kills,means_of_death,player_resolutions,reported_scores \
@@ -21,7 +24,11 @@ The two paths write different outputs:
 
 Under spark-submit the session factory detects the submitted
 ``spark.master`` and builds on it (session.py::_submitted_master), so the
-SAME entrypoint runs local[N] smoke tests and N-executor clusters.  Every
+SAME entrypoint runs local[N] smoke tests and N-executor clusters.  The
+driver JVM is already running by then, so the driver's heap and JVM
+options come from the submit command: ``session.DRIVER_JAVA_OPTS`` as
+``--driver-java-options`` and ``session.driver_memory()`` as
+``--driver-memory``, the values a plain-Python launch gets.  Every
 run ends with one ``elapsed_s=... master=... parallelism=...`` line: the
 work time (JVM/session startup excluded) and the cluster it ran on.
 """
@@ -67,13 +74,17 @@ def main() -> None:
     from quake3_log_analyser_spark.operators.route import write_sinks
     from quake3_log_analyser_spark.operators.sessionize import sessionize
     from quake3_log_analyser_spark.plans.checkpoint import run_resumable
-    from quake3_log_analyser_spark.plans.pipeline import summarize_matches
+    from quake3_log_analyser_spark.plans.pipeline import (
+        check_ops,
+        summarize_matches,
+    )
     from quake3_log_analyser_spark.session import get_spark
     from quake3_log_analyser_spark.sources.transcripts import load_transcripts
 
+    # reject a bad op menu before any session, read or write
+    ops = check_ops(args.ops.split(","))
     spark = SparkSession.getActiveSession() or get_spark("transcript-pipeline")
     transcripts = load_transcripts(spark, args.input)
-    ops = frozenset(args.ops.split(","))
     # --pedantic is the feed gate AND the violations gate, on both paths
     stop_on_violations = args.stop_on_violations or args.pedantic
     t_work0 = time.perf_counter()

@@ -23,10 +23,47 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-# One shuffle partition per core locally; on a real cluster this should be
-# ~2-3x total executor cores (or left to AQE's coalescing with a high
-# initial value).
-DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
+# The driver JVM's options, for a one-shot job: one fresh JVM per run that
+# pays set-up and the first call once, runs a few warm calls and exits.
+# get_spark passes them on a plain-Python launch; under spark-submit the
+# driver JVM is already running, so the submit command passes the same
+# string as --driver-java-options (README.md, jobs/run_pipeline.py).
+# Figures: CPU per JVM thread of a fresh get_spark(), then after four
+# kills and four full-menu summaries in the same JVM; 4-core host, JDK 17.
+DRIVER_JAVA_OPTS = " ".join((
+    # the throughput collector: G1 live-locked under 32 executor threads
+    # of allocation-heavy work (83 s against 2 s for the same job).  The
+    # JVM sizes its GC threads from the cores it may use (4 here); a fixed
+    # 16, set for those 32 executor threads, spent 1.9-4.4 s of GC-thread
+    # CPU against 1.5-2.2 s
+    "-XX:+UseParallelGC",
+    # JDK 17 starts the metaspace high-water mark at ~21 MB, so loading
+    # Spark's classes took three "Pause Full (Metadata GC Threshold)"
+    # collections in set-up and a fourth in the first calls; at 256m
+    # there are none, and GC threads spend 1.5-2.2 s instead of 3.5-3.8 s
+    "-XX:MetaspaceSize=256m",
+    # C2 thresholds ~10x the JDK 17 defaults (5000 / 600 / 15000 / 40000):
+    # Spark's one-time start-up code no longer buys C2 compiles, while
+    # code that runs rep after rep still reaches C2.  CPU of live C2
+    # threads plus exited threads (mostly C2): 5.8-6.8 s -> 1.5-2.0 s in
+    # set-up, 38-42 s -> 18-19 s by the end of the calls.  C1 only
+    # (TieredStopAtLevel=1) set up faster but cost warm kills reps a
+    # third more CPU
+    "-XX:Tier4InvocationThreshold=50000",
+    "-XX:Tier4MinInvocationThreshold=6000",
+    "-XX:Tier4CompileThreshold=60000",
+    "-XX:Tier4BackEdgeThreshold=400000",
+))
+
+
+def default_cpus() -> int:
+    """``SPARK_GRAFT_CPUS``, else the cores this process may run on (its
+    CPU affinity, as ``nproc`` counts them, not the host's core count).
+
+    One shuffle partition per core locally; on a real cluster this should
+    be ~2-3x total executor cores (or left to AQE's coalescing with a high
+    initial value)."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
 
 
 def driver_memory() -> str:
@@ -118,7 +155,7 @@ def get_spark(
     # ``cpus=`` argument still wins — callers like perfbench pin their
     # parallelism deliberately.
     submitted = _submitted_master() if cpus is None else None
-    cpus = cpus or DEFAULT_CPUS
+    cpus = cpus or default_cpus()
     if shuffle_partitions is None:
         if submitted is not None:
             import re
@@ -204,17 +241,9 @@ def get_spark(
             "spark.local.dir",
             os.environ.get("SPARK_GRAFT_LOCAL_DIR", "/dev/shm/spark-local"),
         )
-        # CRITICAL in this virtualized environment: the default G1 GC
-        # thread sizing live-locks under 32 executor threads of
-        # allocation-heavy work (measured 83s vs 2s for the same job).
-        # Capped GC threads restore linear behavior; ParallelGC with 16
-        # threads measured best overall.
         .config(
             "spark.driver.extraJavaOptions",
-            os.environ.get(
-                "SPARK_GRAFT_JAVA_OPTS",
-                "-XX:+UseParallelGC -XX:ParallelGCThreads=16",
-            ),
+            os.environ.get("SPARK_GRAFT_JAVA_OPTS", DRIVER_JAVA_OPTS),
         )
     )
     if shuffle_partitions is not None:

@@ -4,7 +4,10 @@ module but leaves its row in the docs fails here in seconds.
 
 A path resolves from the repo root, from the package root, or as a
 basename that exactly one package file has (COVERAGE writes
-``parse_expr.py``).  ``{a,b}`` brace lists expand to one path each."""
+``parse_expr.py``).  ``{a,b}`` brace lists expand to one path each.
+
+The documented ``spark-submit`` commands pass the driver JVM the same
+options a plain-Python launch gets, ``session.DRIVER_JAVA_OPTS``."""
 
 from __future__ import annotations
 
@@ -55,3 +58,18 @@ def test_backticked_py_paths_exist(doc):
     assert paths, f"{doc} names no .py path; the pattern is stale"
     missing = sorted(p for p in paths if not _resolves(p))
     assert not missing, f"{doc} names missing files: {missing}"
+
+
+SUBMIT_OPTS = re.compile(r'--driver-java-options "([^"]*)"')
+
+
+@pytest.mark.parametrize("doc", ("README.md", "jobs/run_pipeline.py"))
+def test_submit_commands_pass_the_session_jvm_options(doc):
+    """Under spark-submit the driver JVM starts before ``get_spark``, so
+    the documented submit commands carry its options themselves; they
+    must be the string a plain-Python launch gets."""
+    from quake3_log_analyser_spark.session import DRIVER_JAVA_OPTS
+
+    found = SUBMIT_OPTS.findall((ROOT / doc).read_text())
+    assert found, f"{doc} has no --driver-java-options in a submit command"
+    assert set(found) == {DRIVER_JAVA_OPTS}

@@ -168,3 +168,21 @@ def test_checkpoint_is_needed_only_with_resume(spark, tmp_path, monkeypatch, cap
         job.main()
     assert exc.value.code == 2
     assert "--resume needs --checkpoint" in capsys.readouterr().err
+
+
+def test_unknown_op_is_rejected_before_any_output(spark, tmp_path, monkeypatch):
+    """A misspelt op menu fails before the plain path reads or writes
+    anything: ``{output}`` is never created."""
+    spec = importlib.util.spec_from_file_location("run_pipeline_job", JOB)
+    job = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(job)
+
+    inp = str(tmp_path / "transcripts")
+    transcripts_from_lines(spark, LINES["c0"], "c0").write.parquet(inp)
+    out = tmp_path / "out"
+    monkeypatch.setattr(sys, "argv", [
+        "run_pipeline.py", "--input", inp, "--output", str(out), "--ops", "kils",
+    ])
+    with pytest.raises(ValueError, match=r"unknown logic ops: \['kils'\]"):
+        job.main()
+    assert not out.exists()

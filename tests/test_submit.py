@@ -21,6 +21,8 @@ from pathlib import Path
 import pytest
 from pyspark.sql import functions as F
 
+from quake3_log_analyser_spark.session import DRIVER_JAVA_OPTS
+
 REPO = Path(__file__).resolve().parents[1]
 SPARK_SUBMIT = shutil.which("spark-submit") or "/opt/spark/bin/spark-submit"
 
@@ -50,6 +52,8 @@ def test_spark_submit_honors_master_and_writes_sinks(spark, tmp_path):
         [
             SPARK_SUBMIT,
             "--master", "local[4]",
+            # a misspelt -XX option stops the JVM from starting
+            "--driver-java-options", DRIVER_JAVA_OPTS,
             "--py-files", str(zpath),
             str(REPO / "jobs" / "run_pipeline.py"),
             "--input", inp,
