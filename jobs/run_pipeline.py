@@ -1,9 +1,10 @@
 """Production job entry — ``spark-submit --py-files`` launcher.
 
     zip -r pipeline.zip quake3_log_analyser_spark/
+    eval "$(python3 -c 'from quake3_log_analyser_spark.session import submit_env; print(submit_env())')"
     spark-submit \
         --driver-memory "$(python3 -c 'from quake3_log_analyser_spark.session import driver_memory; print(driver_memory())')" \
-        --driver-java-options "-XX:+UseParallelGC -XX:MetaspaceSize=256m -XX:Tier4InvocationThreshold=50000 -XX:Tier4MinInvocationThreshold=6000 -XX:Tier4CompileThreshold=60000 -XX:Tier4BackEdgeThreshold=400000" \
+        --driver-java-options "-XX:+UseParallelGC -XX:MetaspaceSize=256m -XX:Tier4InvocationThreshold=50000 -XX:Tier4MinInvocationThreshold=6000 -XX:Tier4CompileThreshold=60000 -XX:Tier4BackEdgeThreshold=400000 $ARCHIVE_OPTS" \
         --py-files pipeline.zip jobs/run_pipeline.py \
         --input  <transcripts parquet path or Iceberg table> \
         --output <output base path> \
@@ -28,19 +29,44 @@ SAME entrypoint runs local[N] smoke tests and N-executor clusters.  The
 driver JVM is already running by then, so the driver's heap and JVM
 options come from the submit command: ``session.DRIVER_JAVA_OPTS`` as
 ``--driver-java-options`` and ``session.driver_memory()`` as
-``--driver-memory``, the values a plain-Python launch gets.  Every
-run ends with one ``elapsed_s=... master=... parallelism=...`` line: the
-work time (JVM/session startup excluded) and the cluster it ran on.
+``--driver-memory``, the values a plain-Python launch gets.  To these the
+command adds the class archive's options, which ``session.submit_env()``
+prints for the shell to ``eval``: a submitted driver maps the archive a
+plain-Python run of this job dumped in the same local dir, with the
+empty ``SPARK_CONF_DIR`` it was dumped with, and never dumps one itself.
+So a submit-only deployment gains only after one plain-Python run
+(``python3 jobs/run_pipeline.py ...``) following each install, upgrade
+or, with the default tmpfs local dir, reboot.
+
+Every run ends with one ``elapsed_s=... master=... parallelism=...
+setup_s=... class_archive=...`` line: the work time (JVM/session startup
+excluded), the cluster it ran on, the wall time from the start of the
+job's first process (the driver JVM under spark-submit) to a ready
+session, and whether the driver JVM ``mapped`` its classes from the
+archive, ``dumped`` one at exit (the job waits for that, so the JVM has
+exited before the job does) or ran with ``none``.
 """
 
 from __future__ import annotations
 
 import argparse
+import os
 import sys
 import time
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
+
+
+def _since_process_start() -> float:
+    """Wall seconds since the job's first process started (``/proc``, 10 ms
+    ticks): this one, or under spark-submit its parent, the driver JVM,
+    which starts this Python only once the JVM is up."""
+    pid = os.getppid() if "PYSPARK_GATEWAY_PORT" in os.environ else os.getpid()
+    with open(f"/proc/{pid}/stat") as fh:
+        start = int(fh.read().rsplit(")", 1)[1].split()[19])
+    with open("/proc/uptime") as fh:
+        return float(fh.read().split()[0]) - start / os.sysconf("SC_CLK_TCK")
 
 
 def main() -> None:
@@ -78,12 +104,18 @@ def main() -> None:
         check_ops,
         summarize_matches,
     )
-    from quake3_log_analyser_spark.session import get_spark
+    from quake3_log_analyser_spark.session import (
+        class_archive_state,
+        get_spark,
+        stop_spark,
+    )
     from quake3_log_analyser_spark.sources.transcripts import load_transcripts
 
     # reject a bad op menu before any session, read or write
     ops = check_ops(args.ops.split(","))
-    spark = SparkSession.getActiveSession() or get_spark("transcript-pipeline")
+    active = SparkSession.getActiveSession()
+    spark = active or get_spark("transcript-pipeline")
+    setup_s = _since_process_start()
     transcripts = load_transcripts(spark, args.input)
     # --pedantic is the feed gate AND the violations gate, on both paths
     stop_on_violations = args.stop_on_violations or args.pedantic
@@ -146,11 +178,16 @@ def main() -> None:
         if obs is not None:
             for kind, n in sorted(issue_counts(obs).items()):
                 print(f"log_issues {kind}: {n}")
-    print(
+    line = (
         f"elapsed_s={time.perf_counter() - t_work0:.3f} "
         f"master={spark.sparkContext.master} "
-        f"parallelism={spark.sparkContext.defaultParallelism}"
+        f"parallelism={spark.sparkContext.defaultParallelism} "
+        f"setup_s={setup_s:.3f}"
     )
+    # a session the job started ends here, so a dump at JVM exit is done
+    # (and reported) before the job exits
+    archive = class_archive_state(spark) if active else stop_spark(spark)
+    print(f"{line} class_archive={archive}")
 
 
 if __name__ == "__main__":

@@ -8,10 +8,12 @@ one ``conv_id`` is one log/session, ``turn_idx`` is the 1-based line
 number that the reference calls ``event_id``
 (dal/src/events_translation.rs:14-17).
 
-``load_transcripts`` prefers an Iceberg catalog table when the runtime has
-the Iceberg jars (the 100 TB deployment target: snapshot isolation,
-partition pruning on ``bucket(conv_id)``, idempotent resume); it falls back
-to plain parquet/any-path reads locally.  ``transcripts_from_lines`` adapts
+``load_transcripts`` reads a bare name from the session catalog
+(``spark.read.table``), which resolves views and, in a deployment that
+configures one, Iceberg tables (the 100 TB target: snapshot isolation,
+partition pruning on ``bucket(conv_id)``); it reads a path, or a bare
+name the catalog lacks that exists locally, as parquet.
+``transcripts_from_lines`` adapts
 raw log text — e.g. the reference's own fixture files — into the table
 shape, replacing the reference's BufRead line iterator
 (dal/src/sync_reader.rs:39-69).
@@ -20,7 +22,9 @@ shape, replacing the reference's BufRead line iterator
 from __future__ import annotations
 
 import datetime as _dt
+import os
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 
 from ..schemas import TRANSCRIPT_SCHEMA
@@ -33,12 +37,24 @@ TOOLS = ["bash", "editor", "search", "browser", "none"]
 
 
 def load_transcripts(spark: SparkSession, path_or_table: str) -> DataFrame:
-    """Load a transcripts table from an Iceberg table name or a file path."""
+    """Load a transcripts table from a path or a catalog table name.
+
+    A name with a ``/`` is a path.  A bare name is the catalog's table
+    when the catalog has one of that name, even if a local file shares
+    it.  Otherwise a bare name that exists locally (``--input
+    transcripts.parquet`` run from the data directory) is read from local
+    disk, as ``file:`` and its absolute path: the JVM would resolve a
+    relative path against its own working directory and ``fs.defaultFS``.
+    Any other bare name goes to the catalog, which raises its error rather
+    than silently reading the wrong thing."""
     if "/" not in path_or_table:
-        # Iceberg / catalog table name (the 100 TB deployment target);
-        # raises if the catalog/jars are absent rather than silently
-        # reading the wrong thing
-        return spark.read.table(path_or_table)
+        try:
+            in_catalog = spark.catalog.tableExists(path_or_table)
+        except AnalysisException:  # not an identifier, e.g. ``my-data.parquet``
+            in_catalog = False
+        if in_catalog or not os.path.exists(path_or_table):
+            return spark.read.table(path_or_table)
+        path_or_table = "file:" + os.path.abspath(path_or_table)
     return spark.read.schema(TRANSCRIPT_SCHEMA).parquet(path_or_table)
 
 

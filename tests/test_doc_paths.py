@@ -7,7 +7,8 @@ basename that exactly one package file has (COVERAGE writes
 ``parse_expr.py``).  ``{a,b}`` brace lists expand to one path each.
 
 The documented ``spark-submit`` commands pass the driver JVM the same
-options a plain-Python launch gets, ``session.DRIVER_JAVA_OPTS``."""
+options a plain-Python launch gets, ``session.DRIVER_JAVA_OPTS``, and the
+class archive's, which the shell takes from ``session.submit_env()``."""
 
 from __future__ import annotations
 
@@ -61,15 +62,23 @@ def test_backticked_py_paths_exist(doc):
 
 
 SUBMIT_OPTS = re.compile(r'--driver-java-options "([^"]*)"')
+SUBMIT_ENV = (
+    "eval \"$(python3 -c 'from quake3_log_analyser_spark.session import "
+    "submit_env; print(submit_env())')\"\n"
+)
 
 
 @pytest.mark.parametrize("doc", ("README.md", "jobs/run_pipeline.py"))
 def test_submit_commands_pass_the_session_jvm_options(doc):
     """Under spark-submit the driver JVM starts before ``get_spark``, so
-    the documented submit commands carry its options themselves; they
-    must be the string a plain-Python launch gets."""
+    the documented submit commands carry its options themselves: the
+    string a plain-Python launch gets, verbatim, then the class archive's
+    options, and the conf directory the archive maps with."""
     from quake3_log_analyser_spark.session import DRIVER_JAVA_OPTS
 
-    found = SUBMIT_OPTS.findall((ROOT / doc).read_text())
+    text = (ROOT / doc).read_text()
+    found = SUBMIT_OPTS.findall(text)
     assert found, f"{doc} has no --driver-java-options in a submit command"
-    assert set(found) == {DRIVER_JAVA_OPTS}
+    assert set(found) == {f"{DRIVER_JAVA_OPTS} $ARCHIVE_OPTS"}
+    assert SUBMIT_ENV in text, f"{doc} does not eval session.submit_env()"
+    assert text.index(SUBMIT_ENV) < text.index("--driver-java-options")

@@ -6,6 +6,7 @@ keeps the real launch under test)."""
 from __future__ import annotations
 
 import importlib.util
+import re
 import sys
 from pathlib import Path
 
@@ -15,6 +16,7 @@ from quake3_log_analyser_spark.plans.pipeline import (
     full_pipeline_ops,
     summarize_matches,
 )
+from quake3_log_analyser_spark.session import class_archive_state
 from quake3_log_analyser_spark.sources.transcripts import transcripts_from_lines
 
 JOB = Path(__file__).resolve().parents[1] / "jobs" / "run_pipeline.py"
@@ -34,6 +36,16 @@ LINES = {
         " 0:03 ShutdownGame:",
     ],
 }
+
+
+def _closing_fields(printed: str, spark) -> None:
+    """The closing line ends with the set-up time and the state of the
+    session's class archive (``mapped|dumped|none``), as the JVM has it."""
+    (line,) = [ln for ln in printed.splitlines() if "elapsed_s=" in ln]
+    m = re.search(r" setup_s=(\d+\.\d{3}) class_archive=(mapped|dumped|none)$", line)
+    assert m, line
+    assert float(m.group(1)) > 0
+    assert m.group(2) == class_archive_state(spark)
 
 
 def _norm(rows):
@@ -73,6 +85,7 @@ def test_run_pipeline_main_plain_and_resume(spark, tmp_path, monkeypatch, capsys
 
     printed = run("--run-id", "plain")
     assert len([ln for ln in printed.splitlines() if "elapsed_s=" in ln]) == 1
+    _closing_fields(printed, spark)
     assert {p.name for p in (out / "sinks").iterdir() if p.is_dir()} >= {
         "sink=kills", "sink=match_control",
     }
@@ -84,6 +97,7 @@ def test_run_pipeline_main_plain_and_resume(spark, tmp_path, monkeypatch, capsys
     printed = run(*resume, "--stop-on-violations", "--run-id", "r1")
     assert "processed units ['convhash=0', 'convhash=1']" in printed
     assert len([ln for ln in printed.splitlines() if "elapsed_s=" in ln]) == 1
+    _closing_fields(printed, spark)
     want = _norm(
         summarize_matches(t, full_pipeline_ops(), stop_on_violations=True).collect()
     )

@@ -28,6 +28,39 @@ def test_load_transcripts_path_dispatch(spark, tmp_path):
     assert [f.name for f in out.schema.fields][:2] == ["conv_id", "turn_idx"]
 
 
+def test_load_transcripts_reads_a_bare_relative_path(spark, tmp_path, monkeypatch):
+    """``--input transcripts.parquet`` run from the data directory: a bare
+    name the catalog lacks that exists locally is read as parquet, even
+    though the JVM's working directory is elsewhere, and so is one that
+    is not a table identifier at all."""
+    t = transcripts_from_lines(spark, [" 0:00 ShutdownGame:"], "c0")
+    for name in ("transcripts.parquet", "my-transcripts.parquet"):
+        t.write.parquet(str(tmp_path / name))
+    monkeypatch.chdir(tmp_path)
+    for name in ("transcripts.parquet", "my-transcripts.parquet"):
+        out = load_transcripts(spark, name)
+        assert out.count() == 1
+        assert out.first()["conv_id"] == "c0"
+
+
+def test_load_transcripts_prefers_the_catalog_over_a_same_named_dir(
+    spark, tmp_path, monkeypatch
+):
+    """A bare name the catalog knows is its table, even when the working
+    directory holds a parquet directory of that name."""
+    t = transcripts_from_lines(spark, [" 0:00 ShutdownGame:"], "local")
+    t.write.parquet(str(tmp_path / "transcripts_view"))
+    monkeypatch.chdir(tmp_path)
+    transcripts_from_lines(spark, [" 0:00 ShutdownGame:"], "view").createOrReplaceTempView(
+        "transcripts_view"
+    )
+    try:
+        out = load_transcripts(spark, "transcripts_view")
+        assert [r["conv_id"] for r in out.collect()] == ["view"]
+    finally:
+        spark.catalog.dropTempView("transcripts_view")
+
+
 def test_load_transcripts_table_dispatch_uses_catalog(spark):
     """A bare name goes through spark.read.table — resolving registered
     views/tables (and Iceberg catalog tables in deployments with the jars);
