@@ -73,12 +73,14 @@ def parse_transcripts(
     single box.
 
     ``parser`` is one of:
-      * ``arrow``  (default) — pyarrow.compute kernels via mapInArrow; the
-        fastest path and an optimizer barrier (see module docstring)
-      * ``pandas`` — Arrow-batched pandas UDF (same barrier, ~10x slower
+      * ``arrow``  (default) — pyarrow.compute kernels via mapInArrow; an
+        optimizer barrier (see module docstring)
+      * ``pandas`` — Arrow-batched pandas UDF (same barrier, ~3x slower
         string kernels; kept as a semantic cross-check)
       * ``expr``   — pure JVM column expressions (whole-stage codegen);
-        safe only when the full parsed column set is kept downstream
+        safe only for a NARROW consumed field set (``fields`` within
+        EXPR_SAFE_FIELD_BUDGET): downstream filters re-inline the parse
+        expressions of every field they keep
       * ``auto``   — ``choose_parser(fields)``: expr for narrow field
         sets, arrow otherwise
 
@@ -108,7 +110,9 @@ def parse_transcripts(
         else [c for c in EVENT_COLUMN_NAMES if c == "event_type" or c in fields]
     )
     if parser == "expr":
-        return parse_expr_df(df.select(*cols)).select(*cols, *out_fields)
+        return parse_expr_df(df.selectExpr(*(f"`{c}`" for c in cols))).selectExpr(
+            *(f"`{c}`" for c in [*cols, *out_fields])
+        )
     if parser == "pandas":
         ev = make_parse_pandas_udf()(df["text"])
         return df.select(*cols, ev.alias("_ev")).select(
@@ -148,24 +152,18 @@ def fail_on_feed_errors(parsed: DataFrame) -> DataFrame:
     expression into the pushed filter — so evaluating the filter on an
     error row fires the raise wherever the filter lands in the plan.
     """
-    err = F.col("parse_error_kind").isNotNull()
-
-    def _boom():
-        return F.raise_error(
-            F.format_string(
-                "Failed to process event #%d: `LogParsingError`: %s",
-                F.col("turn_idx"),
-                F.col("parse_error"),
-            )
-        )
-
+    boom = (
+        "raise_error(format_string("
+        "'Failed to process event #%d: `LogParsingError`: %s', turn_idx, parse_error))"
+    )
+    ok = "parse_error_kind IS NULL"
     return parsed.withColumns(
         {
-            "turn_idx": F.when(~err, F.col("turn_idx")).otherwise(
-                _boom().cast("int")
+            "turn_idx": F.expr(
+                f"CASE WHEN {ok} THEN turn_idx ELSE CAST({boom} AS INT) END"
             ),
-            "event_type": F.when(~err, F.col("event_type")).otherwise(
-                _boom().cast("string")
+            "event_type": F.expr(
+                f"CASE WHEN {ok} THEN event_type ELSE CAST({boom} AS STRING) END"
             ),
         }
     )

@@ -125,16 +125,21 @@ def _java() -> str | None:
     return os.path.realpath(java) if java and os.path.isfile(java) else None
 
 
-def archive_key(java: str, spark_home: str, java_opts: str) -> str:
-    """One archive per JDK build, set of Spark jars and option string, so
-    an upgrade dumps a fresh archive instead of running unshared.  JDK 17
-    refuses an archive when a classpath jar's size or mtime differs, so
-    both are in the key: a re-copied Spark dumps afresh too."""
+def archive_key(java: str, spark_home: str, java_opts: str, conf_dir: str) -> str:
+    """One archive per JDK build, set of Spark jars, option string and
+    conf directory, so an upgrade dumps a fresh archive instead of
+    running unshared.  JDK 17 refuses an archive when a classpath jar's
+    size or mtime differs, so both are in the key: a re-copied Spark
+    dumps afresh too.  It also refuses one dumped with another classpath
+    ("APP classpath mismatch"), and the launch's conf directory comes
+    first on it: an archive copied or moved with its local directory
+    would never map, so the directory's real path is in the key."""
     h = hashlib.sha256()
     jars = Path(spark_home, "jars")
     for f in (Path(java), *(sorted(jars.glob("*.jar")) if jars.is_dir() else ())):
         st = f.stat()
         h.update(f"{f} {st.st_size} {st.st_mtime_ns}\n".encode())
+    h.update(f"{os.path.realpath(conf_dir)}\n".encode())
     h.update(java_opts.encode())
     return h.hexdigest()[:16]
 
@@ -196,7 +201,10 @@ def class_archive() -> ClassArchive | None:
     if _holds_files(empty):
         return None
     key = archive_key(
-        java, _spark_home(), os.environ.get("SPARK_GRAFT_JAVA_OPTS", DRIVER_JAVA_OPTS)
+        java,
+        _spark_home(),
+        os.environ.get("SPARK_GRAFT_JAVA_OPTS", DRIVER_JAVA_OPTS),
+        empty,
     )
     complete = []
     for f in Path(base).iterdir():

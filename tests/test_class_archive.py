@@ -40,9 +40,11 @@ def _install(root: Path) -> tuple[Path, Path]:
 
 def test_archive_key_changes_with_jdk_jars_and_options(tmp_path):
     java, home = _install(tmp_path)
+    conf = tmp_path / "local" / "class-archive" / "conf"
+    conf.mkdir(parents=True)
 
-    def key(opts=session.DRIVER_JAVA_OPTS):
-        return session.archive_key(str(java), str(home), opts)
+    def key(opts=session.DRIVER_JAVA_OPTS, conf_dir=conf):
+        return session.archive_key(str(java), str(home), opts, str(conf_dir))
 
     keys = [key(), key()]
     assert keys[0] == keys[1]
@@ -57,6 +59,14 @@ def test_archive_key_changes_with_jdk_jars_and_options(tmp_path):
     os.utime(home / "jars" / "iceberg.jar", ns=(10**9, 10**9))  # re-copied
     keys.append(key())
     keys.append(key(session.DRIVER_JAVA_OPTS + " -Xss4m"))
+    # the JVM refuses an archive whose classpath, led by the conf dir,
+    # differs: a local dir copied elsewhere must not share the key
+    moved = tmp_path / "copy" / "class-archive" / "conf"
+    shutil.copytree(conf.parent, moved.parent)
+    keys.append(key(conf_dir=moved))
+    # the real path counts, not the spelling
+    (tmp_path / "link").symlink_to(tmp_path / "local")
+    assert key(conf_dir=tmp_path / "link" / "class-archive" / "conf") == key()
     assert len(set(keys)) == len(keys) - 1
 
 
@@ -267,11 +277,18 @@ def test_archive_the_jvm_refuses_is_deleted_and_dumped_afresh(job, tmp_path):
     """An archive dumped with another conf directory on the classpath is
     passed to the JVM, which refuses it: ``none``, with the JVM's one
     warning in the log, and the same summary.  The refused archive is
-    deleted, so the next run dumps one the JVM accepts."""
+    deleted, so the next run dumps one the JVM accepts.
+
+    The key covers the conf directory's path, so a copied archive reaches
+    the JVM only under the new directory's key; that is how an archive
+    the key misses (a JDK or classpath change it does not cover) looks."""
     jsa = _archive(job)
     other = tmp_path / "local"
-    copied = other / session.ARCHIVE_DIR / jsa.name
-    copied.parent.mkdir(parents=True)
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setenv("SPARK_LOCAL_DIRS", str(other))
+        key = Path(session.class_archive().dump_to).name.split(".")[0]
+    assert key != job.key
+    copied = other / session.ARCHIVE_DIR / f"{key}-{jsa.stat().st_size}.jsa"
     shutil.copy(jsa, copied)
     state, rows, out = job(other)
     assert (state, rows) == ("none", job.want)

@@ -191,3 +191,103 @@ def test_parsers_agree_on_reference_fixtures(spark):
     assert not mismatches, f"{len(mismatches)} mismatches, first 5: {mismatches[:5]}"
     null_row = expr_out[len(lines) - 1]
     assert null_row["parse_error_kind"] == "EmptyLine"
+
+
+# Lines where the expr parser's string functions (ltrim, instr/substr,
+# substring_index, the digit tests in front of try_cast) could read a line
+# differently from the regexes they replaced.  The fuzz suite is random and
+# may never produce them; expr, arrow and pandas must agree on every
+# event column, and on the values pinned here.
+EDGE_CASES = [
+    # only ASCII spaces are stripped: a leading tab or no-break space is
+    # part of the time token, so the event name is "0"
+    ("tab", "\t 0:01 Kill: 1 2 3: A killed B by MOD_X",
+     {"parse_error_kind": "UnknownEventName"}),
+    ("nbsp", "\u00a0 0:01 Kill: 1 2 3: A killed B by MOD_X",
+     {"parse_error_kind": "UnknownEventName"}),
+    ("nbsp_in_time", " \u00a00:01 Kill: 1 2 3: A killed B by MOD_X",
+     {"event_type": "Kill", "killer_name": "A", "victim_name": "B"}),
+    # split_once(" killed ") then rsplit_once(" by ")
+    ("two_killed_two_by", " 0:01 Kill: 1 2 3: A killed B killed C by D by MOD_X",
+     {"event_type": "Kill", "killer_name": "A", "victim_name": "B killed C by D",
+      "reason_name": "MOD_X"}),
+    ("killed_at_start", " 0:01 Kill: 1 2 3:  killed B by MOD_X",
+     {"event_type": "Kill", "killer_name": "", "victim_name": "B"}),
+    ("by_overlap", " 0:01 Kill: 1 2 3: A killed B by by MOD_X",
+     {"event_type": "Kill", "victim_name": "B by", "reason_name": "MOD_X"}),
+    # Java's `$` matched before a final line terminator, RE2 and Python
+    # do not: the reason keeps its '\r', an id with one is no number
+    ("kill_cr", " 0:01 Kill: 1 2 3: A killed B by MOD_X\r",
+     {"event_type": "Kill", "victim_name": "B", "reason_name": "MOD_X\r"}),
+    ("kill_id_cr", " 0:01 Kill: 1\r 2 3: A killed B by MOD_X",
+     {"parse_error_kind": "UnknownDataFormat"}),
+    ("connect_cr", " 0:01 ClientConnect: 7\r",
+     {"parse_error_kind": "UnparseableNumber"}),
+    ("init_cr", " 0:00 InitGame: \\fraglimit\\20\r",
+     {"event_type": "InitGame", "frag_limit": None}),
+    # `.` matches no newline: a victim holding one has no " by " match
+    ("victim_nl", " 0:01 Kill: 1 2 3: A killed B\nC by MOD_X",
+     {"parse_error_kind": "UnknownDataFormat"}),
+    ("killer_nl", " 0:01 Kill: 1 2 3: A\nZ killed B by MOD_X",
+     {"event_type": "Kill", "killer_name": "A\nZ", "victim_name": "B"}),
+    ("kill_id_arabic_digit", " 0:01 Kill: ١ 2 3: A killed B by MOD_X",
+     {"parse_error_kind": "UnknownDataFormat"}),
+    ("kill_id_minus", " 0:01 Kill: -0 2 3: A killed B by MOD_X",
+     {"parse_error_kind": "UnknownDataFormat"}),
+    ("kill_id_plus", " 0:01 Kill: +7 2 3: A killed B by MOD_X",
+     {"event_type": "Kill", "killer_id": 7}),
+    # score: the client values are the third ": "-separated item
+    ("score_extra_colon", " 0:01 score: 7  ping: 1  client: 2 Na: me",
+     {"event_type": "Score", "frags": 7, "client_id": 2, "name": "Na"}),
+    ("score_minus_plus", " 0:01 score: -7  ping: 1  client: +2 X",
+     {"event_type": "Score", "frags": -7, "client_id": 2}),
+    ("red_no_blue_value", " 0:01 red:8  blue:",
+     {"parse_error_kind": "UnparseableNumber"}),
+    ("red_trailing_space", " 0:01 red:8 ", {"parse_error_kind": "UnknownDataFormat"}),
+    ("userinfo_no_space", " 0:01 ClientUserinfoChanged: 2",
+     {"parse_error_kind": "UnknownDataFormat"}),
+    ("userinfo_name_later", " 0:01 ClientUserinfoChanged: 2 t\\0\\n\\Zoë",
+     {"event_type": "ClientUserinfoChanged", "name": "Zoë"}),
+    ("userinfo_n_in_value", " 0:01 ClientUserinfoChanged: 2 t\\an\\",
+     {"parse_error_kind": "AbsentKey"}),
+    ("non_ascii_kill", " 0:01 Kill: 1 2 3: Jöhn killed 世界 by MOD_Ü",
+     {"event_type": "Kill", "killer_name": "Jöhn", "victim_name": "世界",
+      "reason_name": "MOD_Ü"}),
+    ("non_ascii_score", " 0:01 score: 3  ping: 1  client: 4 Ñandú",
+     {"event_type": "Score", "name": "Ñandú"}),
+]
+
+
+class TestEdgeCases:
+    @pytest.fixture(scope="class")
+    def parsed(self, spark):
+        from quake3_log_analyser_spark.operators.parse import parse_transcripts
+
+        lines = [line for _, line, _ in EDGE_CASES]
+        df = spark.createDataFrame(list(enumerate(lines)), "idx int, text string")
+        out = {}
+        for parser in ("expr", "arrow"):
+            rows = parse_transcripts(df, parser=parser).orderBy("idx").collect()
+            out[parser] = [r.asDict() for r in rows]
+        pdf = parse_lines_pd(pd.Series(lines))
+        out["pandas"] = [
+            {c: (None if pd.isna(v) else getattr(v, "item", lambda: v)())
+             for c, v in pdf.iloc[i].items()}
+            for i in range(len(lines))
+        ]
+        return out
+
+    @pytest.mark.parametrize(
+        "i,line,expected", [(i, c[1], c[2]) for i, c in enumerate(EDGE_CASES)],
+        ids=[c[0] for c in EDGE_CASES],
+    )
+    def test_parsers_agree(self, parsed, i, line, expected):
+        e, a, p = (parsed[k][i] for k in ("expr", "arrow", "pandas"))
+        diff = {
+            c: {"expr": e[c], "arrow": a[c], "pandas": p[c]}
+            for c in EVENT_COLUMN_NAMES
+            if not (e[c] == a[c] == p[c])
+        }
+        assert not diff, f"line {line!r}: {diff}"
+        for k, v in expected.items():
+            assert e[k] == v, f"line {line!r}: {k} = {e[k]!r}, want {v!r}"
