@@ -13,235 +13,216 @@ Semantics ported (not code) from the reference's
    UnrecognizedLineFormat; data is lstripped of spaces
 5. dispatch on event_name with per-event field extraction
 
-Everything is JVM-side (string functions, a few regexes) so the stage
-fuses into WholeStageCodegen — the Spark analogue of the reference's
-"str::split beats regex 3200x" decision (benches/parsing_strategies.rs:9-12):
-stay vectorized/compiled, never row-at-a-time Python.  A semantically
-identical Arrow/pandas implementation lives in ``parse_pandas.py``; both
-are cross-checked in tests.
+Everything is JVM-side (regexp/split/substr) so the stage fuses into
+WholeStageCodegen — the Spark analogue of the reference's "str::split beats
+regex 3200x" decision (benches/parsing_strategies.rs:9-12): stay
+vectorized/compiled, never row-at-a-time Python.  A semantically identical
+Arrow/pandas implementation lives in ``parse_pandas.py``; both are
+cross-checked in tests.
 
-STRUCTURE NOTE: the parse is written as SQL expression text, one
-``selectExpr`` per projection (``_project``).  Built from Column objects,
-the same plan took 4.2-5.2k py4j calls on the driver, most of a warm
-kills rep's 1.5-2.1 s plan build; as text it takes one call per
-expression.  The projections themselves are deliberate:
+STRUCTURE NOTE: the parse is deliberately staged through intermediate
+projections (``_stripped`` -> ``_rest`` -> ``_event_name``/``_data`` ->
+fields).  A single monolithic struct expression exceeds Janino's 64 KB
+method limit and silently drops the whole stage out of codegen; staged
+small expressions compile, and Catalyst keeps the stages separate because
+collapsing them would duplicate non-cheap expressions.  ``_parse_steps``
+builds the projections' Column trees once per driver JVM
+(functions/column_cache.py), and ``parse_expr_df`` applies them: a warm
+build makes a py4j call per projected column, not per expression node.
 
-* Staged projections (``_stripped`` -> ``_rest`` -> ``_event_name``/
-  ``_data`` -> tokens -> numbers -> fields).  A single monolithic struct
-  expression exceeds Janino's 64 KB method limit and silently drops the
-  whole stage out of codegen; staged small expressions compile, and
-  Catalyst keeps the stages separate because collapsing them would
-  duplicate non-cheap expressions.
-* Per-event guards.  Each token is computed only for rows of the event
-  that reads it, and every field is read under its own event name, so a
-  guard changes no output.  A JFR profile of a warm kills rep without
-  them put 65% of the executor samples in the parse stage, 36% of that in
-  ``java.util.regex`` and 20% in copies between ``UTF8String`` and
-  ``String``, because every row, whatever its event, paid for:
+Every row evaluates every token, whatever its event.  Guarding each
+token with its event name and replacing the regex gates with string
+functions was tried, in a SQL-text form of this parse: a warm kills
+rep's action time (``span.action_s``) stayed within its run-to-run
+spread at 250k turns (4-core host), and the stage's generated code grew
+22%, which the first run compiles, so the regexes stayed.
 
-  - ``_kparts`` (Kill): ``split(_data, ' ', 4)`` decodes the data to a
-    Java ``String`` and copies four parts back;
-  - ``_rparts`` (red, score): the same split into two parts;
-  - ``_blue_items`` (red) and ``_s_cv`` (score): splits of the second
-    part, ``': '`` compiling a ``Pattern`` per row;
-  - ``_ui_sp`` (ClientUserinfoChanged): its two substrings and the
-    ``n`` key search behind them;
-  - ``_plain_raw`` (ClientConnect/Begin/Disconnect), ``_red_raw`` and
-    ``_sfrags_raw``: an RLIKE and a cast over the row's data, and the
-    casts of ``_blue_raw``/``_scid_raw``/``_ui_raw`` on the tokens above.
+Numeric fields mirror Rust's ``str::parse::<u32>/<i32>`` exactly:
+full-string match of ``^\\+?[0-9]+\\z`` / ``^[+-]?[0-9]+\\z`` (no
+whitespace tolerance, '+' sign allowed), anything else -> None/null
+(deserializer_logs.rs:163-169).  The anchor is ``\\z``, not ``$``: Java's
+``$`` also matches before a final line terminator, so ``"7\\r"`` would
+read as 7 where the Arrow and pandas parsers give null.
 
-* No per-row regex on the Kill path.  ``split(x, ' killed ', 2)`` compiled
-  a ``Pattern`` on every row (``String.split`` does for any delimiter
-  longer than one character); ``instr``/``substr`` give the same two
-  parts.  ``_num`` replaces the ``^\\+?[0-9]+$`` gate with a test of the
-  first and the last character in front of ``try_cast``.
-  ``substring_index`` replaces the ``^(.*) by (.*)$`` match: the greedy
-  first group ends at the LAST " by " (Rust's ``rsplit_once``), and
-  ``.`` does not match a newline, so a description holding one has no
-  match.  Leading spaces go with ``ltrim``, which strips only ASCII
-  spaces, as ``'^ +'`` did.
-
-Numeric fields mirror Rust's ``str::parse::<u32>/<i32>`` exactly: an
-optional sign ('+', or '+'/'-' for i32) and ASCII digits, nothing else —
-no whitespace, and no line terminator at the end (Java's ``$`` let
-``"7\\r"`` through where RE2 and Rust do not) -> None/null otherwise
-(deserializer_logs.rs:163-169).  Ids are int32 (the reference uses u32;
-values above 2^31-1 are treated as unparseable — nothing in a real log
-comes close).
+Ids are int32 (the reference uses u32; values above 2^31-1 are treated
+as unparseable — nothing in a real log comes close).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
+from pyspark.sql import functions as F
 
 from ..schemas import EVENT_COLUMN_NAMES
+from .column_cache import per_jvm, with_columns
 
 _INT32_MAX = 2147483647
+
+
 _U32_MAX = 4294967295
-_PLAIN_ID_EVENTS = "('ClientConnect', 'ClientBegin', 'ClientDisconnect')"
-_DIGITS = "0123456789"
 
 
-def _project(df: DataFrame, exprs: dict[str, str]) -> DataFrame:
-    """One projection: every column of ``df`` plus ``exprs`` (name -> SQL)."""
-    return df.selectExpr("*", *(f"{sql} AS {name}" for name, sql in exprs.items()))
+def _u32_raw(c: Column) -> Column:
+    """Rust ``str::parse::<u32>()`` phase 1: full-match digits -> long.
+
+    The u32 range guard (<= 4294967295) is applied in a LATER projection on
+    the materialized column — keeping each expression small enough that the
+    whole parse stays inside whole-stage codegen's method-size limit.
+    """
+    return F.when(c.rlike(r"^\+?[0-9]+\z"), c.try_cast("long"))
 
 
-def _num(tok: str, signs: str = "+") -> str:
-    """Rust ``str::parse`` phase 1: ``tok`` -> long when it is one optional
-    sign out of ``signs`` followed by ASCII digits, else NULL.
-
-    ``try_cast`` alone also strips whitespace and control characters at
-    both ends and takes a '-' sign, so it runs only when the first and the
-    last character are each a digit or a sign out of ``signs``.  Then no
-    end is stripped, and the cast succeeds exactly when the first
-    character is the only sign and every other one a digit.  The two
-    tests are one 11- or 12-element ``IN`` each, which Catalyst turns into
-    a hash-set lookup: a ``BETWEEN`` would be pulled out of its ``CASE``
-    into the projection and run on every row, and ten ``=`` tests per
-    character made the parse stage's generated code 63% larger than the
-    regex form (the set form: 22% larger).  The range guard
-    (``_u32_guard``) is applied in a LATER projection on the materialized
-    column, keeping each expression small enough for codegen's
-    method-size limit."""
-    chars = ", ".join(f"'{c}'" for c in _DIGITS + signs)
-    return (
-        f"CASE WHEN substr({tok}, 1, 1) IN ({chars})"
-        f" AND substr({tok}, -1) IN ({chars})"
-        f" THEN try_cast({tok} AS BIGINT) END"
-    )
+def _i32_raw(c: Column) -> Column:
+    """Rust ``str::parse::<i32>()`` phase 1: full-match signed int -> long."""
+    return F.when(c.rlike(r"^[+-]?[0-9]+\z"), c.try_cast("long"))
 
 
-def _u32_guard(name: str) -> str:
-    return f"CASE WHEN {name} BETWEEN 0 AND {_U32_MAX} THEN {name} END"
+def _u32_guard(name: str) -> Column:
+    c = F.col(name)
+    return F.when(c.between(0, _U32_MAX), c)
 
 
-def _i32_guard(name: str) -> str:
-    lo = -_INT32_MAX - 1
-    return f"CASE WHEN {name} BETWEEN {lo} AND {_INT32_MAX} THEN {name} END"
+def _i32_guard(name: str) -> Column:
+    c = F.col(name)
+    return F.when(c.between(-_INT32_MAX - 1, _INT32_MAX), c)
 
 
-def _kv_get(data: str, key: str) -> str:
+def _kv_get(data: Column, key: str) -> Column:
     """Last-wins lookup in the backslash k/v blob (deserializer_logs.rs:157-161).
 
     The reference zips the split items with themselves shifted by one and
     builds a BTreeMap (later duplicates overwrite), so the value is the item
-    following the LAST item equal to ``key``; the greedy ``(?:.*\\\\)?``
-    prefix reproduces last-wins.  Raw SQL literals (``r'...'``) pass the
-    backslashes through as written.
+    following the LAST item equal to ``key``; the greedy ``(?:.*\\)?`` prefix
+    reproduces last-wins.
     """
-    return rf"regexp_extract({data}, r'^(?:.*\\)?{key}\\([^\\]*)', 1)"
+    pat = r"^(?:.*\\)?" + key + r"\\([^\\]*)"
+    return F.regexp_extract(data, pat, 1)
+
+
+def _kv_has(data: Column, key: str) -> Column:
+    return data.rlike(r"(^|\\)" + key + r"\\")
+
+
+_TMP = [
+    "_stripped", "_sp", "_rest", "_co", "_event_name", "_data",
+    "_kind0", "_kparts", "_kdesc", "_kd0", "_kd_rest",
+    "_rparts", "_blue_items", "_s_cv", "_scv",
+    "_ui_sp", "_ui_numeric", "_ui_kv",
+    "_plain_id", "_ui_id", "_kid", "_vid", "_rid", "_k2_ok",
+    "_red_v", "_blue_v", "_s_frags", "_s_cid",
+    "_plain_raw", "_ui_raw", "_kid_raw", "_vid_raw", "_rid_raw",
+    "_red_raw", "_blue_raw", "_sfrags_raw", "_scid_raw",
+    "_fl_raw", "_cl_raw", "_tl_raw",
+    "_kill_ok", "_red_fmt_ok", "_score_fmt_ok", "_ui_has_name",
+]
+
+
+# Kill description split at the LAST " by " (the greedy first group), as
+# the Arrow parser's RE2 pattern ``^(.*) by (.*)$`` does.  ``(?d)`` makes
+# ``\n`` the only character ``.`` refuses, as in RE2 (Java's ``.`` also
+# refuses ``\r``, U+0085, U+2028 and U+2029), and ``\z`` is the end of
+# the string (Java's ``$`` also matches before a final ``\r``).
+_BY_RE = r"(?d)^(.*) by (.*)\z"
 
 
 def parse_expr_df(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Append the typed event columns (EVENT_COLUMN_NAMES) to ``df``."""
-    keep = [f"`{c}`" for c in df.columns] + EVENT_COLUMN_NAMES
+    return with_columns(df, _parse_steps(text_col)).drop(*_TMP)
+
+
+@per_jvm
+def _parse_steps(text_col: str) -> list[dict[str, Column]]:
+    """The parse's projections, in order: the named columns of each."""
+    steps = []
     # NULL text behaves like the empty string (EmptyLine), matching the
     # arrow/pandas parsers — TRANSCRIPT_SCHEMA allows nullable text
-    text = f"coalesce(`{text_col}`, '')"
+    text = F.coalesce(F.col(text_col), F.lit(""))
 
     # stage 1: line splitting -------------------------------------------------
-    df = _project(df, {"_stripped": f"ltrim({text})"})
-    df = _project(df, {"_sp": "instr(_stripped, ' ')"})
-    df = _project(df, {"_rest": "substr(_stripped, _sp + 1)"})
-    df = _project(df, {"_co": "instr(_rest, ':')"})
-    df = _project(
-        df,
+    steps.append({"_stripped": F.regexp_replace(text, r"^ +", "")})
+    steps.append({"_sp": F.instr("_stripped", " ")})
+    steps.append({"_rest": F.substr(F.col("_stripped"), F.col("_sp") + 1)})
+    steps.append({"_co": F.instr("_rest", ":")})
+    steps.append(
         {
             # line-shape classification, evaluated in reference order
-            "_kind0": "CASE WHEN length(_stripped) = 0 THEN 'EmptyLine'"
-            " WHEN _sp = 0 THEN 'UnrecognizedLineFormat'"
-            " WHEN startswith(_rest, '-') THEN 'Comment'"
-            " WHEN _co = 0 THEN 'UnrecognizedLineFormat' END",
-            "_event_name": "substr(_rest, 1, _co - 1)",
-            "_data": "ltrim(substr(_rest, _co + 1))",
-        },
+            "_kind0": F.when(F.length("_stripped") == 0, "EmptyLine")
+            .when(F.col("_sp") == 0, "UnrecognizedLineFormat")
+            .when(F.col("_rest").startswith("-"), "Comment")
+            .when(F.col("_co") == 0, "UnrecognizedLineFormat"),
+            "_event_name": F.substr(F.col("_rest"), F.lit(1), F.col("_co") - 1),
+            "_data": F.regexp_replace(
+                F.substr(F.col("_rest"), F.col("_co") + 1), r"^ +", ""
+            ),
+        }
     )
 
-    # stage 2: per-event tokenization, each only for rows of its event ------
-    df = _project(
-        df,
+    # stage 2: per-event tokenization (each used by several fields) -----------
+    data = F.col("_data")
+    steps.append(
         {
-            # Kill: Rust splitn(4, " ")
-            "_kparts": "CASE WHEN _event_name = 'Kill' THEN split(_data, ' ', 4) END",
-            # red / score first split
-            "_rparts": "CASE WHEN _event_name IN ('red', 'score')"
-            " THEN split(_data, ' ', 2) END",
-            "_ui_sp": "CASE WHEN _event_name = 'ClientUserinfoChanged'"
-            " THEN instr(_data, ' ') END",
-        },
+            "_kparts": F.split(data, " ", 4),  # Kill: Rust splitn(4, " ")
+            "_rparts": F.split(data, " ", 2),  # red / score first split
+            "_ui_sp": F.instr(data, " "),      # ClientUserinfoChanged
+        }
     )
-    df = _project(
-        df,
+    steps.append(
         {
-            "_kdesc": "get(_kparts, 3)",
-            "_kkill": "instr(get(_kparts, 3), ' killed ')",
-            "_ui_numeric": "substr(_data, 1, _ui_sp - 1)",
-            "_ui_kv": "substr(_data, _ui_sp + 1)",
-            "_blue_items": "CASE WHEN _event_name = 'red'"
-            " THEN split(get(_rparts, 1), ':') END",
+            "_kdesc": F.get("_kparts", 3),
+            "_ui_numeric": F.substr(data, F.lit(1), F.col("_ui_sp") - 1),
+            "_ui_kv": F.substr(data, F.col("_ui_sp") + 1),
+            "_blue_items": F.split(F.get("_rparts", 1), ":"),
+            "_s_cv": F.get(F.split(F.get("_rparts", 1), ": "), 2),
+        }
+    )
+    steps.append(
+        {
+            # Kill text description: split_once(" killed ") then
+            # rsplit_once(" by ") — greedy first group = LAST " by " (rs:111-113)
+            "_kd0": F.get(F.split(F.col("_kdesc"), " killed ", 2), 0),
+            "_kd_rest": F.get(F.split(F.col("_kdesc"), " killed ", 2), 1),
             # score: client values = remainder.split(": ").skip(2).next() (rs:143)
-            "_s_cv": "CASE WHEN _event_name = 'score'"
-            " THEN get(split(get(_rparts, 1), ': '), 2) END",
-        },
+            "_scv": F.split(F.col("_s_cv"), " ", 2),
+        }
     )
-    df = _project(
-        df,
-        {
-            # Kill text description: split_once(" killed ") (rs:111)
-            "_kd0": "CASE WHEN _kkill > 0 THEN substr(_kdesc, 1, _kkill - 1)"
-            " ELSE _kdesc END",
-            "_kd_rest": "CASE WHEN _kkill > 0 THEN substr(_kdesc, _kkill + 8) END",
-            "_scv": "split(_s_cv, ' ', 2)",
-        },
-    )
+
+    en = F.col("_event_name")
+    kind0 = F.col("_kind0")
 
     # stage 3: parsed numeric tokens + validity flags, each materialized as
     # a column ONCE so later expressions are cheap column references (a
     # monolithic expression here multiplies every parse expansion and falls
     # out of codegen — see the structure note in the module docstring)
-    df = _project(
-        df,
+    k2 = F.get("_kparts", 2)
+    steps.append(
         {
-            # the reason id: the third token without its trailing ':'.  The
-            # casts below read it three times, so Catalyst keeps this
-            # projection and theirs apart instead of merging the two.
-            "_rtok": "CASE WHEN endswith(get(_kparts, 2), ':')"
-            " THEN substr(get(_kparts, 2), 1, length(get(_kparts, 2)) - 1) END",
-            # the k/v blob has an "n" key: (^|\\)n\\
-            "_ui_has_name": r"coalesce(startswith(_ui_kv, r'n\')"
-            r" OR instr(_ui_kv, r'\n\') > 0, false)",
-            "_red_fmt_ok": "coalesce(size(_rparts) = 2, false)"
-            " AND coalesce(size(_blue_items) >= 2, false)",
-            "_score_fmt_ok": "coalesce(size(_rparts) = 2, false)"
-            " AND _s_cv IS NOT NULL AND coalesce(size(_scv) = 2, false)",
-            # rsplit_once(" by ") (rs:112-113): the text after the LAST " by "
-            "_reason": "CASE WHEN instr(_kd_rest, ' by ') > 0"
-            " AND instr(_kd_rest, char(10)) = 0"
-            " THEN substring_index(_kd_rest, ' by ', -1) END",
-        },
+            "_k2_ok": F.coalesce(k2.endswith(":"), F.lit(False)),
+            "_ui_has_name": F.coalesce(_kv_has(F.col("_ui_kv"), "n"), F.lit(False)),
+            "_red_fmt_ok": F.coalesce(F.size("_rparts") == 2, F.lit(False))
+            & F.coalesce(F.size("_blue_items") >= 2, F.lit(False)),
+            "_score_fmt_ok": F.coalesce(F.size("_rparts") == 2, F.lit(False))
+            & F.col("_s_cv").isNotNull()
+            & F.coalesce(F.size("_scv") == 2, F.lit(False)),
+        }
     )
-    # phase 1: gated long casts (one expression per token)
-    df = _project(
-        df,
+    # phase 1: regex-gated long casts (one expression per token)
+    steps.append(
         {
-            "_plain_raw": f"CASE WHEN _event_name IN {_PLAIN_ID_EVENTS}"
-            f" THEN {_num('_data')} END",
-            "_ui_raw": _num("_ui_numeric"),
-            "_kid_raw": _num("get(_kparts, 0)"),
-            "_vid_raw": _num("get(_kparts, 1)"),
-            "_rid_raw": _num("_rtok"),
-            "_red_raw": f"CASE WHEN _event_name = 'red'"
-            f" THEN {_num('get(_rparts, 0)')} END",
-            "_blue_raw": _num("get(_blue_items, 1)"),
-            "_sfrags_raw": f"CASE WHEN _event_name = 'score'"
-            f" THEN {_num('get(_rparts, 0)', '+-')} END",
-            "_scid_raw": _num("get(_scv, 0)"),
-        },
+            "_plain_raw": _u32_raw(data),
+            "_ui_raw": _u32_raw(F.col("_ui_numeric")),
+            "_kid_raw": _u32_raw(F.get("_kparts", 0)),
+            "_vid_raw": _u32_raw(F.get("_kparts", 1)),
+            "_rid_raw": _u32_raw(
+                F.when(F.col("_k2_ok"), F.substr(k2, F.lit(1), F.length(k2) - 1))
+            ),
+            "_red_raw": _u32_raw(F.get("_rparts", 0)),
+            "_blue_raw": _u32_raw(F.get("_blue_items", 1)),
+            "_sfrags_raw": _i32_raw(F.get("_rparts", 0)),
+            "_scid_raw": _u32_raw(F.get("_scv", 0)),
+        }
     )
     # phase 2: range guards over materialized columns (cheap refs only)
-    df = _project(
-        df,
+    steps.append(
         {
             "_plain_id": _u32_guard("_plain_raw"),
             "_ui_id": _u32_guard("_ui_raw"),
@@ -252,122 +233,175 @@ def parse_expr_df(df: DataFrame, text_col: str = "text") -> DataFrame:
             "_blue_v": _u32_guard("_blue_raw"),
             "_s_frags": _i32_guard("_sfrags_raw"),
             "_s_cid": _u32_guard("_scid_raw"),
-        },
+        }
     )
-    # a reason implies the 4-way split and the " killed " split; a reason
-    # id implies the third token ends with ':'
-    df = _project(
-        df,
+    steps.append(
         {
-            "_kill_ok": "_kid IS NOT NULL AND _vid IS NOT NULL"
-            " AND _rid IS NOT NULL AND _reason IS NOT NULL",
-        },
+            "_kill_ok": F.coalesce(F.size("_kparts") == 4, F.lit(False))
+            & F.col("_kid").isNotNull()
+            & F.col("_vid").isNotNull()
+            & F.col("_k2_ok")
+            & F.col("_rid").isNotNull()
+            & F.coalesce(F.col("_kdesc").contains(" killed "), F.lit(False))
+            & F.coalesce(F.col("_kd_rest").rlike(_BY_RE), F.lit(False)),
+        }
     )
 
-    df = _project(
-        df,
-        {
-            "event_type": "CASE WHEN _kind0 = 'Comment' THEN 'Comment'"
-            " WHEN _kind0 IS NOT NULL THEN CAST(NULL AS STRING)"
-            " WHEN _event_name = 'InitGame' THEN 'InitGame'"
-            f" WHEN _event_name IN {_PLAIN_ID_EVENTS} AND _plain_id IS NOT NULL"
-            " THEN _event_name"
-            " WHEN _event_name = 'ClientUserinfoChanged' AND _ui_sp > 0"
-            " AND _ui_id IS NOT NULL AND _ui_has_name THEN 'ClientUserinfoChanged'"
-            " WHEN _event_name = 'Item' THEN 'Item'"
-            " WHEN _event_name = 'say' THEN 'Say'"
-            " WHEN _event_name = 'Kill' AND _kill_ok THEN 'Kill'"
-            " WHEN _event_name = 'Exit' THEN 'Exit'"
-            " WHEN _event_name = 'red' AND _red_fmt_ok AND _red_v IS NOT NULL"
-            " AND _blue_v IS NOT NULL THEN 'CaptureTheFlagResults'"
-            " WHEN _event_name = 'score' AND _score_fmt_ok AND _s_frags IS NOT NULL"
-            " AND _s_cid IS NOT NULL THEN 'Score'"
-            " WHEN _event_name = 'ShutdownGame' THEN 'ShutdownGame' END",
-        },
+    killer_id = F.col("_kid")
+    victim_id = F.col("_vid")
+    reason_id = F.col("_rid")
+    victim_name = F.regexp_extract("_kd_rest", _BY_RE, 1)
+    reason_name = F.regexp_extract("_kd_rest", _BY_RE, 2)
+    kill_ok = F.col("_kill_ok")
+    plain_id = F.col("_plain_id")
+    ui_id = F.col("_ui_id")
+    ui_has_name = F.col("_ui_has_name")
+    red_val = F.col("_red_v")
+    blue_val = F.col("_blue_v")
+    red_fmt_ok = F.col("_red_fmt_ok")
+    s_frags = F.col("_s_frags")
+    s_client_id = F.col("_s_cid")
+    s_name = F.get("_scv", 1)
+    score_fmt_ok = F.col("_score_fmt_ok")
+
+    is_plainid_event = en.isin("ClientConnect", "ClientBegin", "ClientDisconnect")
+
+    event_type = (
+        F.when(kind0 == "Comment", "Comment")
+        .when(kind0.isNotNull(), F.lit(None).cast("string"))
+        .when(en == "InitGame", "InitGame")
+        .when(is_plainid_event & plain_id.isNotNull(), en)
+        .when(
+            (en == "ClientUserinfoChanged")
+            & (F.col("_ui_sp") > 0)
+            & ui_id.isNotNull()
+            & ui_has_name,
+            "ClientUserinfoChanged",
+        )
+        .when(en == "Item", "Item")
+        .when(en == "say", "Say")
+        .when((en == "Kill") & kill_ok, "Kill")
+        .when(en == "Exit", "Exit")
+        .when(
+            (en == "red") & red_fmt_ok & red_val.isNotNull() & blue_val.isNotNull(),
+            "CaptureTheFlagResults",
+        )
+        .when(
+            (en == "score")
+            & score_fmt_ok
+            & s_frags.isNotNull()
+            & s_client_id.isNotNull(),
+            "Score",
+        )
+        .when(en == "ShutdownGame", "ShutdownGame")
     )
 
-    # error classification (only evaluated on failed rows); red/score
-    # error precedence mirrors the reference's sequential `?` operators
-    # (deserializer_logs.rs:128-150): first-space split ->
-    # UnknownDataFormat, first number -> UnparseableNumber, second split
-    # -> UnknownDataFormat, second number -> UnparseableNumber
+    steps.append({"event_type": event_type})
+    et = F.col("event_type")
+    ok = et.isNotNull()
+
+    # error classification (only evaluated on failed rows)
+    known = F.lit(None).cast("string")
     parse_error_kind = (
-        "CASE WHEN event_type IS NOT NULL OR _kind0 = 'Comment'"
-        " THEN CAST(NULL AS STRING)"
-        " WHEN _kind0 IS NOT NULL THEN _kind0"
-        f" WHEN _event_name IN {_PLAIN_ID_EVENTS} THEN 'UnparseableNumber'"
-        " WHEN _event_name = 'ClientUserinfoChanged' THEN"
-        " CASE WHEN _ui_sp = 0 THEN 'UnknownDataFormat'"
-        " WHEN _ui_id IS NULL THEN 'UnparseableNumber' ELSE 'AbsentKey' END"
-        " WHEN _event_name = 'Kill' THEN 'UnknownDataFormat'"
-        " WHEN _event_name = 'red' THEN"
-        " CASE WHEN NOT coalesce(size(_rparts) = 2, false) THEN 'UnknownDataFormat'"
-        " WHEN _red_v IS NULL THEN 'UnparseableNumber'"
-        " WHEN NOT coalesce(size(_blue_items) >= 2, false) THEN 'UnknownDataFormat'"
-        " ELSE 'UnparseableNumber' END"
-        " WHEN _event_name = 'score' THEN"
-        " CASE WHEN NOT coalesce(size(_rparts) = 2, false) THEN 'UnknownDataFormat'"
-        " WHEN _s_frags IS NULL THEN 'UnparseableNumber'"
-        " WHEN _s_cv IS NULL OR NOT coalesce(size(_scv) = 2, false)"
-        " THEN 'UnknownDataFormat'"
-        " ELSE 'UnparseableNumber' END"
-        " ELSE 'UnknownEventName' END"
+        F.when(ok | (kind0 == "Comment"), known)
+        .when(kind0.isNotNull(), kind0)
+        .when(is_plainid_event, "UnparseableNumber")
+        .when(
+            en == "ClientUserinfoChanged",
+            F.when(F.col("_ui_sp") == 0, "UnknownDataFormat")
+            .when(ui_id.isNull(), "UnparseableNumber")
+            .otherwise("AbsentKey"),
+        )
+        .when(en == "Kill", "UnknownDataFormat")
+        # red/score error precedence mirrors the reference's sequential `?`
+        # operators (deserializer_logs.rs:128-150): first-space split ->
+        # UnknownDataFormat, first number -> UnparseableNumber, second split
+        # -> UnknownDataFormat, second number -> UnparseableNumber
+        .when(
+            en == "red",
+            F.when(
+                ~F.coalesce(F.size("_rparts") == 2, F.lit(False)),
+                "UnknownDataFormat",
+            )
+            .when(red_val.isNull(), "UnparseableNumber")
+            .when(
+                ~F.coalesce(F.size("_blue_items") >= 2, F.lit(False)),
+                "UnknownDataFormat",
+            )
+            .otherwise("UnparseableNumber"),
+        )
+        .when(
+            en == "score",
+            F.when(
+                ~F.coalesce(F.size("_rparts") == 2, F.lit(False)),
+                "UnknownDataFormat",
+            )
+            .when(s_frags.isNull(), "UnparseableNumber")
+            .when(
+                F.col("_s_cv").isNull()
+                | ~F.coalesce(F.size("_scv") == 2, F.lit(False)),
+                "UnknownDataFormat",
+            )
+            .otherwise("UnparseableNumber"),
+        )
+        .otherwise("UnknownEventName")
     )
 
-    def init_limit(key: str) -> str:
-        value = _num(_kv_get("_data", key))
-        return f"CASE WHEN event_type = 'InitGame' THEN {value} END"
-
-    df = _project(
-        df,
+    steps.append(
         {
-            "_fl_raw": init_limit("fraglimit"),
-            "_cl_raw": init_limit("capturelimit"),
-            "_tl_raw": init_limit("timelimit"),
-        },
+            "_fl_raw": F.when(et == "InitGame", _u32_raw(_kv_get(data, "fraglimit"))),
+            "_cl_raw": F.when(
+                et == "InitGame", _u32_raw(_kv_get(data, "capturelimit"))
+            ),
+            "_tl_raw": F.when(et == "InitGame", _u32_raw(_kv_get(data, "timelimit"))),
+        }
     )
-    df = _project(
-        df,
+    steps.append(
         {
             "parse_error_kind": parse_error_kind,
             "frag_limit": _u32_guard("_fl_raw"),
             "capture_limit": _u32_guard("_cl_raw"),
             "time_limit_min": _u32_guard("_tl_raw"),
-            "client_id": f"CASE WHEN _event_name IN {_PLAIN_ID_EVENTS}"
-            " AND event_type IS NOT NULL THEN _plain_id"
-            " WHEN event_type = 'ClientUserinfoChanged' THEN _ui_id"
-            " WHEN event_type = 'Score' THEN _s_cid END",
-            "name": "CASE WHEN event_type = 'ClientUserinfoChanged'"
-            f" THEN {_kv_get('_ui_kv', 'n')}"
-            " WHEN event_type = 'Score' THEN get(_scv, 1) END",
-            "killer_id": "CASE WHEN event_type = 'Kill' THEN _kid END",
-            "victim_id": "CASE WHEN event_type = 'Kill' THEN _vid END",
-            "reason_id": "CASE WHEN event_type = 'Kill' THEN _rid END",
-            "killer_name": "CASE WHEN event_type = 'Kill' THEN _kd0 END",
-            # the text before the last " by "
-            "victim_name": "CASE WHEN event_type = 'Kill' THEN substr(_kd_rest, 1,"
-            " length(_kd_rest) - length(_reason) - 4) END",
-            "reason_name": "CASE WHEN event_type = 'Kill' THEN _reason END",
-            "frags": "CASE WHEN event_type = 'Score' THEN _s_frags END",
-            "red": "CASE WHEN event_type = 'CaptureTheFlagResults' THEN _red_v END",
-            "blue": "CASE WHEN event_type = 'CaptureTheFlagResults' THEN _blue_v END",
-        },
+            "client_id": F.when(is_plainid_event & ok, plain_id)
+            .when(et == "ClientUserinfoChanged", ui_id)
+            .when(et == "Score", s_client_id),
+            "name": F.when(
+                et == "ClientUserinfoChanged", _kv_get(F.col("_ui_kv"), "n")
+            ).when(et == "Score", s_name),
+            "killer_id": F.when(et == "Kill", killer_id),
+            "victim_id": F.when(et == "Kill", victim_id),
+            "reason_id": F.when(et == "Kill", reason_id),
+            "killer_name": F.when(et == "Kill", F.col("_kd0")),
+            "victim_name": F.when(et == "Kill", victim_name),
+            "reason_name": F.when(et == "Kill", reason_name),
+            "frags": F.when(et == "Score", s_frags),
+            "red": F.when(et == "CaptureTheFlagResults", red_val),
+            "blue": F.when(et == "CaptureTheFlagResults", blue_val),
+        }
     )
-    # canonical (arrow) split semantics: no first space -> the line has NO
-    # event segment at all (render ''); a space but no colon -> the whole
-    # rest IS the (unterminated) event name.  expr's substr-based temps
-    # would otherwise leak the raw line into these renders (found by the
-    # fuzz suite).  char(39) is the quote.
-    df = _project(
-        df,
+    steps.append(
         {
-            "parse_error": "CASE WHEN parse_error_kind IS NOT NULL THEN concat("
-            "parse_error_kind, ' at event ', char(39),"
-            " CASE WHEN _sp = 0 THEN '' WHEN _co = 0 THEN _rest"
-            " ELSE coalesce(_event_name, '') END,"
-            " char(39), ': ', char(39),"
-            " CASE WHEN _sp > 0 AND _co > 0 THEN coalesce(_data, '') ELSE '' END,"
-            " char(39)) END",
-        },
+            "parse_error": F.when(
+                F.col("parse_error_kind").isNotNull(),
+                F.concat(
+                    F.col("parse_error_kind"),
+                    F.lit(" at event '"),
+                    # canonical (arrow) split semantics: no first space -> the
+                    # line has NO event segment at all (render ''); a space but
+                    # no colon -> the whole rest IS the (unterminated) event
+                    # name.  expr's substr-based temps would otherwise leak the
+                    # raw line into these renders (found by the fuzz suite).
+                    F.when(F.col("_sp") == 0, F.lit(""))
+                    .when(F.col("_co") == 0, F.col("_rest"))
+                    .otherwise(F.coalesce(en, F.lit(""))),
+                    F.lit("': '"),
+                    F.when(
+                        (F.col("_sp") > 0) & (F.col("_co") > 0),
+                        F.coalesce(data, F.lit("")),
+                    ).otherwise(F.lit("")),
+                    F.lit("'"),
+                ),
+            ),
+        }
     )
-    return df.selectExpr(*keep)
+    return steps

@@ -31,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.column_cache import named, per_jvm
 from ..functions.parse_expr import parse_expr_df
 from ..functions.parse_pandas import make_parse_pandas_udf
 from ..schemas import EVENT_COLUMN_NAMES
@@ -110,8 +111,8 @@ def parse_transcripts(
         else [c for c in EVENT_COLUMN_NAMES if c == "event_type" or c in fields]
     )
     if parser == "expr":
-        return parse_expr_df(df.selectExpr(*(f"`{c}`" for c in cols))).selectExpr(
-            *(f"`{c}`" for c in [*cols, *out_fields])
+        return parse_expr_df(df.select(*named(*cols))).select(
+            *named(*cols, *out_fields)
         )
     if parser == "pandas":
         ev = make_parse_pandas_udf()(df["text"])
@@ -152,18 +153,27 @@ def fail_on_feed_errors(parsed: DataFrame) -> DataFrame:
     expression into the pushed filter — so evaluating the filter on an
     error row fires the raise wherever the filter lands in the plan.
     """
-    boom = (
-        "raise_error(format_string("
-        "'Failed to process event #%d: `LogParsingError`: %s', turn_idx, parse_error))"
-    )
-    ok = "parse_error_kind IS NULL"
-    return parsed.withColumns(
-        {
-            "turn_idx": F.expr(
-                f"CASE WHEN {ok} THEN turn_idx ELSE CAST({boom} AS INT) END"
-            ),
-            "event_type": F.expr(
-                f"CASE WHEN {ok} THEN event_type ELSE CAST({boom} AS STRING) END"
-            ),
-        }
-    )
+    return parsed.withColumns(_feed_gate())
+
+
+@per_jvm
+def _feed_gate() -> dict:
+    err = F.col("parse_error_kind").isNotNull()
+
+    def _boom():
+        return F.raise_error(
+            F.format_string(
+                "Failed to process event #%d: `LogParsingError`: %s",
+                F.col("turn_idx"),
+                F.col("parse_error"),
+            )
+        )
+
+    return {
+        "turn_idx": F.when(~err, F.col("turn_idx")).otherwise(
+            _boom().cast("int")
+        ),
+        "event_type": F.when(~err, F.col("event_type")).otherwise(
+            _boom().cast("string")
+        ),
+    }

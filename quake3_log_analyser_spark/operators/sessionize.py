@@ -28,19 +28,14 @@ hot conversations are bounded by per-conv state of O(1).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from ..functions.column_cache import per_jvm, with_columns
 
 # violation labels (bll/src/dtos/logic_events.rs:90-108)
 V_DOUBLE_INIT = "DoubleInit"
 V_GAME_NOT_STARTED = "GameNotStarted"
-
-
-# the window both functions sessionize over, as SQL frame clauses
-_WINDOW = "PARTITION BY conv_id ORDER BY turn_idx"
-_BEFORE = f"OVER ({_WINDOW} ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)"
-_UP_TO = f"OVER ({_WINDOW} ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)"
-_MATCH_ID = f"CAST(sum(CAST(is_match_start AS INT)) {_UP_TO} AS INT)"
 
 
 def sessionize(df: DataFrame) -> DataFrame:
@@ -54,12 +49,18 @@ def sessionize(df: DataFrame) -> DataFrame:
       * ``is_match_start``   — effective InitGame
       * ``is_match_end``     — effective ShutdownGame
       * ``violation``        — DoubleInit / GameNotStarted, else null
-
-    The projections are SQL text, one ``selectExpr`` each, like the
-    expression parser (functions/parse_expr.py): a Column tree costs a
-    py4j call per node to build on the driver.
     """
-    marker = "CASE WHEN event_type IN ('InitGame', 'ShutdownGame') THEN event_type END"
+    return with_columns(df, _sessionize_steps()).drop("_igb")
+
+
+@per_jvm
+def _sessionize_steps() -> list[dict]:
+    w = Window.partitionBy("conv_id").orderBy("turn_idx")
+    w_excl = w.rowsBetween(Window.unboundedPreceding, -1)
+    w_incl = w.rowsBetween(Window.unboundedPreceding, 0)
+
+    et = F.col("event_type")
+    marker = F.when(et.isin("InitGame", "ShutdownGame"), et)
     # ONE windowed aggregate per frame (r7): the prior form inlined the
     # exclusive-frame last() expression into is_match_start AND
     # is_match_end, which Catalyst materialized as two identical window
@@ -68,20 +69,35 @@ def sessionize(df: DataFrame) -> DataFrame:
     # in_game in a plain projection (last-incl == the row's own marker
     # when present, else last-excl — the definition of last ignorenulls)
     # leaves each Window operator evaluating a single function.
-    df = df.selectExpr(
-        "*", f"coalesce(last({marker}, true) {_BEFORE} = 'InitGame', false) AS _igb"
-    )
-    df = df.selectExpr(
-        "*",
-        "coalesce(event_type = 'InitGame' AND NOT _igb, false) AS is_match_start",
-        "coalesce(event_type = 'ShutdownGame' AND _igb, false) AS is_match_end",
-        f"CASE WHEN {marker} IS NOT NULL THEN {marker} = 'InitGame'"
-        " ELSE _igb END AS in_game",
-        f"CASE WHEN event_type = 'InitGame' AND _igb THEN '{V_DOUBLE_INIT}'"
-        " WHEN event_type IN ('Exit', 'ShutdownGame') AND NOT _igb"
-        f" THEN '{V_GAME_NOT_STARTED}' END AS violation",
-    )
-    return df.selectExpr("*", f"{_MATCH_ID} AS match_id").drop("_igb")
+    igb = {
+        "_igb": F.coalesce(
+            F.last(marker, ignorenulls=True).over(w_excl) == "InitGame",
+            F.lit(False),
+        ),
+    }
+    flags = {
+        "is_match_start": F.coalesce(
+            (et == "InitGame") & ~F.col("_igb"), F.lit(False)
+        ),
+        "is_match_end": F.coalesce(
+            (et == "ShutdownGame") & F.col("_igb"), F.lit(False)
+        ),
+        "in_game": F.when(
+            marker.isNotNull(), marker == "InitGame"
+        ).otherwise(F.col("_igb")),
+        "violation": F.when(
+            (et == "InitGame") & F.col("_igb"), F.lit(V_DOUBLE_INIT)
+        ).when(
+            et.isin("Exit", "ShutdownGame") & ~F.col("_igb"),
+            F.lit(V_GAME_NOT_STARTED),
+        ),
+    }
+    match_id = {
+        "match_id": F.sum(F.col("is_match_start").cast("int"))
+        .over(w_incl)
+        .cast("int"),
+    }
+    return [igb, flags, match_id]
 
 
 def sessionize_raw(transcripts: DataFrame) -> DataFrame:
@@ -101,29 +117,46 @@ def sessionize_raw(transcripts: DataFrame) -> DataFrame:
     and NO sort — the single biggest lever at 10^12-turn scale.  The full
     parse (mapInArrow) then runs on the already-sessionized rows.
     """
-    m = "regexp_extract(text, r'^ *[^ ]+ (InitGame|ShutdownGame):', 1)"
-    marker = f"CASE WHEN {m} != '' THEN {m} END"
-    df = transcripts.selectExpr(
-        "*",
-        f"{marker} AS _marker",
-        f"coalesce(last({marker}, true) {_BEFORE} = 'InitGame', false)"
-        " AS _in_game_before",
+    return with_columns(transcripts, _sessionize_raw_steps()).drop(
+        "_marker", "_in_game_before"
     )
-    df = df.selectExpr(
-        "*",
-        "coalesce(_marker = 'InitGame' AND NOT _in_game_before, false)"
-        " AS is_match_start",
-        "coalesce(_marker = 'ShutdownGame' AND _in_game_before, false)"
-        " AS is_match_end",
+
+
+@per_jvm
+def _sessionize_raw_steps() -> list[dict]:
+    w = Window.partitionBy("conv_id").orderBy("turn_idx")
+    w_excl = w.rowsBetween(Window.unboundedPreceding, -1)
+    w_incl = w.rowsBetween(Window.unboundedPreceding, 0)
+
+    m = F.regexp_extract("text", r"^ *[^ ]+ (InitGame|ShutdownGame):", 1)
+    marker = F.when(m != "", m)
+    in_game_before = F.coalesce(
+        F.last(marker, ignorenulls=True).over(w_excl) == "InitGame", F.lit(False)
     )
-    df = df.selectExpr(
-        "*",
-        f"{_MATCH_ID} AS match_id",
+    marked = {
+        "_marker": marker,
+        "_in_game_before": in_game_before,
+    }
+    flags = {
+        "is_match_start": F.coalesce(
+            (F.col("_marker") == "InitGame") & ~F.col("_in_game_before"),
+            F.lit(False),
+        ),
+        "is_match_end": F.coalesce(
+            (F.col("_marker") == "ShutdownGame") & F.col("_in_game_before"),
+            F.lit(False),
+        ),
+    }
+    match_id = {
+        "match_id": F.sum(F.col("is_match_start").cast("int"))
+        .over(w_incl)
+        .cast("int"),
         # projection, not a second windowed last (see sessionize)
-        "CASE WHEN _marker IS NOT NULL THEN _marker = 'InitGame'"
-        " ELSE _in_game_before END AS in_game",
-    )
-    return df.drop("_marker", "_in_game_before")
+        "in_game": F.when(
+            F.col("_marker").isNotNull(), F.col("_marker") == "InitGame"
+        ).otherwise(F.col("_in_game_before")),
+    }
+    return [marked, flags, match_id]
 
 
 def match_control(sessionized: DataFrame) -> DataFrame:

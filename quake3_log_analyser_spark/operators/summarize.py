@@ -33,6 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.column_cache import named, per_jvm
 from ..schemas import MATCH_SUMMARY_SCHEMA, WORLD
 from .sessionize import match_control, sessionize
 
@@ -41,91 +42,81 @@ from .sessionize import match_control, sessionize
 # ---------------------------------------------------------------------------
 
 
-def _summary_cast(field: str, sql: str) -> str:
-    return f"CAST({sql} AS {MATCH_SUMMARY_SCHEMA[field].dataType.simpleString()})"
+def _summary_null(field: str):
+    return F.lit(None).cast(MATCH_SUMMARY_SCHEMA[field].dataType)
 
 
-def _summary_null(field: str) -> str:
-    return _summary_cast(field, "NULL")
+def _violation_expr():
+    """Event-model violations re-derived from the sessionize columns
+    (compose(), summary_logic.rs:96-124): an InitGame that did not start a
+    match was a DoubleInit; Exit/Shutdown outside a game is GameNotStarted."""
+    et = F.col("event_type")
+    in_game = F.col("in_game")
+    return (
+        F.when((et == "InitGame") & ~F.col("is_match_start"), "DoubleInit")
+        .when((et == "Exit") & ~in_game, "GameNotStarted")
+        .when(
+            (et == "ShutdownGame") & ~in_game & ~F.col("is_match_end"),
+            "GameNotStarted",
+        )
+    )
 
 
-# Event-model violations re-derived from the sessionize columns (compose(),
-# summary_logic.rs:96-124): an InitGame that did not start a match was a
-# DoubleInit; Exit/Shutdown outside a game is GameNotStarted.
-_VIOLATION = (
-    "CASE WHEN event_type = 'InitGame' AND NOT is_match_start THEN 'DoubleInit'"
-    " WHEN event_type = 'Exit' AND NOT in_game THEN 'GameNotStarted'"
-    " WHEN event_type = 'ShutdownGame' AND NOT in_game AND NOT is_match_end"
-    " THEN 'GameNotStarted' END"
-)
-_IS_KILL = "(event_type = 'Kill' AND in_game)"
-_IS_WORLD = f"killer_name = '{WORLD}'"
-# a kill's frag goes to its killer, or is taken from its victim when the
-# world killed
-_FRAG_NAME = f"CASE WHEN {_IS_WORLD} THEN victim_name ELSE killer_name END"
-_FRAG_DELTA = f"CASE WHEN {_IS_WORLD} THEN -1 ELSE 1 END"
-# The 12-digit pad is exact for any int32 turn_idx >= 0 (max 10 digits);
-# lpad TRUNCATES longer strings and the sentinel rlike wants exactly 12
-# digits, so a negative turn_idx ('-' is not [0-9]) would silently turn
-# the violation into a player kill.  turn_idx is 1-based by the source
-# contract (sources/transcripts.py) — greatest(.., 0) makes the pad
-# total anyway; the real turn_idx still rides in the message text.  The
-# raw literals hold a NUL character.
-_SENTINEL = (
-    "concat(r'\x00', lpad(CAST(greatest(turn_idx, 0) AS STRING), 12, '0'),"
-    " format_string('Event #%d: violated the event model: %s',"
-    f" turn_idx, {_VIOLATION}))"
-)
-# the row is inside a started match
-_IN_MATCH = "match_id > 0 AND (in_game OR is_match_end)"
-_VIOLATION_TEXT = "s -> substring(s, 14, 1048576)"
+def _violation_sentinel(violation):
+    # The 12-digit pad is exact for any int32 turn_idx >= 0 (max 10 digits);
+    # lpad TRUNCATES longer strings and the sentinel rlike wants exactly 12
+    # digits, so a negative turn_idx ('-' is not [0-9]) would silently turn
+    # the violation into a player kill.  turn_idx is 1-based by the source
+    # contract (sources/transcripts.py) — greatest(.., 0) makes the pad
+    # total anyway; the real turn_idx still rides in the message text.
+    return F.concat(
+        F.lit("\x00"),
+        F.lpad(
+            F.greatest(F.col("turn_idx"), F.lit(0)).cast("string"), 12, "0"
+        ),
+        F.format_string(
+            "Event #%d: violated the event model: %s", F.col("turn_idx"), violation
+        ),
+    )
 
 
-def _is_sentinel(key: str) -> str:
-    return f"startswith({key}, r'\x00') AND {key} RLIKE r'^\x00[0-9]{{12}}Event #'"
-
-
-def _error_struct(err: str) -> str:
+def _error_struct(err):
     """An all-null summary row carrying only the error text — the fold's
     emit_error contract (functions/replay.py)."""
-    nulls = ", ".join(
-        f"{_summary_null(f)} AS {f}"
-        for f in (
-            "total_kills", "players", "kills", "kills_by_means",
-            "game_reported_scores", "disconnected_players",
-        )
-    )
-    return f"struct({nulls}, CAST(NULL AS BOOLEAN) AS graceful, {err} AS error)"
-
-
-def _summary_struct(means: str, scores: str) -> str:
-    return (
-        "struct(coalesce(total_kills, 0) AS total_kills, players AS players,"
-        f" {_summary_cast('kills', 'kills')} AS kills,"
-        f" {means} AS kills_by_means, {scores} AS game_reported_scores,"
-        f" {_summary_null('disconnected_players')} AS disconnected_players,"
-        " graceful AS graceful, CAST(NULL AS STRING) AS error)"
+    return F.struct(
+        _summary_null("total_kills").alias("total_kills"),
+        _summary_null("players").alias("players"),
+        _summary_null("kills").alias("kills"),
+        _summary_null("kills_by_means").alias("kills_by_means"),
+        _summary_null("game_reported_scores").alias("game_reported_scores"),
+        _summary_null("disconnected_players").alias("disconnected_players"),
+        F.lit(None).cast("boolean").alias("graceful"),
+        err.alias("error"),
     )
 
 
-def _emit_rows(per_match: DataFrame, summary_entry: str) -> DataFrame:
+def _emit_columns(summary_entry) -> dict:
+    """The Column trees of ``_emit_rows`` for one summary entry."""
+    entries = F.concat(F.array(summary_entry), F.transform("violations", _error_struct))
+    return {
+        "exploded": [
+            F.col("conv_id"), F.col("match_id"), F.col("completed"),
+            F.explode(entries).alias("e"),
+        ],
+        "emitted": F.col("completed") | F.col("e.error").isNotNull(),
+        "rows": [F.col("conv_id"), F.col("match_id"), F.col("e.*")],
+    }
+
+
+def _emit_rows(per_match: DataFrame, emit: dict) -> DataFrame:
     """Explode (summary + violation-error) entries per match; only matches
-    that saw an effective ShutdownGame emit a summary (rs:397-403)."""
-    entries = (
-        f"concat(array({summary_entry}),"
-        f" transform(violations, v -> {_error_struct('v')}))"
-    )
+    that saw an effective ShutdownGame emit a summary (rs:397-403).
+    ``emit`` is ``_emit_columns``' result."""
     return (
-        per_match.selectExpr(
-            "conv_id", "match_id", "completed", f"explode({entries}) AS e"
-        )
-        .filter("completed OR e.error IS NOT NULL")
-        .selectExpr("conv_id", "match_id", "e.*")
+        per_match.select(*emit["exploded"])
+        .filter(emit["emitted"])
+        .select(*emit["rows"])
     )
-
-
-def _agg(grouped, *exprs: str) -> DataFrame:
-    return grouped.agg(*map(F.expr, exprs))
 
 
 def summarize_kills_only(sessionized: DataFrame) -> DataFrame:
@@ -138,19 +129,37 @@ def summarize_kills_only(sessionized: DataFrame) -> DataFrame:
     DoubleInit / GameNotStarted event-model violations emit error rows
     (``Event #n: violated the event model: ...``, :96-124/:405-406), the
     same output contract as the ``summarize_extended`` fold path.
-
-    Like the parse, every projection and aggregate is SQL text: a Column
-    tree costs a py4j call per node to build on the driver.
     """
+    c = _kills_only_columns()
+    per_name = (
+        sessionized.filter(c["relevant"])
+        .select(*c["keyed"])
+        .groupBy(*named("conv_id", "match_id", "frag_name"))
+        .agg(*c["name_aggs"])
+    )
+    per_match = per_name.groupBy(*named("conv_id", "match_id")).agg(*c["match_aggs"])
+    return _emit_rows(per_match, c["emit"])
+
+
+@per_jvm
+def _kills_only_columns() -> dict:
+    """The Column trees of ``summarize_kills_only``, by the step that
+    applies them."""
     # ONE pass over the sessionized stream: kill rows, match-control rows
     # AND violation rows flow through the SAME two-level aggregation
     # (violations are collected per match and exploded alongside the
     # summary row), so the upstream parse+window DAG is scanned once — a
     # branch-and-union formulation would re-compute it per branch.
-    relevant = sessionized.filter(
-        f"(event_type IN ('Kill', 'Exit', 'ShutdownGame') AND {_IN_MATCH})"
-        f" OR {_VIOLATION} IS NOT NULL"
-    )
+    et = F.col("event_type")
+    in_game = F.col("in_game")
+    violation = _violation_expr()
+    is_kill = (et == "Kill") & in_game
+    relevant = (
+        et.isin("Kill", "Exit", "ShutdownGame")
+        & (F.col("match_id") > 0)
+        & (in_game | F.col("is_match_end"))
+    ) | violation.isNotNull()
+    is_world = F.col("killer_name") == WORLD
     # Violations ride the EXISTING group key as sentinel strings ("\x00" +
     # zero-padded turn_idx + the final error text, one singleton group each)
     # so the 16M-row first-level aggregation keeps only sum/count/max — pure
@@ -169,42 +178,68 @@ def summarize_kills_only(sessionized: DataFrame) -> DataFrame:
     # a name reproducing the entire sentinel shape byte-for-byte —
     # adversarial-input territory the reference's own renderer also
     # cannot distinguish.
-    keyed = relevant.selectExpr(
-        "conv_id",
-        "match_id",
-        f"CASE WHEN {_IS_KILL} THEN {_FRAG_NAME}"
-        f" WHEN {_VIOLATION} IS NOT NULL THEN {_SENTINEL} END AS frag_name",
-        f"CASE WHEN {_IS_KILL} THEN {_FRAG_DELTA} END AS frag_delta",
-        "is_match_end AS completed",
-        "event_type = 'Exit' AND in_game AS graceful",
+    violation_sentinel = _violation_sentinel(violation)
+    keyed = [
+        F.col("conv_id"),
+        F.col("match_id"),
+        F.when(
+            is_kill,
+            F.when(is_world, F.col("victim_name")).otherwise(F.col("killer_name")),
+        )
+        .when(violation.isNotNull(), violation_sentinel)
+        .alias("frag_name"),
+        F.when(is_kill, F.when(is_world, F.lit(-1)).otherwise(F.lit(1))).alias(
+            "frag_delta"
+        ),
+        F.col("is_match_end").alias("completed"),
+        ((et == "Exit") & in_game).alias("graceful"),
+    ]
+    name_aggs = [
+        F.sum("frag_delta").cast("long").alias("frags"),
+        F.count("frag_delta").alias("n_kills"),
+        F.max("completed").alias("completed"),
+        F.max("graceful").alias("graceful"),
+    ]
+    is_sentinel = F.col("frag_name").startswith("\x00") & F.col(
+        "frag_name"
+    ).rlike("^\x00[0-9]{12}Event #")
+    is_player = F.col("frag_name").isNotNull() & ~is_sentinel
+    kill_entry = F.when(
+        is_player,
+        F.struct(F.col("frag_name").alias("player"), F.col("frags").alias("frags")),
     )
-    per_name = _agg(
-        keyed.groupBy("conv_id", "match_id", "frag_name"),
-        "CAST(sum(frag_delta) AS BIGINT) AS frags",
-        "count(frag_delta) AS n_kills",
-        "max(completed) AS completed",
-        "max(graceful) AS graceful",
-    )
-    is_sentinel = _is_sentinel("frag_name")
-    is_player = f"frag_name IS NOT NULL AND NOT ({is_sentinel})"
-    per_match = _agg(
-        per_name.groupBy("conv_id", "match_id"),
-        f"sum(CASE WHEN NOT ({is_sentinel}) THEN n_kills END) AS total_kills",
-        "array_sort(collect_list(CASE WHEN"
-        f" {is_player} THEN frag_name END)) AS players",
-        "array_sort(collect_list(CASE WHEN"
-        f" {is_player} THEN struct(frag_name AS player, frags AS frags) END)) AS kills",
-        "max(completed) AS completed",
-        "max(graceful) AS graceful",
+    match_aggs = [
+        F.sum(F.when(~is_sentinel, F.col("n_kills"))).alias("total_kills"),
+        F.array_sort(
+            F.collect_list(F.when(is_player, F.col("frag_name")))
+        ).alias("players"),
+        F.array_sort(F.collect_list(kill_entry)).alias("kills"),
+        F.max("completed").alias("completed"),
+        F.max("graceful").alias("graceful"),
         # sort while the 12-digit pad (chars 2..13) is still attached, THEN
         # strip it: message text starts at char 14 (1-based substring)
-        "transform(array_sort(collect_list(CASE WHEN"
-        f" {is_sentinel} THEN frag_name END)), {_VIOLATION_TEXT}) AS violations",
+        F.transform(
+            F.array_sort(F.collect_list(F.when(is_sentinel, F.col("frag_name")))),
+            lambda s: F.substring(s, 14, 1 << 20),
+        ).alias("violations"),
+    ]
+    summary_entry = F.struct(
+        F.coalesce("total_kills", F.lit(0)).alias("total_kills"),
+        F.col("players").alias("players"),
+        F.col("kills").cast(MATCH_SUMMARY_SCHEMA["kills"].dataType).alias("kills"),
+        _summary_null("kills_by_means").alias("kills_by_means"),
+        _summary_null("game_reported_scores").alias("game_reported_scores"),
+        _summary_null("disconnected_players").alias("disconnected_players"),
+        F.col("graceful").alias("graceful"),
+        F.lit(None).cast("string").alias("error"),
     )
-    summary_entry = _summary_struct(
-        _summary_null("kills_by_means"), _summary_null("game_reported_scores")
-    )
-    return _emit_rows(per_match, summary_entry)
+    return {
+        "relevant": relevant,
+        "keyed": keyed,
+        "name_aggs": name_aggs,
+        "match_aggs": match_aggs,
+        "emit": _emit_columns(summary_entry),
+    }
 
 
 def summarize_multi(
@@ -244,39 +279,76 @@ def summarize_multi(
     if not (want_means or want_scores):
         return summarize_kills_only(sessionized)
 
-    types = "'Kill', 'Exit', 'ShutdownGame'" + (", 'Score'" if want_scores else "")
-    relevant = sessionized.filter(
-        f"(event_type IN ({types}) AND {_IN_MATCH}) OR {_VIOLATION} IS NOT NULL"
+    c = _multi_columns(want_means, want_scores)
+    per_key = (
+        sessionized.filter(c["relevant"])
+        .select(*c["exploded"])
+        .filter(c["entry_kept"])
+        .groupBy(*c["by_entry"])
+        .agg(*c["key_aggs"])
     )
-    k_key = (
-        f"CASE WHEN {_IS_KILL} THEN {_FRAG_NAME}"
-        f" WHEN {_VIOLATION} IS NOT NULL THEN {_SENTINEL} END"
-    )
-    k_delta = f"CASE WHEN {_IS_KILL} THEN {_FRAG_DELTA} END"
-    null_delta = "CAST(NULL AS INT)"
-    null_sfrags = "CAST(NULL AS BIGINT)"
-    null_sturn = "CAST(NULL AS INT)"
+    per_match = per_key.groupBy(*named("conv_id", "match_id")).agg(*c["match_aggs"])
+    return _emit_rows(per_match, c["emit"])
+
+
+@per_jvm
+def _multi_columns(want_means: bool, want_scores: bool) -> dict:
+    """The Column trees of ``summarize_multi``, by the step that applies
+    them."""
+    et = F.col("event_type")
+    in_game = F.col("in_game")
+    violation = _violation_expr()
+    types = ["Kill", "Exit", "ShutdownGame"] + (["Score"] if want_scores else [])
+    relevant = (
+        et.isin(types)
+        & (F.col("match_id") > 0)
+        & (in_game | F.col("is_match_end"))
+    ) | violation.isNotNull()
+    is_kill = (et == "Kill") & in_game
+    is_world = F.col("killer_name") == WORLD
+    k_key = F.when(
+        is_kill,
+        F.when(is_world, F.col("victim_name")).otherwise(F.col("killer_name")),
+    ).when(violation.isNotNull(), _violation_sentinel(violation))
+    k_delta = F.when(is_kill, F.when(is_world, F.lit(-1)).otherwise(F.lit(1)))
+    null_delta = F.lit(None).cast("int")
+    null_sfrags = F.lit(None).cast("long")
+    null_sturn = F.lit(None).cast("int")
 
     def entry(kind, key, delta, sfrags, sturn):
-        return (
-            f"struct(CAST({kind} AS INT) AS kind, {key} AS key, {delta} AS delta,"
-            f" {sfrags} AS sfrags, {sturn} AS sturn)"
+        return F.struct(
+            F.lit(kind).cast("int").alias("kind"),
+            key.alias("key"),
+            delta.alias("delta"),
+            sfrags.alias("sfrags"),
+            sturn.alias("sturn"),
         )
 
     entries = [
-        "CASE WHEN event_type IN ('Kill', 'Exit', 'ShutdownGame')"
-        f" OR {_VIOLATION} IS NOT NULL"
-        f" THEN {entry(0, k_key, k_delta, null_sfrags, null_sturn)} END"
+        F.when(
+            et.isin("Kill", "Exit", "ShutdownGame") | violation.isNotNull(),
+            entry(0, k_key, k_delta, null_sfrags, null_sturn),
+        )
     ]
     if want_means:
         entries.append(
-            f"CASE WHEN {_IS_KILL}"
-            f" THEN {entry(1, 'reason_name', null_delta, null_sfrags, null_sturn)} END"
+            F.when(
+                is_kill,
+                entry(1, F.col("reason_name"), null_delta, null_sfrags, null_sturn),
+            )
         )
     if want_scores:
         entries.append(
-            "CASE WHEN event_type = 'Score' AND in_game THEN"
-            f" {entry(2, 'name', null_delta, 'CAST(frags AS BIGINT)', 'turn_idx')} END"
+            F.when(
+                (et == "Score") & in_game,
+                entry(
+                    2,
+                    F.col("name"),
+                    null_delta,
+                    F.col("frags").cast("long"),
+                    F.col("turn_idx"),
+                ),
+            )
         )
     # explode the raw entry array and drop the null slots AFTER the
     # explode (r7): the element-level F.filter is an interpreted
@@ -285,63 +357,93 @@ def summarize_multi(
     # (explode emits null elements as rows; the filter removes exactly
     # the slots the array filter removed).  Measured: multiop 2.5 ->
     # 1.9 s at sf0.1.
-    exploded = relevant.selectExpr(
-        "conv_id",
-        "match_id",
-        "is_match_end AS completed",
-        "event_type = 'Exit' AND in_game AS graceful",
-        f"explode(array({', '.join(entries)})) AS e",
-    ).filter("e IS NOT NULL")
+    exploded = [
+        F.col("conv_id"),
+        F.col("match_id"),
+        F.col("is_match_end").alias("completed"),
+        ((et == "Exit") & in_game).alias("graceful"),
+        F.explode(F.array(*entries)).alias("e"),
+    ]
     # flags ride every exploded row of a match (max is idempotent), so no
     # separate control branch is needed; a Kill row's 2 entries are
     # condensed by the map-side partial aggregate before the (absent)
     # shuffle would see them
-    per_key = _agg(
-        exploded.groupBy(
-            "conv_id", "match_id", F.expr("e.kind AS kind"), F.expr("e.key AS key")
-        ),
-        "CAST(sum(e.delta) AS BIGINT) AS frags",
-        "count(e.delta) AS n_kills",
-        "count(1) AS n_rows",
-        "max_by(e.sfrags, e.sturn) AS score",
-        "max(completed) AS completed",
-        "max(graceful) AS graceful",
+    by_entry = [
+        F.col("conv_id"),
+        F.col("match_id"),
+        F.col("e.kind").alias("kind"),
+        F.col("e.key").alias("key"),
+    ]
+    key_aggs = [
+        F.sum("e.delta").cast("long").alias("frags"),
+        F.count("e.delta").alias("n_kills"),
+        F.count(F.lit(1)).alias("n_rows"),
+        F.max_by("e.sfrags", "e.sturn").alias("score"),
+        F.max("completed").alias("completed"),
+        F.max("graceful").alias("graceful"),
+    ]
+    kind = F.col("kind")
+    key = F.col("key")
+    is_k = kind == 0
+    is_sentinel = is_k & key.startswith("\x00") & key.rlike("^\x00[0-9]{12}Event #")
+    is_player = is_k & key.isNotNull() & ~is_sentinel
+    kill_entry = F.when(
+        is_player, F.struct(key.alias("player"), F.col("frags").alias("frags"))
     )
-    is_sentinel = f"kind = 0 AND {_is_sentinel('key')}"
-    is_player = f"kind = 0 AND key IS NOT NULL AND NOT ({is_sentinel})"
-    per_match = _agg(
-        per_key.groupBy("conv_id", "match_id"),
-        f"sum(CASE WHEN kind = 0 AND NOT ({is_sentinel}) THEN n_kills END)"
-        " AS total_kills",
-        f"array_sort(collect_list(CASE WHEN {is_player} THEN key END)) AS players",
-        "array_sort(collect_list(CASE WHEN"
-        f" {is_player} THEN struct(key AS player, frags AS frags) END)) AS kills",
-        "array_sort(collect_list(CASE WHEN"
-        " kind = 1 THEN struct(key AS mean, n_rows AS `count`) END)) AS means_raw",
-        "array_sort(collect_list(CASE WHEN"
-        " kind = 2 THEN struct(key AS player, score AS frags) END)) AS scores_raw",
-        "max(completed) AS completed",
-        "max(graceful) AS graceful",
-        "transform(array_sort(collect_list(CASE WHEN"
-        f" {is_sentinel} THEN key END)), {_VIOLATION_TEXT}) AS violations",
+    mean_entry = F.when(
+        kind == 1, F.struct(key.alias("mean"), F.col("n_rows").alias("count"))
     )
+    score_entry = F.when(
+        kind == 2, F.struct(key.alias("player"), F.col("score").alias("frags"))
+    )
+    match_aggs = [
+        F.sum(F.when(is_k & ~is_sentinel, F.col("n_kills"))).alias("total_kills"),
+        F.array_sort(F.collect_list(F.when(is_player, key))).alias("players"),
+        F.array_sort(F.collect_list(kill_entry)).alias("kills"),
+        F.array_sort(F.collect_list(mean_entry)).alias("means_raw"),
+        F.array_sort(F.collect_list(score_entry)).alias("scores_raw"),
+        F.max("completed").alias("completed"),
+        F.max("graceful").alias("graceful"),
+        F.transform(
+            F.array_sort(F.collect_list(F.when(is_sentinel, key))),
+            lambda s: F.substring(s, 14, 1 << 20),
+        ).alias("violations"),
+    ]
     # fold parity: a match with no Kill/Score emits NULL, not [], for the
     # respective map (render_summary, functions/replay.py)
     means_col = (
-        _summary_cast(
-            "kills_by_means", "CASE WHEN size(means_raw) > 0 THEN means_raw END"
+        F.when(F.size("means_raw") > 0, F.col("means_raw")).cast(
+            MATCH_SUMMARY_SCHEMA["kills_by_means"].dataType
         )
         if want_means
         else _summary_null("kills_by_means")
     )
     scores_col = (
-        _summary_cast(
-            "game_reported_scores", "CASE WHEN size(scores_raw) > 0 THEN scores_raw END"
+        F.when(F.size("scores_raw") > 0, F.col("scores_raw")).cast(
+            MATCH_SUMMARY_SCHEMA["game_reported_scores"].dataType
         )
         if want_scores
         else _summary_null("game_reported_scores")
     )
-    return _emit_rows(per_match, _summary_struct(means_col, scores_col))
+    summary_entry = F.struct(
+        F.coalesce("total_kills", F.lit(0)).alias("total_kills"),
+        F.col("players").alias("players"),
+        F.col("kills").cast(MATCH_SUMMARY_SCHEMA["kills"].dataType).alias("kills"),
+        means_col.alias("kills_by_means"),
+        scores_col.alias("game_reported_scores"),
+        _summary_null("disconnected_players").alias("disconnected_players"),
+        F.col("graceful").alias("graceful"),
+        F.lit(None).cast("string").alias("error"),
+    )
+    return {
+        "relevant": relevant,
+        "exploded": exploded,
+        "entry_kept": F.col("e").isNotNull(),
+        "by_entry": by_entry,
+        "key_aggs": key_aggs,
+        "match_aggs": match_aggs,
+        "emit": _emit_columns(summary_entry),
+    }
 
 
 def means_of_death_hist(sessionized: DataFrame) -> DataFrame:

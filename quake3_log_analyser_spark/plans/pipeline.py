@@ -28,9 +28,10 @@ bytes sent to Python 21.9 -> 12.9 MB.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.column_cache import named, per_jvm
 from ..operators.parse import choose_parser, fail_on_feed_errors, parse_transcripts
 from ..operators.sessionize import sessionize, sessionize_raw
 from ..operators.summarize import (
@@ -128,7 +129,7 @@ def summarize_matches(
     # boundary (mapInArrow is an optimizer barrier: Catalyst cannot prune
     # through it, so the narrowing must happen on the input side).
     # Measured at 16M turns x 32 cores: 15.1s -> 8.2s for the parse stage.
-    narrowed_in = transcripts.selectExpr("conv_id", "turn_idx", "text")
+    narrowed_in = transcripts.select(*named("conv_id", "turn_idx", "text"))
 
     # EARLY DISCARD on RAW text (the reference's events_translation.rs
     # "only pay for what you use", moved BELOW the parse): each summary
@@ -148,12 +149,7 @@ def summarize_matches(
             tokens += ["ClientConnect", "ClientUserinfoChanged", "ClientDisconnect"]
         if "reported_scores" in ops:
             tokens.append("score")
-        # left-nested: a flat OR chain parses as a balanced tree, a
-        # different filter shape at the scan
-        keep = f"text LIKE '% {tokens[0]}:%'"
-        for tok in tokens[1:]:
-            keep = f"({keep} OR text LIKE '% {tok}:%')"
-        narrowed_in = narrowed_in.filter(keep)
+        narrowed_in = narrowed_in.filter(_early_discard(*tokens))
 
     if "player_resolutions" in ops:
         # the arrow parser runs inside the fold stage (after the shuffle,
@@ -193,12 +189,7 @@ def summarize_matches(
             # unreferenced column and the substitution comes back —
             # the wrap survives because event_type is consumed.  Costs
             # one long compare per row, no shuffle, no Python.
-            sessionized = sessionized.withColumn(
-                "event_type",
-                F.expr(
-                    "CASE WHEN monotonically_increasing_id() >= 0 THEN event_type END"
-                ),
-            )
+            sessionized = sessionized.withColumn("event_type", _fenced_event_type())
     else:
         sessionized = sessionize(
             _gate(
@@ -221,7 +212,21 @@ def summarize_matches(
         "kills_by_means", "game_reported_scores", "disconnected_players",
         "graceful", "error",
     ]
-    return out.selectExpr(*cols)
+    return out.select(*named(*cols))
+
+
+@per_jvm
+def _early_discard(*tokens: str) -> Column:
+    """Keep a line if its text holds `` <token>:`` for any token."""
+    keep = F.col("text").like(f"% {tokens[0]}:%")
+    for tok in tokens[1:]:
+        keep = keep | F.col("text").like(f"% {tok}:%")
+    return keep
+
+
+@per_jvm
+def _fenced_event_type() -> Column:
+    return F.when(F.monotonically_increasing_id() >= 0, F.col("event_type"))
 
 
 def full_pipeline_ops() -> frozenset[str]:

@@ -266,9 +266,12 @@ def test_damaged_archive_still_runs_and_dumps_afresh(job, damage, kept):
     left = damage(jsa)
     state, rows, _ = job()
     assert (state, rows) == ("dumped", job.want)
-    assert left.exists() == kept
     fresh = _archive(job)
     assert int(fresh.stem.split("-")[1]) == fresh.stat().st_size
+    # a dump is whole pages, and runs repeat sizes (175,562,752 to
+    # 175,579,136 bytes, 4 KiB apart), so the fresh archive can take the
+    # deleted one's name: then the complete fresh file is what is there
+    assert left.exists() == kept or left == fresh
     if kept:
         left.unlink()
 

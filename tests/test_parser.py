@@ -193,11 +193,11 @@ def test_parsers_agree_on_reference_fixtures(spark):
     assert null_row["parse_error_kind"] == "EmptyLine"
 
 
-# Lines where the expr parser's string functions (ltrim, instr/substr,
-# substring_index, the digit tests in front of try_cast) could read a line
-# differently from the regexes they replaced.  The fuzz suite is random and
-# may never produce them; expr, arrow and pandas must agree on every
-# event column, and on the values pinned here.
+# Lines where the expr parser's Java regexes and string functions could
+# read a line differently from the Arrow parser's RE2 and the pandas
+# parser's Python ones.  The fuzz suite is random and may never produce
+# them; expr, arrow and pandas must agree on every event column, and on
+# the values pinned here.
 EDGE_CASES = [
     # only ASCII spaces are stripped: a leading tab or no-break space is
     # part of the time token, so the event name is "0"
@@ -230,6 +230,10 @@ EDGE_CASES = [
      {"parse_error_kind": "UnknownDataFormat"}),
     ("killer_nl", " 0:01 Kill: 1 2 3: A\nZ killed B by MOD_X",
      {"event_type": "Kill", "killer_name": "A\nZ", "victim_name": "B"}),
+    # `.` matches every other line terminator, as RE2's and Python's do
+    # (Java's own `.` refuses U+2028 without the (?d) flag)
+    ("victim_line_separator", " 0:01 Kill: 1 2 3: A killed B\u2028C by MOD_X",
+     {"event_type": "Kill", "victim_name": "B\u2028C", "reason_name": "MOD_X"}),
     ("kill_id_arabic_digit", " 0:01 Kill: ١ 2 3: A killed B by MOD_X",
      {"parse_error_kind": "UnknownDataFormat"}),
     ("kill_id_minus", " 0:01 Kill: -0 2 3: A killed B by MOD_X",

@@ -1,10 +1,10 @@
 """The driver-side cost of building the kills plan, in py4j calls.
 
-Built from Column objects, a warm ``summarize_matches(t, ops={"kills"})``
-took 6,638 py4j calls on its thread (7,432 with means and scores), 1.3-1.8 s
-of a warm kills rep on a 4-core host.  Built from SQL expression text
-(functions/parse_expr.py, operators/sessionize.py, operators/summarize.py)
-it takes 369 (392).  A plan over the budget is a performance regression
+With its Column trees built on every call, a warm
+``summarize_matches(t, ops={"kills"})`` took 6,638 py4j calls on its
+thread (7,432 with means and scores), 1.3-1.8 s of a warm kills rep on a
+4-core host.  With the trees built once per JVM (functions/column_cache.py)
+it takes 378 (386).  A plan over the budget is a performance regression
 even when its results are right.
 
 Only the calls of the building thread count: py4j's finalizer thread
@@ -32,7 +32,7 @@ def test_warm_plan_build_stays_within_py4j_budget(spark, monkeypatch, ops):
     from quake3_log_analyser_spark.plans.pipeline import summarize_matches
 
     t = generate_transcripts(spark, n_convs=4, turns_per_conv=24)
-    summarize_matches(t, ops=ops)  # the first build warms Python-side caches
+    summarize_matches(t, ops=ops)  # the first build fills the Column cache
 
     build_thread = threading.get_ident()
     calls = []
