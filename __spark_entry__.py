@@ -767,7 +767,7 @@ FROM documents
 
 
 def _q_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Normalized-content md5 fingerprint (the exact-dedup key)."""
+    """Normalized-content md5 fingerprint (case- and whitespace-blind)."""
     from quake3_log_analyser_spark.functions.text import fingerprint_md5
 
     docs = _table(spark, sf_dir, "documents")
@@ -777,67 +777,6 @@ def _q_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
 _ORACLE_FINGERPRINTS = r"""
 SELECT doc_id, md5(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))) AS fp
 FROM documents
-"""
-
-
-def _q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact-duplicate groups (hash-groupBy on the fingerprint).
-
-    Like ★dedup_survivors, the synthetic table has no exact duplicates,
-    so the row was vacuously green (0 = 0).  Deterministic duplicates
-    are re-injected from the table itself (every doc_id % 50 == 0 doc,
-    twice — so group sizes reach 3) to exercise the grouping and count."""
-    from quake3_log_analyser_spark.operators.dedup import exact_duplicates
-
-    docs = _table(spark, sf_dir, "documents").select("doc_id", "text")
-    extra = docs.filter(F.col("doc_id") % 50 == 0)
-    aug = docs.unionByName(
-        extra.select((F.col("doc_id") + 100000).alias("doc_id"), "text")
-    ).unionByName(
-        extra.filter(F.col("doc_id") % 100 == 0).select(
-            (F.col("doc_id") + 200000).alias("doc_id"), "text"
-        )
-    )
-    return exact_duplicates(aug).select("fp", "n_docs")
-
-
-_ORACLE_DEDUP_EXACT = r"""
-WITH aug AS (
-  SELECT doc_id, text FROM documents
-  UNION ALL
-  SELECT doc_id + 100000, text FROM documents WHERE doc_id % 50 = 0
-  UNION ALL
-  SELECT doc_id + 200000, text FROM documents WHERE doc_id % 100 = 0
-)
-SELECT md5(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))) AS fp,
-       CAST(COUNT(*) AS BIGINT) AS n_docs
-FROM aug
-GROUP BY 1 HAVING COUNT(*) > 1
-"""
-
-
-def _q_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Unigram-Jaccard near-dup pairs (bucketed candidates + exact verify);
-    jaccard rounded to dodge double-ulp disagreement with the oracle."""
-    from quake3_log_analyser_spark.operators.dedup import jaccard_pairs
-
-    docs = _table(spark, sf_dir, "documents")
-    pairs = jaccard_pairs(docs, n=1, threshold=0.6)
-    return pairs.select("doc_a", "doc_b", F.round("jaccard", 4).alias("jaccard"))
-
-
-_ORACLE_JACCARD = r"""
-WITH toks AS (
-  SELECT doc_id, list_distinct(regexp_split_to_array(trim(lower(text)), '\s+')) AS grams
-  FROM documents WHERE length(trim(text)) > 0
-)
-SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-  round(len(list_intersect(a.grams, b.grams))::DOUBLE /
-        (len(a.grams) + len(b.grams) - len(list_intersect(a.grams, b.grams))), 4) AS jaccard
-FROM toks a, toks b
-WHERE a.doc_id < b.doc_id
-  AND len(list_intersect(a.grams, b.grams))::DOUBLE /
-      (len(a.grams) + len(b.grams) - len(list_intersect(a.grams, b.grams))) >= 0.6
 """
 
 
@@ -902,151 +841,6 @@ FROM toks
 """
 
 
-def _q_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash+LSH near-dup pairs.  The md5-based ``minhash_hash`` and the
-    slice-string band buckets make the ENTIRE pipeline — signatures, band
-    buckets, candidate set, exact-Jaccard verify — reproducible in DuckDB,
-    so the oracle checks the LSH itself, not just a recall bound."""
-    from quake3_log_analyser_spark.operators.dedup import minhash_lsh_pairs
-
-    docs = _table(spark, sf_dir, "documents")
-    pairs = minhash_lsh_pairs(docs, n=1, n_hashes=16, bands=8, threshold=0.6)
-    return pairs.select("doc_a", "doc_b", F.round("jaccard", 4).alias("jaccard"))
-
-
-def _minhash_oracle_sql(
-    n_hashes: int = 16, bands: int = 8, threshold: float = 0.6,
-    source: str = "documents",
-) -> str:
-    """DuckDB twin of minhash_lsh_pairs(n=1): same md5 hashes, same band
-    buckets, same exact-Jaccard verify.  ``source`` names the relation/CTE
-    supplying (doc_id, text) — clean_corpus embeds the block over its
-    gated subset."""
-    rows = n_hashes // bands
-    sig_exprs = ",\n    ".join(
-        "list_min(list_transform(grams, g -> "
-        f"('0x' || substr(md5('seed{i}:' || g), 1, 15))::BIGINT)) AS s{i}"
-        for i in range(n_hashes)
-    )
-    band_cases = "\n      ".join(
-        f"WHEN {b} THEN "
-        + " || ',' || ".join(f"s{b * rows + r}::VARCHAR" for r in range(rows))
-        for b in range(bands)
-    )
-    return rf"""
-WITH toks AS (
-  SELECT doc_id, list_distinct(regexp_split_to_array(trim(lower(text)), '\s+')) AS grams
-  FROM {source} WHERE length(trim(text)) > 0
-),
-sig AS (
-  SELECT doc_id,
-    {sig_exprs}
-  FROM toks
-),
-banded AS (
-  SELECT doc_id, band,
-    CASE band
-      {band_cases}
-    END AS bucket
-  FROM sig, (SELECT unnest(range({bands})) AS band) b
-),
-cands AS (
-  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-  FROM banded a JOIN banded b
-    ON a.band = b.band AND a.bucket = b.bucket AND a.doc_id < b.doc_id
-),
-verified AS (
-  SELECT c.doc_a, c.doc_b,
-    len(list_intersect(ta.grams, tb.grams))::DOUBLE /
-    (len(ta.grams) + len(tb.grams) - len(list_intersect(ta.grams, tb.grams))) AS jaccard
-  FROM cands c
-  JOIN toks ta ON ta.doc_id = c.doc_a
-  JOIN toks tb ON tb.doc_id = c.doc_b
-)
-SELECT doc_a, doc_b, round(jaccard, 4) AS jaccard
-FROM verified WHERE jaccard >= {threshold}
-"""
-
-
-def _q_cc_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cluster-exact near-dup survivorship (operators.dedup.
-    neardup_survivors_cc): connected components of the verified MinHash-
-    LSH pair graph via distributed min-label propagation + pointer
-    jumping, keep each cluster's minimum id.  The DuckDB twin recomputes
-    the identical pair graph and resolves components with a recursive CTE
-    (min reachable label), so the iterative Spark algorithm is checked
-    against a closed-form fixpoint, not just row counts."""
-    from quake3_log_analyser_spark.operators.dedup import (
-        minhash_lsh_pairs,
-        neardup_survivors_cc,
-    )
-
-    docs = _table(spark, sf_dir, "documents")
-    # threshold 0.7 (round-6): at 0.6 the sf0.01 pair graph is ONE giant
-    # component (463 nodes) — convergence exercised, but the multi-
-    # component branch (distinct clusters keep distinct survivors) never
-    # fired; 0.7 gives 7 components / 406 dropped docs, so both branches
-    # are live (pinned in tests/test_entry_nonvacuous.py)
-    pairs = minhash_lsh_pairs(docs, n=1, n_hashes=16, bands=8, threshold=0.7)
-    return neardup_survivors_cc(pairs)
-
-
-def _cc_survivors_oracle_sql() -> str:
-    mh = _minhash_oracle_sql(n_hashes=16, bands=8, threshold=0.7)
-    return f"""
-WITH RECURSIVE pairs AS ({mh}),
-edges AS (
-  SELECT doc_a AS src, doc_b AS dst FROM pairs
-  UNION
-  SELECT doc_b AS src, doc_a AS dst FROM pairs
-),
-nodes AS (SELECT DISTINCT src AS v FROM edges),
-reach(v, l) AS (
-  SELECT v, v FROM nodes
-  UNION
-  SELECT e.dst, r.l FROM reach r JOIN edges e ON e.src = r.v
-),
-comp AS (SELECT v, MIN(l) AS component FROM reach GROUP BY v)
-SELECT v AS doc_id, component AS kept_doc_id FROM comp WHERE v <> component
-"""
-
-
-def _q_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash near-dup pairs at Hamming <= 6 (7 derived bands -> recall 1.0
-    by pigeonhole; md5 token hash -> DuckDB-recomputable signatures)."""
-    from quake3_log_analyser_spark.operators.dedup import simhash_pairs
-
-    docs = _table(spark, sf_dir, "documents")
-    return simhash_pairs(docs, max_hamming=6)
-
-
-# DuckDB twin of the SimHash signature: identical token hash (first 16 md5
-# hex chars), identical bit-majority fold; packed as two 32-bit halves
-# because DuckDB's `<<` overflows at bit 63, with
-# hamming = popcount(xor(lo)) + popcount(xor(hi)).
-_ORACLE_SIMHASH = r"""
-WITH toks AS (
-  SELECT doc_id, unnest(regexp_split_to_array(trim(lower(text)), '\s+')) AS tok
-  FROM documents WHERE length(trim(text)) > 0
-),
-hashed AS (SELECT doc_id, ('0x' || substr(md5(tok), 1, 16))::UBIGINT AS h FROM toks),
-bits AS (
-  SELECT doc_id, b AS bit, SUM(CASE WHEN (h >> b) & 1 = 1 THEN 1 ELSE -1 END) AS acc
-  FROM hashed, range(64) t(b) GROUP BY doc_id, b
-),
-sig AS (
-  SELECT doc_id,
-    SUM(CASE WHEN acc > 0 AND bit < 32 THEN (1::BIGINT << bit) ELSE 0 END)::BIGINT AS lo,
-    SUM(CASE WHEN acc > 0 AND bit >= 32 THEN (1::BIGINT << (bit - 32)) ELSE 0 END)::BIGINT AS hi
-  FROM bits GROUP BY doc_id
-)
-SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-  bit_count(xor(a.lo, b.lo)) + bit_count(xor(a.hi, b.hi)) AS hamming
-FROM sig a JOIN sig b ON a.doc_id < b.doc_id
-WHERE bit_count(xor(a.lo, b.lo)) + bit_count(xor(a.hi, b.hi)) <= 6
-"""
-
-
 def _q_quality_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quality heuristic + BPE-ish token estimate (pre-training filters)."""
     from quake3_log_analyser_spark.functions.text import (
@@ -1102,31 +896,6 @@ def _q_lang_guess(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# raw-text variant: embedded by composite oracles (clean_corpus) whose
-# Spark side gates on the UNaugmented text — the es/de/fr injection
-# belongs only to the standalone ★lang_guess / ★lang_hits gate rows
-_ORACLE_LANG_GUESS_RAW = r"""
-WITH toks AS (
-  SELECT doc_id, regexp_split_to_array(trim(lower(text)), '\s+') AS w FROM documents
-),
-hits AS (
-  SELECT doc_id,
-    len(list_filter(w, x -> x IN ('the','and','of','to','a','in','is','it','that','for'))) AS en,
-    len(list_filter(w, x -> x IN ('el','la','de','que','y','en','un','los','del','se'))) AS es,
-    len(list_filter(w, x -> x IN ('der','die','und','das','ist','von','den','mit','für','auf'))) AS de,
-    len(list_filter(w, x -> x IN ('le','la','et','les','des','un','une','que','dans','pour'))) AS fr
-  FROM toks
-)
-SELECT doc_id,
-  CASE WHEN greatest(en, es, de, fr) = 0 THEN 'und'
-       WHEN en = greatest(en, es, de, fr) THEN 'en'
-       WHEN es = greatest(en, es, de, fr) THEN 'es'
-       WHEN de = greatest(en, es, de, fr) THEN 'de'
-       ELSE 'fr' END AS lang_guess
-FROM hits
-"""
-
-
 _ORACLE_LANG_GUESS = rf"""
 WITH aug AS (SELECT doc_id, {_LANG_AUG_SQL} AS text FROM documents),
 toks AS (
@@ -1147,86 +916,6 @@ SELECT doc_id,
        WHEN de = greatest(en, es, de, fr) THEN 'de'
        ELSE 'fr' END AS lang_guess
 FROM hits
-"""
-
-
-def _q_dedup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact-dedup OUTPUT mapping: removed doc -> kept (min-id) survivor.
-
-    The synthetic documents table carries no exact duplicates, which made
-    this gate row vacuously green (0 = 0 rows since round 3).  The query
-    now re-injects every ``doc_id % 50 == 0`` document under a shifted id
-    (derived deterministically FROM the table — no external data), so the
-    keep-min survivor rule is actually exercised: each injected copy must
-    map back to its lower-id original."""
-    from quake3_log_analyser_spark.operators.dedup import dedup_survivors
-
-    docs = _table(spark, sf_dir, "documents").select("doc_id", "text")
-    dups = docs.filter(F.col("doc_id") % 50 == 0).select(
-        (F.col("doc_id") + 100000).alias("doc_id"), "text"
-    )
-    return dedup_survivors(docs.unionByName(dups))
-
-
-_ORACLE_DEDUP_SURVIVORS = r"""
-WITH keyed AS (
-  SELECT doc_id, md5(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))) AS fp
-  FROM documents
-),
-keep AS (SELECT fp, MIN(doc_id) AS kept_doc_id FROM keyed GROUP BY fp)
-SELECT k.doc_id, p.kept_doc_id
-FROM keyed k JOIN keep p ON k.fp = p.fp
-WHERE k.doc_id != p.kept_doc_id
-"""
-
-
-_ORACLE_DEDUP_SURVIVORS_AUG = r"""
-WITH aug AS (
-  SELECT doc_id, text FROM documents
-  UNION ALL
-  SELECT doc_id + 100000 AS doc_id, text FROM documents WHERE doc_id % 50 = 0
-),
-keyed AS (
-  SELECT doc_id, md5(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))) AS fp
-  FROM aug
-),
-keep AS (SELECT fp, MIN(doc_id) AS kept_doc_id FROM keyed GROUP BY fp)
-SELECT CAST(k.doc_id AS BIGINT) AS doc_id,
-       CAST(p.kept_doc_id AS BIGINT) AS kept_doc_id
-FROM keyed k JOIN keep p ON k.fp = p.fp
-WHERE k.doc_id != p.kept_doc_id
-"""
-
-
-def _q_clean_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The integrative training-corpus cleaning pipeline (exact dedup ->
-    quality/lang gate -> MinHash-LSH near-dup removal) — every stage
-    recomposed in DuckDB, so the full composition is driver-checked, not
-    just its parts."""
-    from quake3_log_analyser_spark.operators.corpus import clean_corpus
-
-    docs = _table(spark, sf_dir, "documents")
-    return clean_corpus(
-        docs, min_quality=0.45, langs=("en",), n=1,
-        n_hashes=16, bands=8, threshold=0.6,
-    )
-
-
-def _clean_corpus_oracle_sql() -> str:
-    mh = _minhash_oracle_sql(n_hashes=16, bands=8, threshold=0.6, source="gated")
-    return f"""
-WITH removed AS ({_ORACLE_DEDUP_SURVIVORS}),
-q AS ({_ORACLE_QUALITY}),
-l AS ({_ORACLE_LANG_GUESS_RAW}),
-gated AS (
-  SELECT d.doc_id, d.text, q.quality, l.lang_guess
-  FROM documents d JOIN q USING (doc_id) JOIN l USING (doc_id)
-  WHERE q.quality >= 0.45 AND l.lang_guess = 'en'
-    AND d.doc_id NOT IN (SELECT doc_id FROM removed)
-)
-SELECT g.doc_id, g.quality, g.lang_guess
-FROM gated g
-WHERE g.doc_id NOT IN (SELECT doc_b FROM ({mh}) near)
 """
 
 
@@ -1271,101 +960,6 @@ SELECT doc_id,
       'https?://[^ \t\n\r\x0b\f]+', '[URL]', 'g'),
       '\b(?:\d{1,3}\.){3}\d{1,3}\b', '[IP]', 'g')) AS redacted_md5
 FROM aug
-"""
-
-
-def _q_dedup_cross(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cross-corpus exact dedup (operators.dedup.dedup_against): odd-id
-    docs are the "new batch", even-id docs the accumulated training set;
-    keep new docs whose normalized fingerprint the reference lacks.
-    Parity split works at every scale factor."""
-    from quake3_log_analyser_spark.operators.dedup import dedup_against
-
-    docs = _table(spark, sf_dir, "documents")
-    new = docs.filter(F.col("doc_id") % 2 == 1)
-    ref = docs.filter(F.col("doc_id") % 2 == 0)
-    return dedup_against(new, ref).select("doc_id", "source")
-
-
-_ORACLE_DEDUP_CROSS = r"""
-SELECT d.doc_id, d.source
-FROM documents d
-WHERE d.doc_id % 2 = 1 AND NOT EXISTS (
-  SELECT 1 FROM documents r
-  WHERE r.doc_id % 2 = 0
-    AND md5(trim(regexp_replace(lower(r.text), '\s+', ' ', 'g')))
-      = md5(trim(regexp_replace(lower(d.text), '\s+', ' ', 'g')))
-)
-"""
-
-
-def _q_neardup_cross(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cross-corpus MinHash-LSH near-dups (operators.dedup.
-    neardup_against): (new doc, reference doc, jaccard) for odd-id docs
-    near-duplicating even-id docs.  Both corpora banded with the same
-    seeds; the DuckDB twin reproduces signatures, buckets, candidates and
-    the exact-Jaccard verify."""
-    from quake3_log_analyser_spark.operators.dedup import neardup_against
-
-    docs = _table(spark, sf_dir, "documents")
-    new = docs.filter(F.col("doc_id") % 2 == 1)
-    ref = docs.filter(F.col("doc_id") % 2 == 0)
-    pairs = neardup_against(new, ref, n=1, n_hashes=16, bands=8, threshold=0.6)
-    return pairs.select(
-        "doc_id", "ref_doc_id", F.round("jaccard", 4).alias("jaccard")
-    )
-
-
-def _neardup_cross_oracle_sql(
-    n_hashes: int = 16, bands: int = 8, threshold: float = 0.6
-) -> str:
-    """Cross-corpus twin of ``_minhash_oracle_sql``: banding is per-row,
-    so banding the whole table and splitting by id parity in the
-    candidate join equals banding each half separately."""
-    rows = n_hashes // bands
-    sig_exprs = ",\n    ".join(
-        "list_min(list_transform(grams, g -> "
-        f"('0x' || substr(md5('seed{i}:' || g), 1, 15))::BIGINT)) AS s{i}"
-        for i in range(n_hashes)
-    )
-    band_cases = "\n      ".join(
-        f"WHEN {b} THEN "
-        + " || ',' || ".join(f"s{b * rows + r}::VARCHAR" for r in range(rows))
-        for b in range(bands)
-    )
-    return rf"""
-WITH toks AS (
-  SELECT doc_id, list_distinct(regexp_split_to_array(trim(lower(text)), '\s+')) AS grams
-  FROM documents WHERE length(trim(text)) > 0
-),
-sig AS (
-  SELECT doc_id,
-    {sig_exprs}
-  FROM toks
-),
-banded AS (
-  SELECT doc_id, band,
-    CASE band
-      {band_cases}
-    END AS bucket
-  FROM sig, (SELECT unnest(range({bands})) AS band) b
-),
-cands AS (
-  SELECT DISTINCT a.doc_id AS doc_id, b.doc_id AS ref_doc_id
-  FROM banded a JOIN banded b
-    ON a.band = b.band AND a.bucket = b.bucket
-  WHERE a.doc_id % 2 = 1 AND b.doc_id % 2 = 0
-),
-verified AS (
-  SELECT c.doc_id, c.ref_doc_id,
-    len(list_intersect(ta.grams, tb.grams))::DOUBLE /
-    (len(ta.grams) + len(tb.grams) - len(list_intersect(ta.grams, tb.grams))) AS jaccard
-  FROM cands c
-  JOIN toks ta ON ta.doc_id = c.doc_id
-  JOIN toks tb ON tb.doc_id = c.ref_doc_id
-)
-SELECT doc_id, ref_doc_id, round(jaccard, 4) AS jaccard
-FROM verified WHERE jaccard >= {threshold}
 """
 
 
@@ -1423,41 +1017,23 @@ FROM sp GROUP BY doc_id, span_id
 _EXTRA_QUERIES = {
     # Ordering only: if the gate caps how many rows it runs, the cap
     # bites the rows listed last.
-    "clean_corpus": _q_clean_corpus,
     "duplicated_spans": _q_duplicated_spans,
-    "dedup_cross": _q_dedup_cross,
-    "neardup_cross": _q_neardup_cross,
     "pii_redaction": _q_pii_redaction,
     "text_stats": _q_text_stats,
     "fingerprints": _q_fingerprints,
-    "dedup_exact": _q_dedup_exact,
-    "jaccard_pairs": _q_jaccard_pairs,
     "lang_hits": _q_lang_hits,
-    "minhash_lsh": _q_minhash_lsh,
-    "cc_survivors": _q_cc_survivors,
-    "simhash_pairs": _q_simhash_pairs,
     "quality_scores": _q_quality_scores,
     "lang_guess": _q_lang_guess,
-    "dedup_survivors": _q_dedup_survivors,
 }
 
 _EXTRA_ORACLES = {
     "duplicated_spans": _ORACLE_DUP_SPANS,
-    "dedup_cross": _ORACLE_DEDUP_CROSS,
-    "neardup_cross": _neardup_cross_oracle_sql(),
     "pii_redaction": _ORACLE_PII,
     "text_stats": _ORACLE_TEXT_STATS,
     "fingerprints": _ORACLE_FINGERPRINTS,
-    "dedup_exact": _ORACLE_DEDUP_EXACT,
-    "jaccard_pairs": _ORACLE_JACCARD,
     "lang_hits": _ORACLE_LANG_HITS,
-    "minhash_lsh": _minhash_oracle_sql(),
-    "cc_survivors": _cc_survivors_oracle_sql(),
-    "simhash_pairs": _ORACLE_SIMHASH,
     "quality_scores": _ORACLE_QUALITY,
     "lang_guess": _ORACLE_LANG_GUESS,
-    "dedup_survivors": _ORACLE_DEDUP_SURVIVORS_AUG,
-    "clean_corpus": _clean_corpus_oracle_sql(),
 }
 
 _BASE_QUERIES = queries

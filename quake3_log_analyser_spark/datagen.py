@@ -80,7 +80,7 @@ def generate_transcripts(
     """Deterministic transcripts table (TRANSCRIPT_SCHEMA).
 
     ``hot_conv_factor > 1`` makes conv 0 that many times longer than the
-    rest — the skew knob for testing salting/AQE behavior.
+    rest — the skew knob for testing AQE and hot-conversation behavior.
     """
     base = n_convs * turns_per_conv
     hot_extra = (hot_conv_factor - 1) * turns_per_conv

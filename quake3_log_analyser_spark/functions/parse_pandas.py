@@ -25,8 +25,8 @@ from ..schemas import EVENT_COLUMN_NAMES, EVENT_STRUCT
 _INT32_MAX = 2147483647
 _U32_MAX = 4294967295
 
-_U32_RE = r"^\+?[0-9]+$"
-_I32_RE = r"^[+-]?[0-9]+$"
+_U32_RE = r"^\+?[0-9]+\Z"
+_I32_RE = r"^[+-]?[0-9]+\Z"
 
 
 def _num(s: pd.Series, pattern: str, lo: int, hi: int) -> pd.Series:
@@ -41,7 +41,7 @@ def _num(s: pd.Series, pattern: str, lo: int, hi: int) -> pd.Series:
     ok = s.str.match(pattern, na=False)
     norm = s.where(ok).str.replace(r"^([+-]?)0+([0-9])", r"\1\2", regex=True)
     norm = norm.str.replace(r"^\+", "", regex=True)
-    fits = norm.str.match(r"^-?[0-9]{1,18}$", na=False)
+    fits = norm.str.match(r"^-?[0-9]{1,18}\Z", na=False)
     out = pd.to_numeric(norm.where(fits), errors="coerce")
     out = out.where((out >= lo) & (out <= hi))
     return out.astype("Int64")
@@ -172,7 +172,7 @@ def parse_lines_pd(texts: pd.Series) -> pd.DataFrame:
         desc = kp[3]
         dp = desc.str.partition(" killed ")
         killed_ok = dp[1] == " killed "
-        rp = dp[2].str.extract(r"^(.*) by (.*)$")  # rsplit: greedy = last " by "
+        rp = dp[2].str.extract(r"^(.*) by (.*)\Z")  # rsplit: greedy = last " by "
         names_ok = killed_ok & rp[0].notna()
         ok_local = kid.notna() & vid.notna() & k2_ok & rid.notna() & names_ok & desc.notna()
         ok = _submask(m, ok_local)

@@ -1,7 +1,7 @@
 """Text-analysis column functions for training-data pipelines.
 
 All JVM-side expressions (no Python in the hot path): token counting,
-character-class ratios, stopword-based quality scoring, n-gram shingling,
+character-class ratios, stopword-based quality scoring,
 language-ID heuristics and document fingerprinting over a ``text`` column
 (e.g. the ``documents`` table).  Each has a DuckDB-expressible twin used by
 the oracle gate.  The one exception is ``vocab_token_count`` — the
@@ -199,49 +199,9 @@ def normalize_text(text: Column) -> Column:
 
 
 def fingerprint_md5(text: Column) -> Column:
-    """Normalized-content fingerprint (the exact-dedup key)."""
+    """Normalized-content fingerprint: equal for texts that differ only
+    in case and whitespace."""
     return F.md5(normalize_text(text))
-
-
-def word_ngrams(text: Column, n: int = 3) -> Column:
-    """Distinct word n-gram shingles (for Jaccard / MinHash).  The token
-    array is bound once per row (``bind_once``) — slicing it inside the
-    per-window lambda would otherwise re-tokenize the document per
-    window, O(len^2).
-
-    ``n == 1`` short-circuits to ``array_distinct`` over the lowered
-    tokens: a 1-gram IS the token, so the generic
-    ``transform(sequence(...), slice + concat_ws)`` window builder — an
-    interpreted higher-order chain allocating a slice per token — is pure
-    overhead (measured r7: 5.9 s -> 0.6 s for the 200k-doc neardup
-    shingle pass).  Identical output: ``concat_ws(" ", slice(toks, i,
-    1)) == toks[i]`` and ``array_distinct`` keeps first-occurrence order
-    either way."""
-    if n == 1:
-        return F.array_distinct(
-            F.transform(ws_tokens(text), lambda w: F.lower(w))
-        )
-
-    def _grams(toks: Column) -> Column:
-        # per-window tokens via n element_at reads, NOT F.slice: the
-        # slice allocates an array per window inside this interpreted
-        # higher-order chain, and concat_ws over n scalar args builds
-        # the identical gram string (r7; same trick as duplicated_spans)
-        k = F.size(toks)
-        return F.array_distinct(
-            F.when(k < n, F.array().cast("array<string>")).otherwise(
-                F.transform(
-                    F.sequence(F.lit(1), k - n + 1),
-                    lambda i: F.concat_ws(
-                        " ", *[F.element_at(toks, i + j) for j in range(n)]
-                    ),
-                )
-            )
-        )
-
-    return bind_once(
-        F.transform(ws_tokens(text), lambda w: F.lower(w)), _grams
-    )
 
 
 def bind_once(col: Column, f) -> Column:
@@ -263,39 +223,6 @@ def hash60(col: Column) -> Column:
     xxhash64) so an external SQL engine recomputes identical keys —
     DuckDB twin: ``('0x' || substr(md5(x), 1, 15))::BIGINT``."""
     return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
-
-
-def minhash_hash(shingle: Column, seed: int) -> Column:
-    """Per-seed shingle hash: first 15 hex chars (60 bits) of
-    ``md5('seed<i>:' ++ shingle)`` as a long.
-
-    md5 (not xxhash64) so an external SQL engine can recompute the exact
-    signature — DuckDB twin:
-    ``('0x' || substr(md5('seed<i>:' || s), 1, 15))::BIGINT``.
-    60 bits keeps the value inside int64 on both engines.
-    """
-    return F.conv(
-        F.substring(F.md5(F.concat(F.lit(f"seed{seed}:"), shingle)), 1, 15), 16, 10
-    ).cast("long")
-
-
-def minhash_signature(shingles: Column, n_hashes: int = 16) -> Column:
-    """MinHash signature: per seed, min over ``minhash_hash(shingle, seed)``.
-
-    Empty shingle sets get a NULL signature that never collides.
-
-    NB: the per-seed lambda MUST take exactly one parameter (see ``_hits``):
-    a ``lambda s, i=i:`` two-param form silently receives the ELEMENT INDEX
-    as ``i``, destroying the per-seed independence of the hash family.
-    """
-
-    def _seeded(i: int):
-        return lambda s: minhash_hash(s, i)
-
-    sig = F.array(
-        *[F.array_min(F.transform(shingles, _seeded(i))) for i in range(n_hashes)]
-    )
-    return F.when(F.size(shingles) > 0, sig)
 
 
 # -- PII scrubbing (emails / URLs / IPv4) ------------------------------------

@@ -21,7 +21,7 @@ and ``arrow`` otherwise (``choose_parser``):
 - ``parser="pandas"`` — Arrow-batched pandas UDF; same barrier as arrow
   with ~3x slower string kernels, kept as a semantic cross-check.
 
-Both keep parse failures in-band as ``parse_error_kind``/``parse_error``
+All three keep parse failures in-band as ``parse_error_kind``/``parse_error``
 columns (the reference's ``Quake3Events::Error`` variant,
 model/src/quake3_events.rs:25): a bad row never aborts the pipeline.
 """

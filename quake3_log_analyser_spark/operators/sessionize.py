@@ -23,7 +23,24 @@ per-row Python, and a NAIVE running-sum-of-InitGame would be WRONG
 
 Scale notes: this is the pipeline's one unavoidable shuffle; bucketing
 the source table by ``conv_id`` (see sources/) makes it shuffle-free, and
-hot conversations are bounded by per-conv state of O(1).
+hot conversations are bounded by per-conv state of O(1).  No stage salts
+its keys, for two reasons:
+
+* **The sessionize window** (``partitionBy(conv_id)``): cannot be salted
+  — match assembly is stateful over the FULL ordered turn sequence of a
+  conversation, so splitting a conv across tasks breaks the semantics.
+  The posture is (a) the bucketed ``session_first`` layout that removes
+  the shuffle entirely and (b) measured tolerance: one conversation
+  holding 10% of all turns runs at parity with uniform input
+  (BENCH/BASELINE.md round 3), because a window task of a few hundred
+  thousand rows is far below the straggler threshold at any realistic
+  turns-per-conversation.
+
+* **The order-dependent replay fold** (one ``mapInArrow`` stage over rows
+  hash-partitioned by conv and sorted by turn, operators/summarize.py):
+  same constraint and same posture as the window.  A hot conversation
+  streams through its task in Arrow batches with only its O(players) fold
+  state held between them, so its size costs time, not memory.
 """
 
 from __future__ import annotations

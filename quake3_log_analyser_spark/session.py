@@ -466,17 +466,8 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # let the planner choose a shuffled-hash join when its size
-        # conditions hold (guide §3.1/§9): no sort on either side, build
-        # side bounded by the planner's per-partition size gate, AQE
-        # skew-split applies to SHJ as to SMJ.  Measured r7 (paired,
-        # in-session): LSH band join −5%, hot-fingerprint survivor join
-        # −3%; env-overridable for deployments that prefer SMJ's
-        # graceful spill on misestimated stats.
-        .config(
-            "spark.sql.join.preferSortMergeJoin",
-            os.environ.get("SPARK_GRAFT_PREFER_SMJ", "false"),
-        )
+        # join strategy stays at Spark's defaults: every pipeline join is
+        # an explicit F.broadcast (operators/enrich.py)
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # permissive parse semantics (null-on-bad-cast) mirror the
@@ -521,10 +512,7 @@ def get_spark(
         # zstd parquet output (guide §6): markedly better ratio than
         # snappy at similar decode speed — fewer bytes written/stored/
         # rescanned for every materialized sink and index
-        .config(
-            "spark.sql.parquet.compression.codec",
-            os.environ.get("SPARK_GRAFT_PARQUET_CODEC", "zstd"),
-        )
+        .config("spark.sql.parquet.compression.codec", "zstd")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", driver_memory())
         # single-node shuffle through the (slow, ~200 MB/s) VM disk is the

@@ -6,6 +6,9 @@ A path resolves from the repo root, from the package root, or as a
 basename that exactly one package file has (COVERAGE writes
 ``parse_expr.py``).  ``{a,b}`` brace lists expand to one path each.
 
+Every ``SPARK_GRAFT_*`` variable the package or the job reads is named
+in README.md, and README names no other.
+
 The documented ``spark-submit`` commands pass the driver JVM the same
 options a plain-Python launch gets, ``session.DRIVER_JAVA_OPTS``, and the
 class archive's, which the shell takes from ``session.submit_env()``."""
@@ -82,3 +85,20 @@ def test_submit_commands_pass_the_session_jvm_options(doc):
     assert set(found) == {f"{DRIVER_JAVA_OPTS} $ARCHIVE_OPTS"}
     assert SUBMIT_ENV in text, f"{doc} does not eval session.submit_env()"
     assert text.index(SUBMIT_ENV) < text.index("--driver-java-options")
+
+
+KNOB = re.compile(r"SPARK_GRAFT_[A-Z_]+")
+
+
+def test_every_env_knob_is_documented_in_readme():
+    """A knob lands with its README row, and a deleted knob takes the row
+    with it."""
+    read = {
+        name
+        for top in (PKG, ROOT / "jobs")
+        for f in top.rglob("*.py")
+        for name in KNOB.findall(f.read_text())
+    }
+    documented = set(KNOB.findall((ROOT / "README.md").read_text()))
+    assert sorted(read - documented) == [], "knobs README does not name"
+    assert sorted(documented - read) == [], "README names knobs no code reads"

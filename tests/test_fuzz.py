@@ -22,20 +22,21 @@ from hypothesis import strategies as st
 
 from quake3_log_analyser_spark.sources.transcripts import transcripts_from_lines
 
-# payload text: no newlines (line-oriented source), allow the grammar's
-# own metacharacters (colons, backslashes, spaces) so the parsers'
-# splitting logic gets hit hard — AND the control characters the round-3
-# alphabet excluded (tab / NUL / vertical tab): the parsers ltrim SPACES
-# only and sessionize_raw's marker regex anchors on ' *', so any
-# tab-indentation divergence is visible only if tabs reach the fuzzer
+# payload text: a transcript turn is free text and can span lines, so
+# '\n' and '\r' are in (each regex engine reads a final line terminator
+# its own way); allow the grammar's own metacharacters (colons,
+# backslashes, spaces) so the parsers' splitting logic gets hit hard — AND
+# the control characters the round-3 alphabet excluded (tab / NUL /
+# vertical tab): the parsers ltrim SPACES only and sessionize_raw's marker
+# regex anchors on ' *', so any tab-indentation divergence is visible only
+# if tabs reach the fuzzer
 _payload = st.text(
     alphabet=st.one_of(
         st.characters(
             codec="utf-8",
-            exclude_characters="\n\r",
             categories=("L", "N", "P", "S", "Zs"),
         ),
-        st.sampled_from("\t\x00\x0b\x0c"),
+        st.sampled_from("\t\x00\x0b\x0c\n\r"),
     ),
     max_size=24,
 )
@@ -228,7 +229,7 @@ def test_parsers_agree_on_seeded_random_corpus(spark):
     from quake3_log_analyser_spark.schemas import EVENT_COLUMN_NAMES
 
     rng = random.Random(0xC0FFEE)
-    alphabet = "abz AZ09:\\-_+<>{}()'\"|.é世\t\x00\x0b"
+    alphabet = "abz AZ09:\\-_+<>{}()'\"|.é世\t\x00\x0b\n\r"
 
     def rtext(n):
         return "".join(rng.choice(alphabet) for _ in range(rng.randrange(n)))
@@ -264,13 +265,17 @@ def test_parsers_agree_on_seeded_random_corpus(spark):
         elif k == 8:
             lines.append(f" 0:01 {rtext(12)}: {rtext(20)}")  # random event name
         else:
-            # mutate a valid kill line: drop OR duplicate a random char
+            # mutate a valid kill line: drop OR duplicate a random char, OR
+            # put a line terminator after it (after an id, or at the end)
             base = " 0:01 Kill: 2 3 7: A killed B by MOD_ROCKET"
             i = rng.randrange(len(base))
-            if rng.random() < 0.5:
+            r = rng.random()
+            if r < 1 / 3:
                 lines.append(base[:i] + base[i + 1:])   # drop
-            else:
+            elif r < 2 / 3:
                 lines.append(base[:i + 1] + base[i:])   # duplicate
+            else:
+                lines.append(base[:i + 1] + rng.choice("\n\r") + base[i + 1:])
 
     t = transcripts_from_lines(spark, lines, "megafuzz")
     results = {}

@@ -215,8 +215,10 @@ EDGE_CASES = [
      {"event_type": "Kill", "killer_name": "", "victim_name": "B"}),
     ("by_overlap", " 0:01 Kill: 1 2 3: A killed B by by MOD_X",
      {"event_type": "Kill", "victim_name": "B by", "reason_name": "MOD_X"}),
-    # Java's `$` matched before a final line terminator, RE2 and Python
-    # do not: the reason keeps its '\r', an id with one is no number
+    # a trailing line terminator is part of the last field: the reason
+    # keeps its '\r', an id with one is no number (Java's `$` matches
+    # before a final '\r' or '\n', Python's before a final '\n', RE2's
+    # at the very end only, so every parser anchors at the true end)
     ("kill_cr", " 0:01 Kill: 1 2 3: A killed B by MOD_X\r",
      {"event_type": "Kill", "victim_name": "B", "reason_name": "MOD_X\r"}),
     ("kill_id_cr", " 0:01 Kill: 1\r 2 3: A killed B by MOD_X",
@@ -225,6 +227,10 @@ EDGE_CASES = [
      {"parse_error_kind": "UnparseableNumber"}),
     ("init_cr", " 0:00 InitGame: \\fraglimit\\20\r",
      {"event_type": "InitGame", "frag_limit": None}),
+    ("connect_nl", " 0:01 ClientConnect: 7\n",
+     {"parse_error_kind": "UnparseableNumber"}),
+    ("kill_nl", " 0:01 Kill: 1 2 3: A killed B by MOD_X\n",
+     {"parse_error_kind": "UnknownDataFormat"}),
     # `.` matches no newline: a victim holding one has no " by " match
     ("victim_nl", " 0:01 Kill: 1 2 3: A killed B\nC by MOD_X",
      {"parse_error_kind": "UnknownDataFormat"}),

@@ -1,11 +1,8 @@
 """Round-7 optimization parity pins.
 
 Every r7 change is a PHYSICAL rewrite that must leave results
-byte-identical; these tests pin the equivalences the rewrites rely on:
+byte-identical; this test pins the equivalence the span rewrite relies on:
 
-* MinHash banding: the codegen explode/min-agg signature equals the
-  round-6 higher-order ``minhash_signature`` form (hex-string min ==
-  numeric min for fixed-length lowercase hex).
 * Span windows: ``xxhash64(t1..tn)`` / ``concat_ws(" ", t1..tn)`` over
   ``element_at`` reads equal the array-slice forms.
 """
@@ -27,42 +24,6 @@ def docs(spark):
         (5, "one"),
     ]
     return spark.createDataFrame(rows, "doc_id long, text string")
-
-
-def test_banded_minhash_matches_round6_form(spark, docs):
-    from quake3_log_analyser_spark.functions.text import minhash_signature
-    from quake3_log_analyser_spark.operators.dedup import (
-        _banded_minhash,
-        _shingled,
-    )
-
-    n_hashes, bands = 16, 4
-    rows = n_hashes // bands
-    sh = _shingled(docs, "text", "doc_id", 2)
-    new = _banded_minhash(sh, n_hashes, bands)
-    # the r6 higher-order form, verbatim
-    sig = sh.withColumn("sig", minhash_signature(F.col("grams"), n_hashes))
-    old = sig.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.concat_ws(
-                            ",",
-                            F.transform(
-                                F.slice("sig", b * rows + 1, rows),
-                                lambda v: v.cast("string"),
-                            ),
-                        ).alias("bucket"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select("doc_id", "bb.band", "bb.bucket")
-    assert sorted(map(tuple, new.collect())) == sorted(map(tuple, old.collect()))
 
 
 def test_span_window_key_matches_slice_forms(spark, docs):

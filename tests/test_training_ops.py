@@ -1,203 +1,10 @@
-"""Training-data operator tests: dedup (exact / jaccard / minhash-LSH /
-simhash), text analysis, corpus composition."""
+"""Training-data operator tests: text analysis, PII redaction, vocab
+token counts and repeated-substring spans."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
-
-
-@pytest.fixture(scope="module")
-def docs(spark):
-    base = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    # inject controlled duplicates: exact copy (id+10000) and a whitespace/
-    # case variant (id+20000) of the first 20 docs
-    subset = base.filter(F.col("doc_id") < 20)
-    exact = subset.select(
-        (F.col("doc_id") + 10000).alias("doc_id"), "text", "lang", "source", "n_chars"
-    )
-    fuzzy = subset.select(
-        (F.col("doc_id") + 20000).alias("doc_id"),
-        F.upper(F.concat(F.lit("  "), F.col("text"), F.lit("   "))).alias("text"),
-        "lang", "source", "n_chars",
-    )
-    return base.unionByName(exact).unionByName(fuzzy).cache()
-
-
-def test_exact_dedup_finds_injected_dups(spark, docs):
-    from quake3_log_analyser_spark.operators.dedup import exact_duplicates
-
-    groups = exact_duplicates(docs).collect()
-    # each of the 20 originals now has exact + case/whitespace variants
-    # (normalization lowers + collapses whitespace -> all three collide)
-    assert len(groups) == 20
-    for g in groups:
-        assert g["n_docs"] == 3
-
-
-def test_dedup_survivors_maps_removed_to_min_id(spark, docs):
-    from quake3_log_analyser_spark.operators.dedup import dedup_survivors
-
-    mapping = {r["doc_id"]: r["kept_doc_id"] for r in dedup_survivors(docs).collect()}
-    # both injected variants collapse onto the original (minimum id)
-    for i in range(20):
-        assert mapping[i + 10000] == i
-        assert mapping[i + 20000] == i
-    assert not any(k < 10000 for k in mapping), "originals must survive"
-
-
-def test_jaccard_pairs_finds_fuzzy_dups(spark, docs):
-    from quake3_log_analyser_spark.operators.dedup import jaccard_pairs
-
-    pairs = jaccard_pairs(docs, n=1, threshold=0.999).collect()
-    got = {(p["doc_a"], p["doc_b"]) for p in pairs}
-    for i in range(20):
-        assert (i, i + 10000) in got  # exact copy has J = 1.0
-        assert (i, i + 20000) in got  # case variant has J = 1.0 after lower()
-
-
-def test_minhash_lsh_recall_vs_exact(spark, docs):
-    """LSH candidates must recover nearly all high-Jaccard pairs."""
-    from quake3_log_analyser_spark.operators.dedup import (
-        jaccard_pairs,
-        minhash_lsh_pairs,
-    )
-
-    exact = {
-        (p["doc_a"], p["doc_b"])
-        for p in jaccard_pairs(docs, n=3, threshold=0.8).collect()
-    }
-    lsh = {
-        (p["doc_a"], p["doc_b"])
-        for p in minhash_lsh_pairs(
-            docs, n=3, n_hashes=16, bands=8, threshold=0.8
-        ).collect()
-    }
-    assert lsh <= exact or not exact, "LSH must not invent pairs (same verify)"
-    if exact:
-        recall = len(lsh & exact) / len(exact)
-        assert recall >= 0.95, f"LSH recall too low: {recall}"
-
-
-def test_simhash_near_dups(spark, docs):
-    from quake3_log_analyser_spark.operators.dedup import simhash_pairs
-
-    pairs = simhash_pairs(docs, max_hamming=0).collect()
-    got = {(p["doc_a"], p["doc_b"]) for p in pairs}
-    for i in range(3):
-        assert (i, i + 10000) in got, "identical docs share the simhash"
-
-
-def test_simhash_banding_recall_is_total(spark, docs):
-    """Blocking must find EVERY pair within max_hamming (pigeonhole over
-    max_hamming+1 derived bands) — compared against brute-force xor."""
-    from quake3_log_analyser_spark.operators.dedup import simhash, simhash_pairs
-
-    small = docs.filter((F.col("doc_id") % 7 == 0) | (F.col("doc_id") >= 10000))
-    sig = simhash(small).filter(F.col("simhash").isNotNull())
-    a, b = sig.alias("a"), sig.alias("b")
-    brute = {
-        (r["doc_a"], r["doc_b"]): r["hamming"]
-        for r in a.join(b, F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))).alias(
-                "hamming"
-            ),
-        )
-        .filter(F.col("hamming") <= 6)
-        .collect()
-    }
-    blocked = {
-        (r["doc_a"], r["doc_b"]): r["hamming"]
-        for r in simhash_pairs(small, max_hamming=6).collect()
-    }
-    assert blocked == brute
-
-    with pytest.raises(ValueError):
-        simhash_pairs(small, max_hamming=64)
-
-
-def test_jaccard_threshold_guard(spark, docs):
-    """Thresholds below 0.5 break the log2-bucket completeness -> rejected."""
-    from quake3_log_analyser_spark.operators.dedup import jaccard_pairs
-
-    with pytest.raises(ValueError, match="threshold >= 0.5"):
-        jaccard_pairs(docs, threshold=0.4)
-
-
-def test_connected_components_shapes_and_log_convergence(spark):
-    """Min-label propagation + pointer jumping: chain, star and isolated
-    pair resolve to cluster-min labels, and a 200-node path converges
-    within 15 rounds — pure propagation would need ~199, so this pins the
-    O(log diameter) jump step actually working."""
-    from quake3_log_analyser_spark.operators.dedup import (
-        connected_components,
-        neardup_survivors_cc,
-    )
-
-    pairs = [(10, 11), (11, 12), (12, 13),  # chain
-             (1, 3), (2, 3),                # star: 2 near 3, not near 1
-             (20, 21)]                      # isolated pair
-    pairs += [(200 + i, 201 + i) for i in range(199)]  # long path
-    df = spark.createDataFrame(pairs, "doc_a long, doc_b long")
-
-    comp = {
-        r["node"]: r["component"]
-        for r in connected_components(df, max_rounds=15).collect()
-    }
-    assert {comp[v] for v in (10, 11, 12, 13)} == {10}
-    assert {comp[v] for v in (1, 2, 3)} == {1}
-    assert {comp[v] for v in (20, 21)} == {20}
-    assert {comp[200 + i] for i in range(200)} == {200}
-
-    dropped = {
-        r["doc_id"]: r["kept_doc_id"]
-        for r in neardup_survivors_cc(df).collect()
-    }
-    # cluster-exact: 2 is dropped for 1 even though the only verified pair
-    # is (2,3) — the star is ONE cluster (greedy keep-min would keep 2)
-    assert dropped[2] == 1 and dropped[3] == 1
-    assert 1 not in dropped and 10 not in dropped and 20 not in dropped
-    assert dropped[13] == 10 and dropped[21] == 20
-
-
-def test_clean_corpus_cc_survivorship(spark, docs):
-    """survivorship='cc' keeps exactly one doc per near-dup cluster: its
-    drop set contains the greedy rule's (every doc_b is a non-min member
-    of its component) and the kept set has one survivor per component."""
-    from quake3_log_analyser_spark.operators.corpus import clean_corpus
-    from quake3_log_analyser_spark.operators.dedup import (
-        connected_components,
-        minhash_lsh_pairs,
-    )
-
-    kw = dict(min_quality=0.0, langs=("en", "es", "de", "fr", "und"),
-              n=1, n_hashes=16, bands=8, threshold=0.6)
-    greedy = {r["doc_id"] for r in clean_corpus(docs, **kw).collect()}
-    cc = {r["doc_id"] for r in clean_corpus(docs, survivorship="cc", **kw).collect()}
-    assert cc <= greedy
-
-    # reconstruct the pair graph over the gated set the same way
-    # clean_corpus does and check one-survivor-per-component
-    from quake3_log_analyser_spark.operators.dedup import dedup_survivors
-
-    removed = dedup_survivors(docs).select("doc_id")
-    gated = docs.join(removed, "doc_id", "left_anti")
-    pairs = minhash_lsh_pairs(gated, n=1, n_hashes=16, bands=8, threshold=0.6)
-    comp = {
-        r["node"]: r["component"] for r in connected_components(pairs).collect()
-    }
-    by_comp = {}
-    for v, c in comp.items():
-        by_comp.setdefault(c, set()).add(v)
-    for c, members in by_comp.items():
-        assert min(members) == c
-        assert members & cc == {c}, (c, sorted(members & cc))
-
-    with pytest.raises(ValueError, match="survivorship"):
-        clean_corpus(docs, survivorship="transitive", **kw)
 
 
 def test_text_functions(spark):
@@ -252,60 +59,6 @@ def test_lang_guess_on_documents_table(spark):
     assert counts.get("en", 0) > counts.get("und", 0)
 
 
-def test_salted_join_equals_plain_join(spark):
-    """salted_join must produce exactly the plain join's multiset under a
-    pathologically hot key (one key holds ~90% of the big side)."""
-    from quake3_log_analyser_spark.operators.skew import salted_join
-
-    big = spark.range(1000).select(
-        F.when(F.col("id") < 900, F.lit("hot")).otherwise(
-            F.concat(F.lit("k"), F.col("id"))
-        ).alias("k"),
-        F.col("id").alias("payload"),
-    )
-    small = big.groupBy("k").agg(F.min("payload").alias("m"))
-    plain = {(r["k"], r["payload"], r["m"]) for r in big.join(small, "k").collect()}
-    salted = [
-        (r["k"], r["payload"], r["m"])
-        for r in salted_join(big, small, "k", salts=8).collect()
-    ]
-    assert set(salted) == plain and len(salted) == 1000
-    # left joins keep unmatched rows exactly once
-    small2 = small.filter(F.col("k") != "hot")
-    left = salted_join(big, small2, "k", salts=8, how="left").collect()
-    assert len(left) == 1000
-    assert sum(1 for r in left if r["m"] is None) == 900
-
-
-def test_dedup_survivors_salted_parity(spark, docs):
-    """The salted survivor join returns the identical mapping — including
-    with an injected viral doc (300 copies of one text)."""
-    from quake3_log_analyser_spark.operators.dedup import dedup_survivors
-
-    viral = spark.range(300).select(
-        (F.col("id") + 50000).alias("doc_id"),
-        F.lit("the same viral text everywhere").alias("text"),
-        F.lit("en").alias("lang"), F.lit("x").alias("source"),
-        F.lit(30).alias("n_chars"),
-    )
-    corpus = docs.unionByName(viral)
-    plain = {(r["doc_id"], r["kept_doc_id"]) for r in dedup_survivors(corpus).collect()}
-    salted = {(r["doc_id"], r["kept_doc_id"])
-              for r in dedup_survivors(corpus, salts=8).collect()}
-    assert salted == plain
-    assert sum(1 for d, k in salted if k == 50000) == 299  # viral collapses
-
-
-def test_salted_join_rejects_multiplicity_breaking_how(spark):
-    from quake3_log_analyser_spark.operators.skew import salted_join
-
-    df = spark.range(4).select(F.lit("k").alias("k"), F.col("id").alias("v"))
-    with pytest.raises(ValueError, match="multiplicity"):
-        salted_join(df, df, "k", salts=4, how="right")
-    with pytest.raises(ValueError, match="multiplicity"):
-        salted_join(df, df, "k", salts=4, how="full_outer")
-
-
 def test_parse_pedantic_rejects_non_arrow_parsers(spark):
     from quake3_log_analyser_spark.operators.parse import parse_transcripts
     from quake3_log_analyser_spark.sources.transcripts import transcripts_from_lines
@@ -313,38 +66,6 @@ def test_parse_pedantic_rejects_non_arrow_parsers(spark):
     t = transcripts_from_lines(spark, [" 0:00 ShutdownGame:"], "c0")
     with pytest.raises(ValueError, match="arrow"):
         parse_transcripts(t, parser="expr", pedantic=True)
-
-
-def test_clean_corpus_composition(spark, docs):
-    """The integrative cleaning pipeline: injected exact copies collapse to
-    their originals, every kept doc clears the gates, and no verified
-    near-dup pair survives intact."""
-    from quake3_log_analyser_spark.operators.corpus import clean_corpus
-    from quake3_log_analyser_spark.operators.dedup import minhash_lsh_pairs
-
-    kept = clean_corpus(
-        docs, min_quality=0.0, langs=("en", "es", "de", "fr", "und"),
-        n=1, n_hashes=16, bands=8, threshold=0.6,
-    ).collect()
-    ids = {r["doc_id"] for r in kept}
-    # injected exact copies (+10000/+20000) never survive: exact dedup
-    # keeps the minimum id
-    assert not any(i >= 10000 for i in ids)
-    # with permissive gates the originals that aren't near-dups survive
-    assert ids, "cleaning must not empty the corpus under permissive gates"
-    # no surviving near-dup pair: re-run LSH over the kept set
-    survivors = docs.filter(F.col("doc_id").isin(list(ids)))
-    pairs = minhash_lsh_pairs(
-        survivors, n=1, n_hashes=16, bands=8, threshold=0.6
-    ).collect()
-    assert pairs == [], f"near-dup pair survived cleaning: {pairs[:3]}"
-
-
-def test_clean_corpus_gates(spark, docs):
-    from quake3_log_analyser_spark.operators.corpus import clean_corpus
-
-    kept = clean_corpus(docs, min_quality=0.45, langs=("en",)).collect()
-    assert all(r["quality"] >= 0.45 and r["lang_guess"] == "en" for r in kept)
 
 
 def test_vocab_token_count_greedy_prefix_and_unk_runs(spark):
@@ -401,47 +122,6 @@ def test_pii_redaction_patterns(spark):
     assert rows[1]["red"] == "mail [EMAIL] and see [URL] from [IP]"
     assert (rows[2]["e"], rows[2]["u"], rows[2]["i"]) == (0, 0, 0)
     assert rows[2]["red"] == rows[2]["text"], "pii-free text must be unchanged"
-
-
-def test_dedup_against_drops_already_seen_content(spark):
-    from quake3_log_analyser_spark.operators.dedup import dedup_against
-
-    ref = spark.createDataFrame(
-        [(0, "the shared document body"), (1, "reference only text")],
-        "doc_id long, text string",
-    )
-    new = spark.createDataFrame(
-        [
-            (10, "  THE  shared   Document body "),  # normalized dup of 0
-            (11, "genuinely new content"),
-            (12, "reference only text"),             # verbatim dup of 1
-        ],
-        "doc_id long, text string",
-    )
-    kept = {r["doc_id"] for r in dedup_against(new, ref).collect()}
-    assert kept == {11}
-    # columns pass through untouched, no fingerprint residue
-    assert set(dedup_against(new, ref).columns) == {"doc_id", "text"}
-
-
-def test_neardup_against_finds_cross_corpus_neighbors(spark):
-    from quake3_log_analyser_spark.operators.dedup import neardup_against
-
-    base = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
-    ref = spark.createDataFrame(
-        [(0, base), (1, "totally different words entirely here now")],
-        "doc_id long, text string",
-    )
-    new = spark.createDataFrame(
-        [(10, base + " lambda"), (11, "unrelated fresh material nothing shared")],
-        "doc_id long, text string",
-    )
-    pairs = neardup_against(new, ref, n=1, n_hashes=16, bands=8, threshold=0.5)
-    got = {(r["doc_id"], r["ref_doc_id"]): r["jaccard"] for r in pairs.collect()}
-    assert (10, 0) in got and got[(10, 0)] > 0.9
-    assert all(d != 11 for d, _ in got)
-    # directionality: only (new, ref) pairs, never ref-internal ones
-    assert all(d >= 10 and rd < 10 for d, rd in got)
 
 
 # -- cross-document repeated-substring spans ---------------------------------
@@ -535,27 +215,6 @@ def test_duplicated_spans_hash_modes_agree(spark):
         for r in duplicated_spans(d, n=8, gram_hash="md5").collect()
     )
     assert fast == md5 and len(fast) == 2
-
-
-def test_minhash_lsh_slim_matches_carry_form(spark, docs):
-    """The round-6 slim band join (ids only; grams join back onto the
-    deduplicated pairs) returns exactly the round-5 gram-carrying form's
-    verified pairs."""
-    from quake3_log_analyser_spark.operators.dedup import (
-        minhash_lsh_pairs,
-        minhash_lsh_pairs_carry,
-    )
-
-    slim = sorted(
-        map(tuple, minhash_lsh_pairs(docs, n=1, n_hashes=16, bands=8,
-                                     threshold=0.6).collect())
-    )
-    carry = sorted(
-        map(tuple, minhash_lsh_pairs_carry(docs, n=1, n_hashes=16, bands=8,
-                                           threshold=0.6).collect())
-    )
-    assert slim == carry
-    assert len(slim) > 0
 
 
 def test_vocab_token_count_broadcast_handle(spark):
