@@ -21,7 +21,7 @@ reference's config-driven pipeline menu, summary_logic.rs:44-60):
   kernels.  Per-conv state is O(players); conversations are independent,
   so this parallelizes perfectly across executors.  One stage rather than
   a parse stage plus a grouped-map fold, because each Python worker task
-  has a fixed cost of 0.1-0.2 CPU-s (session.py).
+  has a fixed CPU cost whatever its rows (session.py).
 
 Output ordering parity: the reference renders BTreeMap/BTreeSet, i.e.
 lexicographic key order — reproduced with ``array_sort`` over

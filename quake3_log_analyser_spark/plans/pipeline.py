@@ -16,10 +16,11 @@ Path selection:
   ``(conv_id, turn_idx)`` sort within partitions, then one ``mapInArrow``
   that parses each batch and folds it (operators.summarize).
 
-Each Python worker task costs a fixed 0.1-0.2 CPU-s whatever its rows
-(session.py), so the fold path has one Python stage rather than a parse
-stage plus a grouped-map stage.  Measured on a 4-core host with the
-benchmark's nightly job (42.8k turns, ``local[4]``), this plan plus the
+Each Python worker task has a fixed CPU cost whatever its rows
+(session.py gives it), so the fold path has one Python stage rather than
+a parse stage plus a grouped-map stage.  Measured on a 4-core host with
+the benchmark's nightly job (42.8k turns, ``local[4]``) and pyspark's
+stock worker daemon, this plan plus the
 Arrow-built dictionaries (session.local_table) against the two-stage
 plan: Python tasks per warm run 17 -> 5, warm-run CPU 9.8 -> 6.3 s
 (median of 9 seeds), Python worker time 4.2-5.1 -> 2.2-2.3 s and Arrow
@@ -133,23 +134,24 @@ def summarize_matches(
 
     # EARLY DISCARD on RAW text (the reference's events_translation.rs
     # "only pay for what you use", moved BELOW the parse): each summary
-    # path consumes only a few event names, so a cheap JVM substring
-    # filter drops every other line BEFORE the parse tree runs.  Safe
-    # because it is an OVER-approximation (a say line containing " Kill:"
-    # passes and the parse still classifies it) that never drops a
-    # consumed row: match_id/in_game derive from the retained markers and
-    # turn_idx values are preserved.  Referencing only `text`, the
-    # predicate pushes to the scan with no re-inlining hazard.  Skipped
-    # when pedantic: the feed gate must see ALL lines.  Measured at 16M
-    # turns x 32 cores: 16.7 s -> 14.2 s e2e on the kill-heavy synthetic
-    # mix (larger on chat-heavy real logs).
+    # path consumes only a few event names, so one anchored JVM regex
+    # drops every other line BEFORE the parse runs.  It matches the event
+    # name exactly where the parsers find it (after leading spaces and
+    # the first space-free token, as sessionize_raw's marker regex does),
+    # so it never drops a consumed row, and a say line holding " Kill:"
+    # does not pass (tests/test_early_discard.py pins both).
+    # match_id/in_game derive from the retained markers and turn_idx
+    # values are preserved.  Referencing only `text`, the predicate
+    # pushes to the scan with no re-inlining hazard.  Skipped when
+    # pedantic: the feed gate must see ALL lines.  Not one
+    # `like('% Tok:%')` per token: each becomes Contains(' Tok:'), which
+    # tries a match at every space of every line once per token.  A warm
+    # full-menu summarize_matches call on the benchmark's nightly input
+    # (4-core host, one JVM, the two filters alternating, 6 calls each)
+    # cost a median 1.34 CPU-s with that chain and 0.95 with the regex,
+    # with identical rows; the kill-heavy kills call read 3.51 and 3.67.
     if early_discard and not stop_on_feed_errors:
-        tokens = ["Kill", "InitGame", "Exit", "ShutdownGame"]
-        if "player_resolutions" in ops:
-            tokens += ["ClientConnect", "ClientUserinfoChanged", "ClientDisconnect"]
-        if "reported_scores" in ops:
-            tokens.append("score")
-        narrowed_in = narrowed_in.filter(_early_discard(*tokens))
+        narrowed_in = narrowed_in.filter(_early_discard(*discard_tokens(ops)))
 
     if "player_resolutions" in ops:
         # the arrow parser runs inside the fold stage (after the shuffle,
@@ -215,13 +217,20 @@ def summarize_matches(
     return out.select(*named(*cols))
 
 
+def discard_tokens(ops: frozenset[str]) -> tuple[str, ...]:
+    """The event names whose lines the summary path of ``ops`` reads."""
+    tokens = ("Kill", "InitGame", "Exit", "ShutdownGame")
+    if "player_resolutions" in ops:
+        tokens += ("ClientConnect", "ClientUserinfoChanged", "ClientDisconnect")
+    if "reported_scores" in ops:
+        tokens += ("score",)
+    return tokens
+
+
 @per_jvm
 def _early_discard(*tokens: str) -> Column:
-    """Keep a line if its text holds `` <token>:`` for any token."""
-    keep = F.col("text").like(f"% {tokens[0]}:%")
-    for tok in tokens[1:]:
-        keep = keep | F.col("text").like(f"% {tok}:%")
-    return keep
+    """Keep a line if its event name is one of ``tokens``."""
+    return F.col("text").rlike(rf"^ *[^ ]+ (?:{'|'.join(tokens)}):")
 
 
 @per_jvm

@@ -6,14 +6,20 @@ splitting + partition coalescing), shuffle partitions sized to the
 parallelism at hand, Arrow enabled for every pandas-UDF boundary, and UTC
 pinned so results compare bit-stably against external oracles.
 
-Every Python worker task costs a fixed 0.1-0.2 CPU-s whatever its row
-count: on Python 3.11, ``importlib.invalidate_caches()`` in the worker's
-``setup_spark_files`` re-reads the directory of ``pyspark.zip`` once per
-zip importer (about 16) on every task.  On small and medium inputs that
-fixed cost outweighs the Arrow parse kernels, so plans keep Python stages
-few (one fused fold stage, not a parse stage plus a grouped-map stage),
-and driver-side tables are built by ``local_table`` as Arrow local
-relations, which start no Python worker at all.
+Every Python worker task has a fixed CPU cost whatever its row count.
+Under pyspark's stock daemon on Python 3.11, ``importlib.invalidate_caches()``
+in the worker's ``setup_spark_files`` re-reads the directory of
+``pyspark.zip`` (1,328 entries) once per zip importer (about 16) on every
+task.  A launch from ``get_spark`` runs its workers under
+``worker_daemon``, which re-reads an archive only when it has changed:
+on a 4-core host a one-row ``mapInArrow`` task on a reused worker cost a
+median 0.339 CPU-s of worker CPU with the stock daemon and 0.075 with
+``worker_daemon`` (20 tasks each), and the Python layer of a warm
+benchmark nightly rep (``parse.python_ms``) fell from 2.19 to 1.21-1.46 s.
+The rest still counts on small and medium inputs, so plans keep Python
+stages few (one fused fold stage, not a parse stage plus a grouped-map
+stage), and driver-side tables are built by ``local_table`` as Arrow
+local relations, which start no Python worker at all.
 """
 
 from __future__ import annotations
@@ -87,6 +93,8 @@ ARCHIVE_LOG_OPTS = "-Xlog:cds=error"
 ARCHIVE_DIR = "class-archive"
 # shuffle and spill files go to tmpfs unless configured elsewhere
 TMPFS_LOCAL_DIR = "/dev/shm/spark-local"
+# the Python workers' daemon on a driver JVM that get_spark launches
+WORKER_DAEMON = "quake3_log_analyser_spark.worker_daemon"
 
 
 class ClassArchive(NamedTuple):
@@ -413,6 +421,25 @@ def _submitted_master() -> str | None:
     return jvm.System.getProperty("spark.master")
 
 
+def _workers_find_package() -> bool:
+    """A Python worker of a JVM launched now can import this package: its
+    parent directory is the working directory (``python -m`` puts the
+    daemon's, which is this process's, first on ``sys.path``), a
+    ``PYTHONPATH`` entry or a site-packages directory.  A driver that
+    found the package only through its own ``sys.path`` keeps
+    ``pyspark.daemon``, so Python tasks that do not need the package
+    still run."""
+    import site
+
+    parent = os.path.dirname(os.path.dirname(os.path.realpath(__file__)))
+    paths = (
+        os.getcwd(),
+        *os.environ.get("PYTHONPATH", "").split(os.pathsep),
+        *site.getsitepackages(),
+    )
+    return any(p and os.path.realpath(p) == parent for p in paths)
+
+
 def _launch(builder: SparkSession.Builder, archive: ClassArchive) -> SparkSession:
     """Start the driver JVM with ``archive.conf_dir`` as its
     ``SPARK_CONF_DIR`` (the launch copies this process's environment)
@@ -538,6 +565,10 @@ def get_spark(
     if archive is not None:
         java_opts = f"{java_opts} {archive.options}"
     builder = builder.config("spark.driver.extraJavaOptions", java_opts)
+    if launch and _workers_find_package():
+        # a submitted driver keeps pyspark.daemon: its --py-files reach a
+        # worker's sys.path only per task, after the daemon has started
+        builder = builder.config("spark.python.daemon.module", WORKER_DAEMON)
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate() if archive is None else _launch(builder, archive)

@@ -10,6 +10,7 @@ import ast
 import importlib
 import importlib.util
 import pkgutil
+import zipimport
 from pathlib import Path
 
 ROOT = Path(__file__).resolve().parents[1]
@@ -31,6 +32,11 @@ def test_every_package_module_imports():
         except Exception as exc:  # report every broken module, not the first
             failed[name] = repr(exc)
     assert not failed, failed
+    # worker_daemon replaces it only when run as the workers' daemon
+    method = zipimport.zipimporter.invalidate_caches
+    assert (method.__module__, method.__qualname__) == (
+        "zipimport", "zipimporter.invalidate_caches"
+    )
 
 
 def _sources() -> list[Path]:
