@@ -120,12 +120,6 @@ def _transcripts(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.sql(_GEN_SQL)
 
 
-def _table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    df.createOrReplaceTempView(name)
-    return df
-
-
 # ---------------------------------------------------------------------------
 # entry: flagship query (driver smoke check at sf0.001)
 # ---------------------------------------------------------------------------
@@ -566,130 +560,6 @@ FROM feat WHERE is_malformed
 )
 
 
-# ---------------------------------------------------------------------------
-# engine-breadth queries on the TPC-H-ish tables
-# ---------------------------------------------------------------------------
-
-
-def _q_tpch_q1(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _table(spark, sf_dir, "lineitem")
-    return (
-        li.filter(F.col("l_shipdate") <= "1998-09-02")
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            F.sum("l_quantity").alias("sum_qty"),
-            F.sum("l_extendedprice").alias("sum_base_price"),
-            F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias(
-                "sum_disc_price"
-            ),
-            F.avg("l_quantity").alias("avg_qty"),
-            F.count(F.lit(1)).alias("count_order"),
-        )
-    )
-
-
-_ORACLE_TPCH_Q1 = """
-SELECT l_returnflag, l_linestatus,
-  SUM(l_quantity) AS sum_qty,
-  SUM(l_extendedprice) AS sum_base_price,
-  SUM(l_extendedprice * (1 - l_discount)) AS sum_disc_price,
-  AVG(l_quantity) AS avg_qty,
-  COUNT(*) AS count_order
-FROM lineitem
-WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
-GROUP BY l_returnflag, l_linestatus
-"""
-
-
-def _q_top_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Broadcast join + grouped agg + top-k.
-
-    Top-k is ``orderBy(...).limit(k)`` — Spark plans this as a distributed
-    TakeOrderedAndProject (per-partition heaps + driver merge), NOT a global
-    rank window that would funnel every aggregate through one task.  The
-    rank over the <= k surviving rows is a count-of-better-rows self-join
-    (a constant-partitioned window still plans as single-partition
-    WindowExec after constant folding and warns).
-    """
-    orders = _table(spark, sf_dir, "orders")
-    customer = _table(spark, sf_dir, "customer")
-    rev = (
-        orders.join(F.broadcast(customer), orders.o_custkey == customer.c_custkey)
-        .groupBy("c_custkey", "c_name")
-        .agg(F.sum("o_totalprice").alias("revenue"), F.count(F.lit(1)).alias("n_orders"))
-    )
-    top = rev.orderBy(F.desc("revenue"), F.asc("c_custkey")).limit(10)
-    a, b = top.alias("a"), top.alias("b")
-    better = (F.col("b.revenue") > F.col("a.revenue")) | (
-        (F.col("b.revenue") == F.col("a.revenue"))
-        & (F.col("b.c_custkey") < F.col("a.c_custkey"))
-    )
-    return (
-        a.join(F.broadcast(b), better, "left")
-        .groupBy("a.c_custkey", "a.c_name", "a.revenue", "a.n_orders")
-        .agg((F.count("b.c_custkey") + 1).cast("int").alias("rnk"))
-        .select(
-            F.col("c_custkey"), F.col("c_name"), F.col("revenue"),
-            F.col("n_orders"), F.col("rnk"),
-        )
-    )
-
-
-_ORACLE_TOP_CUSTOMERS = """
-WITH rev AS (
-  SELECT c_custkey, c_name, SUM(o_totalprice) AS revenue, COUNT(*) AS n_orders
-  FROM orders JOIN customer ON o_custkey = c_custkey
-  GROUP BY c_custkey, c_name
-)
-SELECT c_custkey, c_name, revenue, n_orders,
-  CAST(row_number() OVER (ORDER BY revenue DESC, c_custkey ASC) AS INT) AS rnk
-FROM rev
-QUALIFY rnk <= 10
-"""
-
-
-def _q_event_gap_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gap-based sessionization of the generic events table (window lag +
-    running sum) — the classic pattern next to our delimiter-based one."""
-    from pyspark.sql import Window
-
-    ev = _table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    # parquet stores TIMESTAMP_NTZ; go via TIMESTAMP (session TZ pinned to
-    # UTC) so epoch seconds agree with DuckDB's epoch()
-    epoch = F.col("ts").cast("timestamp").cast("long")
-    gap = epoch - F.lag(epoch).over(w)
-    new_sess = F.when(gap.isNull() | (gap > 1800), 1).otherwise(0)
-    sess = ev.withColumn(
-        "session_id",
-        F.sum(new_sess).over(w.rowsBetween(Window.unboundedPreceding, 0)),
-    )
-    return sess.groupBy("user_id", "session_id").agg(
-        F.count(F.lit(1)).alias("n_events"),
-        F.sum("value").alias("sum_value"),
-    )
-
-
-_ORACLE_EVENT_GAP = """
-WITH marked AS (
-  SELECT user_id, event_id, value, ts,
-    CASE WHEN lag(ts) OVER w IS NULL
-           OR CAST(epoch(ts) AS BIGINT) - CAST(epoch(lag(ts) OVER w) AS BIGINT) > 1800
-         THEN 1 ELSE 0 END AS new_sess
-  FROM events
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-),
-sess AS (
-  SELECT user_id, value,
-    CAST(SUM(new_sess) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                        ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_id
-  FROM marked
-)
-SELECT user_id, session_id, COUNT(*) AS n_events, SUM(value) AS sum_value
-FROM sess GROUP BY user_id, session_id
-"""
-
-
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     return {
         "parse_typed": _q_parse_typed,
@@ -703,9 +573,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "enrich_reasons": _q_enrich_reasons,
         "route_counts": _q_route_counts,
         "errors_deadletter": _q_errors_deadletter,
-        "tpch_q1": _q_tpch_q1,
-        "top_customers": _q_top_customers,
-        "event_gap_sessions": _q_event_gap_sessions,
     }
 
 
@@ -722,333 +589,4 @@ def oracle_sql() -> dict[str, str]:
         "enrich_reasons": _ORACLE_ENRICH,
         "route_counts": _ORACLE_ROUTE,
         "errors_deadletter": _ORACLE_ERRORS,
-        "tpch_q1": _ORACLE_TPCH_Q1,
-        "top_customers": _ORACLE_TOP_CUSTOMERS,
-        "event_gap_sessions": _ORACLE_EVENT_GAP,
     }
-
-
-# ---------------------------------------------------------------------------
-# training-data ops: documents
-# ---------------------------------------------------------------------------
-
-
-def _q_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Token/char-class counting (exact integers for oracle stability)."""
-    from quake3_log_analyser_spark.functions.text import (
-        stopword_count,
-        token_count,
-        ws_tokens,
-    )
-
-    docs = _table(spark, sf_dir, "documents")
-    t = F.col("text")
-    return docs.select(
-        "doc_id",
-        token_count(t).alias("n_tokens"),
-        F.length(F.regexp_replace(t, r"[^0-9]", "")).cast("long").alias("n_digits"),
-        stopword_count(t, "en").alias("n_stop_en"),
-        F.size(F.array_distinct(F.transform(ws_tokens(t), F.lower)))
-        .cast("long")
-        .alias("n_distinct_tokens"),
-    )
-
-
-_ORACLE_TEXT_STATS = r"""
-SELECT doc_id,
-  CASE WHEN length(trim(text)) = 0 THEN 0
-       ELSE len(regexp_split_to_array(trim(text), '\s+')) END::BIGINT AS n_tokens,
-  length(regexp_replace(text, '[^0-9]', '', 'g'))::BIGINT AS n_digits,
-  len(list_filter(regexp_split_to_array(trim(lower(text)), '\s+'),
-      x -> x IN ('the','and','of','to','a','in','is','it','that','for')))::BIGINT AS n_stop_en,
-  len(list_distinct(regexp_split_to_array(trim(lower(text)), '\s+')))::BIGINT AS n_distinct_tokens
-FROM documents
-"""
-
-
-def _q_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Normalized-content md5 fingerprint (case- and whitespace-blind)."""
-    from quake3_log_analyser_spark.functions.text import fingerprint_md5
-
-    docs = _table(spark, sf_dir, "documents")
-    return docs.select("doc_id", fingerprint_md5(F.col("text")).alias("fp"))
-
-
-_ORACLE_FINGERPRINTS = r"""
-SELECT doc_id, md5(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))) AS fp
-FROM documents
-"""
-
-
-_ES_TAIL = " ".join(["el la de que y en un los del se"] * 4)
-_DE_TAIL = " ".join(["der die und das ist von den mit für auf"] * 4)
-_FR_TAIL = " ".join(["le la et les des un une que dans pour"] * 4)
-
-
-def _lang_augmented(doc_id):
-    """Deterministic non-English stopword tails for doc_id % 10 in
-    {1,2,3}: the sf documents are English-only, so without injection the
-    es/de/fr hit columns were ZERO for every row and lang_guess never
-    left {en, und} — the gate compared the vacuous branches.  The tails
-    (40 stopwords each) dominate any English doc's own hit count, so the
-    argmax flips to the injected language (same augmentation in the
-    DuckDB oracle)."""
-    return F.concat(
-        F.col("text"),
-        F.when(doc_id % 10 == 1, F.lit(" " + _ES_TAIL))
-        .when(doc_id % 10 == 2, F.lit(" " + _DE_TAIL))
-        .when(doc_id % 10 == 3, F.lit(" " + _FR_TAIL))
-        .otherwise(F.lit("")),
-    )
-
-
-_LANG_AUG_SQL = f"""
-  text || CASE WHEN doc_id % 10 = 1 THEN ' {_ES_TAIL}'
-               WHEN doc_id % 10 = 2 THEN ' {_DE_TAIL}'
-               WHEN doc_id % 10 = 3 THEN ' {_FR_TAIL}'
-               ELSE '' END
-"""
-
-
-def _q_lang_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-language stopword hits (the lang-ID heuristic's evidence).
-    Input augmented with deterministic es/de/fr tails (``_lang_augmented``)
-    so every language column is exercised, not just ``en``."""
-    from quake3_log_analyser_spark.functions.text import stopword_count
-
-    docs = _table(spark, sf_dir, "documents")
-    t = _lang_augmented(F.col("doc_id"))
-    return docs.select(
-        "doc_id",
-        stopword_count(t, "en").alias("en_hits"),
-        stopword_count(t, "es").alias("es_hits"),
-        stopword_count(t, "de").alias("de_hits"),
-        stopword_count(t, "fr").alias("fr_hits"),
-    )
-
-
-_ORACLE_LANG_HITS = rf"""
-WITH aug AS (SELECT doc_id, {_LANG_AUG_SQL} AS text FROM documents),
-toks AS (
-  SELECT doc_id, regexp_split_to_array(trim(lower(text)), '\s+') AS w FROM aug
-)
-SELECT doc_id,
-  len(list_filter(w, x -> x IN ('the','and','of','to','a','in','is','it','that','for')))::BIGINT AS en_hits,
-  len(list_filter(w, x -> x IN ('el','la','de','que','y','en','un','los','del','se')))::BIGINT AS es_hits,
-  len(list_filter(w, x -> x IN ('der','die','und','das','ist','von','den','mit','für','auf')))::BIGINT AS de_hits,
-  len(list_filter(w, x -> x IN ('le','la','et','les','des','un','une','que','dans','pour')))::BIGINT AS fr_hits
-FROM toks
-"""
-
-
-def _q_quality_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Quality heuristic + BPE-ish token estimate (pre-training filters)."""
-    from quake3_log_analyser_spark.functions.text import (
-        bpe_ish_token_count,
-        quality_score,
-    )
-
-    docs = _table(spark, sf_dir, "documents")
-    t = F.col("text")
-    return docs.select(
-        "doc_id",
-        F.round(quality_score(t), 4).alias("quality"),
-        bpe_ish_token_count(t).alias("n_bpe_tokens"),
-    )
-
-
-_ORACLE_QUALITY = r"""
-WITH t AS (
-  SELECT doc_id,
-    CASE WHEN length(trim(text)) = 0 THEN 0
-         ELSE len(regexp_split_to_array(trim(text), '\s+')) END::BIGINT AS n_tok,
-    length(text) AS n_chars,
-    length(regexp_replace(text, '[^[:punct:]]', '', 'g')) AS n_punct,
-    length(regexp_replace(text, '[^0-9]', '', 'g')) AS n_digit,
-    len(list_filter(regexp_split_to_array(trim(lower(text)), '\s+'),
-        x -> x IN ('the','and','of','to','a','in','is','it','that','for'))) AS n_stop,
-    coalesce(list_sum(list_transform(
-        list_filter(regexp_split_to_array(trim(text), '\s+'), x -> length(x) > 0),
-        w -> ceil(length(w) / 4.0)::BIGINT)), 0) AS bpe_words
-  FROM documents
-)
-SELECT doc_id,
-  round(
-    least(n_tok / 20.0, 1.0) * 0.4
-    + greatest(0.0, 1.0 - (CASE WHEN n_chars > 0 THEN n_punct::DOUBLE / n_chars ELSE 0.0 END) * 4) * 0.2
-    + greatest(0.0, 1.0 - (CASE WHEN n_chars > 0 THEN n_digit::DOUBLE / n_chars ELSE 0.0 END) * 4) * 0.2
-    + least((CASE WHEN n_tok > 0 THEN n_stop::DOUBLE / n_tok ELSE 0.0 END) * 4, 1.0) * 0.2,
-  4) AS quality,
-  (bpe_words + n_punct)::BIGINT AS n_bpe_tokens
-FROM t
-"""
-
-
-def _q_lang_guess(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Language-ID heuristic (argmax of per-language stopword hits).
-    Input augmented with deterministic es/de/fr tails (``_lang_augmented``)
-    so the guess actually leaves {en, und} on a slice of the gate rows."""
-    from quake3_log_analyser_spark.functions.text import lang_guess
-
-    docs = _table(spark, sf_dir, "documents")
-    return docs.select(
-        "doc_id", lang_guess(_lang_augmented(F.col("doc_id"))).alias("lang_guess")
-    )
-
-
-_ORACLE_LANG_GUESS = rf"""
-WITH aug AS (SELECT doc_id, {_LANG_AUG_SQL} AS text FROM documents),
-toks AS (
-  SELECT doc_id, regexp_split_to_array(trim(lower(text)), '\s+') AS w FROM aug
-),
-hits AS (
-  SELECT doc_id,
-    len(list_filter(w, x -> x IN ('the','and','of','to','a','in','is','it','that','for'))) AS en,
-    len(list_filter(w, x -> x IN ('el','la','de','que','y','en','un','los','del','se'))) AS es,
-    len(list_filter(w, x -> x IN ('der','die','und','das','ist','von','den','mit','für','auf'))) AS de,
-    len(list_filter(w, x -> x IN ('le','la','et','les','des','un','une','que','dans','pour'))) AS fr
-  FROM toks
-)
-SELECT doc_id,
-  CASE WHEN greatest(en, es, de, fr) = 0 THEN 'und'
-       WHEN en = greatest(en, es, de, fr) THEN 'en'
-       WHEN es = greatest(en, es, de, fr) THEN 'es'
-       WHEN de = greatest(en, es, de, fr) THEN 'de'
-       ELSE 'fr' END AS lang_guess
-FROM hits
-"""
-
-
-def _q_pii_redaction(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PII scrubbing (functions.text.redact_pii): the sf documents carry
-    no PII, so both engines append the SAME synthetic email/URL/IP tail
-    derived from doc_id before scrubbing — the patterns then BIND and the
-    redacted text + counts must round-trip identically."""
-    from quake3_log_analyser_spark.functions.text import pii_counts, redact_pii
-
-    docs = _table(spark, sf_dir, "documents")
-    t = F.concat(
-        F.col("text"),
-        F.lit(" contact user"), F.col("doc_id").cast("string"),
-        F.lit("@example.com via https://site"), F.col("doc_id").cast("string"),
-        F.lit(".org/x at 10.0.0.1 now"),
-    )
-    n_emails, n_urls, n_ips = pii_counts(t)
-    return docs.select(
-        "doc_id",
-        n_emails.alias("n_emails"),
-        n_urls.alias("n_urls"),
-        n_ips.alias("n_ips"),
-        F.md5(redact_pii(t)).alias("redacted_md5"),
-    )
-
-
-_ORACLE_PII = r"""
-WITH aug AS (
-  SELECT doc_id,
-    text || ' contact user' || CAST(doc_id AS VARCHAR)
-         || '@example.com via https://site' || CAST(doc_id AS VARCHAR)
-         || '.org/x at 10.0.0.1 now' AS t
-  FROM documents
-)
-SELECT doc_id,
-  CAST(len(regexp_extract_all(t, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}')) AS BIGINT) AS n_emails,
-  CAST(len(regexp_extract_all(t, 'https?://[^ \t\n\r\x0b\f]+')) AS BIGINT) AS n_urls,
-  CAST(len(regexp_extract_all(t, '\b(?:\d{1,3}\.){3}\d{1,3}\b')) AS BIGINT) AS n_ips,
-  md5(regexp_replace(regexp_replace(regexp_replace(t,
-      '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '[EMAIL]', 'g'),
-      'https?://[^ \t\n\r\x0b\f]+', '[URL]', 'g'),
-      '\b(?:\d{1,3}\.){3}\d{1,3}\b', '[IP]', 'g')) AS redacted_md5
-FROM aug
-"""
-
-
-def _q_duplicated_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cross-document repeated-substring spans (operators.dedup.
-    duplicated_spans): maximal token spans whose every 5-gram window
-    occurs in >= 2 distinct documents — the distributed analogue of
-    suffix-array substring dedup (Lee et al. 2022).  gram_hash="md5" is
-    the cross-engine-reproducible mode this oracle requires; production
-    default is xxhash64 straight over the token slice."""
-    from quake3_log_analyser_spark.operators.dedup import duplicated_spans
-
-    docs = _table(spark, sf_dir, "documents")
-    return duplicated_spans(docs, n=5, min_docs=2, gram_hash="md5")
-
-
-_ORACLE_DUP_SPANS = r"""
-WITH tok AS (
-  SELECT doc_id, regexp_split_to_array(trim(lower(text)), '\s+') AS t
-  FROM documents
-),
-win AS (
-  SELECT doc_id, CAST(s AS INT) AS pos,
-    ('0x' || substr(md5(array_to_string(list_slice(t, s, s + 4), ' ')),
-                    1, 15))::BIGINT AS gram_h
-  FROM tok, UNNEST(range(1, greatest(len(t) - 4, 0) + 1)) AS u(s)
-),
-dup AS (
-  SELECT gram_h FROM win GROUP BY gram_h
-  HAVING COUNT(DISTINCT doc_id) >= 2
-),
-fl AS (SELECT w.doc_id, w.pos FROM win w JOIN dup USING (gram_h)),
-m AS (
-  SELECT doc_id, pos,
-    CASE WHEN pos > COALESCE(MAX(pos + 5) OVER (
-           PARTITION BY doc_id ORDER BY pos
-           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), -1)
-         THEN 1 ELSE 0 END AS new_span
-  FROM fl
-),
-sp AS (
-  SELECT doc_id, pos, SUM(new_span) OVER (
-    PARTITION BY doc_id ORDER BY pos
-    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS span_id
-  FROM m
-)
-SELECT doc_id,
-  CAST(MIN(pos) AS INT) AS start_tok,
-  CAST(MAX(pos) + 5 AS INT) AS end_tok,
-  CAST(COUNT(*) AS BIGINT) AS n_windows
-FROM sp GROUP BY doc_id, span_id
-"""
-
-
-_EXTRA_QUERIES = {
-    # Ordering only: if the gate caps how many rows it runs, the cap
-    # bites the rows listed last.
-    "duplicated_spans": _q_duplicated_spans,
-    "pii_redaction": _q_pii_redaction,
-    "text_stats": _q_text_stats,
-    "fingerprints": _q_fingerprints,
-    "lang_hits": _q_lang_hits,
-    "quality_scores": _q_quality_scores,
-    "lang_guess": _q_lang_guess,
-}
-
-_EXTRA_ORACLES = {
-    "duplicated_spans": _ORACLE_DUP_SPANS,
-    "pii_redaction": _ORACLE_PII,
-    "text_stats": _ORACLE_TEXT_STATS,
-    "fingerprints": _ORACLE_FINGERPRINTS,
-    "lang_hits": _ORACLE_LANG_HITS,
-    "quality_scores": _ORACLE_QUALITY,
-    "lang_guess": _ORACLE_LANG_GUESS,
-}
-
-_BASE_QUERIES = queries
-
-
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:  # noqa: F811
-    out = dict(_BASE_QUERIES())
-    out.update(_EXTRA_QUERIES)
-    return out
-
-
-_BASE_ORACLES = oracle_sql
-
-
-def oracle_sql() -> dict[str, str]:  # noqa: F811
-    out = dict(_BASE_ORACLES())
-    out.update(_EXTRA_ORACLES)
-    return out

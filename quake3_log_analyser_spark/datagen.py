@@ -1,4 +1,4 @@
-"""Deterministic synthetic transcript generator + enrich dictionaries.
+"""Deterministic synthetic transcript generator + the enrich dictionary.
 
 Everything is generated DISTRIBUTED from ``spark.range`` with pure column
 arithmetic — no driver-side loops, no wall-clock, no RNG state — so the
@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 
 from .schemas import TRANSCRIPT_SCHEMA
 from .session import local_table
+from .sources.transcripts import ROLES, TOOLS
 
 BLOCK = 12  # turns per complete match block
 
@@ -39,34 +40,11 @@ MEANS_OF_DEATH = [
     (22, "MOD_TRIGGER_HURT"),
 ]
 
-TOOLS = [
-    ("bash", "shell"),
-    ("editor", "files"),
-    ("search", "retrieval"),
-    ("browser", "web"),
-    ("none", "none"),
-]
-
-ROLES = [
-    ("system", "control"),
-    ("user", "human"),
-    ("assistant", "model"),
-    ("tool", "machine"),
-]
-
 N_PLAYERS = 5  # ids 2..6, names Player2..Player6 (id 1022 = <world>)
 
 
 def dim_means_of_death(spark: SparkSession) -> DataFrame:
     return local_table(spark, MEANS_OF_DEATH, "reason_id long, reason_name string")
-
-
-def dim_tool(spark: SparkSession) -> DataFrame:
-    return local_table(spark, TOOLS, "tool string, tool_family string")
-
-
-def dim_role(spark: SparkSession) -> DataFrame:
-    return local_table(spark, ROLES, "role string, role_kind string")
 
 
 def generate_transcripts(
@@ -158,10 +136,10 @@ def generate_transcripts(
     )
 
     role = F.element_at(
-        F.array(*[F.lit(r) for r, _ in ROLES]), (h % len(ROLES) + 1).cast("int")
+        F.array(*[F.lit(r) for r in ROLES]), (h % len(ROLES) + 1).cast("int")
     )
     tool = F.element_at(
-        F.array(*[F.lit(t) for t, _ in TOOLS]), (h % len(TOOLS) + 1).cast("int")
+        F.array(*[F.lit(t) for t in TOOLS]), (h % len(TOOLS) + 1).cast("int")
     )
     ts = F.timestamp_seconds(F.lit(1704067200) + conv_no * 86400 + turn_no)
 

@@ -3,9 +3,9 @@
 The reference has no joins (SURVEY.md §2.6) — each Kill line arrives with
 ``reason_id`` and ``reason_name`` pre-joined (types.rs:45,48).  The
 north_rule requires a real enrich stage, so this module joins the parsed
-events against small dimensions (means-of-death, tool, role) with an
-explicit ``F.broadcast`` hint: at 10^12-turn scale the dictionaries are a
-few KB, so the join must never shuffle the fact side.  ``left_anti``
+Kill events against the means-of-death dictionary with an explicit
+``F.broadcast`` hint: at 10^12-turn scale the dictionary is a few KB, so
+the join must never shuffle the fact side.  ``left_anti``
 diagnostics surface codes the dictionary does not know.
 """
 
@@ -35,18 +35,6 @@ def enrich_kills(kills: DataFrame, dim_means: DataFrame) -> DataFrame:
         F.col("dict_reason_name").isNotNull()
         & (F.col("dict_reason_name") == F.col("reason_name")),
     )
-
-
-def enrich_turns(
-    df: DataFrame, dim_tool: DataFrame | None = None, dim_role: DataFrame | None = None
-) -> DataFrame:
-    """Broadcast-join transcript-level dimensions (tool family, role kind)."""
-    out = df
-    if dim_tool is not None:
-        out = out.join(F.broadcast(dim_tool), "tool", "left")
-    if dim_role is not None:
-        out = out.join(F.broadcast(dim_role), "role", "left")
-    return out
 
 
 def unknown_reason_codes(kills: DataFrame, dim_means: DataFrame) -> DataFrame:

@@ -1,11 +1,12 @@
-"""Non-vacuous gate sweep (round-6, verdict #7): every driver-gate row
-must be fed input that actually exercises its operator's discriminating
-branches at the gate's scale (sf0.01).
+"""Non-vacuous gate sweep: every driver-gate row must be fed input that
+actually exercises its operator's discriminating branches at the gate's
+scale (sf0.01).
 
-Round 3-5 lesson: gate rows stayed green for rounds while comparing
-0 = 0 rows, and round-6's sweep found more degenerate inputs, among
-them English-only documents (★lang_hits' es/de/fr columns were
-all-zero, ★lang_guess never left {en, und}).
+Gate rows once stayed green for rounds while comparing 0 = 0 rows.  Every
+oracle derives its answer from the ``events`` table through
+``_FEAT_SQL``, so a change to that generation arithmetic can starve a
+row: no malformed Kill turn leaves ``errors_deadletter`` empty, and a
+block shape without score turns leaves ``route_counts``' scores sink at 0.
 
 Mechanism: run the ORACLE SQL of every gate row in DuckDB on the sf0.01
 tables (cheap — no Spark session) and assert discriminating properties of
@@ -25,10 +26,7 @@ import pytest
 import __spark_entry__ as entrymod
 
 GATE_SF = "/root/testdata/sf0.01"
-TABLES = [
-    "region", "nation", "customer", "supplier", "part", "orders",
-    "lineitem", "events", "documents",
-]
+TABLES = ["events"]
 
 pytestmark = pytest.mark.skipif(
     not Path(GATE_SF).exists(), reason="gate-scale testdata absent"
@@ -64,30 +62,6 @@ def test_every_gate_row_is_nonempty(oracle_results):
     """Universal floor: a 0 = 0 comparison can never be a pass again."""
     empty = [k for k, (_, rows) in oracle_results.items() if not rows]
     assert not empty, f"gate rows with EMPTY results (vacuous pass): {empty}"
-
-
-def test_lang_rows_exercise_every_language(oracle_results):
-    guesses = set(col(oracle_results["lang_guess"], "lang_guess"))
-    assert {"en", "es", "de", "fr", "und"} <= guesses, (
-        f"lang_guess must leave the en/und pair (got {guesses})"
-    )
-    for lang in ("en", "es", "de", "fr"):
-        hits = col(oracle_results["lang_hits"], f"{lang}_hits")
-        assert max(hits) > 0, f"{lang}_hits column never fires"
-        assert min(hits) == 0 or lang == "en", (
-            f"{lang}_hits fires on EVERY doc — no negative case"
-        )
-
-
-def test_quality_scores_are_not_constant(oracle_results):
-    assert len(set(col(oracle_results["quality_scores"], "quality"))) > 1
-
-
-def test_pii_row_exercises_all_three_kinds_on_every_doc(oracle_results):
-    r = oracle_results["pii_redaction"]
-    assert min(col(r, "n_emails")) >= 1
-    assert min(col(r, "n_urls")) >= 1
-    assert min(col(r, "n_ips")) >= 1
 
 
 def test_route_counts_spread_across_sinks(oracle_results):

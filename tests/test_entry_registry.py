@@ -1,9 +1,10 @@
 """Registry parity of ``__spark_entry__.py``, checked without a Spark
 session: every query has an oracle and the reverse, every ``_q_*``
-function is registered, and every module-level name but ``entry``,
-which only outside callers use, is used.  A carve-out that deletes a row
-but leaves its query, oracle, helper or parameter constant behind fails
-here in seconds."""
+function is registered, every module-level name but the contract's
+``entry``, ``queries`` and ``oracle_sql``, which only outside callers
+use, is used, and no name is bound twice.  A carve-out that deletes a
+row but leaves its query, oracle, helper or parameter constant behind
+fails here in seconds."""
 
 from __future__ import annotations
 
@@ -14,7 +15,7 @@ import __spark_entry__ as entrymod
 
 TREE = ast.parse(Path(entrymod.__file__).read_text())
 # read only by callers outside the module
-CONTRACT_ONLY = {"entry"}
+CONTRACT_ONLY = {"entry", "queries", "oracle_sql"}
 
 
 def _bound(node: ast.stmt) -> set[str]:
@@ -57,3 +58,16 @@ def test_every_oracle_constant_and_sql_helper_is_referenced():
         } - _bound(node)
     unused = sorted(DEFINED - used - CONTRACT_ONLY)
     assert not unused, unused
+
+
+def test_no_module_level_name_is_bound_twice():
+    """One top-level statement binds each name, so ``queries()`` and
+    ``oracle_sql()`` are each one literal dict: a second definition that
+    shadows the first and extends its result hides rows from a reader of
+    the first."""
+    seen: dict[str, int] = {}
+    for node in TREE.body:
+        for name in _bound(node):
+            seen[name] = seen.get(name, 0) + 1
+    twice = sorted(n for n, k in seen.items() if k > 1)
+    assert not twice, twice

@@ -44,7 +44,18 @@ _num = st.one_of(
     st.integers(min_value=-(10**19), max_value=10**19).map(str),
     st.just(""), st.just("+7"), st.just("007"), st.just("4294967295"),
     st.just("4294967296"), st.just("0000000000000000007"), _payload,
+    # a number then a line terminator: each regex engine reads a final
+    # '\n' / '\r' its own way ('$' matches before a final '\n')
+    st.builds(
+        lambda n, end: str(n) + end,
+        st.integers(min_value=0, max_value=2**32),
+        st.sampled_from(["\n", "\r", "\r\n"]),
+    ),
 )
+
+
+# optional line terminator after a number that ends the line
+_eol = st.sampled_from(["", "\n", "\r", "\r\n"])
 
 
 def _kill_line(a, b, c, x, y, z):
@@ -60,12 +71,12 @@ _line = st.one_of(
     st.builds(_kill_line, _num, _num, _num, _payload, _payload, _payload),
     st.builds(lambda v: f" 0:00 InitGame: {v}", _payload),
     st.builds(lambda i, kv: f" 0:00 ClientUserinfoChanged: {i} {kv}", _num, _payload),
-    st.builds(lambda i: f" 0:00 ClientConnect: {i}", _num),
-    st.builds(lambda i: f" 0:00 ClientDisconnect: {i}", _num),
+    st.builds(lambda i, e: f" 0:00 ClientConnect: {i}{e}", _num, _eol),
+    st.builds(lambda i, e: f" 0:00 ClientDisconnect: {i}{e}", _num, _eol),
     st.builds(
         lambda f, i, n: f" 0:01 score: {f}  ping: 3  client: {i} {n}", _num, _num, _payload
     ),
-    st.builds(lambda r, b: f" 0:01 red: {r}  blue: {b}", _num, _num),
+    st.builds(lambda r, b, e: f" 0:01 red: {r}  blue: {b}{e}", _num, _num, _eol),
     st.just(" 0:02 Exit: Timelimit hit."),
     st.just(" 0:02 ShutdownGame:"),
     st.just(" 0:00 ------------"),

@@ -301,3 +301,12 @@ class TestEdgeCases:
         assert not diff, f"line {line!r}: {diff}"
         for k, v in expected.items():
             assert e[k] == v, f"line {line!r}: {k} = {e[k]!r}, want {v!r}"
+
+
+def test_parse_pedantic_rejects_non_arrow_parsers(spark):
+    from quake3_log_analyser_spark.operators.parse import parse_transcripts
+    from quake3_log_analyser_spark.sources.transcripts import transcripts_from_lines
+
+    t = transcripts_from_lines(spark, [" 0:00 ShutdownGame:"], "c0")
+    with pytest.raises(ValueError, match="arrow"):
+        parse_transcripts(t, parser="expr", pedantic=True)
