@@ -278,28 +278,19 @@ FROM completed c
 
 
 def _q_means_of_death(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from quake3_log_analyser_spark.operators.parse import parse_transcripts
-    from quake3_log_analyser_spark.operators.sessionize import sessionize
-    from quake3_log_analyser_spark.operators.summarize import means_of_death_hist
+    from quake3_log_analyser_spark.plans.pipeline import summarize_matches
 
-    s = sessionize(parse_transcripts(_transcripts(spark, sf_dir)))
-    hist = means_of_death_hist(s)
-    # flatten + restrict to completed matches for oracle comparability
-    from quake3_log_analyser_spark.operators.sessionize import match_control
-
-    completed = match_control(s).filter("completed").select("conv_id", "match_id")
-    return (
-        hist.join(completed, ["conv_id", "match_id"])
-        .select(
-            "conv_id",
-            F.col("match_id").cast("long").alias("match_id"),
-            F.explode("kills_by_means").alias("e"),
-        )
-        .select(
-            "conv_id", "match_id",
-            F.col("e.mean").alias("mean"),
-            F.col("e.count").alias("n"),
-        )
+    out = summarize_matches(
+        _transcripts(spark, sf_dir), ops={"kills", "means_of_death"}
+    ).filter(F.col("error").isNull())
+    return out.select(
+        "conv_id",
+        F.col("match_id").cast("long").alias("match_id"),
+        F.explode("kills_by_means").alias("e"),
+    ).select(
+        "conv_id", "match_id",
+        F.col("e.mean").alias("mean"),
+        F.col("e.count").alias("n"),
     )
 
 
@@ -316,28 +307,19 @@ GROUP BY f.conv_id, f.block, f.reason_name
 
 
 def _q_reported_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from quake3_log_analyser_spark.operators.parse import parse_transcripts
-    from quake3_log_analyser_spark.operators.sessionize import (
-        match_control,
-        sessionize,
-    )
-    from quake3_log_analyser_spark.operators.summarize import reported_scores
+    from quake3_log_analyser_spark.plans.pipeline import summarize_matches
 
-    s = sessionize(parse_transcripts(_transcripts(spark, sf_dir)))
-    completed = match_control(s).filter("completed").select("conv_id", "match_id")
-    return (
-        reported_scores(s)
-        .join(completed, ["conv_id", "match_id"])
-        .select(
-            "conv_id",
-            F.col("match_id").cast("long").alias("match_id"),
-            F.explode("game_reported_scores").alias("e"),
-        )
-        .select(
-            "conv_id", "match_id",
-            F.col("e.player").alias("player"),
-            F.col("e.frags").alias("frags"),
-        )
+    out = summarize_matches(
+        _transcripts(spark, sf_dir), ops={"kills", "reported_scores"}
+    ).filter(F.col("error").isNull())
+    return out.select(
+        "conv_id",
+        F.col("match_id").cast("long").alias("match_id"),
+        F.explode("game_reported_scores").alias("e"),
+    ).select(
+        "conv_id", "match_id",
+        F.col("e.player").alias("player"),
+        F.col("e.frags").alias("frags"),
     )
 
 
@@ -349,40 +331,6 @@ SELECT f.conv_id, f.block AS match_id, f.pname AS player, MAX(f.frags) AS frags
 FROM feat f JOIN completed c ON f.conv_id = c.conv_id AND f.block = c.block
 WHERE f.m = 8
 GROUP BY f.conv_id, f.block, f.pname
-"""
-)
-
-
-def _q_window_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Event-time window telemetry (streaming/metrics_stream) in its batch
-    twin form — the exact-count columns under the oracle gate (the
-    HyperLogLog conv count is approximate by design and cross-engine
-    incomparable, so it stays out of the hashed projection)."""
-    from quake3_log_analyser_spark.streaming.metrics_stream import (
-        window_metrics_batch,
-    )
-
-    m = window_metrics_batch(_transcripts(spark, sf_dir), window="10 seconds")
-    return m.select(
-        "window_start", "window_end", "n_turns", "n_kills", "n_unparsed"
-    )
-
-
-_ORACLE_WINDOW_METRICS = (
-    _FEAT_SQL
-    + ", "
-    + _TEXT_SQL
-    + r"""
-SELECT
-  time_bucket(INTERVAL '10 seconds', f.ts) AS window_start,
-  time_bucket(INTERVAL '10 seconds', f.ts) + INTERVAL '10 seconds' AS window_end,
-  COUNT(*) AS n_turns,
-  CAST(SUM(CASE WHEN regexp_extract(r.text, '^ *[^ ]+ ([A-Za-z]+):', 1) = 'Kill'
-           THEN 1 ELSE 0 END) AS BIGINT) AS n_kills,
-  CAST(SUM(CASE WHEN regexp_extract(r.text, '^ *[^ ]+ ([A-Za-z]+):', 1) = ''
-           THEN 1 ELSE 0 END) AS BIGINT) AS n_unparsed
-FROM feat f JOIN rendered r ON f.conv_id = r.conv_id AND f.turn_idx = r.turn_idx
-GROUP BY 1, 2
 """
 )
 
@@ -569,7 +517,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "means_of_death": _q_means_of_death,
         "reported_scores": _q_reported_scores,
         "multiop_summary": _q_multiop_summary,
-        "window_metrics": _q_window_metrics,
         "enrich_reasons": _q_enrich_reasons,
         "route_counts": _q_route_counts,
         "errors_deadletter": _q_errors_deadletter,
@@ -585,7 +532,6 @@ def oracle_sql() -> dict[str, str]:
         "means_of_death": _ORACLE_MEANS,
         "reported_scores": _ORACLE_SCORES,
         "multiop_summary": _ORACLE_MULTIOP,
-        "window_metrics": _ORACLE_WINDOW_METRICS,
         "enrich_reasons": _ORACLE_ENRICH,
         "route_counts": _ORACLE_ROUTE,
         "errors_deadletter": _ORACLE_ERRORS,

@@ -10,8 +10,7 @@
         --output <output base path> \
         --ops kills,means_of_death,player_resolutions,reported_scores \
         --run-id nightly-2024-06-01 \
-        [--resume --checkpoint <checkpoint table path> --n-units 64] \
-        [--session-first]
+        [--resume --checkpoint <checkpoint table path> --n-units 64]
 
 The two paths write different outputs:
 
@@ -77,7 +76,6 @@ def main() -> None:
     ap.add_argument("--ops", default="kills")
     ap.add_argument("--run-id", default=f"run-{int(time.time())}")
     ap.add_argument("--resume", action="store_true")
-    ap.add_argument("--session-first", action="store_true")
     ap.add_argument("--n-units", type=int, default=64)
     ap.add_argument("--stop-on-violations", action="store_true")
     ap.add_argument(
@@ -169,7 +167,6 @@ def main() -> None:
             transcripts, ops=ops,
             stop_on_violations=stop_on_violations,
             stop_on_feed_errors=args.pedantic,
-            session_first=args.session_first,
         )
         summaries.write.mode("overwrite").parquet(
             f"{args.output}/match_summaries"

@@ -1,9 +1,8 @@
 """Incremental per-conversation replay core — the exact event-model fold.
 
 Shared by the batch Arrow fold stage (operators/summarize.py) and the
-Structured Streaming stateful variant (streaming/session_stream.py): one
-``feed`` of ordered events mutates a small serializable state and yields
-summary/error rows.
+JSON renderer (presentation.py): one ``feed`` of ordered events mutates a
+small per-conversation state and yields summary/error rows.
 
 Semantics are a port (not a copy) of the reference's composed stream
 stages — ``compose`` (bll/src/summary_logic.rs:74-139), ``means_of_death``
@@ -78,8 +77,8 @@ def replay_events(
 
     ``events`` yields tuples ``(turn_idx, event_type, client_id, name,
     killer_id, victim_id, killer_name, victim_name, reason_name, frags)``
-    in turn order.  ``state`` is mutated in place (streaming carries it
-    across micro-batches).
+    in turn order.  ``state`` is mutated in place (the fold stage carries
+    it across the Arrow batches of one conversation).
     """
     means_on = "means_of_death" in ops
     players_on = "player_resolutions" in ops

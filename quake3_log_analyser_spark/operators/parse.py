@@ -102,8 +102,7 @@ def parse_transcripts(
             f"(got {parser!r}); wrap the result in fail_on_feed_errors "
             "for the expression/pandas parsers instead"
         )
-    # pass through every non-event column (includes match columns when the
-    # caller sessionized on raw text first — see sessionize_raw)
+    # pass through every non-event column
     cols = [c for c in df.columns if c not in EVENT_COLUMN_NAMES]
     out_fields = (
         EVENT_COLUMN_NAMES
@@ -145,13 +144,13 @@ def fail_on_feed_errors(parsed: DataFrame) -> DataFrame:
     (app/src/main.rs:84-85), turning every ``LogParsingError`` fatal.  The
     distributed analogue: ``raise_error`` folded into BOTH ``turn_idx`` and
     ``event_type``.  Gating ``turn_idx`` alone is NOT pushdown-proof: when
-    no window consumes ``turn_idx`` after the parse (the session-first
-    path), Catalyst pushes summarize's ``event_type`` filter below this
-    projection and the error rows are discarded before the gate evaluates
-    (the round-2 ADVICE repro).  ``event_type`` is consumed by every
-    downstream filter/groupBy, and predicate-pushdown SUBSTITUTES the gated
-    expression into the pushed filter — so evaluating the filter on an
-    error row fires the raise wherever the filter lands in the plan.
+    no window consumes ``turn_idx`` after the parse, Catalyst pushes a
+    downstream ``event_type`` filter below this projection and the error
+    rows are discarded before the gate evaluates.  ``event_type`` is
+    consumed by every downstream filter/groupBy, and predicate-pushdown
+    SUBSTITUTES the gated expression into the pushed filter — so evaluating
+    the filter on an error row fires the raise wherever the filter lands in
+    the plan.
     """
     return parsed.withColumns(_feed_gate())
 

@@ -29,12 +29,12 @@ its keys, for two reasons:
 * **The sessionize window** (``partitionBy(conv_id)``): cannot be salted
   — match assembly is stateful over the FULL ordered turn sequence of a
   conversation, so splitting a conv across tasks breaks the semantics.
-  The posture is (a) the bucketed ``session_first`` layout that removes
-  the shuffle entirely and (b) measured tolerance: one conversation
-  holding 10% of all turns runs at parity with uniform input
-  (BENCH/BASELINE.md round 3), because a window task of a few hundred
-  thousand rows is far below the straggler threshold at any realistic
-  turns-per-conversation.
+  The posture is (a) a conv_id-bucketed, (conv_id, turn_idx)-sorted
+  source table, which the kills-family summaries read with no shuffle and
+  no sort, and (b) measured tolerance: one conversation holding 10% of
+  all turns runs at parity with uniform input (BENCH/BASELINE.md round
+  3), because a window task of a few hundred thousand rows is far below
+  the straggler threshold at any realistic turns-per-conversation.
 
 * **The order-dependent replay fold** (one ``mapInArrow`` stage over rows
   hash-partitioned by conv and sorted by turn, operators/summarize.py):
@@ -116,88 +116,3 @@ def _sessionize_steps() -> list[dict]:
     }
     return [igb, flags, match_id]
 
-
-def sessionize_raw(transcripts: DataFrame) -> DataFrame:
-    """Sessionize straight on RAW text — the bucketed-table fast path.
-
-    Match delimiters need only "is this line an InitGame/ShutdownGame
-    event", which a cheap JVM regex decides EXACTLY like the full parser:
-    the line must lstrip-spaces, have a first-space split, a rest that
-    doesn't start with '-', and an event name (text before the first ':')
-    equal to the delimiter — i.e. ``^ *[^ ]+ (InitGame|ShutdownGame):``.
-    (A rest with no colon is an UnrecognizedLineFormat error in the parser
-    and matches no delimiter here either; a '-' rest is a Comment and
-    cannot match because the group must start the token.)
-
-    Because this runs BEFORE the Python parse boundary, a source bucketed +
-    sort-ordered by (conv_id, turn_idx) feeds the window with NO shuffle
-    and NO sort — the single biggest lever at 10^12-turn scale.  The full
-    parse (mapInArrow) then runs on the already-sessionized rows.
-    """
-    return with_columns(transcripts, _sessionize_raw_steps()).drop(
-        "_marker", "_in_game_before"
-    )
-
-
-@per_jvm
-def _sessionize_raw_steps() -> list[dict]:
-    w = Window.partitionBy("conv_id").orderBy("turn_idx")
-    w_excl = w.rowsBetween(Window.unboundedPreceding, -1)
-    w_incl = w.rowsBetween(Window.unboundedPreceding, 0)
-
-    m = F.regexp_extract("text", r"^ *[^ ]+ (InitGame|ShutdownGame):", 1)
-    marker = F.when(m != "", m)
-    in_game_before = F.coalesce(
-        F.last(marker, ignorenulls=True).over(w_excl) == "InitGame", F.lit(False)
-    )
-    marked = {
-        "_marker": marker,
-        "_in_game_before": in_game_before,
-    }
-    flags = {
-        "is_match_start": F.coalesce(
-            (F.col("_marker") == "InitGame") & ~F.col("_in_game_before"),
-            F.lit(False),
-        ),
-        "is_match_end": F.coalesce(
-            (F.col("_marker") == "ShutdownGame") & F.col("_in_game_before"),
-            F.lit(False),
-        ),
-    }
-    match_id = {
-        "match_id": F.sum(F.col("is_match_start").cast("int"))
-        .over(w_incl)
-        .cast("int"),
-        # projection, not a second windowed last (see sessionize)
-        "in_game": F.when(
-            F.col("_marker").isNotNull(), F.col("_marker") == "InitGame"
-        ).otherwise(F.col("_in_game_before")),
-    }
-    return [marked, flags, match_id]
-
-
-def match_control(sessionized: DataFrame) -> DataFrame:
-    """One row per (conv_id, match_id): completion + graceful flags.
-
-    ``completed`` — the match saw an effective ShutdownGame; matches without
-    one emit NO summary (summary_logic.rs:397-403, the dangling accumulator
-    is dropped).  ``graceful`` — an ``Exit`` was seen while in-game
-    (summary_logic.rs:105-112), i.e. GameEndedGracefully vs Manually.
-    """
-    return (
-        sessionized.filter(F.col("match_id") > 0)
-        .filter(F.col("in_game") | F.col("is_match_end"))
-        .groupBy("conv_id", "match_id")
-        .agg(
-            F.max(F.col("is_match_end")).alias("completed"),
-            F.max((F.col("event_type") == "Exit") & F.col("in_game")).alias(
-                "graceful"
-            ),
-            F.min(F.when(F.col("is_match_start"), F.col("turn_idx"))).alias(
-                "start_turn_idx"
-            ),
-            F.max(F.when(F.col("is_match_end"), F.col("turn_idx"))).alias(
-                "end_turn_idx"
-            ),
-        )
-    )

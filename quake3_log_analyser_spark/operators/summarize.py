@@ -35,7 +35,6 @@ from pyspark.sql import functions as F
 
 from ..functions.column_cache import named, per_jvm
 from ..schemas import MATCH_SUMMARY_SCHEMA, WORLD
-from .sessionize import match_control, sessionize
 
 # ---------------------------------------------------------------------------
 # vectorized kills-only path
@@ -247,10 +246,11 @@ def summarize_multi(
 ) -> DataFrame:
     """ALL requested order-insensitive ops in ONE two-level aggregation.
 
-    The round-3 judge confirmed the old composition — ``summarize_kills_only
-    JOIN means_of_death_hist JOIN reported_scores`` — executed the parse +
-    sessionize-window DAG once PER BRANCH (3 scans, 0 ReusedExchange): at
-    scale that triples the pipeline's dominant cost.  This is the
+    A plan audit found that the former composition — the kills-only
+    summary joined to separate means-of-death and reported-score
+    aggregates — executed the parse + sessionize-window DAG once PER
+    BRANCH (3 scans, 0 ReusedExchange): at scale that triples the
+    pipeline's dominant cost.  This is the
     single-pass form, the Spark shape of the reference computing all its
     ops in one fold pass (bll/src/summary_logic.rs:44-60, "only pay for
     what you use"):
@@ -444,46 +444,6 @@ def _multi_columns(want_means: bool, want_scores: bool) -> dict:
         "match_aggs": match_aggs,
         "emit": _emit_columns(summary_entry),
     }
-
-
-def means_of_death_hist(sessionized: DataFrame) -> DataFrame:
-    """Per-match death-cause histogram (summary_logic.rs:144-170, :362-368).
-    Order-insensitive, so it never needs the replay fold."""
-    return (
-        sessionized.filter(
-            (F.col("event_type") == "Kill")
-            & F.col("in_game")
-            & (F.col("match_id") > 0)
-        )
-        .groupBy("conv_id", "match_id", "reason_name")
-        .agg(F.count(F.lit(1)).alias("count"))
-        .groupBy("conv_id", "match_id")
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct(F.col("reason_name").alias("mean"), "count"))
-            ).alias("kills_by_means")
-        )
-    )
-
-
-def reported_scores(sessionized: DataFrame) -> DataFrame:
-    """Per-match game-reported scores: last Score per name wins
-    (BTreeMap upsert, summary_logic.rs:390-395)."""
-    return (
-        sessionized.filter(
-            (F.col("event_type") == "Score")
-            & F.col("in_game")
-            & (F.col("match_id") > 0)
-        )
-        .groupBy("conv_id", "match_id", "name")
-        .agg(F.max_by("frags", "turn_idx").alias("frags"))
-        .groupBy("conv_id", "match_id")
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct(F.col("name").alias("player"), "frags"))
-            ).alias("game_reported_scores")
-        )
-    )
 
 
 # ---------------------------------------------------------------------------

@@ -34,7 +34,7 @@ from pyspark.sql import functions as F
 
 from ..functions.column_cache import named, per_jvm
 from ..operators.parse import choose_parser, fail_on_feed_errors, parse_transcripts
-from ..operators.sessionize import sessionize, sessionize_raw
+from ..operators.sessionize import sessionize
 from ..operators.summarize import (
     DEFAULT_EXTENDED_OPS,
     FOLD_FIELDS,
@@ -66,17 +66,15 @@ def summarize_matches(
     ops: frozenset[str] | set[str] = KILLS_ONLY,
     parser: str = "auto",
     stop_on_violations: bool = False,
-    session_first: bool = False,
     stop_on_feed_errors: bool = False,
     early_discard: bool = True,
 ) -> DataFrame:
     """transcripts -> per-match summary DataFrame (MATCH_SUMMARY_SCHEMA).
 
-    ``session_first=True`` sessionizes on RAW text before parsing
-    (operators.sessionize.sessionize_raw): with a conv_id-bucketed,
-    (conv_id, turn_idx)-sorted source table the window then needs NO
-    shuffle and NO sort — the preferred plan at scale.  Results are
-    identical either way (asserted in tests).
+    On a conv_id-bucketed, (conv_id, turn_idx)-sorted source table the
+    kills-family plans need no shuffle and no sort: the bucket layout
+    satisfies the sessionize window and both aggregation levels
+    (tests/test_plans.py).
 
     ``stop_on_feed_errors=True`` is the reference's ``--pedantic`` feed
     gate (app/src/main.rs:84-85): the job FAILS on the first malformed
@@ -96,17 +94,6 @@ def summarize_matches(
         # fold path keeps 9 event fields -> arrow, parsed inside the fold
         # stage itself; the vectorized kills-family paths keep 2-5 -> the
         # faster, better-scaling expr parser (janino-safe at that width).
-        # session_first also takes expr now: the parse sits ABOVE the
-        # window there, so summarize's filters have no shuffle fence below
-        # them and Catalyst would
-        # re-inline the full dispatch tree into the aggregation stage
-        # (janino >64KB, measured 19.6 s interpreted-fallback) — the
-        # round-3 fix was forcing the arrow barrier, whose parse scales at
-        # 0.27-0.37; round 4 instead plants a NON-DETERMINISTIC fence
-        # column in the parse projection (below), which blocks
-        # PushDownPredicates' substitution through the Project without any
-        # shuffle or Python boundary, keeping the 0.59-scaling expr parser
-        # on the no-shuffle bucketed plan.
         parser = choose_parser(
             FOLD_FIELDS if "player_resolutions" in ops else agg_base
         )
@@ -137,9 +124,8 @@ def summarize_matches(
     # path consumes only a few event names, so one anchored JVM regex
     # drops every other line BEFORE the parse runs.  It matches the event
     # name exactly where the parsers find it (after leading spaces and
-    # the first space-free token, as sessionize_raw's marker regex does),
-    # so it never drops a consumed row, and a say line holding " Kill:"
-    # does not pass (tests/test_early_discard.py pins both).
+    # the first space-free token), so it never drops a consumed row, and
+    # a say line holding " Kill:" does not pass (tests/test_early_discard.py pins both).
     # match_id/in_game derive from the retained markers and turn_idx
     # values are preserved.  Referencing only `text`, the predicate
     # pushes to the scan with no re-inlining hazard.  Skipped when
@@ -169,40 +155,16 @@ def summarize_matches(
 
     # dropped event types don't affect match state, and summarize filters
     # to Kill/Score rows above the window — no separate translate filter
-    agg_fields = agg_base + error_fields
-    if session_first:
-        raw_sess = sessionize_raw(narrowed_in)
-        sessionized = _gate(
+    sessionized = sessionize(
+        _gate(
             parse_transcripts(
-                raw_sess, parser=parser, fields=agg_fields, pedantic=pedantic_in_udf
+                narrowed_in,
+                parser=parser,
+                fields=agg_base + error_fields,
+                pedantic=pedantic_in_udf,
             )
         )
-        if parser == "expr":
-            # pushdown fence: PushPredicateThroughNonJoin only substitutes
-            # a filter through a Project whose expressions are ALL
-            # deterministic.  Wrapping the CONSUMED event_type in an
-            # always-true non-deterministic guard (monotonically_
-            # increasing_id() is non-negative by construction) taints the
-            # projection, so the aggregate filters evaluate plain
-            # attributes ABOVE the parse instead of re-inlining its
-            # ~60-expression tree (the janino >64KB compile failure that
-            # previously forced the arrow barrier here).  A detached
-            # fence COLUMN does not work: ColumnPruning strips an
-            # unreferenced column and the substitution comes back —
-            # the wrap survives because event_type is consumed.  Costs
-            # one long compare per row, no shuffle, no Python.
-            sessionized = sessionized.withColumn("event_type", _fenced_event_type())
-    else:
-        sessionized = sessionize(
-            _gate(
-                parse_transcripts(
-                    narrowed_in,
-                    parser=parser,
-                    fields=agg_fields,
-                    pedantic=pedantic_in_udf,
-                )
-            )
-        )
+    )
     # ONE two-level aggregation for every requested op (kills + means +
     # scores): the old branch-and-join composition re-computed the parse +
     # window DAG once per branch — 3 scans, 0 ReusedExchange, confirmed by
@@ -231,11 +193,6 @@ def discard_tokens(ops: frozenset[str]) -> tuple[str, ...]:
 def _early_discard(*tokens: str) -> Column:
     """Keep a line if its event name is one of ``tokens``."""
     return F.col("text").rlike(rf"^ *[^ ]+ (?:{'|'.join(tokens)}):")
-
-
-@per_jvm
-def _fenced_event_type() -> Column:
-    return F.when(F.monotonically_increasing_id() >= 0, F.col("event_type"))
 
 
 def full_pipeline_ops() -> frozenset[str]:

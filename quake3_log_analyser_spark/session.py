@@ -514,11 +514,12 @@ def get_spark(
         # threshold (8000 bytecodes): a generated whole-stage method between
         # 8 KB and the 64 KB default COMPILES under janino but HotSpot
         # refuses to JIT it, so the fused stage runs interpreted bytecode
-        # forever.  Measured on the no-exchange bucketed session-first plan
-        # (window + fenced expr parse + two aggregation levels fused into
-        # one stage): 25-30 s default vs 15 s with the 8000 cap at 16M
-        # turns x 16 cores.  Over-limit stages fall back to per-operator
-        # codegen, which HotSpot does JIT; under-limit stages keep fusion.
+        # forever.  Measured on a no-exchange bucketed kills plan (raw-text
+        # window, expr parse and both aggregation levels fused into one
+        # stage; that plan has since been deleted): 25-30 s default vs 15 s
+        # with the 8000 cap at 16M turns x 16 cores.  Over-limit stages fall
+        # back to per-operator codegen, which HotSpot does JIT; under-limit
+        # stages keep fusion.
         .config("spark.sql.codegen.hugeMethodLimit", "8000")
         # report the (conv_id, turn_idx) sort order of one-file-per-bucket
         # bucketed tables so the sessionize window skips its Sort entirely

@@ -11,10 +11,14 @@ in README.md, and README names no other.
 
 The documented ``spark-submit`` commands pass the driver JVM the same
 options a plain-Python launch gets, ``session.DRIVER_JAVA_OPTS``, and the
-class archive's, which the shell takes from ``session.submit_env()``."""
+class archive's, which the shell takes from ``session.submit_env()``.
+
+Every ``--flag`` a documented command passes to ``jobs/run_pipeline.py``
+is an argument the job defines."""
 
 from __future__ import annotations
 
+import ast
 import re
 from pathlib import Path
 
@@ -102,3 +106,34 @@ def test_every_env_knob_is_documented_in_readme():
     documented = set(KNOB.findall((ROOT / "README.md").read_text()))
     assert sorted(read - documented) == [], "knobs README does not name"
     assert sorted(documented - read) == [], "README names knobs no code reads"
+
+
+JOB = ROOT / "jobs" / "run_pipeline.py"
+# the rest of a command after the job's path: its line and every line a
+# trailing backslash continues onto
+JOB_COMMAND = re.compile(r"jobs/run_pipeline\.py((?:[^\n]*\\\n)*[^\n]*)")
+FLAG = re.compile(r"(?<![\w-])--[a-z][a-z0-9-]*")
+
+
+def test_documented_job_flags_exist():
+    """A flag the README or the job's usage text passes to the job is one
+    of its ``ap.add_argument("--...")`` calls, so a deleted flag takes its
+    documentation with it."""
+    tree = ast.parse(JOB.read_text())
+    defined = {
+        arg.value
+        for node in ast.walk(tree)
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr == "add_argument"
+        for arg in node.args
+        if isinstance(arg, ast.Constant) and str(arg.value).startswith("--")
+    }
+    documented = {
+        flag
+        for text in ((ROOT / "README.md").read_text(), ast.get_docstring(tree))
+        for command in JOB_COMMAND.findall(text)
+        for flag in FLAG.findall(command)
+    }
+    assert documented, "no documented job command found; the pattern is stale"
+    assert sorted(documented - defined) == [], "flags the job does not define"

@@ -27,7 +27,7 @@ from quake3_log_analyser_spark.sources.transcripts import transcripts_from_lines
 # its own way); allow the grammar's own metacharacters (colons,
 # backslashes, spaces) so the parsers' splitting logic gets hit hard — AND
 # the control characters the round-3 alphabet excluded (tab / NUL /
-# vertical tab): the parsers ltrim SPACES only and sessionize_raw's marker
+# vertical tab): the parsers ltrim SPACES only and the early-discard
 # regex anchors on ' *', so any tab-indentation divergence is visible only
 # if tabs reach the fuzzer
 _payload = st.text(
@@ -149,42 +149,6 @@ def test_vectorized_equals_fold_on_arbitrary_sequences(spark, lines):
         )
 
     assert common(vec) == common(fold)
-
-
-@settings(
-    max_examples=8,
-    deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture],
-)
-@given(lines=st.lists(_line, min_size=1, max_size=25))
-def test_session_first_equals_session_after(spark, lines):
-    """The bucketed fast path sessionizes on RAW text (sessionize_raw's
-    marker regex) while the default path sessionizes on parsed events —
-    the two delimiter decisions must agree on EVERY line, tab/NUL-indented
-    included, or a bucketed deployment would split matches differently
-    from an unbucketed one."""
-    from quake3_log_analyser_spark.plans.pipeline import summarize_matches
-
-    t = transcripts_from_lines(spark, lines, "fuzz")
-
-    def norm(rows):
-        return sorted(
-            (
-                tuple(
-                    tuple(sorted(v, key=str)) if isinstance(v, list) else v
-                    for v in (
-                        r["conv_id"], r["match_id"], r["total_kills"],
-                        r["players"], r["kills"], r["graceful"], r["error"],
-                    )
-                )
-                for r in rows
-            ),
-            key=repr,
-        )
-
-    after = summarize_matches(t, ops={"kills"}).collect()
-    first = summarize_matches(t, ops={"kills"}, session_first=True).collect()
-    assert norm(after) == norm(first)
 
 
 @settings(

@@ -3,8 +3,8 @@ must be visible in the plan, not assumed.
 
 - parquet filter pushdown + column pruning reach the scan
 - the enrich join is a BroadcastHashJoin (fact side never shuffles)
-- a bucketed, sorted source feeds the sessionize window with NO exchange
-  and NO sort
+- a bucketed, sorted source feeds the default kills-family summary plan
+  with NO exchange and NO sort
 - the parse stages stay out of the >64KB-codegen failure mode (no
   fallback warnings => asserted indirectly by plan shape)
 """
@@ -46,9 +46,19 @@ def test_enrich_join_is_broadcast(spark):
     assert "SortMergeJoin" not in plan
 
 
-def test_bucketed_window_has_no_exchange_or_sort(spark, tmp_path):
+@pytest.mark.parametrize(
+    "ops",
+    [{"kills"}, {"kills", "means_of_death", "reported_scores"}],
+    ids=["kills", "kills_means_scores"],
+)
+def test_bucketed_default_plan_has_no_exchange_or_sort(spark, tmp_path, ops):
+    """On a conv_id-bucketed, (conv_id, turn_idx)-sorted table the default
+    kills-family summary plan needs NO exchange and NO sort: the bucket
+    partitioning satisfies the sessionize window and both aggregation
+    levels, and the reported bucket sort order satisfies the window's
+    ordering.  The expr parser keeps the plan free of Python."""
     from quake3_log_analyser_spark.datagen import generate_transcripts
-    from quake3_log_analyser_spark.operators.sessionize import sessionize_raw
+    from quake3_log_analyser_spark.plans.pipeline import summarize_matches
 
     df = generate_transcripts(spark, n_convs=8, turns_per_conv=40)
     loc = str(tmp_path / "bucketed")
@@ -62,25 +72,13 @@ def test_bucketed_window_has_no_exchange_or_sort(spark, tmp_path):
     )
     try:
         t = spark.table("t_bucketed_plan_test")
-        sess = sessionize_raw(t.select("conv_id", "turn_idx", "text"))
-        plan = plan_of(sess)
-        window_half = plan[: plan.index("FileScan")]
-        assert "Window" in window_half
+        plan = plan_of(summarize_matches(t, ops=ops))
+        assert "Window" in plan
         assert "Exchange" not in plan, "bucketed scan must not reshuffle"
         assert not re.search(r"\bSort \[", plan), "bucket sort order must be reused"
+        assert "MapInArrow" not in plan
     finally:
         spark.sql("DROP TABLE IF EXISTS t_bucketed_plan_test")
-
-
-def test_session_window_single_shuffle_unbucketed(spark):
-    """Plain (unbucketed) input: exactly ONE exchange below the window —
-    both window passes share the same partitioning."""
-    from quake3_log_analyser_spark.datagen import generate_transcripts
-    from quake3_log_analyser_spark.operators.sessionize import sessionize_raw
-
-    t = generate_transcripts(spark, n_convs=8, turns_per_conv=40)
-    plan = plan_of(sessionize_raw(t.select("conv_id", "turn_idx", "text")))
-    assert len(re.findall(r"Exchange hashpartitioning\(conv_id", plan)) == 1
 
 
 def test_pipeline_narrows_input_before_python_boundary(spark):
@@ -185,81 +183,3 @@ def test_multi_op_vectorized_is_single_pass(spark):
     assert len(re.findall(r"Exchange hashpartitioning\(conv_id", plan)) == 1, plan
     assert len(re.findall(r"\bWindow ", plan)) == 2, plan
     assert "Join" not in plan, plan
-
-
-def test_auto_parser_session_first_takes_fenced_expr(spark):
-    """session_first puts the parse ABOVE the window — without a fence,
-    Catalyst substitutes summarize's filters through the parse projection
-    and the re-inlined tree fails janino (>64KB, measured 19.6 s
-    interpreted fallback; that failure previously forced the arrow
-    barrier here, whose parse scales at 0.27-0.37 vs expr's 0.59).  The
-    round-4 non-deterministic wrap on event_type blocks the substitution,
-    so auto now keeps the expr parser: no Python boundary in the plan,
-    the fence visible, and the whole pipeline survives strict codegen."""
-    from quake3_log_analyser_spark.datagen import generate_transcripts
-    from quake3_log_analyser_spark.plans.pipeline import summarize_matches
-
-    t = generate_transcripts(spark, n_convs=6, turns_per_conv=60)
-    df = summarize_matches(t, ops={"kills"}, session_first=True)
-    plan = plan_of(df)
-    assert "MapInArrow" not in plan and "ArrowEvalPython" not in plan
-    assert "monotonically" in plan, "pushdown fence missing from the plan"
-    old = spark.conf.get("spark.sql.codegen.fallback", "true")
-    spark.conf.set("spark.sql.codegen.fallback", "false")
-    try:
-        assert len(df.collect()) > 0
-    finally:
-        spark.conf.set("spark.sql.codegen.fallback", old)
-
-
-def test_session_first_multiop_fenced_expr_strict_codegen(spark):
-    """session_first x multi-op: the fenced expr parse and the single-pass
-    typed-entry aggregation compose — no Python boundary, no join, and the
-    whole plan survives strict codegen; results match the parse-first
-    plan."""
-    from quake3_log_analyser_spark.datagen import generate_transcripts
-    from quake3_log_analyser_spark.plans.pipeline import summarize_matches
-
-    t = generate_transcripts(spark, n_convs=6, turns_per_conv=60)
-    ops = {"kills", "means_of_death", "reported_scores"}
-    df = summarize_matches(t, ops=ops, session_first=True)
-    plan = plan_of(df)
-    assert "MapInArrow" not in plan and "Join" not in plan
-    old = spark.conf.get("spark.sql.codegen.fallback", "true")
-    spark.conf.set("spark.sql.codegen.fallback", "false")
-    try:
-        got = sorted([tuple(map(repr, r)) for r in df.collect()])
-    finally:
-        spark.conf.set("spark.sql.codegen.fallback", old)
-    want = sorted(
-        [tuple(map(repr, r)) for r in summarize_matches(t, ops=ops).collect()]
-    )
-    assert got == want
-
-
-def test_session_first_bucketed_full_pipeline_no_exchange(spark, tmp_path):
-    """On a conv_id-bucketed, (conv_id, turn_idx)-sorted table the ENTIRE
-    session-first kills pipeline — raw window + fenced expr parse + both
-    aggregation levels — needs NO exchange at all: the bucket partitioning
-    satisfies the window and both groupBys' clustering.  This is the
-    10^12-turn deployment plan."""
-    from quake3_log_analyser_spark.datagen import generate_transcripts
-    from quake3_log_analyser_spark.plans.pipeline import summarize_matches
-
-    df = generate_transcripts(spark, n_convs=8, turns_per_conv=40)
-    loc = str(tmp_path / "bucketed_full")
-    (
-        df.repartition(4, "conv_id")
-        .write.mode("overwrite")
-        .bucketBy(4, "conv_id")
-        .sortBy("conv_id", "turn_idx")
-        .option("path", loc)
-        .saveAsTable("t_bucketed_full_plan_test")
-    )
-    try:
-        t = spark.table("t_bucketed_full_plan_test")
-        plan = plan_of(summarize_matches(t, ops={"kills"}, session_first=True))
-        assert "Exchange" not in plan, plan
-        assert "MapInArrow" not in plan
-    finally:
-        spark.sql("DROP TABLE IF EXISTS t_bucketed_full_plan_test")

@@ -246,24 +246,36 @@ def test_stop_on_feed_errors_passes_clean_input(spark):
     assert len([r for r in rows if r["error"] is None]) == 20
 
 
-@pytest.mark.parametrize("parser", ["arrow", "expr", "pandas"])
-def test_stop_on_feed_errors_is_pushdown_proof_session_first(spark, parser):
-    """Round-2 ADVICE (high): with session_first=True no window consumes
-    turn_idx after the parse, so a turn_idx-only raise_error gate was
-    elided by predicate pushdown and the pedantic job silently succeeded
-    with 0 rows.  The gate must fire for EVERY parser on this path."""
+@pytest.mark.parametrize("parser", ["auto", "expr", "arrow"])
+def test_stop_on_feed_errors_gates_the_kills_menu(spark, parser):
+    """The kills-menu ``--pedantic`` gate on inline lines, so it runs
+    without the reference fixtures: a clean match passes it, and one
+    malformed line in that match fails the pedantic run while the
+    permissive run still returns the summary.  ``auto`` and ``expr`` gate
+    through ``fail_on_feed_errors``; ``arrow`` raises inside the parse
+    task."""
     from quake3_log_analyser_spark.plans.pipeline import summarize_matches
-    from quake3_log_analyser_spark.sources.transcripts import transcripts_from_file
+    from quake3_log_analyser_spark.sources.transcripts import transcripts_from_lines
 
-    path = FIXTURES_DAL / "malformed_line.log"
-    if not path.exists():
-        pytest.skip("reference fixture unavailable")
-    t = transcripts_from_file(spark, str(path), "malformed")
-    with pytest.raises(Exception, match="LogParsingError"):
-        summarize_matches(
-            t, ops={"kills"}, parser=parser,
-            session_first=True, stop_on_feed_errors=True,
+    clean = [
+        " 0:00 InitGame: \\sv_hostname\\Code Miner Server\\fraglimit\\20",
+        " 0:01 Kill: 2 3 7: Isgalamido killed Zeh by MOD_ROCKET_SPLASH",
+        " 0:02 ShutdownGame:",
+    ]
+    malformed = clean[:2] + [" 0:01 ClientConnect: 2a"] + clean[2:]
+
+    def run(lines, pedantic):
+        t = transcripts_from_lines(spark, lines, "gate")
+        return summarize_matches(
+            t, ops={"kills"}, parser=parser, stop_on_feed_errors=pedantic
         ).collect()
+
+    rows = run(clean, pedantic=True)
+    assert [(r["total_kills"], r["error"]) for r in rows] == [(1, None)]
+    rows = run(malformed, pedantic=False)
+    assert [(r["total_kills"], r["error"]) for r in rows] == [(1, None)]
+    with pytest.raises(Exception, match="LogParsingError"):
+        run(malformed, pedantic=True)
 
 
 def test_render_conv_reports_validates_fold_columns(spark):

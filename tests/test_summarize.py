@@ -437,39 +437,6 @@ def test_malformed_lines_in_band_errors(spark):
         assert rows[i]["parse_error_kind"] is None
 
 
-# --- session-first (bucketed fast path) parity ---------------------------------
-def test_session_first_equals_parse_first(spark):
-    """sessionize_raw on raw text + late parse must produce identical
-    summaries to the parse-first plan (same marker semantics)."""
-    path = FIXTURES_BLL / "qgames_permissive.log"
-    if not path.exists():
-        pytest.skip("reference fixture unavailable")
-    t = transcripts_from_file(spark, str(path), "permissive")
-
-    def norm(rows):
-        return sorted(
-            (
-                (
-                    r["conv_id"], r["match_id"], r["total_kills"],
-                    tuple(r["players"] or []),
-                    tuple((k["player"], k["frags"]) for k in (r["kills"] or [])),
-                    r["graceful"], r["error"],
-                )
-                for r in rows
-            ),
-            key=str,
-        )
-
-    a_rows = summarize_matches(t, ops={"kills"}).collect()
-    b_rows = summarize_matches(t, ops={"kills"}, session_first=True).collect()
-    assert norm(a_rows) == norm(b_rows)
-    # 20 summaries + the DoubleInit at event #98 (the exact pair of
-    # warnings the reference documents for this file, app/src/main.rs:44-48)
-    assert len([r for r in a_rows if r["error"] is None]) == 20
-    errs = [r["error"] for r in a_rows if r["error"] is not None]
-    assert errs == ["Event #98: violated the event model: DoubleInit"]
-
-
 def test_violation_rows_emit_in_stream_order(spark):
     """Violations within a match must come back in turn_idx (stream) order,
     not lexicographic message order — 'Event #10' after 'Event #9' (the
@@ -510,6 +477,13 @@ def test_early_discard_equals_unfiltered_on_fixtures(spark):
                 [(r["conv_id"], r["match_id"], r["total_kills"],
                   tuple(r["players"] or []), r["error"]) for r in baseline], key=str
             )
+            if fixture == "qgames_permissive.log" and ops == BASIC:
+                # 20 summaries + the DoubleInit at event #98 (the exact pair
+                # of warnings the reference documents for this file,
+                # app/src/main.rs:44-48)
+                assert len([r for r in with_filter if r["error"] is None]) == 20
+                errs = [r["error"] for r in with_filter if r["error"] is not None]
+                assert errs == ["Event #98: violated the event model: DoubleInit"]
     if not checked:
         pytest.skip("no reference fixtures available")
 
